@@ -11,6 +11,10 @@ API so the same code runs on local dirs and object stores:
 - :func:`fold_batch_partitions` — compaction: fold history partitions
   into the reserved base partition so the dir count stays bounded.
 
+The streaming state tables also share their replay-idempotent row I/O:
+:func:`write_batch` (dynamic ``__batch`` partition overwrite) and
+:func:`read_history` (:func:`read_live` minus the current batch).
+
 Crash consistency of the fold — stage-then-promote, never overwriting
 live data:
 
@@ -203,6 +207,32 @@ def read_live(spark: SparkSession, table_path: str):
             | ({_GEN_A, _GEN_B} - {base_id})
         )
     return df.filter(~F.col("__batch").isin(dead))
+
+
+def read_history(spark: SparkSession, table_path: str, batch_id: int):
+    """The live rows of every batch EXCEPT ``batch_id``, ``__batch``
+    dropped — the history a micro-batch joins against.  Excluding its
+    own partition means a failed earlier attempt of the SAME batch can
+    never act as history for its retry."""
+    return (
+        read_live(spark, table_path)
+        .filter(F.col("__batch") != F.lit(int(batch_id)))
+        .drop("__batch")
+    )
+
+
+def write_batch(df, table_path: str, batch_id: int) -> None:
+    """Write ``df`` as the ``__batch=<batch_id>`` partition by dynamic
+    partition overwrite: a replayed micro-batch (foreachBatch is
+    at-least-once) REPLACES its own partition instead of appending
+    duplicates, and leaves every other partition untouched."""
+    (
+        df.withColumn("__batch", F.lit(int(batch_id)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__batch")
+        .parquet(table_path)
+    )
 
 
 def _heal_manifest(spark: SparkSession, table_path: str) -> None:

@@ -5,16 +5,39 @@ these are the standard large-corpus dedup family, each built so the
 expensive stages are shuffle-lean:
 
 - exact_dedup          — hash-groupBy on a content fingerprint.
-- ngram_jaccard_pairs  — exact Jaccard over char-shingle sets via an
-                         inverted-index join (explode -> join on shingle
-                         -> count), the oracle-checkable ground truth.
+- ngram_jaccard_pairs  — exact n-gram Jaccard self-join, prefix-filtered
+                         (PPJoin-lite): the oracle-checkable ground truth.
+- containment_pairs    — exact one-sided |A∩B|/|A| join (quotes, excerpts).
 - minhash_lsh_pairs    — MinHash signatures + banded LSH bucketing; only
                          bucket-colliding pairs are verified, so the join
                          never goes quadratic. The scale path.
+- cross_corpus_neardup_pairs / cross_corpus_minhash_pairs — the exact and
+                         LSH joins of an incoming corpus against a
+                         reference (new x ref pairs only).
+- streaming.ingest.incremental_neardup_batch — the LSH join of one
+                         micro-batch against the accumulated bucket state.
 - simhash_pairs        — 64-bit SimHash + chunked hamming candidate join.
 - embedding_neardup_pairs — cosine near-duplicates over an embedding
                          column: exact all-pairs (small/oracle) and a
                          random-hyperplane-bucketed variant (scale).
+- duplicate_spans, semantic_dedup, bloom_filter_new — verbatim-span,
+                         embedding-cluster and Bloom-membership dedup.
+
+The six n-gram / MinHash pair operators are one filter-then-verify
+engine built from shared stages, each written once:
+
+- :func:`_lsh_buckets`   — per-doc hash arrays -> MinHash lanes ->
+                           ``(key, band, bucket)`` rows (the LSH filter);
+- :func:`_count_bound_candidates` — prefix-join match count + the exact
+                           overlap upper bound (the PPJoin filter);
+- :func:`_verify_overlap` / :func:`_verify_jaccard` — exact
+                           set-intersection overlap of candidate pairs
+                           over the checkpointed ``(key, hs)`` arrays;
+- :func:`_tag_sides` / :func:`_split_sides` / :func:`_untag_pairs` — the
+                           ``n:``/``r:`` keyed union of two corpora.
+
+Callers keep their own candidate join conditions and checkpoint
+choices; the stages receive already-materialized frames.
 
 All hot paths are JVM expressions (xxhash64, explode, groupBy agg);
 nothing touches Python per-row.
@@ -97,7 +120,7 @@ def _doc_token_arrays(
     hash sets the build started from — verify phases should read their
     hash arrays from ``arrs`` instead of re-deriving them with
     ``transform(toks, x -> x.h)`` (same set per doc, element order
-    differs, which array_intersect sizes are insensitive to).
+    differs, which intersection sizes are insensitive to).
     """
     # Hash shingles to longs FIRST: every downstream shuffle (frequency
     # count, doc groupBy, prefix join) keys on 8-byte longs, never on
@@ -153,6 +176,80 @@ def _prefix_table(
     ).select(id_col, "sz", "L", F.col("p.h").alias("ph"))
 
 
+def _count_bound_candidates(
+    a: DataFrame, b: DataFrame, cond, key: str, t: float
+) -> DataFrame:
+    """(id_a, id_b) Jaccard candidates of a prefix join: ``a`` and ``b``
+    are :func:`_prefix_table` frames, aliased here as ``a``/``b`` so
+    ``cond`` (the caller's join condition) can name their columns.
+
+    Count bound: with c = |prefix(A) ∩ prefix(B)| matches for a pair,
+    every further common token lies past the SMALLER prefix boundary in
+    the one shared global order, hence inside that one doc's suffix
+    (sz - L elements), so overlap <= c + max(sz_a - L_a, sz_b - L_b),
+    which must reach alpha = ceil(t/(1+t) * (sz_a + sz_b)).  Exact for
+    ANY per-side L — the argument never uses how L was chosen."""
+    counts = (
+        a.alias("a")
+        .join(b.alias("b"), cond)
+        .groupBy(
+            F.col(f"a.{key}").alias("id_a"),
+            F.col(f"b.{key}").alias("id_b"),
+            F.col("a.sz").alias("sz_a"),
+            F.col("b.sz").alias("sz_b"),
+            F.col("a.L").alias("L_a"),
+            F.col("b.L").alias("L_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    alpha = F.ceil(F.lit(t / (1.0 + t)) * (F.col("sz_a") + F.col("sz_b")))
+    ubound = F.col("c") + F.greatest(
+        F.col("sz_a") - F.col("L_a"), F.col("sz_b") - F.col("L_b")
+    )
+    return counts.filter(ubound >= alpha).select("id_a", "id_b")
+
+
+def _verify_overlap(cand: DataFrame, arrs: DataFrame, key: str) -> DataFrame:
+    """Exact verify of candidate pairs: (id_a, id_b, inter, sz_a, sz_b)
+    with ``inter = |A ∩ B|`` via ``array_intersect`` of the two docs'
+    shingle-hash sets and both set sizes.
+
+    ``cand`` holds (id_a, id_b) keys; ``arrs`` is the checkpointed
+    (key, hs) per-doc DISTINCT hash arrays the candidates were built
+    from — read directly (8 bytes/elem, no groupBy rebuild); element
+    order is irrelevant to the intersection size.  Only candidates are
+    ever verified, never the full similarity join."""
+    ha = arrs.select(F.col(key).alias("id_a"), F.col("hs").alias("hs_a"))
+    hb = arrs.select(F.col(key).alias("id_b"), F.col("hs").alias("hs_b"))
+    return (
+        cand.join(ha, "id_a")
+        .join(hb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("hs_a", "hs_b")).alias("inter"),
+            F.size("hs_a").alias("sz_a"),
+            F.size("hs_b").alias("sz_b"),
+        )
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame, arrs: DataFrame, key: str, t: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard) candidate pairs with exact Jaccard
+    ``inter / (sz_a + sz_b - inter) >= t`` (see :func:`_verify_overlap`)."""
+    return (
+        _verify_overlap(cand, arrs, key)
+        .withColumn(
+            "jaccard",
+            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+        )
+        .filter(F.col("jaccard") >= F.lit(float(t)))
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.8,
@@ -175,8 +272,8 @@ def ngram_jaccard_pairs(
        prefix token, so joining prefixes loses no true pair — and common
        shingles almost never appear in a prefix;
     3. candidates also satisfy the length filter t*|A| <= |B| <= |A|/t;
-    4. verify candidates exactly: |A∩B| via ``array_intersect`` of the
-       full shingle-hash arrays, |A∪B| = sa+sb-i.
+    4. verify candidates exactly (:func:`_verify_jaccard`): |A∩B| of
+       the full shingle-hash arrays, |A∪B| = sa+sb-i.
 
     Filters applied before any verification (all exact — no false
     negatives):
@@ -244,61 +341,27 @@ def ngram_jaccard_pairs(
     # (exceptAll 0/0 both ways).
     pshort = _prefix_table(gp, 2.0 * t / (1.0 + t), prefix_ext, id_col)
     preg = _prefix_table(gp, t, prefix_ext, id_col)
-    a = pshort.alias("a")
-    b = preg.alias("b")
     a_smaller = (F.col("a.sz") < F.col("b.sz")) | (
         (F.col("a.sz") == F.col("b.sz"))
         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
     )
-    cand_counts = (
-        a.join(
-            b,
-            (F.col("a.ph") == F.col("b.ph"))
-            & a_smaller
-            # one-sided length filter: a is the smaller doc, so only
-            # t*|b| <= |a| can bind (|a| <= |b| holds by direction)
-            & (F.col("b.sz") * F.lit(t) <= F.col("a.sz")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.sz").alias("sz_a"),
-            F.col("b.sz").alias("sz_b"),
-            F.col("a.L").alias("L_a"),
-            F.col("b.L").alias("L_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
+    cand = _count_bound_candidates(
+        pshort,
+        preg,
+        (F.col("a.ph") == F.col("b.ph"))
+        & a_smaller
+        # one-sided length filter: a is the smaller doc, so only
+        # t*|b| <= |a| can bind (|a| <= |b| holds by direction)
+        & (F.col("b.sz") * F.lit(t) <= F.col("a.sz")),
+        id_col,
+        t,
     )
-    alpha = F.ceil(F.lit(t / (1.0 + t)) * (F.col("sz_a") + F.col("sz_b")))
-    # overlap <= c + max(|suffix A|, |suffix B|): every common shingle
-    # missed by c lies past the SMALLER prefix boundary in the global
-    # order, hence inside that one doc's suffix (sz - L elements).
-    ubound = F.col("c") + F.greatest(
-        F.col("sz_a") - F.col("L_a"), F.col("sz_b") - F.col("L_b")
-    )
-    cand = cand_counts.filter(ubound >= alpha).select("id_a", "id_b", "sz_a", "sz_b")
-    # Verify sides read the checkpointed per-doc hash arrays directly
-    # (8 bytes/elem, no per-row transform) instead of re-deriving them
-    # from the 16-byte (dfq,h) structs; array_intersect sizes are
-    # insensitive to the element-order difference.
-    ha = arrs.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"))
-    hb = arrs.select(F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b"))
-    return (
-        cand.join(ha, "id_a")
-        .join(hb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= F.lit(t))
-        # canonical (id_a < id_b) orientation: generation is
-        # size-directed, the contract (and the oracle) is id-directed
-        .select(
-            F.least("id_a", "id_b").alias("id_a"),
-            F.greatest("id_a", "id_b").alias("id_b"),
-            "jaccard",
-        )
+    # canonical (id_a < id_b) orientation: generation is size-directed,
+    # the contract (and the oracle) is id-directed
+    return _verify_jaccard(cand, arrs, id_col, t).select(
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
+        "jaccard",
     )
 
 
@@ -443,10 +506,9 @@ def minhash_signatures(
     k: int = 5,
     num_hashes: int = 64,
     seed: int = 42,
-    hashed_shingles: DataFrame | None = None,
     hash_arrays: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash signature per doc as ``num_hashes`` min-aggregates.
+    """MinHash signature per doc: columns ``mh_0 .. mh_{num_hashes-1}``.
 
     Base shingle hash is JVM xxhash64; the hash family is the classic
     (a*x + b) mod p permutation over it.
@@ -462,8 +524,8 @@ def minhash_signatures(
     kept because it deletes the signature exchange outright and reads
     the same checkpointed arrays the verify side uses.
 
-    ``hashed_shingles``: a precomputed exploded (id, h) table — one
-    groupBy with map-side combine.
+    Without ``hash_arrays``: ``num_hashes`` min-aggregates in one
+    groupBy (map-side combined) over the exploded (id, h) shingle table.
     """
     import random
 
@@ -485,17 +547,47 @@ def minhash_signatures(
             for i, (a, b) in enumerate(coeffs)
         ]
         return hash_arrays.filter(F.size("hs") > 0).select(id_col, *lanes)
-    sh = (
-        hashed_shingles
-        if hashed_shingles is not None
-        else hashed_shingle_table(df, text_col, id_col, k)
-    )
     x = F.pmod(F.col("h"), F.lit(p))
     aggs = [
         F.min(F.pmod(F.lit(a) * x + F.lit(b), F.lit(p))).alias(f"mh_{i}")
         for i, (a, b) in enumerate(coeffs)
     ]
-    return sh.groupBy(id_col).agg(*aggs)
+    return hashed_shingle_table(df, text_col, id_col, k).groupBy(id_col).agg(*aggs)
+
+
+def _lsh_buckets(
+    arrs: DataFrame, key: str, num_hashes: int, bands: int, seed: int
+) -> DataFrame:
+    """(key, band, bucket) LSH rows: the row-local MinHash lanes of the
+    (key, hs) hash arrays, cut into ``bands`` bands of
+    ``num_hashes / bands`` lanes, each band hashed to one bucket.  Two
+    docs are LSH candidates iff they share a (band, bucket) row, so the
+    candidate join's shuffle key is the band hash and its volume is
+    O(docs x bands), never O(docs^2).  Not materialized: callers own the
+    checkpoint (the bucket table usually feeds both sides of a join)."""
+    if not 1 <= bands <= num_hashes or num_hashes % bands:
+        raise ValueError(
+            f"bands must divide num_hashes into whole bands: got "
+            f"num_hashes={num_hashes}, bands={bands}"
+        )
+    rows = num_hashes // bands
+    sig = minhash_signatures(
+        arrs, id_col=key, num_hashes=num_hashes, seed=seed, hash_arrays=arrs
+    )
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(bi).alias("band"),
+                F.xxhash64(
+                    *[F.col(f"mh_{bi * rows + r}") for r in range(rows)]
+                ).alias("bucket"),
+            )
+            for bi in range(bands)
+        ]
+    )
+    return sig.select(key, F.explode(band_structs).alias("bb")).select(
+        key, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    )
 
 
 def minhash_lsh_pairs(
@@ -516,44 +608,22 @@ def minhash_lsh_pairs(
     shuffle key is the band hash, so volume is O(docs x bands), not
     O(docs^2)). Candidates are then verified with exact n-gram Jaccard
     against ``threshold`` (mirrors how production LLM dedup pipelines
-    layer LSH recall + exact verification).
+    layer LSH recall + exact verification).  ``bands`` must divide
+    ``num_hashes`` (ValueError otherwise).
     """
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
-    # One shingle build feeds BOTH the signature aggregation and the
-    # exact-verification arrays below.  r14: materialize the PER-DOC
-    # hash ARRAYS (row-local, zero shuffles — see
-    # _hashed_shingle_arrays) instead of the exploded stream: the
-    # signature build explodes from the checkpointed arrays, and the
-    # verify side reads them directly, deleting the old
-    # groupBy(id).collect_list rebuild (a full shuffle of the shingle
-    # stream) outright.
-    # lazy checkpoint (r15): blocks materialize inside the buckets
-    # checkpoint job (sig references arrs once); the verify joins read
-    # the already-computed blocks — one fewer job barrier
+    # One shingle build feeds BOTH the signature lanes and the exact
+    # verify: the per-doc hash ARRAYS (row-local, zero shuffles — see
+    # _hashed_shingle_arrays) are checkpointed and read directly by
+    # both, so the verify side needs no groupBy rebuild of the shingle
+    # stream.  Lazy checkpoint (r15): blocks materialize inside the
+    # buckets checkpoint job (the lanes reference arrs once); the
+    # verify joins read the already-computed blocks — one fewer job
+    # barrier.
     arrs = materialize(_hashed_shingle_arrays(df, text_col, id_col, k), eager=False)
-    sig = minhash_signatures(
-        df, text_col, id_col, k, num_hashes, seed, hash_arrays=arrs
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(*[F.col(f"mh_{bi * rows + r}") for r in range(rows)]).alias(
-                    "bucket"
-                ),
-            )
-            for bi in range(bands)
-        ]
-    )
     # Materialized once: the bucket table is both sides of the self-join,
     # and recomputing it would re-run the whole signature build.
-    buckets = (
-        sig.select(id_col, F.explode(band_structs).alias("bb"))
-        .select(
-            id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-        .transform(materialize)
+    buckets = _lsh_buckets(arrs, id_col, num_hashes, bands, seed).transform(
+        materialize
     )
     a = buckets.alias("a")
     b = buckets.alias("b")
@@ -567,27 +637,7 @@ def minhash_lsh_pairs(
     )
     if not verify:
         return cand
-    # Verify ONLY the LSH candidates: join each side's shingle-hash array
-    # and compute exact Jaccard via array_intersect. (Never computes the
-    # full exact similarity join — candidates are the whole point.)
-    # No rarity ordering needed here (that's the prefix filter's concern
-    # in ngram_jaccard_pairs) — the checkpointed per-doc arrays ARE the
-    # verify input (r14: no groupBy rebuild; array order differs from
-    # the old collect_list but array_intersect is order-insensitive).
-    hs = arrs.select(id_col, "hs", F.size("hs").alias("sz"))
-    ha = hs.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a"))
-    hb = hs.select(F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b"), F.col("sz").alias("sz_b"))
-    return (
-        cand.join(ha, "id_a")
-        .join(hb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_jaccard(cand, arrs, id_col, threshold)
 
 
 def connected_components(
@@ -1239,8 +1289,8 @@ def containment_pairs(
     prefix must hit B — join the A-prefix against the FULL inverted
     index (the asymmetric prefix filter: B has no usable prefix because
     containment doesn't bound B's size from above), add the one-sided
-    size filter ``|B| >= t*|A|``, then verify candidates exactly with
-    ``array_intersect``.
+    size filter ``|B| >= t*|A|``, then verify candidates exactly
+    (:func:`_verify_overlap`).
 
     ``prefix_ext`` is the count-filter lever: the minimal prefix
     (``|A| - ceil(t*|A|) + 1``) admits every pair sharing a SINGLE rare
@@ -1285,18 +1335,10 @@ def containment_pairs(
     c_min = F.ceil(F.col("sz_a") * F.lit(t)) - F.greatest(
         F.col("sz_a") - F.col("L_a"), F.lit(0)
     )
-    strong = cand.filter(F.col("c") >= c_min)
-    # Verify sides read the checkpointed (id, hs) arrays — see
-    # ngram_jaccard_pairs.
-    ha = arrs.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"))
-    hb = arrs.select(F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b"))
+    strong = cand.filter(F.col("c") >= c_min).select("id_a", "id_b")
     return (
-        strong.join(ha, "id_a")
-        .join(hb, "id_b")
-        .withColumn(
-            "containment",
-            F.size(F.array_intersect("hs_a", "hs_b")) / F.col("sz_a"),
-        )
+        _verify_overlap(strong, arrs, id_col)
+        .withColumn("containment", F.col("inter") / F.col("sz_a"))
         .filter(F.col("containment") >= F.lit(t))
         .select("id_a", "id_b", "containment")
     )
@@ -1426,6 +1468,40 @@ def semantic_dedup(
     ).select(id_col, "cluster_id", "centroid_sim", "kept")
 
 
+_NEW, _REF = "n:", "r:"  # side tags of the keyed two-corpus union
+
+
+def _tag_sides(
+    new_docs: DataFrame, ref_docs: DataFrame, text_col: str, id_col: str
+) -> DataFrame:
+    """(__key, text) over BOTH corpora: ``__key`` is the side tag +
+    the id as a string, so one shingle build, one rarity order and one
+    hash family serve both sides and ids may overlap across corpora."""
+    tag = lambda df, side: df.select(  # noqa: E731
+        F.concat(F.lit(side), F.col(id_col).cast("string")).alias("__key"),
+        F.col(text_col),
+    )
+    return tag(new_docs, _NEW).unionByName(tag(ref_docs, _REF))
+
+
+def _split_sides(keyed: DataFrame) -> tuple:
+    """(new rows, ref rows) of a ``__key``-tagged frame."""
+    side = lambda tag: keyed.filter(F.col("__key").startswith(tag))  # noqa: E731
+    return side(_NEW), side(_REF)
+
+
+def _untag_pairs(pairs: DataFrame, new_docs: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b, jaccard) over new x ref tagged keys ->
+    (id_new, id_ref, jaccard) with the tags stripped and the ids cast
+    back to the input id type."""
+    id_type = new_docs.schema[id_col].dataType.simpleString()
+    start = len(_NEW) + 1  # both tags have the same length
+    strip = lambda c: F.expr(f"substring({c}, {start})").cast(id_type)  # noqa: E731
+    return pairs.select(
+        strip("id_a").alias("id_new"), strip("id_b").alias("id_ref"), "jaccard"
+    )
+
+
 def cross_corpus_neardup_pairs(
     new_docs: DataFrame,
     ref_docs: DataFrame,
@@ -1450,65 +1526,26 @@ def cross_corpus_neardup_pairs(
     smaller than the reference pays for its own size, not the
     reference's square.  Returns (id_new, id_ref, jaccard)."""
     t = float(threshold)
-    tag = lambda df, side: df.select(  # noqa: E731
-        F.concat(F.lit(side), F.col(id_col).cast("string")).alias("__key"),
-        F.col(text_col),
-    )
-    keyed = tag(new_docs, "n:").unionByName(tag(ref_docs, "r:"))
+    keyed = _tag_sides(new_docs, ref_docs, text_col, id_col)
     g, arrs = _doc_token_arrays(keyed, text_col, "__key", k, unit)
     g = materialize(g)
     # spread ahead of the explode+join blow-up (no-op at scale).  The
     # asymmetric short prefix does NOT apply here: direction is
     # corpus-based (new x ref), not size-based, so neither side is
     # provably the smaller doc of its pairs.
-    pref = _prefix_table(_spread(g), t, prefix_ext, "__key")
-    a = pref.filter(F.col("__key").startswith("n:")).alias("a")
-    b = pref.filter(F.col("__key").startswith("r:")).alias("b")
-    cand_counts = (
-        a.join(
-            b,
-            (F.col("a.ph") == F.col("b.ph"))
-            & (F.col("b.sz") >= F.col("a.sz") * F.lit(t))
-            & (F.col("b.sz") * F.lit(t) <= F.col("a.sz")),
-        )
-        .groupBy(
-            F.col("a.__key").alias("key_a"),
-            F.col("b.__key").alias("key_b"),
-            F.col("a.sz").alias("sz_a"),
-            F.col("b.sz").alias("sz_b"),
-            F.col("a.L").alias("L_a"),
-            F.col("b.L").alias("L_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
+    pref_new, pref_ref = _split_sides(
+        _prefix_table(_spread(g), t, prefix_ext, "__key")
     )
-    alpha = F.ceil(F.lit(t / (1.0 + t)) * (F.col("sz_a") + F.col("sz_b")))
-    ubound = F.col("c") + F.greatest(
-        F.col("sz_a") - F.col("L_a"), F.col("sz_b") - F.col("L_b")
+    cand = _count_bound_candidates(
+        pref_new,
+        pref_ref,
+        (F.col("a.ph") == F.col("b.ph"))
+        & (F.col("b.sz") >= F.col("a.sz") * F.lit(t))
+        & (F.col("b.sz") * F.lit(t) <= F.col("a.sz")),
+        "__key",
+        t,
     )
-    cand = cand_counts.filter(ubound >= alpha).select(
-        "key_a", "key_b", "sz_a", "sz_b"
-    )
-    # Verify sides read the checkpointed (__key, hs) arrays — see
-    # ngram_jaccard_pairs.
-    ha = arrs.select(F.col("__key").alias("key_a"), F.col("hs").alias("hs_a"))
-    hb = arrs.select(F.col("__key").alias("key_b"), F.col("hs").alias("hs_b"))
-    id_type = new_docs.schema[id_col].dataType.simpleString()
-    strip = lambda c: F.expr(f"substring({c}, 3)").cast(id_type)  # noqa: E731
-    return (
-        cand.join(ha, "key_a")
-        .join(hb, "key_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= F.lit(t))
-        .select(
-            strip("key_a").alias("id_new"),
-            strip("key_b").alias("id_ref"),
-            "jaccard",
-        )
-    )
+    return _untag_pairs(_verify_jaccard(cand, arrs, "__key", t), new_docs, id_col)
 
 
 def cross_corpus_minhash_pairs(
@@ -1533,68 +1570,24 @@ def cross_corpus_minhash_pairs(
     incremental ingest state stores, so this is also the batch twin of
     :func:`..streaming.ingest.incremental_neardup_batch`'s
     cross-history join."""
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
-    t = float(threshold)
-    tag = lambda df, side: df.select(  # noqa: E731
-        F.concat(F.lit(side), F.col(id_col).cast("string")).alias("__key"),
-        F.col(text_col),
-    )
-    keyed = tag(new_docs, "n:").unionByName(tag(ref_docs, "r:"))
-    # r14: checkpoint the per-doc hash ARRAYS (row-local build, zero
-    # shuffles) — the signature build explodes from them and the verify
-    # side reads them directly (see minhash_lsh_pairs).  r15: lazy —
-    # materializes inside the buckets checkpoint job (single reference).
+    keyed = _tag_sides(new_docs, ref_docs, text_col, id_col)
+    # checkpointed per-doc hash ARRAYS feed both the lanes and the
+    # verify; lazy, as in minhash_lsh_pairs
     arrs = materialize(
         _hashed_shingle_arrays(keyed, text_col, "__key", k), eager=False
     )
-    sig = minhash_signatures(
-        keyed, text_col, "__key", k, num_hashes, seed, hash_arrays=arrs
+    buckets = _lsh_buckets(arrs, "__key", num_hashes, bands, seed).transform(
+        materialize
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"mh_{bi * rows + r}") for r in range(rows)]
-                ).alias("bucket"),
-            )
-            for bi in range(bands)
-        ]
-    )
-    buckets = (
-        sig.select("__key", F.explode(band_structs).alias("bb"))
-        .select("__key", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        .transform(materialize)
-    )
-    a = buckets.filter(F.col("__key").startswith("n:")).alias("a")
-    b = buckets.filter(F.col("__key").startswith("r:")).alias("b")
+    new_b, ref_b = _split_sides(buckets)
     cand = (
-        a.join(b, ["band", "bucket"])
-        .select(
-            F.col("a.__key").alias("key_a"), F.col("b.__key").alias("key_b")
-        )
+        new_b.alias("a")
+        .join(ref_b.alias("b"), ["band", "bucket"])
+        .select(F.col("a.__key").alias("id_a"), F.col("b.__key").alias("id_b"))
         .distinct()
     )
-    hs = arrs.select("__key", "hs", F.size("hs").alias("sz"))
-    ha = hs.select(F.col("__key").alias("key_a"), F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a"))
-    hb = hs.select(F.col("__key").alias("key_b"), F.col("hs").alias("hs_b"), F.col("sz").alias("sz_b"))
-    id_type = new_docs.schema[id_col].dataType.simpleString()
-    strip = lambda c: F.expr(f"substring({c}, 3)").cast(id_type)  # noqa: E731
-    return (
-        cand.join(ha, "key_a")
-        .join(hb, "key_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= F.lit(t))
-        .select(
-            strip("key_a").alias("id_new"),
-            strip("key_b").alias("id_ref"),
-            "jaccard",
-        )
+    return _untag_pairs(
+        _verify_jaccard(cand, arrs, "__key", threshold), new_docs, id_col
     )
 
 

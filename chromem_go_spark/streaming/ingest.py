@@ -330,40 +330,20 @@ def incremental_neardup_batch(
     """
     import os
 
+    from ..batchstate import fold_batch_partitions, read_history, write_batch
     from ..materialize import materialize
     from ..operators import dedup as D
 
     spark = batch_docs.sparkSession
-    assert num_hashes % bands == 0
-    rows = num_hashes // bands
     # r14: checkpoint the per-doc hash ARRAYS (row-local, zero
-    # shuffles); the signature build explodes from them and the
-    # shingle-state write reads them directly (the old
-    # groupBy+collect_list rebuild paid a full shuffle of the batch's
+    # shuffles); the signature lanes and the shingle-state write read
+    # them directly (no groupBy+collect_list rebuild of the batch's
     # shingle stream).
     arrs = materialize(D._hashed_shingle_arrays(batch_docs, text_col, id_col, k))
-    sig = D.minhash_signatures(
-        batch_docs, text_col, id_col, k, num_hashes, seed, hash_arrays=arrs
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"mh_{bi * rows + r}") for r in range(rows)]
-                ).alias("bucket"),
-            )
-            for bi in range(bands)
-        ]
-    )
-    new_buckets = materialize(
-        sig.select(id_col, F.explode(band_structs).alias("bb")).select(
-            id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-        )
-    )
+    new_buckets = materialize(D._lsh_buckets(arrs, id_col, num_hashes, bands, seed))
     # array_sort: the fold's crash healing dedups state rows
-    # byte-for-byte, so rows must be canonical (Jaccard via
-    # array_intersect is order-insensitive, so free).  The size()>0
+    # byte-for-byte, so rows must be canonical (the verify's
+    # intersection size is order-insensitive, so free).  The size()>0
     # filter keeps state identical to the pre-r14 groupBy rebuild,
     # which never emitted a row for a doc with zero shingles.
     new_shingles = materialize(
@@ -379,28 +359,6 @@ def incremental_neardup_batch(
     pairs_path = os.path.join(state_dir, "pairs")
     have_state = os.path.exists(buckets_path)
 
-    def _read_state(path: str) -> DataFrame:
-        # manifest-aware read (identical to a plain read in rename
-        # mode), then exclude this batch's own partition: a failed
-        # earlier attempt of the SAME batch must not act as history
-        # for its retry
-        from ..batchstate import read_live
-
-        return (
-            read_live(spark, path)
-            .filter(F.col("__batch") != F.lit(int(batch_id)))
-            .drop("__batch")
-        )
-
-    def _write_state(df: DataFrame, path: str) -> None:
-        (
-            df.withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch")
-            .parquet(path)
-        )
-
     # candidates: new-vs-history (join against state) + new-vs-new
     a = new_buckets.alias("a")
     cands = [
@@ -411,7 +369,7 @@ def incremental_neardup_batch(
         )
     ]
     if have_state:
-        old_buckets = _read_state(buckets_path).alias("o")
+        old_buckets = read_history(spark, buckets_path, batch_id).alias("o")
         cands.append(
             a.join(old_buckets, ["band", "bucket"])
             .select(
@@ -427,31 +385,15 @@ def incremental_neardup_batch(
 
     all_shingles = new_shingles
     if have_state:
-        all_shingles = new_shingles.unionByName(_read_state(shingles_path))
-    ha = all_shingles.select(
-        F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a")
-    )
-    hb = all_shingles.select(
-        F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b"), F.col("sz").alias("sz_b")
-    )
-    pairs = (
-        cand.join(ha, "id_a")
-        .join(hb, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
+        all_shingles = new_shingles.unionByName(
+            read_history(spark, shingles_path, batch_id)
         )
-        .filter(F.col("jaccard") >= F.lit(float(threshold)))
-        .select("id_a", "id_b", "jaccard")
-    )
-    _write_state(materialize(pairs), pairs_path)
-    _write_state(new_buckets, buckets_path)
-    _write_state(new_shingles, shingles_path)
+    pairs = D._verify_jaccard(cand, all_shingles, id_col, threshold)
+    write_batch(materialize(pairs), pairs_path, batch_id)
+    write_batch(new_buckets, buckets_path, batch_id)
+    write_batch(new_shingles, shingles_path, batch_id)
 
     if compact_after:
-        from ..batchstate import fold_batch_partitions
-
         for p in (buckets_path, shingles_path, pairs_path):
             # fold committed history (never the CURRENT batch — its
             # replay-overwrite contract must survive) into the reserved
@@ -530,6 +472,7 @@ def incremental_semantic_dedup_batch(
 
     import numpy as np
 
+    from ..batchstate import fold_batch_partitions, read_history, write_batch
     from ..functions import vector as V
     from ..materialize import materialize
     from ..operators.ann import _assign_clusters
@@ -550,24 +493,6 @@ def incremental_semantic_dedup_batch(
     pairs_path = os.path.join(state_dir, "pairs")
     have_state = os.path.exists(vectors_path)
 
-    def _read_state(path: str) -> DataFrame:
-        from ..batchstate import read_live
-
-        return (
-            read_live(spark, path)
-            .filter(F.col("__batch") != F.lit(int(batch_id)))
-            .drop("__batch")
-        )
-
-    def _write_state(df: DataFrame, path: str) -> None:
-        (
-            df.withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch")
-            .parquet(path)
-        )
-
     a = assigned.select(
         F.col(id_col).alias("na"), "cluster_id", F.col(vec_col).alias("va")
     )
@@ -582,7 +507,7 @@ def incremental_semantic_dedup_batch(
         )
     ]
     if have_state:
-        old = _read_state(vectors_path).select(
+        old = read_history(spark, vectors_path, batch_id).select(
             F.col(id_col).alias("nb"), "cluster_id", F.col(vec_col).alias("vb")
         )
         cands.append(
@@ -609,12 +534,10 @@ def incremental_semantic_dedup_batch(
         .filter(F.col("cosine") >= F.lit(float(threshold)))
         .select("id_a", "id_b", "cosine")
     )
-    _write_state(materialize(pairs), pairs_path)
-    _write_state(assigned, vectors_path)
+    write_batch(materialize(pairs), pairs_path, batch_id)
+    write_batch(assigned, vectors_path, batch_id)
 
     if compact_after:
-        from ..batchstate import fold_batch_partitions
-
         for p in (vectors_path, pairs_path):
             fold_batch_partitions(
                 spark,
@@ -1630,18 +1553,12 @@ def incremental_gram_index_batch(
     folds, readers always consistent."""
     import os
 
-    from ..batchstate import fold_batch_partitions
+    from ..batchstate import fold_batch_partitions, write_batch
     from ..operators import textindex as TI
 
     spark = batch_docs.sparkSession
     posts = TI.build_gram_index(batch_docs, text_col, id_col, n)
-    (
-        posts.withColumn("__batch", F.lit(int(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch")
-        .parquet(index_dir)
-    )
+    write_batch(posts, index_dir, batch_id)
     if compact_after:
         fold_batch_partitions(
             spark,

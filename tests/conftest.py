@@ -11,34 +11,6 @@ from chromem_go_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# r15 (judge item 2): the full suite outgrew the driver's pytest time
-# budget (r14 VERIFY tests_ok=false at ~81% with zero failures — a
-# timeout, not a failure).  The slowest tests (property sweeps, race
-# injections, soak/overlap runs — each a repeat-loop around code that
-# OTHER, faster tests already cover once) are marked ``slow`` and SKIP
-# by default so the driver's `pytest tests/ -x -q` completes in budget.
-# Nothing is deleted: `SPARK_GRAFT_SLOW_TESTS=1 pytest tests/` runs the
-# full set, and the builder's round close-out does exactly that.
-RUN_SLOW = os.environ.get("SPARK_GRAFT_SLOW_TESTS", "") not in ("", "0")
-
-
-def pytest_configure(config):
-    config.addinivalue_line(
-        "markers",
-        "slow: long-running test, skipped unless SPARK_GRAFT_SLOW_TESTS=1",
-    )
-
-
-def pytest_collection_modifyitems(config, items):
-    if RUN_SLOW:
-        return
-    skip = pytest.mark.skip(
-        reason="slow test skipped by default (set SPARK_GRAFT_SLOW_TESTS=1)"
-    )
-    for item in items:
-        if "slow" in item.keywords:
-            item.add_marker(skip)
-
 
 @pytest.fixture(scope="session")
 def spark():

@@ -3,6 +3,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from chromem_go_spark.operators import dedup as D
+from chromem_go_spark.streaming import ingest as S
 
 
 @pytest.fixture(scope="module")
@@ -759,6 +760,53 @@ def test_cross_corpus_minhash_finds_exact_pairs(spark, sf_dir):
         for r in cross_corpus_neardup_pairs(new, ref, threshold=0.5).collect()
     }
     assert lsh == exact and exact
+
+
+def test_cross_corpus_minhash_equals_union_lsh_cross_pairs(spark, sf_dir):
+    """The cross-corpus LSH join IS the union LSH self-join restricted
+    to cross-side pairs: both band the same hash family over the same
+    shingle sets and verify with the same exact Jaccard, so on a
+    disjoint split the two agree pair-for-pair and value-for-value —
+    for any corpus, with no collision-probability guard."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    new = docs.filter(F.col("doc_id") % 5 == 0)
+    ref = docs.filter(F.col("doc_id") % 5 != 0)
+    got = {
+        (r["id_new"], r["id_ref"], r["jaccard"])
+        for r in D.cross_corpus_minhash_pairs(new, ref, threshold=0.5).collect()
+    }
+    want = set()
+    for r in D.minhash_lsh_pairs(docs, threshold=0.5).collect():
+        a, b = r["id_a"], r["id_b"]
+        if (a % 5 == 0) != (b % 5 == 0):
+            n, f = (a, b) if a % 5 == 0 else (b, a)
+            want.add((n, f, r["jaccard"]))
+    assert got == want
+    assert want  # discriminative at 0.5 on this corpus
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda docs, bands, state: D.minhash_lsh_pairs(docs, bands=bands),
+        lambda docs, bands, state: D.cross_corpus_minhash_pairs(
+            docs, docs, bands=bands
+        ),
+        lambda docs, bands, state: S.incremental_neardup_batch(
+            docs, state, bands=bands
+        ),
+    ],
+    ids=["minhash_lsh_pairs", "cross_corpus_minhash_pairs", "incremental_neardup_batch"],
+)
+@pytest.mark.parametrize("bands", [0, 5, 128])
+def test_lsh_bands_must_divide_num_hashes(docs, tmp_path, run, bands):
+    """64 hashes cannot be cut into 0, 5 or 128 whole bands: a
+    ValueError (never an assert, which ``python -O`` strips into a
+    silently truncated or zero-lane banding) before any state write."""
+    state = str(tmp_path / "state")
+    with pytest.raises(ValueError, match="bands"):
+        run(docs, bands, state)
+    assert not (tmp_path / "state").exists()
 
 
 def test_cross_corpus_no_pair_in_lsh_miss_band(spark, sf_dir):

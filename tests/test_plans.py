@@ -291,12 +291,23 @@ def test_minhash_signature_path_rowlocal(docs):
     the LSH band self-join + candidate distinct."""
     from chromem_go_spark.operators import dedup as D
 
-    df = D.minhash_lsh_pairs(docs, threshold=0.5)
-    plan = df._jdf.queryExecution().sparkPlan().toString()
-    assert "collect_list" not in plan
-    # signature lanes are projections, not aggregates: no min(...) agg
-    # over an exploded shingle stream survives in the plan
-    assert "partial_min" not in plan.lower()
+    plans = {
+        name: df._jdf.queryExecution().sparkPlan().toString()
+        for name, df in [
+            ("self", D.minhash_lsh_pairs(docs, threshold=0.5)),
+            ("cross", D.cross_corpus_minhash_pairs(
+                docs.filter(F.col("doc_id") % 5 == 0),
+                docs.filter(F.col("doc_id") % 5 != 0),
+                threshold=0.5,
+            )),
+        ]
+    }
+    for name, plan in plans.items():
+        assert "collect_list" not in plan, name
+        # signature lanes are projections, not aggregates: no min(...)
+        # agg over an exploded shingle stream survives in the plan
+        assert "partial_min" not in plan.lower(), name
+    plan = plans["self"]
     # exchange budget pin: band self-join + pair distinct + the final
     # verify joins broadcast — regressions that re-introduce a shuffle
     # (signature groupBy, verify collect_list rebuild) push this up
