@@ -1225,7 +1225,7 @@ class Collection:
             # caller didn't ask to serve
             index_kwargs.setdefault("persist", False)
             index = self.build_ann_index(**index_kwargs)
-        from .operators.ann import IVFIndex, IVFPQIndex
+        from .operators.ann import IVFIndex, _CodedIVF
 
         if where:
             from .operators.filters import where_predicate
@@ -1249,7 +1249,7 @@ class Collection:
                 list(query_embedding), int(n_results), nprobe=nprobe,
                 where=where_predicate(where),
             )
-        if isinstance(index, IVFPQIndex):
+        if isinstance(index, _CodedIVF):
             return index.search_batch(
                 ["0"], [list(query_embedding)], int(n_results), nprobe=nprobe
             ).drop("query_id")
@@ -1716,22 +1716,20 @@ class Collection:
                         parsed, pre if constrained else None
                     )
                     if apq is not None:
-                        ef = (
-                            index.n_points()
-                            if target_recall >= 0.999
-                            else max(4 * int(n_results), 64)
+                        served = R._served_decision(
+                            index, int(n_results), target_recall
                         )
                         return index.search_batch(
                             self.spark, qids, qvecs, int(n_results),
-                            ef=ef, allowed_per_query=apq,
+                            ef=served["ef"], allowed_per_query=apq,
                         )
                 # served index that can't express the filter: exact path
                 return self._query_batch_flat_dsl(
                     qids, qvecs, n_results, parsed, prune()
                 )
-            nprobe = R._nprobe(len(index.centroids), target_recall)
+            served = R._served_decision(index, int(n_results), target_recall)
             return index.search_batch_dsl(
-                qids, qvecs, int(n_results), parsed, nprobe=nprobe,
+                qids, qvecs, int(n_results), parsed, nprobe=served["nprobe"],
                 where=pre if (where or where_document) else None,
                 metadata_col="metadata", text_col="content",
             )

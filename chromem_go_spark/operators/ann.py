@@ -1,24 +1,55 @@
-"""Approximate nearest-neighbor search: IVF (inverted-file) index.
+"""Approximate nearest-neighbor search: the IVF (inverted-file) tiers.
 
 The reference is FLAT-only (exhaustive scan; HNSW/IVFFlat are roadmap
 items, reference README.md:176-178). At 100 TB, brute force over every
-query is the bottleneck, so this adds the classic IVF design mapped onto
-Spark's storage model:
+query is the bottleneck, so this maps the classic IVF design onto
+Spark's storage model.  Every tier shares one coarse quantizer:
+spherical k-means centroids (deterministic seed) fitted on a bounded,
+hash-spread driver sample, every vector assigned to its nearest
+centroid JVM-side, and the tables **written partitioned by
+``cluster_id``** — so probing ``nprobe`` cells is *partition pruning at
+the Parquet scan*, not a filter over all data.
 
-- **build**: k-means centroids (deterministic seed) fitted on a bounded
-  driver-side sample, then every vector assigned to its nearest centroid
-  JVM-side. The index is the same table **written partitioned by
-  ``cluster_id``** — so probing clusters at query time is *partition
-  pruning at the Parquet scan*, not a filter over all data.
-- **search**: rank centroids against the query on the driver (tiny), pick
-  ``nprobe``, scan only those partitions, brute-force within.
+Three tiers:
 
-With ``nprobe == n_clusters`` the search is exact (identical results to
-FLAT), which is how the DuckDB oracle validates it.
+- :class:`IVFIndex` keeps full vectors and every input column in the
+  cells and scores exactly inside the probed cells.  It is the tier
+  that serves metadata filters (``search_filtered``,
+  ``search_batch_dsl``).
+- :class:`IVFSQIndex` and :class:`IVFPQIndex` are two codecs over one
+  coded inverted-list container, :class:`_CodedIVF`.  A codec trains
+  its parameters, turns each vector into a fixed-width uint8 row (SQ8:
+  one byte per dimension; PQ: one byte per subspace, Jégou et al.,
+  TPAMI 2011) and scores code rows against the queries.  The container
+  owns everything else: build, save/load, append, tombstone deletes,
+  compaction, the partition-pruned code scan, and the filter-then-
+  verify search — a top-``rerank`` shortlist per query from the
+  approximate scores, then an exact re-rank that joins the original
+  vectors back by id.
+
+On-disk layout, one directory per index:
+
+- IVF: the assigned rows at the root, partitioned by
+  ``(__batch, cluster_id)``; centroids in ``_centroids.json``.
+- SQ8 / PQ: ``codes/`` (id, codes binary; partitioned by
+  ``(__batch, cluster_id)``), ``vectors/`` (id, vector; partitioned by
+  ``__batch``) and the quantizer in ``_sq_meta.json`` (``centroids``,
+  ``mins``, ``steps``, ``vec_col``, ``id_col``) or ``_pq_meta.json``
+  (``centroids``, ``codebooks``, ``vec_col``, ``id_col``).
+- All tiers: ``__batch=-1`` is the built or compacted base and
+  ``__batch=N`` an appended micro-batch (the fold protocol of
+  batchstate.py); ``_tombstones/`` holds logically deleted ids until the
+  next compact.
+
+With ``nprobe == n_clusters`` (and, on the coded tiers, a generous
+``rerank``) every tier returns exactly the FLAT result, which is how
+the DuckDB oracle validates it.
 """
 
 from __future__ import annotations
 
+import json
+import os
 from typing import Sequence
 
 import numpy as np
@@ -36,6 +67,9 @@ from . import knn as knn_ops
 # results there are bit-identical; at scale the codebook fit stops
 # growing with sample_size.
 _PQ_FIT_CAP = 25_600
+
+_BASE_BATCH = -1  # reserved __batch id: initial build / compacted history
+_CELL_PARTS = ("__batch", "cluster_id")  # partitioning of the cell tables
 
 
 class EmptyCorpusError(ValueError):
@@ -71,7 +105,7 @@ def _hash_sample(
     bare limit() would take rows from the first partitions only, biasing
     trainers on clustered storage. xxhash64(id) % 997 < p keeps
     ~sample_size rows uniformly wherever they live. ONE count + ONE
-    collect — shared by the coarse quantizer and the PQ codebooks."""
+    collect — shared by the coarse quantizer and the codec trainer."""
     n_rows = df.count()
     if n_rows == 0:
         # training a quantizer on nothing is meaningless, and numpy's
@@ -97,6 +131,13 @@ def _hash_sample(
     return np.asarray([r[0] for r in rows], dtype=np.float64)
 
 
+def _unit_rows(mat: np.ndarray) -> np.ndarray:
+    """L2-normalize every row; all-zero rows stay zero."""
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return mat / norms
+
+
 def _kmeans(sample: np.ndarray, n_clusters: int, seed: int = 42, n_iter: int = 20) -> np.ndarray:
     """Deterministic Lloyd's k-means on normalized vectors (spherical-ish:
     centroids re-normalized each step so assignment is by cosine);
@@ -114,6 +155,17 @@ def _kmeans(sample: np.ndarray, n_clusters: int, seed: int = 42, n_iter: int = 2
                 if nrm > 0:
                     cents[c] = m / nrm
     return cents
+
+
+def _coarse_quantizer(
+    df: DataFrame, n_clusters: int, vec_col: str, id_col: str,
+    seed: int, sample_size: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One hash-spread sample and the spherical k-means centroids fitted
+    on it: ``(sample, centroids)``.  The coded tiers train their codec
+    on the same (unnormalized) sample."""
+    sample = _hash_sample(df, vec_col, id_col, sample_size)
+    return sample, _kmeans(_unit_rows(sample), n_clusters, seed)
 
 
 def _assign_clusters(
@@ -134,8 +186,6 @@ def _assign_clusters(
     reason: an ``element_at(array(<lits>), ...)`` mapping would
     re-grow a Catalyst literal with the active-cell count as splits
     accumulate."""
-    import pandas as pd
-
     fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
@@ -177,43 +227,389 @@ def _kmeans_l2(sample: np.ndarray, k: int, seed: int = 42, n_iter: int = 15) -> 
     return cents
 
 
-def _pq_encode(
-    assigned: DataFrame, codebooks: np.ndarray, vec_col: str, id_col: str
-) -> DataFrame:
-    """Encode cluster-assigned vectors to m uint8 PQ codes per row —
-    one argmin per subspace per Arrow batch (shared by index build and
-    incremental append, which must quantize identically)."""
-    mm, _, s = codebooks.shape
-    cb = codebooks
+def _unit(query_vec: Sequence[float]) -> np.ndarray:
+    """One query as an L2-normalized float64 vector (zero stays zero).
+    The norm of a 1-D vector and of a matrix row can differ in the last
+    bit, so the flat-vector IVF paths keep this per-row form and the
+    coded tiers keep :func:`_unit_rows`."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    nrm = np.linalg.norm(q)
+    return q / nrm if nrm > 0 else q
 
-    def encode(batches):
-        import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = mat.shape[0]
-            codes = np.empty((n, mm), dtype=np.uint8)
-            for j in range(mm):
-                sub = mat[:, j * s : (j + 1) * s]
-                d2 = -2.0 * sub @ cb[j].T + (cb[j] ** 2).sum(axis=1)
-                codes[:, j] = np.argmin(d2, axis=1).astype(np.uint8)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cluster_id": pdf["cluster_id"],
-                    "codes": [c.tobytes() for c in codes],
-                }
-            )
+def _probe_clusters(
+    centroids: np.ndarray, query_vec: Sequence[float], nprobe: int
+) -> list[int]:
+    """The ``nprobe`` cells whose centroids are nearest (by cosine) to
+    one query — the probe of every IVF tier."""
+    sims = centroids @ _unit(query_vec)
+    return [int(c) for c in np.argsort(-sims)[: int(nprobe)]]
 
-    id_type = assigned.schema[id_col].dataType.simpleString()
-    return assigned.mapInPandas(
-        encode, f"{id_col} {id_type}, cluster_id int, codes binary"
+
+def _query_batch(query_ids, query_vecs, per_query=None):
+    """Every IVF tier's batch-query front end: ``(ids as strings,
+    vectors as a list)``.  Materializes iterator inputs once and
+    rejects ids, vectors (and ``per_query``, when given) of different
+    lengths — ``zip`` would silently drop queries, and the coded
+    kernels would index past the id list."""
+    qids = [str(q) for q in query_ids]
+    qvecs = list(query_vecs)
+    sizes = {"query_ids": len(qids), "query_vecs": len(qvecs)}
+    if per_query is not None:
+        sizes["per_query"] = len(per_query)
+    if len(set(sizes.values())) > 1:
+        parts = [f"{name} ({n})" for name, n in sizes.items()]
+        raise ValueError(
+            f"{', '.join(parts[:-1])} and {parts[-1]} must be the same length"
+        )
+    return qids, qvecs
+
+
+def _put_batch(df: DataFrame, path: str, batch_id: int, parts, mode: str) -> None:
+    """Write ``df`` as the ``__batch=<batch_id>`` partition of a cell table."""
+    (
+        df.withColumn("__batch", F.lit(int(batch_id)))
+        .write.mode(mode)
+        .partitionBy(*parts)
+        .parquet(path)
     )
 
 
-class IVFPQIndex:
+def _read_cells(spark: SparkSession, path: str, tombs, id_col: str) -> DataFrame:
+    """The live rows of a cell table: manifest-aware (uncommitted or
+    obsolete fold dirs filtered), ``__batch`` dropped, tombstoned ids
+    anti-joined out (logical deletes)."""
+    df = read_live(spark, path)
+    if "__batch" in df.columns:
+        df = df.drop("__batch")
+    return apply_tombstones(df, tombs, id_col)
+
+
+def _compact(
+    spark: SparkSession, root: str, tables, id_col: str, commit_mode: str
+) -> None:
+    """Fold every appended ``__batch=N`` partition of each
+    ``(table_path, partition_cols)`` into the ``__batch=-1`` base and
+    PHYSICALLY apply the tombstoned deletes recorded under ``root``.
+
+    Crash-safe: the tombstone filter runs inside each fold's
+    stage-then-promote; with tombstones pending the base is rewritten
+    even when no batch waits (clearing them without that rewrite would
+    resurrect the ids); and the tombstones are cleared only after EVERY
+    table's fold committed — a crash before re-applies them, a no-op."""
+    tombs = load_tombstones(spark, root, id_col)
+    xf = None if tombs is None else (
+        lambda df: apply_tombstones(df, tombs, id_col)
+    )
+    folded = [
+        fold_batch_partitions(
+            spark, path, list(parts), _BASE_BATCH,
+            commit_mode=commit_mode, transform=xf, force=tombs is not None,
+        )
+        for path, parts in tables
+    ]
+    if tombs is not None and all(folded):
+        clear_tombstones(spark, root)
+
+
+class _CodedIVF:
+    """The coded inverted-list container behind the SQ8 and PQ tiers.
+
+    Cells hold ``(id, cluster_id, codes)`` rows — each vector as a
+    fixed-width uint8 code row — and a side ``vectors`` table keeps the
+    original vectors for the exact re-rank.  A subclass is a codec and
+    provides only:
+
+    - ``META`` — its meta file name; ``PARAMS`` — the meta keys of its
+      trained arrays (each also an attribute of the index);
+    - ``fit(sample, seed, **opts)`` — the trained arrays from the raw
+      training sample;
+    - ``encoder(**params)`` — ``encode(mat) -> (n, code_width)`` uint8
+      codes;
+    - ``scorer(qmat, **params)`` — ``score(codes) -> (nq, n)``
+      approximate inner products, with the per-query tables built once
+      on the driver;
+    - ``code_width`` — bytes per code row.
+
+    ``encode`` and ``score`` run in the Python workers, so both are
+    closures returned by the codec: Spark ships them by value, and a
+    worker never has to import this package.
+
+    Search is filter-then-verify: per Arrow batch of the partition-
+    pruned code scan, the top ``rerank`` approximate scores per query;
+    then the global top ``rerank`` per query; then an exact re-rank by
+    joining the original vectors back by id.  Precision loss is bounded
+    by shortlist recall, not code resolution — with generous rerank the
+    result equals FLAT."""
+
+    META: str
+    PARAMS: tuple[str, ...]
+
+    def __init__(
+        self,
+        centroids: np.ndarray,
+        params: dict,
+        coded: DataFrame,
+        vectors: DataFrame,
+        vec_col: str,
+        id_col: str,
+    ):
+        self.centroids = centroids  # (n_clusters, dim) coarse quantizer
+        vars(self).update(params)  # the codec's trained arrays
+        self.coded = coded  # id, cluster_id, codes binary
+        self.vectors = vectors  # id -> original vector (re-rank source)
+        self.vec_col = vec_col
+        self.id_col = id_col
+
+    @property
+    def params(self) -> dict:
+        return {key: getattr(self, key) for key in self.PARAMS}
+
+    @classmethod
+    def _build(
+        cls, df: DataFrame, n_clusters: int, vec_col: str, id_col: str,
+        seed: int, sample_size: int, **opts,
+    ):
+        sample, cents = _coarse_quantizer(
+            df, n_clusters, vec_col, id_col, seed, sample_size
+        )
+        params = cls.fit(sample, seed, **opts)
+        vectors = df.select(id_col, vec_col)
+        coded = cls._encode_cells(
+            _assign_clusters(vectors, cents, vec_col), params, vec_col, id_col
+        )
+        return cls(cents, params, coded, vectors, vec_col, id_col)
+
+    @classmethod
+    def _encode_cells(
+        cls, assigned: DataFrame, params: dict, vec_col: str, id_col: str
+    ) -> DataFrame:
+        """Cluster-assigned vectors -> ``(id, cluster_id, codes)`` rows,
+        one ``encode`` per Arrow batch (shared by build and append,
+        which must quantize identically)."""
+        encode = cls.encoder(**params)
+
+        def gen(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+                codes = encode(mat)
+                yield pd.DataFrame(
+                    {
+                        id_col: pdf[id_col],
+                        "cluster_id": pdf["cluster_id"],
+                        "codes": [c.tobytes() for c in codes],
+                    }
+                )
+
+        id_type = assigned.schema[id_col].dataType.simpleString()
+        return assigned.mapInPandas(
+            gen, f"{id_col} {id_type}, cluster_id int, codes binary"
+        )
+
+    @classmethod
+    def _meta(cls, path: str) -> dict:
+        with open(os.path.join(path, cls.META)) as f:
+            return json.load(f)
+
+    @classmethod
+    def _quantizer(cls, meta: dict) -> tuple[np.ndarray, dict]:
+        return np.asarray(meta["centroids"], dtype=np.float64), {
+            key: np.asarray(meta[key], dtype=np.float64) for key in cls.PARAMS
+        }
+
+    def save(self, path: str) -> None:
+        """Persist: codes partitioned by (__batch, cluster_id) — probe ==
+        partition pruning over the code table; the __batch level makes
+        the saved index appendable (:meth:`append_batch`) — original
+        vectors alongside for the re-rank join, the quantizer as JSON."""
+        _put_batch(
+            self.coded, os.path.join(path, "codes"), _BASE_BATCH,
+            _CELL_PARTS, "overwrite",
+        )
+        _put_batch(
+            self.vectors, os.path.join(path, "vectors"), _BASE_BATCH,
+            ("__batch",), "overwrite",
+        )
+        with open(os.path.join(path, self.META), "w") as f:
+            json.dump(
+                {
+                    "centroids": self.centroids.tolist(),
+                    **{key: val.tolist() for key, val in self.params.items()},
+                    "vec_col": self.vec_col,
+                    "id_col": self.id_col,
+                },
+                f,
+            )
+
+    @classmethod
+    def load(cls, spark: SparkSession, path: str):
+        meta = cls._meta(path)
+        id_col = meta["id_col"]
+        tombs = load_tombstones(spark, path, id_col)
+        cents, params = cls._quantizer(meta)
+        return cls(
+            cents, params,
+            _read_cells(spark, os.path.join(path, "codes"), tombs, id_col),
+            _read_cells(spark, os.path.join(path, "vectors"), tombs, id_col),
+            meta["vec_col"], id_col,
+        )
+
+    @classmethod
+    def append_batch(cls, batch_df: DataFrame, path: str, batch_id: int) -> None:
+        """Incremental maintenance: assign + encode one micro-batch of
+        new vectors with the SAVED index's frozen quantizer and add it as
+        partition ``__batch=<batch_id>`` of both the codes and vectors
+        tables — O(batch), replay-idempotent (the batch's own partitions
+        are dropped before the write).  Frozen-quantizer drift has the
+        same recall caveat and rebuild cadence as
+        ``IVFIndex.append_batch``."""
+        spark = batch_df.sparkSession
+        meta = cls._meta(path)
+        cents, params = cls._quantizer(meta)
+        vec_col, id_col = meta["vec_col"], meta["id_col"]
+        vectors = batch_df.select(id_col, vec_col)
+        coded = cls._encode_cells(
+            _assign_clusters(vectors, cents, vec_col), params, vec_col, id_col
+        )
+        codes_path = os.path.join(path, "codes")
+        vecs_path = os.path.join(path, "vectors")
+        drop_batch_partition(spark, codes_path, batch_id)
+        drop_batch_partition(spark, vecs_path, batch_id)
+        _put_batch(coded, codes_path, batch_id, _CELL_PARTS, "append")
+        _put_batch(vectors, vecs_path, batch_id, ("__batch",), "append")
+
+    @classmethod
+    def delete_ids(cls, spark: SparkSession, path: str, ids: Sequence) -> None:
+        """Logical delete by id (tombstone at the INDEX root, shared by
+        the codes and vectors tables): O(ids); ``load`` anti-joins,
+        ``compact`` applies physically to both tables."""
+        append_tombstones(spark, path, ids, cls._meta(path)["id_col"])
+
+    @classmethod
+    def compact(
+        cls, spark: SparkSession, path: str, commit_mode: str = "rename"
+    ) -> None:
+        """Fold appended micro-batch partitions into the base (codes and
+        vectors both) and physically apply tombstoned deletes; run
+        between ingest sessions.  ``commit_mode="manifest"`` for object
+        stores (see batchstate.py).  Tombstones are cleared only after
+        BOTH tables folded (a crash between re-applies them — no-op)."""
+        _compact(
+            spark, path,
+            [
+                (os.path.join(path, "codes"), _CELL_PARTS),
+                (os.path.join(path, "vectors"), ("__batch",)),
+            ],
+            cls._meta(path)["id_col"], commit_mode,
+        )
+
+    def search_batch(
+        self,
+        query_ids: Sequence,
+        query_vecs: Sequence[Sequence[float]],
+        k: int,
+        nprobe: int = 4,
+        rerank: int = 128,
+    ) -> DataFrame:
+        """Approximate candidate generation over the code column, then
+        exact re-rank of the top ``rerank`` per query.
+
+        Shuffle profile: the candidate shuffle carries at most
+        (partitions x queries x rerank) tiny rows; the re-rank join
+        touches only (queries x rerank) vectors by id. The corpus-wide
+        scan reads (id, cluster_id, codes) — never the vectors.
+        """
+        import pyarrow as pa
+
+        qid_strs, qvecs = _query_batch(query_ids, query_vecs)
+        qmat = _unit_rows(np.asarray(qvecs, dtype=np.float64))
+        nq = len(qid_strs)
+        score = self.scorer(qmat, **self.params)
+        width = self.code_width
+        kind = type(self).__name__
+        probes = sorted(
+            {c for row in qmat for c in _probe_clusters(self.centroids, row, nprobe)}
+        )
+        rr = int(rerank)
+        id_col = self.id_col
+        id_type = self.coded.schema[id_col].dataType.simpleString()
+        out_schema = f"query_id string, {id_col} {id_type}, approx double"
+
+        def scan(batches):
+            for rb in batches:
+                n = rb.num_rows
+                if n == 0:
+                    continue
+                ids = rb.column(0).to_numpy(zero_copy_only=False)
+                col = rb.column(1)
+                # Zero-copy view of the code matrix: a no-null Arrow
+                # binary array stores all values contiguously in one
+                # data buffer; when every entry is exactly ``width``
+                # bytes the (n, width) matrix is just a reshape of that
+                # buffer — no per-row Python objects, no copy.
+                off_dt = (
+                    np.int64 if pa.types.is_large_binary(col.type) else np.int32
+                )
+                bufs = col.buffers()
+                offs = np.frombuffer(bufs[1], dtype=off_dt)[
+                    col.offset : col.offset + n + 1
+                ]
+                if col.null_count == 0 and np.all(np.diff(offs) == width):
+                    data = np.frombuffer(bufs[2], dtype=np.uint8)
+                    codes = data[offs[0] : offs[-1]].reshape(n, width)
+                else:  # ragged rows — correctness fallback
+                    vals = col.to_pylist()
+                    if any(v is None for v in vals):
+                        raise ValueError(
+                            f"NULL code row in {kind} codes table (corrupt index)"
+                        )
+                    blob = b"".join(vals)
+                    codes = np.frombuffer(blob, dtype=np.uint8).reshape(n, width)
+                scores = score(codes)  # (nq, n)
+                take = min(rr, n)
+                if take < n:
+                    part = np.argpartition(-scores, take - 1, axis=1)[:, :take]
+                else:
+                    part = np.tile(np.arange(n), (nq, 1))
+                out_q = np.repeat(np.arange(nq), part.shape[1])
+                rows = part.ravel()
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array([qid_strs[i] for i in out_q], type=pa.string()),
+                        pa.array(ids[rows]),
+                        pa.array(scores[out_q, rows], type=pa.float64()),
+                    ],
+                    names=["query_id", id_col, "approx"],
+                )
+
+        cand = (
+            self.coded.filter(F.col("cluster_id").isin(probes))
+            .select(id_col, "codes")
+            .mapInArrow(scan, schema=out_schema)
+        )
+        shortlist = knn_ops.topk_per_query(cand, rr, "query_id", id_col, "approx")
+        # exact re-rank: join original vectors by id (rerank rows per query)
+        qdf = self.coded.sparkSession.createDataFrame(
+            [(qid_strs[i], [float(x) for x in qmat[i]]) for i in range(nq)],
+            "query_id string, query_vec array<double>",
+        )
+        exact = (
+            shortlist.join(self.vectors, id_col)
+            .join(F.broadcast(qdf), "query_id")
+            .withColumn(
+                "similarity",
+                V.dot(F.col(self.vec_col).cast("array<double>"), F.col("query_vec")),
+            )
+            .select("query_id", id_col, "similarity")
+        )
+        return knn_ops.topk_per_query(exact, int(k), "query_id", id_col)
+
+
+class IVFPQIndex(_CodedIVF):
     """IVF + Product Quantization (Jegou, Douze, Schmid: "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011 — public
     method). The 100 TB memory story:
@@ -228,30 +624,10 @@ class IVFPQIndex:
       over the codes — one NumPy gather per Arrow batch, no vector
       math on the corpus;
     - the top ``rerank`` candidates per query are then re-ranked
-      EXACTLY by joining the original vectors back by id — so
-      precision loss is bounded by candidate recall, not code
-      resolution, and with generous rerank the result equals FLAT
-      (which is how the DuckDB oracle validates it).
+      EXACTLY (the shared :class:`_CodedIVF` search)."""
 
-    Coarse routing reuses the IVF layout: codes live alongside
-    cluster_id, so probing remains partition pruning.
-    """
-
-    def __init__(
-        self,
-        centroids: np.ndarray,
-        codebooks: np.ndarray,
-        coded: DataFrame,
-        vectors: DataFrame,
-        vec_col: str,
-        id_col: str,
-    ):
-        self.centroids = centroids  # (n_clusters, dim) coarse
-        self.codebooks = codebooks  # (m, n_codes, sub_dim)
-        self.coded = coded  # id, cluster_id, codes binary
-        self.vectors = vectors  # id -> original vector (re-rank source)
-        self.vec_col = vec_col
-        self.id_col = id_col
+    META = "_pq_meta.json"
+    PARAMS = ("codebooks",)
 
     @classmethod
     def build(
@@ -265,13 +641,13 @@ class IVFPQIndex:
         seed: int = 42,
         sample_size: int = 50_000,
     ) -> "IVFPQIndex":
-        # ONE hash-spread sample feeds the coarse quantizer AND the
-        # subspace codebooks (previously each did its own count+collect
-        # — two redundant full-table jobs per index build)
-        sample = _hash_sample(df, vec_col, id_col, sample_size)
-        base = IVFIndex.build(
-            df, n_clusters, vec_col, id_col, seed, sample_size, _sample=sample
+        return cls._build(
+            df, n_clusters, vec_col, id_col, seed, sample_size,
+            m=m, n_codes=n_codes,
         )
+
+    @staticmethod
+    def fit(sample: np.ndarray, seed: int, m: int, n_codes: int) -> dict:
         dim = sample.shape[1]
         if dim % m != 0:
             raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -293,291 +669,48 @@ class IVFPQIndex:
                 for j in range(m)
             ]
         )  # (m, k_j<=n_codes, s) — all k_j equal since same sample size
+        return {"codebooks": codebooks}
 
-        coded = _pq_encode(base.assigned, codebooks, vec_col, id_col)
-        vectors = df.select(id_col, vec_col)
-        return cls(base.centroids, codebooks, coded, vectors, vec_col, id_col)
+    @staticmethod
+    def encoder(codebooks: np.ndarray):
+        mm, _, s = codebooks.shape
+        cb = codebooks
 
-    _BASE_BATCH = -1  # reserved __batch id: initial build / compacted history
+        def encode(mat: np.ndarray) -> np.ndarray:
+            # nearest codeword: one argmin per subspace
+            codes = np.empty((mat.shape[0], mm), dtype=np.uint8)
+            for j in range(mm):
+                sub = mat[:, j * s : (j + 1) * s]
+                d2 = -2.0 * sub @ cb[j].T + (cb[j] ** 2).sum(axis=1)
+                codes[:, j] = np.argmin(d2, axis=1).astype(np.uint8)
+            return codes
 
-    def save(self, path: str) -> None:
-        """Persist: codes partitioned by (__batch, cluster_id) (probe =
-        partition pruning over a 16-byte-per-row table; the __batch
-        level makes the saved index appendable — :meth:`append_batch`),
-        original vectors alongside for the re-rank join,
-        centroids+codebooks as JSON."""
-        import json
-        import os
+        return encode
 
-        (
-            self.coded.withColumn("__batch", F.lit(self._BASE_BATCH))
-            .write.mode("overwrite")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(os.path.join(path, "codes"))
-        )
-        (
-            self.vectors.withColumn("__batch", F.lit(self._BASE_BATCH))
-            .write.mode("overwrite")
-            .partitionBy("__batch")
-            .parquet(os.path.join(path, "vectors"))
-        )
-        with open(os.path.join(path, "_pq_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "centroids": self.centroids.tolist(),
-                    "codebooks": self.codebooks.tolist(),
-                    "vec_col": self.vec_col,
-                    "id_col": self.id_col,
-                },
-                f,
-            )
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "IVFPQIndex":
-        import json
-        import os
-
-        with open(os.path.join(path, "_pq_meta.json")) as f:
-            meta = json.load(f)
-
-        tombs = load_tombstones(spark, path, meta["id_col"])
-
-        def rd(sub: str) -> DataFrame:
-            # manifest-aware: filters uncommitted/obsolete fold dirs,
-            # then anti-joins tombstoned ids (logical deletes)
-            df = read_live(spark, os.path.join(path, sub))
-            if "__batch" in df.columns:
-                df = df.drop("__batch")
-            return apply_tombstones(df, tombs, meta["id_col"])
-
-        return cls(
-            np.asarray(meta["centroids"], dtype=np.float64),
-            np.asarray(meta["codebooks"], dtype=np.float64),
-            rd("codes"),
-            rd("vectors"),
-            meta["vec_col"],
-            meta["id_col"],
-        )
-
-    @classmethod
-    def append_batch(
-        cls, batch_df: DataFrame, path: str, batch_id: int
-    ) -> None:
-        """Incremental PQ maintenance: quantize one micro-batch of new
-        vectors with the SAVED index's frozen centroids/codebooks and
-        add it as partition ``__batch=<batch_id>`` of both the codes
-        and vectors tables — O(batch), replay-idempotent (the batch's
-        own partitions are dropped before the write).  Frozen-codebook
-        drift has the same recall caveat and rebuild cadence as
-        ``IVFIndex.append_batch``."""
-        import json
-        import os
-
-        spark = batch_df.sparkSession
-        with open(os.path.join(path, "_pq_meta.json")) as f:
-            meta = json.load(f)
-        cents = np.asarray(meta["centroids"], dtype=np.float64)
-        cbs = np.asarray(meta["codebooks"], dtype=np.float64)
-        vec_col, id_col = meta["vec_col"], meta["id_col"]
-        assigned = _assign_clusters(
-            batch_df.select(id_col, vec_col), cents, vec_col
-        )
-        coded = _pq_encode(assigned, cbs, vec_col, id_col)
-        codes_path = os.path.join(path, "codes")
-        vecs_path = os.path.join(path, "vectors")
-        drop_batch_partition(spark, codes_path, batch_id)
-        drop_batch_partition(spark, vecs_path, batch_id)
-        (
-            coded.withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("append")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(codes_path)
-        )
-        (
-            batch_df.select(id_col, vec_col)
-            .withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("append")
-            .partitionBy("__batch")
-            .parquet(vecs_path)
-        )
-
-    @classmethod
-    def delete_ids(cls, spark: SparkSession, path: str, ids: Sequence) -> None:
-        """Logical delete by id (tombstone at the INDEX root, shared by
-        the codes and vectors tables): O(ids); ``load`` anti-joins,
-        ``compact`` applies physically to both tables."""
-        import json
-        import os
-
-        with open(os.path.join(path, "_pq_meta.json")) as f:
-            id_col = json.load(f)["id_col"]
-        append_tombstones(spark, path, ids, id_col)
-
-    @classmethod
-    def compact(
-        cls, spark: SparkSession, path: str, commit_mode: str = "rename"
-    ) -> None:
-        """Fold appended micro-batch partitions into the base (codes and
-        vectors both) and physically apply tombstoned deletes; run
-        between ingest sessions.  ``commit_mode="manifest"`` for object
-        stores (see batchstate.py).  Tombstones are cleared only after
-        BOTH tables folded (a crash between re-applies them — no-op)."""
-        import json
-        import os
-
-        with open(os.path.join(path, "_pq_meta.json")) as f:
-            id_col = json.load(f)["id_col"]
-        tombs = load_tombstones(spark, path, id_col)
-        xf = None if tombs is None else (
-            lambda df: apply_tombstones(df, tombs, id_col)
-        )
-        folded_codes = fold_batch_partitions(
-            spark,
-            os.path.join(path, "codes"),
-            ["__batch", "cluster_id"],
-            cls._BASE_BATCH,
-            commit_mode=commit_mode,
-            transform=xf,
-            force=tombs is not None,
-        )
-        folded_vecs = fold_batch_partitions(
-            spark,
-            os.path.join(path, "vectors"),
-            ["__batch"],
-            cls._BASE_BATCH,
-            commit_mode=commit_mode,
-            transform=xf,
-            force=tombs is not None,
-        )
-        if tombs is not None and folded_codes and folded_vecs:
-            clear_tombstones(spark, path)
-
-    def probe_clusters(self, query_vec: Sequence[float], nprobe: int) -> list[int]:
-        q = np.asarray(query_vec, dtype=np.float64)
-        nrm = np.linalg.norm(q)
-        if nrm > 0:
-            q = q / nrm
-        sims = self.centroids @ q
-        return [int(c) for c in np.argsort(-sims)[: int(nprobe)]]
-
-    def search_batch(
-        self,
-        query_ids: Sequence,
-        query_vecs: Sequence[Sequence[float]],
-        k: int,
-        nprobe: int = 4,
-        rerank: int = 128,
-    ) -> DataFrame:
-        """ADC candidate generation over the code column, then exact
-        re-rank of the top ``rerank`` per query.
-
-        Shuffle profile: the candidate shuffle carries at most
-        (partitions x queries x rerank) tiny rows; the re-rank join
-        touches only (queries x rerank) vectors by id. The corpus-wide
-        scan reads (id, cluster_id, 16-byte codes) — never the vectors.
-        """
-        qmat = np.asarray(query_vecs, dtype=np.float64)
-        norms = np.linalg.norm(qmat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        qmat = qmat / norms
-        nq, dim = qmat.shape
-        mcount, ncodes, s = self.codebooks.shape
+    @staticmethod
+    def scorer(qmat: np.ndarray, codebooks: np.ndarray):
+        nq = qmat.shape[0]
+        mcount, _, s = codebooks.shape
         # per-query LUT: luts[q, j, c] = <q_sub_j, codebook_j[c]>
         luts = np.einsum(
-            "qjs,jcs->qjc", qmat.reshape(nq, mcount, s), self.codebooks
+            "qjs,jcs->qjc", qmat.reshape(nq, mcount, s), codebooks
         )  # (nq, m, n_codes)
-        qid_strs = [str(q) for q in query_ids]
-        probes = set()
-        for row in qmat:
-            probes.update(self.probe_clusters(row, nprobe))
-        probes = sorted(probes)
-        rr = int(rerank)
-        id_col = self.id_col
-        id_type = self.coded.schema[id_col].dataType.simpleString()
-        out_schema = f"query_id string, {id_col} {id_type}, approx double"
 
-        def adc(batches):
-            import pyarrow as pa
+        def score(codes: np.ndarray) -> np.ndarray:
+            # scores[q, i] = sum_j luts[q, j, codes[i, j]]
+            scores = np.zeros((nq, codes.shape[0]))
+            for j in range(mcount):
+                scores += luts[:, j, codes[:, j]]
+            return scores
 
-            for rb in batches:
-                n = rb.num_rows
-                if n == 0:
-                    continue
-                ids = rb.column(0).to_numpy(zero_copy_only=False)
-                col = rb.column(1)
-                # Zero-copy view of the code matrix: a no-null Arrow
-                # binary array stores all values contiguously in one
-                # data buffer; when every entry is exactly mcount bytes
-                # the (n, m) matrix is just a reshape of that buffer —
-                # no per-row Python objects, no copy.
-                off_dt = (
-                    np.int64 if pa.types.is_large_binary(col.type) else np.int32
-                )
-                bufs = col.buffers()
-                offs = np.frombuffer(bufs[1], dtype=off_dt)[
-                    col.offset : col.offset + n + 1
-                ]
-                if col.null_count == 0 and np.all(np.diff(offs) == mcount):
-                    data = np.frombuffer(bufs[2], dtype=np.uint8)
-                    codes = data[offs[0] : offs[-1]].reshape(n, mcount)
-                else:  # ragged rows — correctness fallback
-                    vals = col.to_pylist()
-                    if any(v is None for v in vals):
-                        raise ValueError(
-                            "NULL code row in PQ codes table (corrupt index)"
-                        )
-                    blob = b"".join(vals)
-                    codes = np.frombuffer(blob, dtype=np.uint8).reshape(
-                        n, mcount
-                    )
-                # scores[q, i] = sum_j luts[q, j, codes[i, j]]
-                scores = np.zeros((nq, n))
-                for j in range(mcount):
-                    scores += luts[:, j, codes[:, j]]
-                take = min(rr, n)
-                if take < n:
-                    part = np.argpartition(-scores, take - 1, axis=1)[:, :take]
-                else:
-                    part = np.tile(np.arange(n), (nq, 1))
-                out_q = np.repeat(np.arange(nq), part.shape[1])
-                rows = part.ravel()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([qid_strs[i] for i in out_q], type=pa.string()),
-                        pa.array(ids[rows]),
-                        pa.array(scores[out_q, rows], type=pa.float64()),
-                    ],
-                    names=["query_id", id_col, "approx"],
-                )
+        return score
 
-        cand = (
-            self.coded.filter(F.col("cluster_id").isin(probes))
-            .select(id_col, "codes")
-            .mapInArrow(adc, schema=out_schema)
-        )
-        shortlist = knn_ops.topk_per_query(
-            cand, rr, "query_id", id_col, "approx"
-        )
-        # exact re-rank: join original vectors by id (rerank rows per query)
-        qdf_rows = [
-            (qid_strs[i], [float(x) for x in qmat[i]]) for i in range(nq)
-        ]
-        qdf = self.coded.sparkSession.createDataFrame(
-            qdf_rows, "query_id string, query_vec array<double>"
-        )
-        exact = (
-            shortlist.join(self.vectors, id_col)
-            .join(F.broadcast(qdf), "query_id")
-            .withColumn(
-                "similarity",
-                V.dot(F.col(self.vec_col).cast("array<double>"), F.col("query_vec")),
-            )
-            .select("query_id", id_col, "similarity")
-        )
-        return knn_ops.topk_per_query(exact, int(k), "query_id", id_col)
+    @property
+    def code_width(self) -> int:
+        return self.codebooks.shape[0]
 
 
-class IVFSQIndex:
+class IVFSQIndex(_CodedIVF):
     """IVF + 8-bit scalar quantization — the middle compression tier
     between FLAT (4 bytes/dim) and PQ (sub-byte/dim): one uint8 per
     dimension (4x smaller scans), per-dimension (min, step) learned
@@ -587,28 +720,11 @@ class IVFSQIndex:
     Approximate scoring is exact-in-the-quantized-domain:
     ``dot(q, dequant(code)) = dot(q, mins) + (codes @ (q*steps))`` —
     one uint8 GEMM per Arrow batch, no per-row work.  The top
-    ``rerank`` candidates re-rank EXACTLY by id join, so with generous
-    rerank the result equals FLAT (the oracle's check, same contract
-    as IVF-PQ).  Coarse routing reuses the IVF layout: codes live
-    alongside cluster_id, probing is partition pruning."""
+    ``rerank`` candidates re-rank EXACTLY (the shared
+    :class:`_CodedIVF` search)."""
 
-    def __init__(
-        self,
-        centroids: np.ndarray,
-        mins: np.ndarray,
-        steps: np.ndarray,
-        coded: DataFrame,
-        vectors: DataFrame,
-        vec_col: str,
-        id_col: str,
-    ):
-        self.centroids = centroids
-        self.mins = mins    # (dim,)
-        self.steps = steps  # (dim,) — 0-range dims pinned to step 1
-        self.coded = coded  # id, cluster_id, codes binary(dim)
-        self.vectors = vectors
-        self.vec_col = vec_col
-        self.id_col = id_col
+    META = "_sq_meta.json"
+    PARAMS = ("mins", "steps")  # steps: 0-range dims pinned to 1
 
     @classmethod
     def build(
@@ -620,312 +736,31 @@ class IVFSQIndex:
         seed: int = 42,
         sample_size: int = 50_000,
     ) -> "IVFSQIndex":
-        sample = _hash_sample(df, vec_col, id_col, sample_size)
-        base = IVFIndex.build(
-            df, n_clusters, vec_col, id_col, seed, sample_size, _sample=sample
-        )
+        return cls._build(df, n_clusters, vec_col, id_col, seed, sample_size)
+
+    @staticmethod
+    def fit(sample: np.ndarray, seed: int) -> dict:
         mins = sample.min(axis=0)
         rng = sample.max(axis=0) - mins
-        steps = np.where(rng > 0, rng / 255.0, 1.0)
+        return {"mins": mins, "steps": np.where(rng > 0, rng / 255.0, 1.0)}
 
-        import pandas as pd
-
-        id_type = df.schema[id_col].dataType.simpleString()
-        out_schema = f"{id_col} {id_type}, cluster_id int, codes binary"
-        m, s = mins.copy(), steps.copy()
-
-        def encode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                codes = np.clip(
-                    np.rint((mat - m) / s), 0, 255
-                ).astype(np.uint8)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "cluster_id": pdf["cluster_id"],
-                        "codes": [c.tobytes() for c in codes],
-                    }
-                )
-
-        coded = base.assigned.select(id_col, "cluster_id", vec_col).mapInPandas(
-            encode, out_schema
-        )
-        return cls(
-            base.centroids, mins, steps, coded,
-            df.select(id_col, vec_col), vec_col, id_col,
+    @staticmethod
+    def encoder(mins: np.ndarray, steps: np.ndarray):
+        return lambda mat: np.clip(np.rint((mat - mins) / steps), 0, 255).astype(
+            np.uint8
         )
 
-    _BASE_BATCH = -1  # reserved __batch id: initial build / compacted history
+    @staticmethod
+    def scorer(qmat: np.ndarray, mins: np.ndarray, steps: np.ndarray):
+        qs = qmat * steps  # (nq, dim)
+        consts = qmat @ mins  # (nq,)
+        # (n, nq) GEMM then a transposed view: this operand order keeps
+        # the BLAS layout, and so every bit, of the scores
+        return lambda codes: (codes @ qs.T + consts).T
 
-    def save(self, path: str) -> None:
-        """Persist with the same layout contract as the PQ tier: codes
-        partitioned by (__batch, cluster_id) — probe == partition
-        pruning over a 1-byte-per-dim table — vectors alongside for the
-        re-rank join, quantizer (centroids + mins/steps) as JSON."""
-        import json
-        import os
-
-        (
-            self.coded.withColumn("__batch", F.lit(self._BASE_BATCH))
-            .write.mode("overwrite")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(os.path.join(path, "codes"))
-        )
-        (
-            self.vectors.withColumn("__batch", F.lit(self._BASE_BATCH))
-            .write.mode("overwrite")
-            .partitionBy("__batch")
-            .parquet(os.path.join(path, "vectors"))
-        )
-        with open(os.path.join(path, "_sq_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "centroids": self.centroids.tolist(),
-                    "mins": self.mins.tolist(),
-                    "steps": self.steps.tolist(),
-                    "vec_col": self.vec_col,
-                    "id_col": self.id_col,
-                },
-                f,
-            )
-
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "IVFSQIndex":
-        import json
-        import os
-
-        with open(os.path.join(path, "_sq_meta.json")) as f:
-            meta = json.load(f)
-        tombs = load_tombstones(spark, path, meta["id_col"])
-
-        def rd(sub: str) -> DataFrame:
-            df = read_live(spark, os.path.join(path, sub))
-            if "__batch" in df.columns:
-                df = df.drop("__batch")
-            return apply_tombstones(df, tombs, meta["id_col"])
-
-        return cls(
-            np.asarray(meta["centroids"], dtype=np.float64),
-            np.asarray(meta["mins"], dtype=np.float64),
-            np.asarray(meta["steps"], dtype=np.float64),
-            rd("codes"),
-            rd("vectors"),
-            meta["vec_col"],
-            meta["id_col"],
-        )
-
-    @classmethod
-    def delete_ids(cls, spark: SparkSession, path: str, ids: Sequence) -> None:
-        """Logical delete by id — the shared tombstone protocol
-        (tombstones at the index root; ``load`` anti-joins them)."""
-        import json
-        import os
-
-        with open(os.path.join(path, "_sq_meta.json")) as f:
-            id_col = json.load(f)["id_col"]
-        append_tombstones(spark, path, ids, id_col)
-
-    @classmethod
-    def append_batch(cls, batch_df: DataFrame, path: str, batch_id: int) -> None:
-        """Incremental SQ maintenance: assign + encode one micro-batch
-        with the SAVED index's frozen centroids and (mins, steps), add
-        it as partition ``__batch=<batch_id>`` of codes and vectors —
-        O(batch), replay-idempotent (the batch's own partitions are
-        dropped first).  Same frozen-quantizer drift caveat and rebuild
-        cadence as the IVF/PQ append paths."""
-        import json
-        import os
-
-        import pandas as pd
-
-        spark = batch_df.sparkSession
-        with open(os.path.join(path, "_sq_meta.json")) as f:
-            meta = json.load(f)
-        cents = np.asarray(meta["centroids"], dtype=np.float64)
-        mins = np.asarray(meta["mins"], dtype=np.float64)
-        steps = np.asarray(meta["steps"], dtype=np.float64)
-        vec_col, id_col = meta["vec_col"], meta["id_col"]
-        assigned = _assign_clusters(
-            batch_df.select(id_col, vec_col), cents, vec_col
-        )
-        id_type = batch_df.schema[id_col].dataType.simpleString()
-        out_schema = f"{id_col} {id_type}, cluster_id int, codes binary"
-
-        def encode(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-                codes = np.clip(np.rint((mat - mins) / steps), 0, 255).astype(
-                    np.uint8
-                )
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "cluster_id": pdf["cluster_id"],
-                        "codes": [c.tobytes() for c in codes],
-                    }
-                )
-
-        coded = assigned.select(id_col, "cluster_id", vec_col).mapInPandas(
-            encode, out_schema
-        )
-        codes_path = os.path.join(path, "codes")
-        vecs_path = os.path.join(path, "vectors")
-        drop_batch_partition(spark, codes_path, batch_id)
-        drop_batch_partition(spark, vecs_path, batch_id)
-        (
-            coded.withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("append")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(codes_path)
-        )
-        (
-            batch_df.select(id_col, vec_col)
-            .withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("append")
-            .partitionBy("__batch")
-            .parquet(vecs_path)
-        )
-
-    @classmethod
-    def compact(
-        cls, spark: SparkSession, path: str, commit_mode: str = "rename"
-    ) -> None:
-        """Fold appended micro-batches into the base (codes + vectors)
-        and apply tombstones physically — identical protocol to the
-        IVF/PQ compacts; tombstones clear only after BOTH folds."""
-        import json
-        import os
-
-        with open(os.path.join(path, "_sq_meta.json")) as f:
-            id_col = json.load(f)["id_col"]
-        tombs = load_tombstones(spark, path, id_col)
-        xf = None if tombs is None else (
-            lambda df: apply_tombstones(df, tombs, id_col)
-        )
-        folded_codes = fold_batch_partitions(
-            spark,
-            os.path.join(path, "codes"),
-            ["__batch", "cluster_id"],
-            cls._BASE_BATCH,
-            commit_mode=commit_mode,
-            transform=xf,
-            force=tombs is not None,
-        )
-        folded_vecs = fold_batch_partitions(
-            spark,
-            os.path.join(path, "vectors"),
-            ["__batch"],
-            cls._BASE_BATCH,
-            commit_mode=commit_mode,
-            transform=xf,
-            force=tombs is not None,
-        )
-        if tombs is not None and folded_codes and folded_vecs:
-            clear_tombstones(spark, path)
-
-    def probe_clusters(self, query_vec: Sequence[float], nprobe: int) -> list[int]:
-        q = np.asarray(query_vec, dtype=np.float64)
-        nrm = np.linalg.norm(q)
-        if nrm > 0:
-            q = q / nrm
-        sims = self.centroids @ q
-        return [int(c) for c in np.argsort(-sims)[: int(nprobe)]]
-
-    def search_batch(
-        self,
-        query_ids: Sequence,
-        query_vecs: Sequence[Sequence[float]],
-        k: int,
-        nprobe: int = 4,
-        rerank: int = 128,
-    ) -> DataFrame:
-        """SQ8 candidate generation (one uint8 GEMM per Arrow batch over
-        the partition-pruned code scan) + exact re-rank by id join."""
-        import pyarrow as pa
-
-        qmat = np.asarray(query_vecs, dtype=np.float64)
-        norms = np.linalg.norm(qmat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        qmat = qmat / norms
-        nq, dim = qmat.shape
-        qs = qmat * self.steps        # (nq, dim)
-        consts = qmat @ self.mins     # (nq,)
-        qid_strs = [str(q) for q in query_ids]
-        probes = sorted(
-            {c for row in qmat for c in self.probe_clusters(row, nprobe)}
-        )
-        rr = int(rerank)
-        id_col = self.id_col
-        id_type = self.coded.schema[id_col].dataType.simpleString()
-        out_schema = f"query_id string, {id_col} {id_type}, approx double"
-
-        def sq_scan(batches):
-            for rb in batches:
-                n = rb.num_rows
-                if n == 0:
-                    continue
-                ids = rb.column(0).to_numpy(zero_copy_only=False)
-                col = rb.column(1)
-                off_dt = (
-                    np.int64 if pa.types.is_large_binary(col.type) else np.int32
-                )
-                bufs = col.buffers()
-                offs = np.frombuffer(bufs[1], dtype=off_dt)[
-                    col.offset : col.offset + n + 1
-                ]
-                if col.null_count == 0 and np.all(np.diff(offs) == dim):
-                    data = np.frombuffer(bufs[2], dtype=np.uint8)
-                    codes = data[offs[0] : offs[-1]].reshape(n, dim)
-                else:  # ragged rows — correctness fallback
-                    vals = col.to_pylist()
-                    if any(v is None for v in vals):
-                        raise ValueError(
-                            "NULL code row in SQ codes table (corrupt index)"
-                        )
-                    blob = b"".join(vals)
-                    codes = np.frombuffer(blob, dtype=np.uint8).reshape(n, dim)
-                scores = codes @ qs.T + consts  # (n, nq)
-                take = min(rr, n)
-                if take < n:
-                    part = np.argpartition(-scores, take - 1, axis=0)[:take].T
-                else:
-                    part = np.tile(np.arange(n), (nq, 1))
-                out_q = np.repeat(np.arange(nq), part.shape[1])
-                rows = part.ravel()
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([qid_strs[i] for i in out_q], type=pa.string()),
-                        pa.array(ids[rows]),
-                        pa.array(scores[rows, out_q], type=pa.float64()),
-                    ],
-                    names=["query_id", id_col, "approx"],
-                )
-
-        cand = (
-            self.coded.filter(F.col("cluster_id").isin(probes))
-            .select(id_col, "codes")
-            .mapInArrow(sq_scan, schema=out_schema)
-        )
-        shortlist = knn_ops.topk_per_query(cand, rr, "query_id", id_col, "approx")
-        qdf = self.coded.sparkSession.createDataFrame(
-            [(qid_strs[i], [float(x) for x in qmat[i]]) for i in range(nq)],
-            "query_id string, query_vec array<double>",
-        )
-        exact = (
-            shortlist.join(self.vectors, id_col)
-            .join(F.broadcast(qdf), "query_id")
-            .withColumn(
-                "similarity",
-                V.dot(F.col(self.vec_col).cast("array<double>"), F.col("query_vec")),
-            )
-            .select("query_id", id_col, "similarity")
-        )
-        return knn_ops.topk_per_query(exact, int(k), "query_id", id_col)
+    @property
+    def code_width(self) -> int:
+        return self.mins.shape[0]
 
 
 class IVFIndex:
@@ -944,23 +779,11 @@ class IVFIndex:
         id_col: str = "vec_id",
         seed: int = 42,
         sample_size: int = 50_000,
-        _sample: np.ndarray | None = None,
     ) -> "IVFIndex":
-        # hash-spread sample (see _hash_sample); ``_sample`` lets
-        # IVFPQIndex.build share one sample between the coarse quantizer
-        # and the codebook trainers
-        sample = (
-            _sample
-            if _sample is not None
-            else _hash_sample(df, vec_col, id_col, sample_size)
+        _, cents = _coarse_quantizer(
+            df, n_clusters, vec_col, id_col, seed, sample_size
         )
-        norms = np.linalg.norm(sample, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        cents = _kmeans(sample / norms, n_clusters, seed)
-        assigned = _assign_clusters(df, cents, vec_col)
-        return cls(cents, assigned, vec_col, id_col)
-
-    _BASE_BATCH = -1  # reserved __batch id for the initial build / compacted history
+        return cls(cents, _assign_clusters(df, cents, vec_col), vec_col, id_col)
 
     def save(self, path: str) -> None:
         """Persist partitioned by (__batch, cluster_id): probing ==
@@ -968,30 +791,16 @@ class IVFIndex:
         saved index APPENDABLE — streaming ingest adds micro-batch
         partitions next to the ``__batch=-1`` base (see
         :meth:`append_batch`)."""
-        (
-            self.assigned.withColumn("__batch", F.lit(self._BASE_BATCH))
-            .write.mode("overwrite")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(path)
-        )
-        import json, os
-
+        _put_batch(self.assigned, path, _BASE_BATCH, _CELL_PARTS, "overwrite")
         with open(os.path.join(path, "_centroids.json"), "w") as f:
             json.dump(self.centroids.tolist(), f)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str, vec_col: str = "embedding", id_col: str = "vec_id") -> "IVFIndex":
-        import json, os
-
         with open(os.path.join(path, "_centroids.json")) as f:
             cents = np.asarray(json.load(f), dtype=np.float64)
-        df = read_live(spark, path)  # manifest-aware fold-dir filtering
-        if "__batch" in df.columns:
-            df = df.drop("__batch")
-        # logical deletes: anti-join tombstoned ids (physically applied
-        # by the next compact)
-        df = apply_tombstones(df, load_tombstones(spark, path, id_col), id_col)
-        return cls(cents, df, vec_col, id_col)
+        tombs = load_tombstones(spark, path, id_col)
+        return cls(cents, _read_cells(spark, path, tombs, id_col), vec_col, id_col)
 
     @classmethod
     def append_batch(
@@ -1020,8 +829,6 @@ class IVFIndex:
         serving systems run IVF: static coarse quantizer, growing
         posting lists, periodic retrain.
         """
-        import json, os
-
         spark = batch_df.sparkSession
         with open(os.path.join(path, "_centroids.json")) as f:
             cents = np.asarray(json.load(f), dtype=np.float64)
@@ -1029,12 +836,7 @@ class IVFIndex:
             batch_df.select(id_col, vec_col), cents, vec_col
         )
         drop_batch_partition(spark, path, batch_id)  # replay: replace
-        (
-            assigned.withColumn("__batch", F.lit(int(batch_id)))
-            .write.mode("append")
-            .partitionBy("__batch", "cluster_id")
-            .parquet(path)
-        )
+        _put_batch(assigned, path, batch_id, _CELL_PARTS, "append")
 
     @classmethod
     def delete_ids(
@@ -1055,38 +857,15 @@ class IVFIndex:
         """Fold every appended ``__batch=N`` partition into the
         ``__batch=-1`` base, bounding partition count (file-listing cost
         grows with micro-batch count otherwise), and PHYSICALLY apply
-        any tombstoned deletes (crash-safe: the filter runs inside the
-        fold's stage-then-promote, and tombstones are cleared only after
-        the fold commits — a crash re-applies them, which is a no-op).
-        Run between ingest sessions — not concurrently with an active
-        append.  ``commit_mode="manifest"`` for object stores (see
+        any tombstoned deletes (see :func:`_compact`).  Run between
+        ingest sessions — not concurrently with an active append.
+        ``commit_mode="manifest"`` for object stores (see
         batchstate.py)."""
-        tombs = load_tombstones(spark, path, id_col)
-        folded = fold_batch_partitions(
-            spark,
-            path,
-            ["__batch", "cluster_id"],
-            cls._BASE_BATCH,
-            commit_mode=commit_mode,
-            transform=(
-                None if tombs is None else (lambda df: apply_tombstones(df, tombs, id_col))
-            ),
-            # with tombstones pending, fold even if no history dirs wait
-            # (the base alone must rewrite to apply them physically)
-            force=tombs is not None,
-        )
-        if tombs is not None and folded:
-            # cleared ONLY after the fold committed — a crash before
-            # this re-applies the tombstones next time (idempotent)
-            clear_tombstones(spark, path)
+        _compact(spark, path, [(path, _CELL_PARTS)], id_col, commit_mode)
 
     def probe_clusters(self, query_vec: Sequence[float], nprobe: int) -> list[int]:
-        q = np.asarray(query_vec, dtype=np.float64)
-        nrm = np.linalg.norm(q)
-        if nrm > 0:
-            q = q / nrm
-        sims = self.centroids @ q
-        return [int(c) for c in np.argsort(-sims)[: int(nprobe)]]
+        return _probe_clusters(self.centroids, query_vec, nprobe)
+
 
     def search(self, query_vec: Sequence[float], k: int, nprobe: int = 4) -> DataFrame:
         """Filter to probed clusters (partition-prunable) then exact top-k
@@ -1131,6 +910,7 @@ class IVFIndex:
             cand, list(query_vec), k, vec_col=self.vec_col, id_col=self.id_col
         ).drop("cluster_id")
 
+
     def search_batch(
         self,
         query_ids: Sequence,
@@ -1163,24 +943,20 @@ class IVFIndex:
         both broadcast hash joins pipeline in one codegen stage, so
         the denormalized q × nprobe × dim form never exists."""
         spark = self.assigned.sparkSession
-        pair_rows = []
-        meta_rows = []
-        for qid, qv in zip(query_ids, query_vecs):
-            q = np.asarray(qv, dtype=np.float64)
-            nrm = np.linalg.norm(q)
-            if nrm > 0:
-                q = q / nrm
-            meta_rows.append((str(qid), [float(x) for x in q]))
-            for c in self.probe_clusters(q, nprobe):
-                pair_rows.append((str(qid), int(c)))
+        qids, qvecs = _query_batch(query_ids, query_vecs)
+        units = [_unit(qv) for qv in qvecs]
         pairs_df = spark.createDataFrame(
-            pair_rows, "query_id string, cluster_id int"
+            [
+                (qid, c)
+                for qid, q in zip(qids, units)
+                for c in _probe_clusters(self.centroids, q, nprobe)
+            ],
+            "query_id string, cluster_id int",
         )
         qmeta_df = spark.createDataFrame(
-            meta_rows, "query_id string, query_vec array<double>"
+            [(qid, [float(x) for x in q]) for qid, q in zip(qids, units)],
+            "query_id string, query_vec array<double>",
         )
-        from ..functions import vector as V
-
         base = self.assigned if where is None else self.assigned.filter(where)
         scored = (
             base.join(F.broadcast(pairs_df), "cluster_id")
@@ -1201,21 +977,18 @@ class IVFIndex:
         normalized vector + parsed DSL exactly ONCE (O(q) rows).
         Factored out so the broadcast-size contract is directly
         testable (tests/test_ann.py)."""
+        qids, qvecs = _query_batch(qids, qvecs, per_query)
         pair_rows: list[tuple] = []
         meta_rows: list[tuple] = []
-        for qid, qv, f in zip(qids, qvecs, per_query):
-            q = np.asarray(qv, dtype=np.float64)
-            nrm = np.linalg.norm(q)
-            if nrm > 0:
-                q = q / nrm
-            w, cont, notc = f
+        for qid, qv, (w, cont, notc) in zip(qids, qvecs, per_query):
+            q = _unit(qv)
             meta_rows.append(
                 (
                     qid, [float(x) for x in q],
                     dict(w or {}), list(cont or []), list(notc or []),
                 )
             )
-            for c in self.probe_clusters(q, nprobe):
+            for c in _probe_clusters(self.centroids, q, nprobe):
                 pair_rows.append((qid, int(c)))
         return pair_rows, meta_rows
 
@@ -1261,18 +1034,9 @@ class IVFIndex:
         full vector once per probed cluster (q × nprobe × dim: ~3.9 GB
         broadcast at q=10k, nprobe=32, d=1536 for ~120 MB of data)."""
         spark = self.assigned.sparkSession
-        # materialize ONCE: iterator inputs must not be exhausted by
-        # the length check, and zip() silently drops queries on
-        # mismatch (same guard as router.routed_search_batch)
-        qids = [str(q) for q in query_ids]
-        qvecs = list(query_vecs)
-        pq = list(per_query)
-        if not (len(qids) == len(qvecs) == len(pq)):
-            raise ValueError(
-                f"query_ids ({len(qids)}), query_vecs ({len(qvecs)}) "
-                f"and per_query ({len(pq)}) must be the same length"
-            )
-        pair_rows, meta_rows = self._probe_tables(qids, qvecs, pq, nprobe)
+        pair_rows, meta_rows = self._probe_tables(
+            query_ids, query_vecs, list(per_query), nprobe
+        )
         pairs_df = F.broadcast(
             spark.createDataFrame(pair_rows, "query_id string, cluster_id int")
         )
@@ -1312,6 +1076,52 @@ class IVFIndex:
         return knn_ops.topk_per_query(scored, k, "query_id", self.id_col)
 
 
+def _held_in_queries(
+    emb: DataFrame, k: int, n_queries: int, vec_col: str, id_col: str, seed: int
+):
+    """The tuners' measurement protocol: ``n_queries`` held-in query
+    vectors (seeded hash order) with their exact brute-force top-k as
+    ground truth.  Returns ``(qids, qvecs, recall_of)``, where
+    ``recall_of(rows)`` is the mean per-query recall@k of result rows."""
+    qrows = (
+        emb.select(id_col, vec_col)
+        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
+        .limit(int(n_queries))
+        .collect()
+    )
+    qids = [str(r[id_col]) for r in qrows]
+    qvecs = [list(r[vec_col]) for r in qrows]
+    exact: dict[str, set] = {}
+    ground = knn_ops.knn_block(emb, qids, qvecs, k, vec_col=vec_col, id_col=id_col)
+    for r in ground.collect():
+        exact.setdefault(r["query_id"], set()).add(r[id_col])
+
+    def recall_of(rows) -> float:
+        got: dict[str, set] = {}
+        for r in rows:
+            got.setdefault(r["query_id"], set()).add(r[id_col])
+        per_q = [len(got.get(q, set()) & exact[q]) / len(exact[q]) for q in exact]
+        return sum(per_q) / len(per_q)
+
+    return qids, qvecs, recall_of
+
+
+def _rerank_sweep(index, held_in, k: int, nprobe: int, target_recall: float):
+    """Recall of a coded index at rerank depths k, 2k, 5k, 10k (at the
+    given nprobe), stopping at the first depth that meets the target.
+    Returns ``([(rerank, recall rounded to 4 places), ...], met)``."""
+    qids, qvecs, recall_of = held_in
+    points = []
+    for rerank in (k, 2 * k, 5 * k, 10 * k):
+        r = recall_of(
+            index.search_batch(qids, qvecs, k, nprobe=nprobe, rerank=rerank).collect()
+        )
+        points.append((int(rerank), round(r, 4)))
+        if r >= target_recall:
+            return points, True
+    return points, False
+
+
 def tune_ivf(
     emb: DataFrame,
     target_recall: float = 0.95,
@@ -1347,26 +1157,8 @@ def tune_ivf(
     """
     from ..materialize import materialize
 
-    qdf = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-        .limit(int(n_queries))
-    )
-    qrows = qdf.collect()
-    qids = [str(r[id_col]) for r in qrows]
-    qvecs = [list(r[vec_col]) for r in qrows]
-    exact: dict[str, set] = {}
-    ground = knn_ops.knn_block(emb, qids, qvecs, k, vec_col=vec_col, id_col=id_col)
-    for r in ground.collect():
-        exact.setdefault(r["query_id"], set()).add(r[id_col])
-
-    def recall_of(rows) -> float:
-        got: dict[str, set] = {}
-        for r in rows:
-            got.setdefault(r["query_id"], set()).add(r[id_col])
-        per_q = [len(got.get(q, set()) & exact[q]) / len(exact[q]) for q in exact]
-        return sum(per_q) / len(per_q)
-
+    held_in = _held_in_queries(emb, k, n_queries, vec_col, id_col, seed)
+    qids, qvecs, recall_of = held_in
     sweep: list[dict] = []
     viable: list[dict] = []
     n_rows = emb.count()
@@ -1409,7 +1201,7 @@ def tune_ivf(
             else sorted(int(m) for m in pq_m)
         )
         pq_sweep: list[dict] = []
-        chosen: dict | None = None
+        met = False
         for m in m_cands:
             pq = IVFPQIndex.build(
                 emb,
@@ -1418,20 +1210,19 @@ def tune_ivf(
                 vec_col=vec_col,
                 id_col=id_col,
             )
-            for rerank in (k, 2 * k, 5 * k, 10 * k):
-                r = recall_of(
-                    pq.search_batch(
-                        qids, qvecs, k, nprobe=out["nprobe"], rerank=rerank
-                    ).collect()
-                )
-                point = {"m": m, "rerank": int(rerank), "pq_recall": round(r, 4)}
-                pq_sweep.append(point)
-                if r >= target_recall:
-                    chosen = point
-                    break
-            if chosen:
+            points, met = _rerank_sweep(
+                pq, held_in, k, out["nprobe"], target_recall
+            )
+            pq_sweep += [
+                {"m": m, "rerank": rr, "pq_recall": r} for rr, r in points
+            ]
+            if met:
                 break
-        best_pq = chosen or max(pq_sweep, key=lambda p: (p["pq_recall"], -p["m"]))
+        best_pq = (
+            pq_sweep[-1]
+            if met
+            else max(pq_sweep, key=lambda p: (p["pq_recall"], -p["m"]))
+        )
         out["m"] = best_pq["m"]
         out["rerank"] = best_pq["rerank"]
         out["pq_recall"] = best_pq["pq_recall"]
@@ -1457,44 +1248,15 @@ def tune_ivf_sq(
     "sq_sweep"}; merge into the tune_ivf dict for the full picture."""
     if target_recall is None:
         target_recall = float(tuned.get("target_recall", 0.95))
-    qdf = (
-        emb.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col).cast("string"), F.lit(seed)))
-        .limit(int(n_queries))
-    )
-    qrows = qdf.collect()
-    qids = [str(r[id_col]) for r in qrows]
-    qvecs = [list(r[vec_col]) for r in qrows]
-    exact: dict[str, set] = {}
-    ground = knn_ops.knn_block(emb, qids, qvecs, k, vec_col=vec_col, id_col=id_col)
-    for r in ground.collect():
-        exact.setdefault(r["query_id"], set()).add(r[id_col])
-
-    def recall_of(rows) -> float:
-        got: dict[str, set] = {}
-        for r in rows:
-            got.setdefault(r["query_id"], set()).add(r[id_col])
-        per_q = [len(got.get(q, set()) & exact[q]) / len(exact[q]) for q in exact]
-        return sum(per_q) / len(per_q)
-
+    held_in = _held_in_queries(emb, k, n_queries, vec_col, id_col, seed)
     sq = IVFSQIndex.build(
         emb, n_clusters=tuned["n_clusters"], vec_col=vec_col, id_col=id_col
     )
-    sweep: list[dict] = []
-    chosen: dict | None = None
-    for rerank in (k, 2 * k, 5 * k, 10 * k):
-        r = recall_of(
-            sq.search_batch(
-                qids, qvecs, k, nprobe=tuned["nprobe"], rerank=rerank
-            ).collect()
-        )
-        point = {"sq_rerank": int(rerank), "sq_recall": round(r, 4)}
-        sweep.append(point)
-        if r >= target_recall:
-            chosen = point
-            break
-    best = chosen or max(sweep, key=lambda p: p["sq_recall"])
+    points, met = _rerank_sweep(sq, held_in, k, tuned["nprobe"], target_recall)
+    sweep = [{"sq_rerank": rr, "sq_recall": r} for rr, r in points]
+    best = sweep[-1] if met else max(sweep, key=lambda p: p["sq_recall"])
     return {**best, "sq_sweep": sweep}
+
 
 
 # ---------------------------------------------------------------- tombstones
@@ -1503,8 +1265,6 @@ _TOMBSTONES = "_tombstones"  # underscore prefix: parquet readers skip it
 
 
 def _tombstone_path(path: str) -> str:
-    import os
-
     return os.path.join(path, _TOMBSTONES)
 
 
@@ -1529,8 +1289,6 @@ def append_tombstones(
 def load_tombstones(spark: SparkSession, path: str, id_col: str = "vec_id"):
     """Tombstoned ids as a 1-column DataFrame, or None when there are
     none recorded."""
-    import os
-
     tp = _tombstone_path(path)
     if not os.path.exists(tp):
         return None
@@ -1606,9 +1364,7 @@ def train_cluster_centroids(
     the pattern that lets the assignment pass be replayed in plain SQL
     with the matrix as a literal."""
     sample = _ordered_sample(df, vec_col, id_col, sample_size)
-    norms = np.linalg.norm(sample, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return _kmeans(sample / norms, n_clusters, seed)
+    return _kmeans(_unit_rows(sample), n_clusters, seed)
 
 
 def train_cluster_centroids_local(
@@ -1642,9 +1398,7 @@ def train_cluster_centroids_local(
     vecs = t[vec_col].to_pylist()
     order = sorted(range(len(ids)), key=lambda i: ids[i])
     sample = np.asarray([vecs[i] for i in order], dtype=np.float64)
-    norms = np.linalg.norm(sample, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return _kmeans(sample / norms, n_clusters, seed)
+    return _kmeans(_unit_rows(sample), n_clusters, seed)
 
 
 def cluster_embeddings(

@@ -1,10 +1,11 @@
 """Unified query router: pick the ANN tier for a vector search.
 
-The repo grew five search entry points (brute-force FLAT
-``knn.knn_single``, ``IVFIndex.search``/``search_filtered``,
-``IVFSQIndex.search_batch``, ``IVFPQIndex.search_batch``) and callers
-had to choose manually.  :func:`choose_tier` encodes the choice as an
-inspectable decision, :func:`routed_search` dispatches it; the
+The repo grew several search entry points (brute-force FLAT
+``knn.knn_single``, ``IVFIndex.search``/``search_filtered``, the coded
+tiers' shared ``search_batch`` behind ``IVFSQIndex`` and
+``IVFPQIndex``, served HNSW) and callers had to choose manually.
+:func:`choose_tier` encodes the choice as an inspectable decision,
+:func:`routed_search` dispatches it; the
 ``Collection.query_embedding(index="auto")`` surface wraps both.
 
 Tier ladder and DOCUMENTED thresholds (all overridable per call):
@@ -39,8 +40,12 @@ sweeps beat formulas):
 - ``nprobe`` from ``target_recall``: >= 0.999 probes everything (the
   exact-identity setting the oracles use), >= 0.99 probes 1/4 of the
   cells, >= 0.95 probes 1/8, below that 1/16.
-- ``rerank``: 10k for SQ8, 20k for PQ (PQ's ADC is lossier, so its
-  shortlist is deeper).
+- ``rerank`` (coded tiers only): ``max(10k, 100)`` for SQ8,
+  ``max(20k, 200)`` for PQ (PQ's ADC is lossier, so its shortlist is
+  deeper).
+
+A served index keeps its own ``n_clusters``; nprobe and rerank follow
+the same rules as a decided tier (:func:`_operating_point`).
 """
 
 from __future__ import annotations
@@ -116,23 +121,40 @@ def choose_tier(
         )
 
     if tier == "flat":
-        return {
-            "tier": tier, "n_clusters": None, "nprobe": None,
-            "rerank": None, "reason": reason,
-        }
-    nlist = _nlist(n_docs)
+        return _flat_decision(reason)
+    if tuned:
+        reason += " (tuned operating point)"
+    return _operating_point(
+        tier, _nlist(n_docs), k, target_recall, tuned, reason
+    )
+
+
+def _flat_decision(reason: str) -> dict:
+    return {
+        "tier": "flat", "n_clusters": None, "nprobe": None,
+        "rerank": None, "reason": reason,
+    }
+
+
+def _operating_point(
+    tier: str,
+    nlist: int,
+    k: int,
+    target_recall: float,
+    tuned: dict | None,
+    reason: str,
+) -> dict:
+    """The decision dict of an IVF-family tier: nprobe from the recall
+    target, rerank by the documented rule (SQ8 ``max(10k, 100)``, PQ
+    ``max(20k, 200)``, none for flat-vector IVF), and a measured
+    ``tuned`` point overriding all three."""
     nprobe = _nprobe(nlist, target_recall)
-    rerank = None
-    if tier == "ivf_sq":
-        rerank = max(10 * k, 100)
-    elif tier == "ivf_pq":
-        rerank = max(20 * k, 200)
+    rerank = {"ivf_sq": max(10 * k, 100), "ivf_pq": max(20 * k, 200)}.get(tier)
     if tuned:
         nlist = int(tuned.get("n_clusters", nlist))
         nprobe = int(tuned.get("nprobe", nprobe))
         if tuned.get("rerank") is not None and rerank is not None:
             rerank = int(tuned["rerank"])
-        reason += " (tuned operating point)"
     return {
         "tier": tier, "n_clusters": nlist, "nprobe": min(nprobe, nlist),
         "rerank": rerank, "reason": reason,
@@ -152,26 +174,10 @@ def forced_decision(
     if tier not in TIERS:
         raise ValueError(f"unknown tier {tier!r}; expected one of {TIERS}")
     if tier == "flat":
-        return {
-            "tier": "flat", "n_clusters": None, "nprobe": None,
-            "rerank": None, "reason": "caller-forced tier",
-        }
-    nlist = _nlist(n_docs)
-    nprobe = _nprobe(nlist, target_recall)
-    rerank = None
-    if tier == "ivf_sq":
-        rerank = max(10 * k, 100)
-    elif tier == "ivf_pq":
-        rerank = max(20 * k, 200)
-    if tuned:
-        nlist = int(tuned.get("n_clusters", nlist))
-        nprobe = int(tuned.get("nprobe", nprobe))
-        if tuned.get("rerank") is not None and rerank is not None:
-            rerank = int(tuned["rerank"])
-    return {
-        "tier": tier, "n_clusters": nlist, "nprobe": min(nprobe, nlist),
-        "rerank": rerank, "reason": "caller-forced tier",
-    }
+        return _flat_decision("caller-forced tier")
+    return _operating_point(
+        tier, _nlist(n_docs), k, target_recall, tuned, "caller-forced tier"
+    )
 
 
 def _filtered_tier_error(tier: str) -> str:
@@ -209,13 +215,23 @@ def tier_of(index) -> str:
     raise TypeError(f"not a served ANN index: {type(index).__name__}")
 
 
-_EMPTY_FLAT_DECISION = {
-    "tier": "flat", "n_clusters": None, "nprobe": None,
-    "rerank": None, "reason": "empty corpus frame",
-}
+def _served_decision(index, k: int, target_recall: float) -> dict:
+    """The decision for a served ``index``: its own tier and
+    ``n_clusters``, with the same nprobe and rerank rules a decided
+    tier gets.  A served graph carries its walk's ``ef`` instead:
+    every point at ``target_recall >= 0.999`` (exhaustive, exact),
+    else ``max(4k, 64)``."""
+    tier = tier_of(index)
+    reason = "served index available"
+    if tier == "hnsw":
+        ef = index.n_points() if target_recall >= 0.999 else max(4 * k, 64)
+        return {"tier": tier, "ef": ef, "reason": reason}
+    return _operating_point(
+        tier, len(index.centroids), k, target_recall, None, reason
+    )
 
 
-def _build_tier_or_flat(A, tier, decision, df, vec_col, id_col, seed):
+def _build_tier_or_flat(decision, df, vec_col, id_col, seed):
     """Build the decided tier's on-the-fly index, demoting an EMPTY
     corpus frame to a FLAT no-op scan instead of crashing the
     quantizer trainer.
@@ -231,20 +247,59 @@ def _build_tier_or_flat(A, tier, decision, df, vec_col, id_col, seed):
     lands here safely: the build is the first job that touches the
     rows, it raises, and the query answers empty through FLAT.
     Returns ``(index, decision)``."""
+    from . import ann as A
+
     builders = {
         "ivf": A.IVFIndex.build,
         "ivf_sq": A.IVFSQIndex.build,
         "ivf_pq": A.IVFPQIndex.build,
     }
-    if tier not in builders:
+    if decision["tier"] not in builders:
         return None, decision
     try:
-        return builders[tier](
+        return builders[decision["tier"]](
             df, n_clusters=decision["n_clusters"],
             vec_col=vec_col, id_col=id_col, seed=seed,
         ), decision
     except A.EmptyCorpusError:
-        return None, dict(_EMPTY_FLAT_DECISION)
+        return None, _flat_decision("empty corpus frame")
+
+
+def _route(
+    df, index, where, allowed, decision, n_docs, dim, k, target_recall,
+    tuned, vec_col, id_col, seed, thresholds,
+):
+    """The front half :func:`routed_search` and
+    :func:`routed_search_batch` share: check the filter forms against
+    the tier, then take the served index's decision — or decide (unless
+    the caller passed ``decision``) and build that tier on the fly.
+    Returns ``(index, decision)``; ``index`` is None for flat."""
+    if allowed is not None and (
+        # isinstance first (r12, ADVICE): a string tier name must hit
+        # THIS ValueError, not tier_of's "not a served ANN index"
+        index is None
+        or isinstance(index, str)
+        or tier_of(index) != "hnsw"
+    ):
+        raise ValueError(
+            "allowed id-set filtering is the served graph tier's "
+            "filter form; pass a Column `where` for every other tier"
+        )
+    if index is not None:
+        tier = tier_of(index)
+        if where is not None and tier != "ivf":
+            raise ValueError(_filtered_tier_error(tier))
+        return index, _served_decision(index, k, target_recall)
+    if decision is None:
+        if n_docs is None:
+            n_docs = df.count()
+        decision = choose_tier(
+            n_docs, dim, k=k, target_recall=target_recall,
+            filtered=where is not None, tuned=tuned, **thresholds,
+        )
+    if where is not None and decision["tier"] in ("ivf_sq", "ivf_pq"):
+        raise ValueError(_filtered_tier_error(decision["tier"]))
+    return _build_tier_or_flat(decision, df, vec_col, id_col, seed)
 
 
 def routed_search(
@@ -279,66 +334,27 @@ def routed_search(
     rows with ``similarity``, highest first (quantized tiers return
     ``(id, similarity)``; flat tiers carry the input columns through).
     """
-    from . import ann as A
     from . import knn as K
 
     qv = [float(x) for x in query_vec]
-    if allowed is not None and (
-        # isinstance first (r12, ADVICE): a string tier name must hit
-        # THIS ValueError, not tier_of's "not a served ANN index"
-        index is None
-        or isinstance(index, str)
-        or tier_of(index) != "hnsw"
-    ):
-        raise ValueError(
-            "allowed id-set filtering is the served graph tier's "
-            "filter form; pass a Column `where` for every other tier"
-        )
-    if index is not None:
-        tier = tier_of(index)
-        if where is not None and tier != "ivf":
-            raise ValueError(_filtered_tier_error(tier))
-        if tier == "hnsw":
-            # served graph index (operators/hnsw.py): ef from the
-            # recall target — >= 0.999 walks exhaustively (exact)
-            ef = (
-                index.n_points()
-                if target_recall >= 0.999
-                else max(4 * k, 64)
-            )
-            return index.search_batch(
-                df.sparkSession, ["0"], [qv], k, ef=ef, allowed=allowed
-            ).drop("query_id")
-        nlist = len(index.centroids)
-        nprobe = _nprobe(nlist, target_recall)
-        rerank = max((20 if tier == "ivf_pq" else 10) * k, 100)
-        decision = {
-            "tier": tier, "n_clusters": nlist, "nprobe": nprobe,
-            "rerank": rerank, "reason": "served index available",
-        }
-    else:
-        if decision is None:
-            if n_docs is None:
-                n_docs = df.count()
-            decision = choose_tier(
-                n_docs, len(qv), k=k, target_recall=target_recall,
-                filtered=where is not None, tuned=tuned, **thresholds,
-            )
-        tier = decision["tier"]
-        if where is not None and tier in ("ivf_sq", "ivf_pq"):
-            raise ValueError(_filtered_tier_error(tier))
-        index, decision = _build_tier_or_flat(
-            A, tier, decision, df, vec_col, id_col, seed
-        )
-
-    if decision["tier"] == "flat":
+    index, decision = _route(
+        df, index, where, allowed, decision, n_docs, len(qv), k,
+        target_recall, tuned, vec_col, id_col, seed, thresholds,
+    )
+    tier = decision["tier"]
+    if tier == "hnsw":
+        # served graph index (operators/hnsw.py)
+        return index.search_batch(
+            df.sparkSession, ["0"], [qv], k, ef=decision["ef"], allowed=allowed
+        ).drop("query_id")
+    if tier == "flat":
         base = df.filter(where) if where is not None else df
         return K.knn_single(base, qv, k, vec_col=vec_col, id_col=id_col)
     if where is not None:
         return index.search_filtered(
             qv, k, nprobe=decision["nprobe"], where=where
         )
-    if decision["tier"] == "ivf":
+    if tier == "ivf":
         return index.search(qv, k, nprobe=decision["nprobe"])
     return index.search_batch(
         ["0"], [qv], k, nprobe=decision["nprobe"],
@@ -369,18 +385,18 @@ def routed_search_batch(
     answers one query at a time; Spark's win is scoring the batch in
     one corpus pass, SURVEY §7.1).
 
-    The decision logic is byte-identical to :func:`routed_search` (one
-    ladder, not two): a served ``index`` wins, else :func:`choose_tier`
-    picks from corpus size / recall / filteredness.  Dispatch per tier:
+    The decision logic is :func:`routed_search`'s own (one ladder, not
+    two): a served ``index`` wins, else :func:`choose_tier` picks from
+    corpus size / recall / filteredness.  Dispatch per tier:
 
     - **FLAT** → :func:`..knn.knn_block` (one GEMM per Arrow batch of
       the corpus scores ALL queries; ``where`` filters the scan first).
     - **IVF** → :meth:`..ann.IVFIndex.search_batch` (the probe table
       of every query broadcast-joins the cluster-pruned corpus once;
       ``where`` applies below scoring inside the probed partitions).
-    - **IVF-SQ8 / IVF-PQ** → the tier's ``search_batch`` (one uint8 /
-      ADC pass for all queries + shared exact re-rank).  ``where``
-      raises — quantized candidates carry codes only.
+    - **IVF-SQ8 / IVF-PQ** → the coded container's ``search_batch``
+      (one uint8 / ADC pass for all queries + shared exact re-rank).
+      ``where`` raises — quantized candidates carry codes only.
     - **HNSW** (served only) → driver-side walks per query, one frame.
 
     Returns (query_id string, <id_col>, similarity), per-query top-k,
@@ -390,7 +406,6 @@ def routed_search_batch(
     ``allowed`` (r11) is the graph tier's filter form — ONE
     materialized id set shared by the whole batch (see
     :func:`routed_search`)."""
-    from . import ann as A
     from . import knn as K
 
     qvecs = [[float(x) for x in qv] for qv in query_vecs]
@@ -404,59 +419,22 @@ def routed_search_batch(
             f"query_ids ({len(qids)}) and query_vecs "
             f"({len(qvecs)}) must be the same length"
         )
-    if allowed is not None and (
-        # isinstance first (r12, ADVICE): a string tier name must hit
-        # THIS ValueError, not tier_of's "not a served ANN index"
-        index is None
-        or isinstance(index, str)
-        or tier_of(index) != "hnsw"
-    ):
-        raise ValueError(
-            "allowed id-set filtering is the served graph tier's "
-            "filter form; pass a Column `where` for every other tier"
+    index, decision = _route(
+        df, index, where, allowed, decision, n_docs, len(qvecs[0]), k,
+        target_recall, tuned, vec_col, id_col, seed, thresholds,
+    )
+    tier = decision["tier"]
+    if tier == "hnsw":
+        return index.search_batch(
+            df.sparkSession, qids, qvecs, k, ef=decision["ef"], allowed=allowed
         )
-    if index is not None:
-        tier = tier_of(index)
-        if where is not None and tier != "ivf":
-            raise ValueError(_filtered_tier_error(tier))
-        if tier == "hnsw":
-            ef = (
-                index.n_points()
-                if target_recall >= 0.999
-                else max(4 * k, 64)
-            )
-            return index.search_batch(
-                df.sparkSession, qids, qvecs, k, ef=ef, allowed=allowed
-            )
-        nlist = len(index.centroids)
-        decision = {
-            "tier": tier, "n_clusters": nlist,
-            "nprobe": _nprobe(nlist, target_recall),
-            "rerank": max((20 if tier == "ivf_pq" else 10) * k, 100),
-            "reason": "served index available",
-        }
-    else:
-        if decision is None:
-            if n_docs is None:
-                n_docs = df.count()
-            decision = choose_tier(
-                n_docs, len(qvecs[0]), k=k, target_recall=target_recall,
-                filtered=where is not None, tuned=tuned, **thresholds,
-            )
-        tier = decision["tier"]
-        if where is not None and tier in ("ivf_sq", "ivf_pq"):
-            raise ValueError(_filtered_tier_error(tier))
-        index, decision = _build_tier_or_flat(
-            A, tier, decision, df, vec_col, id_col, seed
-        )
-
-    if decision["tier"] == "flat":
+    if tier == "flat":
         base = df.filter(where) if where is not None else df
         return K.knn_block(
             base, qids, qvecs, k,
             vec_col=vec_col, id_col=id_col, precision=precision,
         )
-    if decision["tier"] == "ivf":
+    if tier == "ivf":
         return index.search_batch(
             qids, qvecs, k,
             nprobe=decision["nprobe"], where=where,

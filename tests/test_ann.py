@@ -870,6 +870,21 @@ def test_search_batch_dsl_length_mismatch_raises(emb, index):
         index.search_batch_dsl(["a", "b"], [qv], 3, [({}, [], [])])
 
 
+@pytest.mark.parametrize("tier", ["ivf", "ivf_sq", "ivf_pq"])
+def test_search_batch_length_mismatch_raises(emb, index, pq_index, tier):
+    """Every IVF tier's batch search rejects query ids and vectors of
+    different lengths up front: zip() would drop the extra queries
+    silently, and the coded kernels would index past the id list in a
+    Python worker."""
+    idx = {"ivf": index, "ivf_pq": pq_index}.get(tier) or A.IVFSQIndex.build(
+        emb, n_clusters=4, vec_col="embedding", id_col="vec_id"
+    )
+    qvecs = [_qvec(emb, 0), _qvec(emb, 1)]
+    for qids in (["a"], ["a", "b", "c"]):
+        with pytest.raises(ValueError, match="same length"):
+            idx.search_batch(qids, qvecs, 3)
+
+
 def test_search_batch_dsl_normalized_still_exact(emb, index):
     """nprobe=all + no filters == brute force, through the two-join
     normalized shape (the exactness certificate survives the r10

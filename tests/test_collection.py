@@ -399,6 +399,15 @@ def test_collection_ann_index(spark, db):
     ]
     assert got_pq == exact
 
+    # SQ8 dispatches through the same coded-tier batch search as PQ,
+    # both as a served index and built on the fly by kind
+    sq_idx = c.build_ann_index(n_clusters=4, kind="ivf_sq")
+    for kw in ({"index": sq_idx}, {"kind": "ivf_sq", "n_clusters": 4}):
+        got_sq = [
+            r["id"] for r in c.query_embedding_ann(q, 5, nprobe=4, **kw).collect()
+        ]
+        assert got_sq == exact, kw
+
 
 def test_export_validation_does_not_destroy_existing_file(spark, tmp_path, db):
     """A bad encryption key or unknown collection name must raise BEFORE

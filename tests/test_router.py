@@ -130,6 +130,24 @@ def test_served_index_wins(emb, qvec):
     assert got == _flat_top(emb, qvec)
 
 
+@pytest.mark.parametrize("tier", ["ivf", "ivf_sq", "ivf_pq"])
+def test_served_decision_rerank_matches_forced(emb, tier):
+    """One rerank rule: a served index gets the shortlist depth the
+    same tier gets when decided on the fly (PQ floor 200, not 100)."""
+    from chromem_go_spark.operators import ann as A
+
+    build = {
+        "ivf": A.IVFIndex.build,
+        "ivf_sq": A.IVFSQIndex.build,
+        "ivf_pq": A.IVFPQIndex.build,
+    }[tier]
+    index = build(emb, n_clusters=8, vec_col="embedding", id_col="vec_id")
+    served = R._served_decision(index, 5, 0.95)
+    forced = R.forced_decision(tier, emb.count(), k=5)
+    assert served["tier"] == tier
+    assert served["rerank"] == forced["rerank"]
+
+
 def test_filtered_quantized_raises(emb, qvec):
     n = emb.count()
     decision = R.forced_decision("ivf_sq", n)
