@@ -35,7 +35,7 @@ from .locking import write_lock
 from .materialize import materialize
 from .functions import vector as V
 from .operators import knn as knn_ops
-from .operators.filters import combined_predicate, validate_where_document
+from .operators.filters import validate_where_document
 
 EmbeddingFunc = Callable[[str], Sequence[float]]
 
@@ -416,13 +416,11 @@ class Collection:
             raise ValueError("must provide either where, whereDocument or ids")
         validate_where_document(where_document)
         if self.table_format == "delta" and self.persist_dir:
-            victim = self._combined_predicate_ex(
-                where, where_document, extended_filters
-            )
-            if ids:
-                victim = victim & F.col("id").isin([str(i) for i in ids])
             tablefmt.delete_where(
-                self.spark, self._data_path(), F.coalesce(victim, F.lit(False))
+                self.spark, self._data_path(),
+                self._delete_predicate(
+                    where, where_document, ids, extended_filters
+                ),
             )
             self.spark.catalog.refreshByPath(self._data_path())
             self._df = self._read_table()
@@ -434,165 +432,135 @@ class Collection:
                 where, where_document, ids, extended_filters
             )
 
-    #: served-graph filtered serving (r11) materializes the filter's
-    #: matching id set for the walks (shipped once per executor via
-    #: the sharded batch's query broadcast since r12 — pre-r12 it
-    #: rode every task's closure, tens of MB per task at this cap);
-    #: beyond this many matches the set costs more to materialize and
-    #: ship than the exact scan it replaces (and the single-graph
-    #: tier holds <= 1M points anyway — only a sharded root can
-    #: exceed it), so the query falls back to the exact scan path.
+    #: a served graph serves a filter as the filter's matching id set
+    #: (eligibility-gated walks, operators/hnsw.py); beyond this many
+    #: matches the set costs more to materialize and ship than the
+    #: exact scan it replaces (and a single graph holds <= 1M points
+    #: anyway), so the query falls back to the exact scan path.
     HNSW_FILTER_MAX_IDS = 1_000_000
 
-    #: widest per-query-filtered batch the graph tier serves via the
-    #: mask scan (one Catalyst boolean per query); wider batches fall
-    #: back to the FLAT broadcast-join DSL kernel, which ships the
-    #: specs as DATA (constant plan size).  The constant is MEASURED,
-    #: not hazard-argued (r12): SCALE.md's mask-scan-vs-FLAT table
-    #: shows the walls at q=64/256/512 — the linear-in-q Catalyst
-    #: expression cost plus the JVM-code-cache hazard both bind past
-    #: a few hundred booleans.
-    HNSW_BATCH_FILTER_MAX_QUERIES = 256
-
-    #: corpus size at or above which ``query_batch`` serves per-query
-    #: FILTERS from a served graph (mask scan materializes the id
-    #: sets, eligibility walks serve) — below it the FLAT DSL kernel
-    #: is the DEFAULT (r13, judge): the mask-scan path is itself
-    #: corpus-bounded (its materializing scan reads the same corpus
-    #: the FLAT kernel scans), and SCALE.md's corpus-size sweep
-    #: (50k/200k/500k docs, q=64, ~5% selectivity) measured FLAT
-    #: faster at EVERY size — no crossover exists in the measured
-    #: range, so the constant sits above the single-graph 1M-point
-    #: cap: FLAT by default, graph opt-in
-    #: (``HNSW_BATCH_FILTER_PREFER_GRAPH``).  Callers who already
-    #: HOLD per-query allowed id sets pay no materializing scan and
-    #: should call ``HNSWIndex.search_batch(allowed_per_query=...)``
-    #: directly — that path stays ef-bounded and is the graph
-    #: filter's real home (the hnsw_batch_per_filter driver row).
-    HNSW_BATCH_FILTER_MIN_POINTS = 2_000_000
-
-    #: opt-in: force query_batch's per-query-filtered serve through
-    #: the graph mask-scan path at any corpus size (the pre-r13
-    #: routing).  Correctness is identical on both paths (oracle
-    #: identity at exact settings); this is a wall-clock knob.
-    HNSW_BATCH_FILTER_PREFER_GRAPH = False
-
-    def _materialize_filter_ids(self, where, where_document,
-                                extended_filters) -> set | None:
-        """The filter's matching ids as a bounded set — the served
-        graph tier's filter form (eligibility-gated walks; see
-        operators/hnsw.py and router.routed_search ``allowed``).  One
-        collect job over the SAME predicate composition the exact path
-        scans with (semantics identical by construction); ``None``
-        when the match count exceeds ``HNSW_FILTER_MAX_IDS`` (callers
-        fall back to the exact scan)."""
-        pred = self._combined_predicate_ex(
-            where, where_document, extended_filters
-        )
-        cap = int(self.HNSW_FILTER_MAX_IDS)
-        rows = self.df.filter(pred).select("id").limit(cap + 1).collect()
-        if len(rows) > cap:
-            return None
-        return {r["id"] for r in rows}
-
-    def _materialize_per_query_ids(self, parsed, pre) -> list | None:
-        """Each query's (global AND per-query) filter match set as a
-        list of id sets — the served graph tier's BATCH filter form
-        (``allowed_per_query`` on the walks).  ONE corpus scan builds
-        every set: each query's DSL compiles to a boolean column (the
-        same reference semantics the flat kernel joins on —
-        metadata-equality AND-fold with missing-key non-match,
-        every $contains present, no $not_contains present), and the
-        scan collects (id, per-query hit mask) for rows matching ANY
-        query.  A query with no constraints (and no global filter)
-        stays ``None`` = unfiltered, costing nothing.  Returns None
-        when the summed set sizes exceed ``HNSW_FILTER_MAX_IDS``
-        (the per-task shipping budget; callers fall back to the exact
-        kernel)."""
-        from .operators.filters import where_predicate
-
-        unconstrained = [
-            not w and not c and not nc for (w, c, nc) in parsed
-        ]
-        if pre is None and all(unconstrained):
-            return [None] * len(parsed)
-        if len(parsed) > int(self.HNSW_BATCH_FILTER_MAX_QUERIES):
-            # one boolean Catalyst expression per query: past a few
-            # hundred the generated code blows out the JVM code cache
-            # (the same hazard as literal centroid matrices) — the
-            # FLAT DSL kernel broadcasts the specs as DATA instead,
-            # so very wide batches fall back there.  The constant is
-            # measured (SCALE.md mask-scan-vs-FLAT crossover table).
-            return None
-        base = self.df.filter(pre) if pre is not None else self.df
-        preds = []
-        for w, c, nc in parsed:
-            p = F.lit(True)
-            if w:
-                p = p & where_predicate(w)
-            for pat in c:
-                p = p & F.col("content").contains(pat)
-            for pat in nc:
-                p = p & ~F.col("content").contains(pat)
-            preds.append(F.coalesce(p, F.lit(False)))
-        sets: list = [
-            None if (pre is None and un) else set()
-            for un in unconstrained
-        ]
-        # the row filter ORs only the predicates whose sets we will
-        # actually fill — an unconstrained query's lit(True) would
-        # otherwise pass EVERY corpus row (review r11: the collect was
-        # effectively unbounded with one unfiltered query in the
-        # batch); the collect is limit-capped so the budget binds
-        # BEFORE the driver materializes anything oversized (a row
-        # matching q queries adds q to the shipped total, so rows <=
-        # total is a sound guard)
-        anyp = None
-        for j, s in enumerate(sets):
-            if s is not None:
-                anyp = preds[j] if anyp is None else (anyp | preds[j])
-        if anyp is None:
-            return sets
-        budget = int(self.HNSW_FILTER_MAX_IDS)
-        rows = (
-            base.select(F.col("id"), F.array(*preds).alias("__m"))
-            .filter(anyp)
-            .limit(budget + 1)
-            .collect()
-        )
-        if len(rows) > budget:
-            return None
-        total = 0
-        for r in rows:
-            for j, hit in enumerate(r["__m"]):
-                if hit and sets[j] is not None:
-                    sets[j].add(r["id"])
-                    total += 1
-                    if total > budget:
-                        return None
-        return sets
-
-    def _combined_predicate_ex(self, where, where_document, extended_filters):
-        """The full pre-filter predicate, strict-reference or extended
-        DSL — ONE composition shared by query_embedding's exact path
-        and delete (keeping the two surfaces in sync by construction)."""
-        if not extended_filters:
-            return combined_predicate(where, where_document)
+    @staticmethod
+    def _compile_filters(where, where_document, extended_filters: bool):
+        """``(predicate or None, $contains pattern groups)`` for one
+        query's filters — the ONE compilation every query path and
+        :meth:`delete` share.  The predicate is the strict-reference
+        ``where`` (or the extended DSL) AND the ``where_document``
+        operators; ``None`` means unfiltered.  The groups are the
+        disjunction of conjunctive ``$contains`` pattern lists a fresh
+        gram index prunes with (the extended tree's DNF groups,
+        AND-folded with the flat ``$contains``)."""
         from .operators.filters import (
+            and_fold_patterns,
+            contains_pattern_groups,
             extended_where_predicate,
             where_document_predicate,
+            where_predicate,
         )
 
-        return extended_where_predicate(
-            where, content_col="content"
-        ) & where_document_predicate(where_document)
+        pred, groups = None, []
+        if where:
+            if extended_filters:
+                pred = extended_where_predicate(where, content_col="content")
+                groups = contains_pattern_groups(where)
+            else:
+                pred = where_predicate(where)
+        if where_document:
+            doc = where_document_predicate(where_document)
+            pred = doc if pred is None else pred & doc
+            if where_document.get("$contains"):
+                groups = and_fold_patterns(
+                    groups, [where_document["$contains"]]
+                )
+        return pred, groups
+
+    @staticmethod
+    def _negative_mode(negative_embedding, negative_mode) -> str | None:
+        """The negative-query mode in force: ``None`` without a
+        negative; with one, ``None`` means ``"subtract"`` (the
+        reference's default, collection.go:457-464) and anything other
+        than the two modes raises."""
+        if negative_embedding is None:
+            return None
+        if negative_mode is None:
+            return "subtract"
+        if negative_mode not in ("subtract", "filter"):
+            raise ValueError(
+                f"unknown negative_mode {negative_mode!r}; expected "
+                "'subtract' or 'filter'"
+            )
+        return negative_mode
+
+    def _front_end(
+        self, where, where_document, extended_filters, index,
+        per_query: bool = False,
+    ):
+        """The decisions every query entry shares, made once: compile
+        the filters and apply the served-index rule.  Returns
+        ``(pred, groups, index, allowed)``.
+
+        The served-index rule: a served IVF index applies any filter
+        below scoring; a served HNSW serves a GLOBAL filter as the
+        ``allowed`` id set of its matches (one collect job, at most
+        ``HNSW_FILTER_MAX_IDS`` ids); every other filtered case —
+        quantized codes, per-query filters on a graph, an oversized id
+        set — falls back to the exact path (``index`` None).  A tier
+        name or ``None`` passes through unchanged."""
+        pred, groups = self._compile_filters(
+            where, where_document, extended_filters
+        )
+        if (
+            index is None
+            or isinstance(index, str)
+            or (pred is None and not per_query)
+        ):
+            return pred, groups, index, None
+        from .operators.router import tier_of
+
+        tier = tier_of(index)
+        if tier == "ivf":
+            return pred, groups, index, None
+        if tier == "hnsw" and not per_query:
+            cap = int(self.HNSW_FILTER_MAX_IDS)
+            rows = self.df.filter(pred).select("id").limit(cap + 1).collect()
+            if len(rows) <= cap:
+                return pred, groups, index, {r["id"] for r in rows}
+        return pred, groups, None, None
+
+    def _scan_frame(self, pred, groups) -> DataFrame:
+        """The exact paths' corpus frame: gram-pruned by ``groups``
+        (a no-op without a fresh text index), then filtered by
+        ``pred`` below scoring (reference collection.go:521)."""
+        df = self._prune_by_groups(self.df, groups)
+        return df.filter(pred) if pred is not None else df
+
+    def _routed_frame(self, index, groups, n_docs=None):
+        """``(frame, n_docs)`` for a router call.  A served index
+        searches its own stored corpus, so the collection table is
+        neither pruned nor counted for it; a tier name searches the
+        gram-pruned frame, and its tier decision is sized on that frame
+        (a selective pattern can shrink it far below the corpus, and
+        ``nlist`` must never be sized off the full count)."""
+        if not isinstance(index, str):
+            return self.df, n_docs
+        base = self._prune_by_groups(self.df, groups)
+        if base is self.df and n_docs is not None:
+            return base, n_docs
+        return base, base.count()
+
+    def _delete_predicate(self, where, where_document, ids, extended_filters):
+        """The rows a delete removes: the compiled filters AND the id
+        list, null-safe (a NULL match keeps the row)."""
+        victim, _ = self._compile_filters(
+            where, where_document, extended_filters
+        )
+        if ids:
+            in_ids = F.col("id").isin([str(i) for i in ids])
+            victim = in_ids if victim is None else victim & in_ids
+        return F.coalesce(victim, F.lit(False))
 
     def _delete_unlocked(
         self, where, where_document, ids, extended_filters=False
     ) -> None:
-        victim = self._combined_predicate_ex(where, where_document, extended_filters)
-        if ids:
-            victim = victim & F.col("id").isin([str(i) for i in ids])
         ids_only = bool(ids) and not where and not where_document
         if (
             ids_only
@@ -635,7 +603,9 @@ class Collection:
             self._df = self._read_table()
             self._write_meta()
             return
-        self._write(self.df.filter(~F.coalesce(victim, F.lit(False))))
+        self._write(self.df.filter(~self._delete_predicate(
+            where, where_document, ids, extended_filters
+        )))
 
     # ---------------- query (reference collection.go:410-559) ----------------
 
@@ -700,43 +670,36 @@ class Collection:
         rows (document columns + ``similarity``), highest first.
 
         ``extended_filters=True`` opts into the beyond-reference
-        ``where`` DSL ($and/$or/$not, comparisons, $in — the
-        reference's roadmap item, README.md:180; see
+        ``where`` DSL ($and/$or/$not, comparisons, $in, ``$contains``
+        leaves — the reference's roadmap item, README.md:180; see
         operators/filters.extended_where_predicate); the default keeps
-        strict reference parity including its golden errors.
+        strict reference parity including its golden errors.  A fresh
+        gram index (:meth:`build_text_index`) pre-prunes the corpus
+        for the filters' ``$contains`` structure on every path.
 
-        ``index`` opts into the unified ANN router
-        (operators/router.py): ``"auto"`` picks the tier from corpus
-        size and ``target_recall`` via the documented ladder
-        (FLAT <= 100k docs < IVF < IVF-SQ8 < IVF-PQ); a tier name
-        (``"flat"``/``"ivf"``/``"ivf_sq"``/``"ivf_pq"``) forces it; a
-        served index object from :meth:`build_ann_index` wins outright
-        (its build cost is sunk).  ``tuned`` is a measured operating
-        point from ``ann.tune_ivf``/``tune_ivf_sq``.  Query shapes the
-        quantized tiers can't express always keep their semantics:
-        negative FILTER mode takes the exact FLAT path regardless of
-        ``index`` (it needs per-candidate negative similarities),
-        while negative SUBTRACT routes (r11 — it is a pure
-        query-vector rewrite); a ``where``/``where_document`` routes
-        only through
-        full-vector tiers (the ladder picks FLAT/IVF when filtered;
-        r8: a fresh gram index pre-prunes ``$contains`` before
-        dispatch); a SERVED quantized index (PQ/SQ codes) falls back
-        to the exact scan path rather than erroring, while a served
-        GRAPH index serves the filter from the walk (r11, allowed
-        id-set — budget-capped, exact-scan fallback beyond) —
-        semantics beat routing either way.  Forcing a
-        quantized tier name together with a filter is a contradiction
-        and raises.  Quantized routed results carry
+        ``negative_embedding`` with ``negative_mode`` ``"subtract"``
+        (the default when a negative is given, as in the reference)
+        searches with ``normalize(q - neg)``; ``"filter"`` drops
+        documents whose similarity to the negative exceeds
+        ``negative_filter_threshold``.  Any other mode raises.
+
+        ``index`` opts into the ANN router (operators/router.py):
+        ``"auto"`` picks the tier from corpus size and
+        ``target_recall`` via the documented ladder (FLAT <= 100k docs
+        < IVF < IVF-SQ8 < IVF-PQ; filtered queries stay on FLAT/IVF);
+        a tier name (``"flat"``/``"ivf"``/``"ivf_sq"``/``"ivf_pq"``)
+        forces it, and forcing a quantized tier together with a filter
+        raises; a served index object from :meth:`build_ann_index` /
+        :meth:`build_hnsw_index` wins outright.  ``tuned`` is a
+        measured operating point from ``ann.tune_ivf``/``tune_ivf_sq``.
+        Negative FILTER mode always takes the exact path (it needs
+        per-candidate negative similarities); subtract mode routes (it
+        only rewrites the query vector).  A served IVF applies filters
+        below scoring; a served HNSW serves a filter from an allowed
+        id set of its matches (beyond ``HNSW_FILTER_MAX_IDS`` matches,
+        the exact path); a served quantized index falls back to the
+        exact path.  Quantized and graph routed results carry
         ``(id, similarity)`` only.
-
-        **Result-shape change (r11, intentional):** a FILTERED query
-        against a SERVED HNSW index now returns ``(id, similarity)``
-        via the routed graph path — pre-r11 it fell back to the exact
-        scan and returned full document rows (content/metadata +
-        similarity).  Callers that read document columns from filtered
-        served-graph results must join back on ``id`` (or pass no
-        served index to keep the exact scan's row shape).
         """
         if query_embedding is None or len(query_embedding) == 0:
             raise ValueError(E.ERR_QUERY_EMBEDDING_EMPTY)
@@ -746,148 +709,27 @@ class Collection:
         if n_results > n_docs:
             raise ValueError(E.ERR_NRESULTS_TOO_LARGE)
         validate_where_document(where_document)
+        mode = self._negative_mode(negative_embedding, negative_mode)
 
         qv = [float(x) for x in query_embedding]
-        if negative_embedding is not None and negative_mode == "subtract":
+        if mode == "subtract":
             qv = knn_ops.negative_subtract_query(qv, negative_embedding)
-
-        # Routed ANN path — for every query shape except negative
-        # FILTER mode, which needs per-candidate negative similarities
-        # only the exact kernel computes (semantics first).  Negative
-        # SUBTRACT routes since r11: it is a pure query-vector rewrite
-        # (already applied to qv above — reference collection.go:
-        # QueryWithOptions subtract), so the routed tiers see an
-        # ordinary query and every tier rule applies unchanged.
-        # ``where_document`` routes too since r8: its predicate is a
-        # Column over carried columns (full-vector tiers only — the
-        # router's filtered rule), and a fresh gram index pre-prunes
-        # the corpus BEFORE tier dispatch, so one call composes
-        # embed -> $contains prune -> routed ANN.
-        routable = index is not None and (
-            negative_embedding is None or negative_mode == "subtract"
+        pred, groups, index, allowed = self._front_end(
+            where, where_document, extended_filters,
+            None if mode == "filter" else index,
         )
-        served_allowed = None
-        if routable and not isinstance(index, str):
-            # a SERVED index that cannot express a filter falls back to
-            # the exact scan path (pre-r8 behavior preserved): only the
-            # flat-vector IVF tier applies predicates below scoring —
-            # EXCEPT the graph tier (r11): HNSW serves a filter as an
-            # eligibility-gated walk over the filter's materialized id
-            # set (hnsw.py module doc — the reference's
-            # filter-before-scoring semantics, collection.go:521, at
-            # the index's recall contract instead of a silent exact
-            # downgrade).  Beyond HNSW_FILTER_MAX_IDS matching ids the
-            # set costs more to ship than the scan saves — exact path.
+        if index is not None:
             from .operators import router as R
 
-            if (where or where_document) and R.tier_of(index) != "ivf":
-                if R.tier_of(index) == "hnsw":
-                    served_allowed = self._materialize_filter_ids(
-                        where, where_document, extended_filters
-                    )
-                    if served_allowed is None:
-                        routable = False
-                else:
-                    routable = False
-        if routable:
-            from .operators import router as R
-            from .operators.filters import where_document_predicate
-
-            if extended_filters:
-                from .operators.filters import (
-                    contains_pattern_groups,
-                    extended_where_predicate,
-                )
-
-                pre = (
-                    extended_where_predicate(where, content_col="content")
-                    if where
-                    else None
-                )
-                # r9: groups carry the prune through $or too — a
-                # disjunction of conjunctive pattern groups, unioned
-                # candidate sets (sound superset)
-                groups = (
-                    contains_pattern_groups(where) if where else []
-                )
-            else:
-                from .operators.filters import where_predicate
-
-                pre = where_predicate(where) if where else None
-                groups = []
-            if where_document:
-                docpred = where_document_predicate(where_document)
-                pre = docpred if pre is None else (pre & docpred)
-                pat = where_document.get("$contains")
-                if pat:
-                    from .operators.filters import and_fold_patterns
-
-                    groups = and_fold_patterns(groups, [pat])
-            # a served index searches its OWN stored corpus — the df
-            # argument is unused there, so don't pay the gram-prune
-            # jobs for it (the predicate still applies below scoring)
-            base = (
-                self.df
-                if not isinstance(index, str)
-                else self._prune_by_groups(self.df, groups)
-            )
-            eff_n = n_docs
-            if base is not self.df:
-                # the gram prune engaged: the tier decision and index
-                # sizing must see the frame actually being searched —
-                # a selective pattern can shrink it orders of magnitude
-                # below the corpus (FLAT is then correct and cheaper,
-                # and nlist must never be sized off the full count)
-                eff_n = base.count()
-            decision = None
-            served = None
-            if index == "auto":
-                decision = R.choose_tier(
-                    eff_n, len(qv), k=int(n_results),
-                    target_recall=target_recall,
-                    filtered=pre is not None, tuned=tuned,
-                )
-            elif isinstance(index, str):
-                decision = R.forced_decision(
-                    index, eff_n, k=int(n_results),
-                    target_recall=target_recall, tuned=tuned,
-                )
-            else:
-                served = index
+            base, n = self._routed_frame(index, groups, n_docs)
             return R.routed_search(
                 base, qv, int(n_results), vec_col="embedding",
-                id_col="id", index=served, target_recall=target_recall,
-                # the graph tier's filter rode into `served_allowed`;
-                # the Column form would raise there (router doc)
-                where=None if served_allowed is not None else pre,
-                decision=decision, n_docs=eff_n, allowed=served_allowed,
+                id_col="id", index=index, target_recall=target_recall,
+                where=None if allowed is not None else pred, tuned=tuned,
+                n_docs=n, allowed=allowed,
             )
-
-        # Pre-filter BELOW the similarity projection (reference
-        # collection.go:521; Catalyst keeps it pushed down).
-        pred = self._combined_predicate_ex(
-            where, where_document, extended_filters
-        )
-        if extended_filters:
-            from .operators.filters import contains_pattern_groups
-
-            groups = contains_pattern_groups(where)
-        else:
-            groups = []
-        # Gram-index pre-prune for the tree's $contains structure — the
-        # flat where_document key AND-folds into the extended tree's
-        # pattern groups (r8 covered $and leaves; r9 carries the prune
-        # through $or as unioned candidate sets).  No-op without a
-        # fresh index; pred still applies the exact substring verify.
-        if where_document and where_document.get("$contains"):
-            from .operators.filters import and_fold_patterns
-
-            groups = and_fold_patterns(
-                groups, [where_document["$contains"]]
-            )
-        filtered = self._prune_by_groups(self.df, groups).filter(pred)
-
-        if negative_embedding is not None and negative_mode == "filter":
+        filtered = self._scan_frame(pred, groups)
+        if mode == "filter":
             return knn_ops.knn_negative_filter(
                 filtered,
                 qv,
@@ -978,20 +820,6 @@ class Collection:
         self._text_index_n = int(meta.get("n", 3))
         self._text_index_src = self.df
         return True
-
-    def _contains_pruned(self, df: DataFrame, where_document) -> DataFrame:
-        """Back-compat shim over :meth:`_prune_by_patterns` for the
-        flat ``where_document`` form."""
-        pattern = (where_document or {}).get("$contains")
-        return self._prune_by_patterns(df, [pattern] if pattern else [])
-
-    def _prune_by_patterns(self, df: DataFrame, patterns) -> DataFrame:
-        """Gram-index candidate prune for conjunctively-required
-        ``$contains`` patterns — the single-group case of
-        :meth:`_prune_by_groups`."""
-        return self._prune_by_groups(
-            df, [list(patterns)] if patterns else []
-        )
 
     def _prune_by_groups(self, df: DataFrame, groups) -> DataFrame:
         """Gram-index candidate prune for a DISJUNCTION of conjunctive
@@ -1231,20 +1059,13 @@ class Collection:
             from .operators.filters import where_predicate
 
             # Only the flat IVF tier carries full vectors + metadata into
-            # the probed partitions; PQ/SQ candidates carry codes only, so
-            # reject ANY non-flat index with the descriptive error (not
-            # an AttributeError on a missing search_filtered).  The
-            # message lives in ONE place (router._filtered_tier_error),
-            # dispatched on the actual tier so an HNSW object gets the
-            # graph-walk diagnosis, not the quantized one.
+            # the probed partitions; reject ANY other index with the
+            # router's descriptive error for its tier (not an
+            # AttributeError on a missing search_filtered).
             if not isinstance(index, IVFIndex):
-                from .operators.router import _filtered_tier_error, tier_of
+                from .operators.router import _filtered_index_error
 
-                try:
-                    tier = tier_of(index)
-                except TypeError:
-                    tier = "quantized"
-                raise ValueError(_filtered_tier_error(tier))
+                raise ValueError(_filtered_index_error(index))
             return index.search_filtered(
                 list(query_embedding), int(n_results), nprobe=nprobe,
                 where=where_predicate(where),
@@ -1405,38 +1226,27 @@ class Collection:
         column (the query's index as a string). Texts are embedded with
         the bound embedding func.
 
+        ``where``/``where_document``/``extended_filters`` apply to the
+        whole batch with the same semantics as :meth:`query_embedding`
+        (a fresh gram index pre-prunes their ``$contains`` structure).
         ``per_query_filters``: optional list (one entry per query, None
         entries allowed) of ``{"where": {...}, "where_document":
-        {"$contains": ..., "$not_contains": ...}}`` — EACH query gets
-        its own filter, folded into the broadcast-join condition
-        (knn_ops.knn_expr_filtered_dsl), so non-matching pairs are never
-        scored. ``where``/``where_document`` still apply globally.
-        Without per-query filters the block-matrix GEMM kernel runs
-        instead (fastest path).
+        {"$contains": ..., "$not_contains": ...}}`` in the reference's
+        flat shape — EACH query gets its own filter, folded into the
+        broadcast-join condition (knn_ops.knn_expr_filtered_dsl), so
+        non-matching pairs are never scored.  Without per-query filters
+        the block-matrix GEMM kernel runs instead (fastest path).
 
-        ``index`` / ``target_recall`` / ``tuned`` (r8) route the whole
-        batch through ONE tier decision (router.routed_search_batch;
-        same ladder and semantics rules as :meth:`query_embedding` —
-        global filters apply below scoring on full-vector tiers, a
-        fresh gram index pre-prunes a global ``$contains``).
-        Per-query filters route too since r9: the ladder decides with
-        ``filtered=True`` (FLAT or IVF only) — FLAT keeps the
-        broadcast-join DSL kernel, IVF threads each query's predicates
-        into the cluster-pruned probe join
-        (``IVFIndex.search_batch_dsl``); forcing a quantized tier with
-        per-query filters raises.  A served GRAPH index serves the
-        filters itself (r11): global filters as one shared allowed
-        id-set, per-query filters as per-query sets materialized in
-        one corpus scan (``allowed_per_query`` walks) — beyond the
-        shipping budget it falls back to the FLAT kernel, as the
-        quantized served tiers always do.
-
-        ``extended_filters`` (r9, same opt-in as :meth:`query`): the
-        GLOBAL ``where`` compiles through the extended DSL
-        ($and/$or/$not, comparisons, $contains leaves anywhere in the
-        tree) and its ``$contains`` structure gram-prunes the corpus
-        (conjunctive groups through $and, unioned through $or).
-        Per-query filters keep the reference's flat shape either way."""
+        ``index`` / ``target_recall`` / ``tuned`` route the whole batch
+        through ONE tier decision, with the same ladder and served-index
+        rule as :meth:`query_embedding`.  Per-query filters route with
+        ``filtered=True`` (FLAT or IVF): FLAT keeps the DSL kernel, IVF
+        threads each query's predicates into the cluster-pruned probe
+        join (``IVFIndex.search_batch_dsl``), and forcing a quantized
+        tier raises.  A served non-IVF index with per-query filters
+        takes the FLAT DSL kernel; callers that already hold per-query
+        allowed id sets can walk a graph directly with
+        ``HNSWIndex.search_batch(allowed_per_query=...)``."""
         if query_embeddings is None:
             if not query_texts:
                 raise ValueError(E.ERR_QUERY_TEXT_EMPTY)
@@ -1448,143 +1258,49 @@ class Collection:
         if n_results <= 0:
             raise ValueError(E.ERR_NRESULTS_POSITIVE)
         validate_where_document(where_document)
-        if index is not None and per_query_filters is not None:
-            # r9: filtered batches route too — the IVF tier carries each
-            # query's predicates in its probe join (search_batch_dsl),
-            # so per-query-filtered batches keep cluster pruning at
-            # scale.  Quantized tiers still cannot (codes only).
-            return self._query_batch_routed_dsl(
-                query_embeddings, n_results, per_query_filters,
-                where, where_document, index, target_recall, tuned,
-                extended_filters,
+        qids = [str(i) for i in range(len(query_embeddings))]
+        qvecs = [[float(x) for x in q] for q in query_embeddings]
+        parsed = None
+        if per_query_filters is not None:
+            parsed = self._parse_per_query_filters(
+                per_query_filters, len(query_embeddings)
             )
-        served_allowed = None
-        if (
-            index is not None
-            and not isinstance(index, str)
-            and (where or where_document)
-        ):
-            from .operators import router as R
+        pred, groups, index, allowed = self._front_end(
+            where, where_document, extended_filters, index,
+            per_query=parsed is not None,
+        )
+        if parsed is not None:
+            # ONE prune covers the global groups AND the per-query
+            # $contains lists (capped cross-product: both constraint
+            # sets are required, so their AND-fold is sound and tighter)
+            from .operators.filters import and_fold_groups
 
-            if R.tier_of(index) != "ivf":
-                # same rule as query_embedding: a served graph index
-                # serves the global filter as one allowed id-set
-                # shared by the batch (r11); every other non-IVF
-                # served index falls back to the exact kernel path —
-                # semantics beat routing
-                if R.tier_of(index) == "hnsw":
-                    served_allowed = self._materialize_filter_ids(
-                        where, where_document, extended_filters
-                    )
-                if served_allowed is None:
-                    index = None
+            per_q = [list(c) for (_w, c, _nc) in parsed]
+            groups = and_fold_groups(
+                groups, per_q if (per_q and all(per_q)) else []
+            )
+            if index is not None:
+                return self._query_batch_routed_dsl(
+                    qids, qvecs, n_results, parsed, pred, groups, index,
+                    target_recall, tuned,
+                )
+            return self._query_batch_flat_dsl(
+                qids, qvecs, n_results, parsed,
+                self._scan_frame(pred, groups),
+            )
         if index is not None:
             from .operators import router as R
 
-            qids = [str(i) for i in range(len(query_embeddings))]
-            qvecs = [[float(x) for x in q] for q in query_embeddings]
-            pre = (
-                self._combined_predicate_ex(
-                    where, where_document, extended_filters
-                )
-                if (where or where_document)
-                else None
-            )
-            groups = self._global_contains_groups(
-                where, where_document, extended_filters
-            )
-            decision = None
-            served = None
-            n_docs = None
-            if isinstance(index, str):
-                # served objects search their own stored corpus: the
-                # count and the gram-prune jobs are only paid when a
-                # tier is being chosen/built over the collection table
-                base = self._prune_by_groups(self.df, groups)
-                # when the gram prune engaged, size the tier decision
-                # on the pruned frame, not the full corpus (same rule
-                # as query_embedding)
-                n_docs = (
-                    base.count() if base is not self.df else self.count()
-                )
-                if index == "auto":
-                    decision = R.choose_tier(
-                        n_docs, len(qvecs[0]), k=int(n_results),
-                        target_recall=target_recall,
-                        filtered=pre is not None, tuned=tuned,
-                    )
-                else:
-                    decision = R.forced_decision(
-                        index, n_docs, k=int(n_results),
-                        target_recall=target_recall, tuned=tuned,
-                    )
-            else:
-                base = self.df
-                served = index
+            base, n_docs = self._routed_frame(index, groups)
             return R.routed_search_batch(
                 base, qids, qvecs, int(n_results), vec_col="embedding",
-                id_col="id", index=served, target_recall=target_recall,
-                # the graph tier's filter rode into `served_allowed`
-                # (the Column form would raise there — router doc)
-                where=None if served_allowed is not None else pre,
-                decision=decision, n_docs=n_docs,
-                allowed=served_allowed,
+                id_col="id", index=index, target_recall=target_recall,
+                where=None if allowed is not None else pred, tuned=tuned,
+                n_docs=n_docs, allowed=allowed,
             )
-        pred = self._combined_predicate_ex(
-            where, where_document, extended_filters
+        return knn_ops.knn_block(
+            self._scan_frame(pred, groups), qids, qvecs, int(n_results)
         )
-        gg = self._global_contains_groups(
-            where, where_document, extended_filters
-        )
-        if per_query_filters is None:
-            return knn_ops.knn_block(
-                self._prune_by_groups(self.df, gg).filter(pred),
-                [str(i) for i in range(len(query_embeddings))],
-                [[float(x) for x in q] for q in query_embeddings],
-                int(n_results),
-            )
-        parsed = self._parse_per_query_filters(
-            per_query_filters, len(query_embeddings)
-        )
-        # ONE prune for both constraint sets (global x per-query
-        # groups, capped cross-product) — same fold the routed path
-        # uses; two sequential prunes would pay the posting scan twice
-        from .operators.filters import and_fold_groups
-
-        per_q = [list(c) for (_w, c, _nc) in parsed]
-        total = and_fold_groups(
-            gg, per_q if (per_q and all(per_q)) else []
-        )
-        return self._query_batch_flat_dsl(
-            [str(i) for i in range(len(query_embeddings))],
-            [[float(x) for x in q] for q in query_embeddings],
-            n_results, parsed,
-            self._prune_by_groups(self.df, total).filter(pred),
-        )
-
-    @staticmethod
-    def _global_contains_groups(
-        where, where_document, extended_filters: bool
-    ) -> list:
-        """The gram-prunable ``$contains`` group structure of the
-        GLOBAL batch filters: the extended tree's DNF groups (r9)
-        AND-folded with the flat ``where_document`` pattern — one
-        composition shared by every query_batch path."""
-        from .operators.filters import (
-            and_fold_patterns,
-            contains_pattern_groups,
-        )
-
-        groups = (
-            contains_pattern_groups(where)
-            if (extended_filters and where)
-            else []
-        )
-        if where_document and where_document.get("$contains"):
-            groups = and_fold_patterns(
-                groups, [where_document["$contains"]]
-            )
-        return groups
 
     @staticmethod
     def _parse_per_query_filters(per_query_filters, n_queries: int):
@@ -1638,127 +1354,34 @@ class Collection:
         )
 
     def _query_batch_routed_dsl(
-        self, query_embeddings, n_results, per_query_filters,
-        where, where_document, index, target_recall, tuned,
-        extended_filters: bool = False,
+        self, qids, qvecs, n_results, parsed, pred, groups, index,
+        target_recall, tuned,
     ) -> DataFrame:
-        """Per-query-filtered batch through the router ladder (r9).
-
-        One tier decision for the whole batch, ``filtered=True`` (the
-        quantized tiers carry codes only, so the ladder lands on FLAT
-        or IVF): FLAT dispatches the broadcast-join DSL kernel; IVF
-        threads each query's predicates into the probe join
-        (:meth:`..operators.ann.IVFIndex.search_batch_dsl`), keeping
-        cluster pruning under per-query filters.  Forcing a quantized
-        tier with filters is a contradiction and raises the golden
-        error; a served GRAPH index serves the filters as per-query
-        allowed id-sets (r11, one materializing scan — budget-capped
-        with the FLAT kernel as the fallback), and any other served
-        non-IVF index falls back to the FLAT kernel — semantics beat
-        routing.  Global ``where``/``where_document`` apply to the
-        corpus side on every path."""
+        """A per-query-filtered batch through the router: a served IVF
+        threads each query's predicates into its probe join
+        (:meth:`..operators.ann.IVFIndex.search_batch_dsl`); a tier name
+        is decided by ``router.decide`` with ``filtered=True``, sized on
+        the filtered frame — FLAT dispatches the broadcast-join DSL
+        kernel, IVF builds over the filtered frame and probes it.  The
+        global predicate applies to the corpus side on every path."""
         from .operators import router as R
         from .operators.ann import IVFIndex
 
-        parsed = self._parse_per_query_filters(
-            per_query_filters, len(query_embeddings)
-        )
-        qids = [str(i) for i in range(len(query_embeddings))]
-        qvecs = [[float(x) for x in q] for q in query_embeddings]
-        pre = self._combined_predicate_ex(
-            where, where_document, extended_filters
-        )
-        constrained = bool(where or where_document)
-        base = self.df.filter(pre) if constrained else self.df
-
-        def prune():
-            # ONE prune covers the global tree's groups AND the
-            # per-query contains lists (cross-product, capped — both
-            # constraint sets are required, so their AND-fold is sound
-            # and tighter).  Deferred (r10, ADVICE): apply_candidate_
-            # prune runs an eager limit+collect job over the posting
-            # table, and the served-IVF branch never uses the pruned
-            # frame — compute it only on the paths that do.
-            from .operators.filters import and_fold_groups
-
-            per_q = [list(c) for (_w, c, _nc) in parsed]
-            total_groups = and_fold_groups(
-                self._global_contains_groups(
-                    where, where_document, extended_filters
-                ),
-                per_q if (per_q and all(per_q)) else [],
-            )
-            return self._prune_by_groups(base, total_groups)
-
+        k = int(n_results)
         if not isinstance(index, str):
-            if R.tier_of(index) != "ivf":
-                use_graph_filters = R.tier_of(index) == "hnsw" and (
-                    self.HNSW_BATCH_FILTER_PREFER_GRAPH
-                    or index.n_points()
-                    >= int(self.HNSW_BATCH_FILTER_MIN_POINTS)
-                )
-                if use_graph_filters:
-                    # r11: per-query filters serve FROM the graph —
-                    # one corpus scan materializes every query's
-                    # (global AND per-query) match set, the walks gate
-                    # result eligibility per query (hnsw.py
-                    # allowed_per_query).  Over the shipping budget →
-                    # the exact kernel below, as before.  r13: this
-                    # path is OPT-IN below HNSW_BATCH_FILTER_MIN_POINTS
-                    # — the measured default is the FLAT kernel (see
-                    # the constants' docstrings; SCALE.md corpus-size
-                    # sweep), because the materializing mask scan is
-                    # itself corpus-bounded and lost at every measured
-                    # size.  Callers holding precomputed allowed sets
-                    # keep the ef-bounded graph path via
-                    # search_batch(allowed_per_query=...).
-                    apq = self._materialize_per_query_ids(
-                        parsed, pre if constrained else None
-                    )
-                    if apq is not None:
-                        served = R._served_decision(
-                            index, int(n_results), target_recall
-                        )
-                        return index.search_batch(
-                            self.spark, qids, qvecs, int(n_results),
-                            ef=served["ef"], allowed_per_query=apq,
-                        )
-                # served index that can't express the filter: exact path
-                return self._query_batch_flat_dsl(
-                    qids, qvecs, n_results, parsed, prune()
-                )
-            served = R._served_decision(index, int(n_results), target_recall)
+            served = R._served_decision(index, k, target_recall)
             return index.search_batch_dsl(
-                qids, qvecs, int(n_results), parsed, nprobe=served["nprobe"],
-                where=pre if (where or where_document) else None,
-                metadata_col="metadata", text_col="content",
+                qids, qvecs, k, parsed, nprobe=served["nprobe"],
+                where=pred, metadata_col="metadata", text_col="content",
             )
-        filtered = prune()
-        pruned = filtered is not base
-        # size the decision on the frame actually searched: the global
-        # predicate and the per-query gram prune can shrink it orders
-        # of magnitude below the corpus (same eff_n rule as
-        # query_embedding — nlist must never be sized off the full
-        # count).  The count job is only paid when something actually
-        # constrained the frame.
-        eff_n = (
-            filtered.count() if (constrained or pruned) else self.count()
+        filtered = self._scan_frame(pred, groups)
+        n_docs = filtered.count()
+        decision = R.decide(
+            index, n_docs, len(qvecs[0]), k=k,
+            target_recall=target_recall, filtered=True, tuned=tuned,
         )
-        if index == "auto":
-            decision = R.choose_tier(
-                eff_n, len(qvecs[0]), k=int(n_results),
-                target_recall=target_recall, filtered=True, tuned=tuned,
-            )
-        else:
-            decision = R.forced_decision(
-                index, eff_n, k=int(n_results),
-                target_recall=target_recall, tuned=tuned,
-            )
-        if decision["tier"] in ("ivf_sq", "ivf_pq"):
-            raise ValueError(R._filtered_tier_error(decision["tier"]))
-        if decision["tier"] == "flat" or eff_n == 0:
-            # an empty constrained corpus answers empty on every tier —
-            # same guard as the router's on-the-fly build path
+        if decision["tier"] == "flat" or n_docs == 0:
+            # an empty constrained corpus answers empty on every tier
             return self._query_batch_flat_dsl(
                 qids, qvecs, n_results, parsed, filtered
             )
@@ -1767,8 +1390,7 @@ class Collection:
             vec_col="embedding", id_col="id",
         )
         return idx.search_batch_dsl(
-            qids, qvecs, int(n_results), parsed,
-            nprobe=decision["nprobe"],
+            qids, qvecs, k, parsed, nprobe=decision["nprobe"],
             metadata_col="metadata", text_col="content",
         )
 

@@ -5,8 +5,9 @@ The repo grew several search entry points (brute-force FLAT
 tiers' shared ``search_batch`` behind ``IVFSQIndex`` and
 ``IVFPQIndex``, served HNSW) and callers had to choose manually.
 :func:`choose_tier` encodes the choice as an inspectable decision,
+:func:`decide` turns ``"auto"`` or a tier name into one, and
 :func:`routed_search` dispatches it; the
-``Collection.query_embedding(index="auto")`` surface wraps both.
+``Collection.query_embedding(index="auto")`` surface wraps all three.
 
 Tier ladder and DOCUMENTED thresholds (all overridable per call):
 
@@ -180,6 +181,38 @@ def forced_decision(
     )
 
 
+def decide(
+    index,
+    n_docs: int,
+    dim: int,
+    k: int = 10,
+    target_recall: float = 0.95,
+    filtered: bool = False,
+    tuned: dict | None = None,
+    **thresholds,
+) -> dict:
+    """The ONE tier decision for ``index`` ``None``/``"auto"`` (the
+    :func:`choose_tier` ladder) or a tier name (:func:`forced_decision`).
+    A ``filtered`` query must land on a full-vector tier: forcing a
+    quantized one raises."""
+    if index is None or index == "auto":
+        decision = choose_tier(
+            n_docs, dim, k=k, target_recall=target_recall,
+            filtered=filtered, tuned=tuned, **thresholds,
+        )
+    else:
+        decision = forced_decision(
+            index, n_docs, k=k, target_recall=target_recall, tuned=tuned
+        )
+    _check_filtered_tier(decision, filtered)
+    return decision
+
+
+def _check_filtered_tier(decision: dict, filtered: bool) -> None:
+    if filtered and decision["tier"] in ("ivf_sq", "ivf_pq"):
+        raise ValueError(_filtered_tier_error(decision["tier"]))
+
+
 def _filtered_tier_error(tier: str) -> str:
     if tier == "hnsw":
         return (
@@ -193,6 +226,16 @@ def _filtered_tier_error(tier: str) -> str:
         "filtered ANN search requires the IVF (flat) index; "
         "quantized (PQ/SQ) candidates carry codes only"
     )
+
+
+def _filtered_index_error(index) -> str:
+    """:func:`_filtered_tier_error` for a served index object; an
+    object of no known tier reads as quantized."""
+    try:
+        tier = tier_of(index)
+    except TypeError:
+        tier = "quantized"
+    return _filtered_tier_error(tier)
 
 
 def tier_of(index) -> str:
@@ -271,34 +314,30 @@ def _route(
 ):
     """The front half :func:`routed_search` and
     :func:`routed_search_batch` share: check the filter forms against
-    the tier, then take the served index's decision — or decide (unless
-    the caller passed ``decision``) and build that tier on the fly.
+    the tier, then take a served index's decision — or decide ``index``
+    ``None``/``"auto"``/a tier name with :func:`decide` (unless the
+    caller passed ``decision``) and build that tier on the fly.
     Returns ``(index, decision)``; ``index`` is None for flat."""
-    if allowed is not None and (
-        # isinstance first (r12, ADVICE): a string tier name must hit
-        # THIS ValueError, not tier_of's "not a served ANN index"
-        index is None
-        or isinstance(index, str)
-        or tier_of(index) != "hnsw"
-    ):
+    served = index is not None and not isinstance(index, str)
+    tier = tier_of(index) if served else None
+    if allowed is not None and tier != "hnsw":
         raise ValueError(
             "allowed id-set filtering is the served graph tier's "
             "filter form; pass a Column `where` for every other tier"
         )
-    if index is not None:
-        tier = tier_of(index)
+    if served:
         if where is not None and tier != "ivf":
             raise ValueError(_filtered_tier_error(tier))
         return index, _served_decision(index, k, target_recall)
     if decision is None:
         if n_docs is None:
             n_docs = df.count()
-        decision = choose_tier(
-            n_docs, dim, k=k, target_recall=target_recall,
+        decision = decide(
+            index, n_docs, dim, k=k, target_recall=target_recall,
             filtered=where is not None, tuned=tuned, **thresholds,
         )
-    if where is not None and decision["tier"] in ("ivf_sq", "ivf_pq"):
-        raise ValueError(_filtered_tier_error(decision["tier"]))
+    else:
+        _check_filtered_tier(decision, where is not None)
     return _build_tier_or_flat(decision, df, vec_col, id_col, seed)
 
 
@@ -318,12 +357,14 @@ def routed_search(
     allowed: set | None = None,
     **thresholds,
 ) -> DataFrame:
-    """Route one vector query through :func:`choose_tier` and run it.
+    """Route one vector query through :func:`decide` and run it.
 
     A served ``index`` object wins (availability beats heuristics: the
     build cost is already sunk) — its tier is used with the
-    recall-mapped nprobe for its actual ``n_clusters``.  Otherwise the
-    decision tier's index is built on the fly (experimentation shape;
+    recall-mapped nprobe for its actual ``n_clusters``.  Otherwise
+    ``index`` is ``None``/``"auto"`` (the ladder) or a tier name
+    (forced), and the decided tier's index is built on the fly
+    (experimentation shape;
     at scale indexes are served, not per-query).  ``where`` is a
     pre-filter Column — it forces a full-vector tier.  ``allowed``
     (r11) is the GRAPH tier's filter form: the where-predicate's

@@ -2122,58 +2122,11 @@ def test_collection_batch_global_filter_served_graph(spark):
     assert all(int(i) % 3 == 0 for _, i, _ in got)
 
 
-def test_collection_batch_per_query_filters_served_graph(spark, monkeypatch):
-    """Per-query filters on a served graph materialize per-query id
-    sets in ONE scan and serve from the walks — values equal the flat
-    DSL kernel's, and the graph path actually ran (call-counted).
-    r13: the graph path is OPT-IN below HNSW_BATCH_FILTER_MIN_POINTS
-    (the measured default is FLAT — SCALE.md corpus-size sweep), so
-    this test opts in explicitly."""
-    from chromem_go_spark.collection import Collection
-    from chromem_go_spark.operators.hnsw import HNSWIndex
-
-    monkeypatch.setattr(
-        Collection, "HNSW_BATCH_FILTER_PREFER_GRAPH", True
-    )
-    c = _filter_collection(spark, "hnsw_batch_pqf")
-    served = c.build_hnsw_index(M=4, ef_construction=32)
-    pqf = [
-        {"where": {"lang": "en"}},
-        {"where_document": {"$contains": "quick"}},
-        None,  # unfiltered query
-    ]
-    qvs = [c.embedding_func(t) for t in ("quick", "lazy", "fox")]
-    want = {
-        (r["query_id"], r["id"], round(r["similarity"], 6))
-        for r in c.query_batch(
-            query_embeddings=qvs, n_results=3, per_query_filters=pqf
-        ).collect()
-    }
-    calls = {"n": 0}
-    orig = HNSWIndex.search_batch
-
-    def counted(self, *a, **k):
-        calls["n"] += 1
-        return orig(self, *a, **k)
-
-    monkeypatch.setattr(HNSWIndex, "search_batch", counted)
-    got = {
-        (r["query_id"], r["id"], round(r["similarity"], 6))
-        for r in c.query_batch(
-            query_embeddings=qvs, n_results=3, per_query_filters=pqf,
-            index=served, target_recall=1.0,
-        ).collect()
-    }
-    assert got == want
-    assert calls["n"] == 1  # the graph path served, not the kernel
-
-
 def test_collection_batch_per_query_filters_default_flat(
     spark, monkeypatch
 ):
-    """r13 routing default: below HNSW_BATCH_FILTER_MIN_POINTS a
-    per-query-filtered batch on a served graph routes to the FLAT DSL
-    kernel (the measured winner at every swept corpus size) — the
+    """A per-query-filtered batch on a served graph routes to the FLAT
+    DSL kernel (the measured winner at every swept corpus size) — the
     graph's search_batch is never called, values identical."""
     from chromem_go_spark.operators.hnsw import HNSWIndex
 
@@ -2204,36 +2157,6 @@ def test_collection_batch_per_query_filters_default_flat(
     }
     assert got == want
     assert calls["n"] == 0  # FLAT served; the walk path stayed cold
-
-
-def test_collection_batch_per_query_budget_falls_back(spark, monkeypatch):
-    """Beyond the shipping budget the per-query-filtered batch falls
-    back to the exact FLAT DSL kernel with identical values (graph
-    path opted in, r13)."""
-    from chromem_go_spark.collection import Collection
-
-    monkeypatch.setattr(
-        Collection, "HNSW_BATCH_FILTER_PREFER_GRAPH", True
-    )
-    c = _filter_collection(spark, "hnsw_batch_pqf_cap")
-    served = c.build_hnsw_index(M=4, ef_construction=32)
-    monkeypatch.setattr(Collection, "HNSW_FILTER_MAX_IDS", 2)
-    pqf = [{"where": {"lang": "en"}}, {"where": {"lang": "de"}}]
-    qvs = [c.embedding_func(t) for t in ("quick", "lazy")]
-    want = {
-        (r["query_id"], r["id"], round(r["similarity"], 6))
-        for r in c.query_batch(
-            query_embeddings=qvs, n_results=3, per_query_filters=pqf
-        ).collect()
-    }
-    got = {
-        (r["query_id"], r["id"], round(r["similarity"], 6))
-        for r in c.query_batch(
-            query_embeddings=qvs, n_results=3, per_query_filters=pqf,
-            index=served, target_recall=1.0,
-        ).collect()
-    }
-    assert got == want
 
 
 def test_single_sink_cdc_ops(spark, emb, tmp_path):
@@ -2421,18 +2344,6 @@ def test_direct_over_live_when_heavily_tombstoned(emb, monkeypatch):
     assert walk == {i for i, _ in g.search(qv, 10, ef=2)}
 
 
-def test_per_query_mask_scan_width_cap(spark):
-    """A very wide per-query-filtered batch must NOT build one
-    Catalyst boolean per query (codegen hazard) — the materializer
-    declines past 256 queries and the flat DSL kernel serves."""
-    c = _filter_collection(spark, "hnsw_pqf_width")
-    q = 300
-    out = c._materialize_per_query_ids(
-        [({"lang": "en"}, [], [])] * q, None
-    )
-    assert out is None
-
-
 # ------------------------------------------- review fixes (r11)
 
 
@@ -2599,38 +2510,6 @@ def test_drained_shard_leaves_walk_list(spark, emb, tmp_path):
     ]
     got.sort(key=lambda t: (-t[1], t[0]))
     assert got == _flat(emb.filter(~F.col("vec_id").isin(members)), qv)
-
-
-def test_mask_scan_budget_with_unfiltered_query(spark, monkeypatch):
-    """An unconstrained query mixed into a filtered batch must not
-    blow the shipping budget silently — the materializer declines and
-    the flat kernel serves (review: lit(True) used to pass every
-    corpus row into the collect before any budget check).  Graph path
-    opted in (r13 — the default routes FLAT before materializing)."""
-    from chromem_go_spark.collection import Collection
-
-    monkeypatch.setattr(
-        Collection, "HNSW_BATCH_FILTER_PREFER_GRAPH", True
-    )
-    c = _filter_collection(spark, "hnsw_pqf_mixed")
-    served = c.build_hnsw_index(M=4, ef_construction=32)
-    monkeypatch.setattr(Collection, "HNSW_FILTER_MAX_IDS", 4)
-    pqf = [{"where": {"lang": "en"}}, None]
-    qvs = [c.embedding_func("quick"), c.embedding_func("lazy")]
-    want = {
-        (r["query_id"], r["id"], round(r["similarity"], 6))
-        for r in c.query_batch(
-            query_embeddings=qvs, n_results=3, per_query_filters=pqf
-        ).collect()
-    }
-    got = {
-        (r["query_id"], r["id"], round(r["similarity"], 6))
-        for r in c.query_batch(
-            query_embeddings=qvs, n_results=3, per_query_filters=pqf,
-            index=served, target_recall=1.0,
-        ).collect()
-    }
-    assert got == want
 
 
 # -------------------------------------- CDC op order / seq_col (r12)

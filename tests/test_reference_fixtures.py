@@ -99,3 +99,33 @@ def test_negative_text_query_api(collection):
         negative_mode="filter",
     ).collect()
     assert [r["id"] for r in res] == ["1"]
+
+
+def test_negative_without_mode_defaults_to_subtract(collection, vectors):
+    """A negative given without a mode searches in subtract mode, the
+    reference's default — never silently as the plain query."""
+    town, idle = vectors["search_query: town"], vectors["search_query: idle"]
+
+    def rows(**kw):
+        return [
+            (r["id"], round(r["similarity"], 6))
+            for r in collection.query_embedding(town, 3, **kw).collect()
+        ]
+
+    default = rows(negative_embedding=idle)
+    assert default == rows(negative_embedding=idle, negative_mode="subtract")
+    assert default != rows()
+    res = collection.query(
+        "search_query: town", 3, negative_text="search_query: idle"
+    ).collect()
+    assert [(r["id"], round(r["similarity"], 6)) for r in res] == default
+
+
+def test_unknown_negative_mode_raises(collection, vectors):
+    with pytest.raises(ValueError, match="'subtract' or 'filter'"):
+        collection.query_embedding(
+            vectors["search_query: town"],
+            3,
+            negative_embedding=vectors["search_query: idle"],
+            negative_mode="Subtract",
+        )

@@ -757,3 +757,67 @@ def test_allowed_with_string_tier_raises_allowed_error(emb, qvec, qbatch):
         R.routed_search_batch(
             emb, ["0"], [qvec], 3, index="flat", allowed={1, 2}
         )
+
+
+# ------------------------------------ one semantics across the entries
+
+
+_SHAPES = {
+    "none": {},
+    "where": {"where": {"topic": "3"}},
+    "contains": {"where_document": {"$contains": "topic 2"}},
+    "not_contains": {"where_document": {"$not_contains": "topic 2"}},
+    "extended_or": {
+        "where": {
+            "$or": [
+                {"content": {"$contains": "topic 1"}},
+                {"content": {"$contains": "number 3"}},
+            ]
+        },
+        "extended_filters": True,
+    },
+}
+
+
+@pytest.fixture(scope="module")
+def served_ivf(coll):
+    return coll.build_ann_index(n_clusters=4, persist=False)
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_entry_points_share_one_semantics(coll, served_ivf, shape):
+    """Every query entry answers a filter shape the same way: the exact
+    query_embedding, a one-query query_batch, a forced-IVF
+    query_embedding and a served-IVF query_batch (both exact at
+    target_recall 1.0) return the same (id, similarity) set, with a
+    fresh gram index pruning the $contains shapes.  A negative
+    (subtract) query agrees across the two query_embedding entries —
+    query_batch takes no negative."""
+    coll.build_text_index()
+    kw = _SHAPES[shape]
+    qv = coll.embedding_func("topic 3")
+
+    def single(**extra):
+        return {
+            (r["id"], round(r["similarity"], 6))
+            for r in coll.query_embedding(qv, 3, **kw, **extra).collect()
+        }
+
+    def batch(**extra):
+        return {
+            (r["id"], round(r["similarity"], 6))
+            for r in coll.query_batch(
+                query_embeddings=[qv], n_results=3, **kw, **extra
+            ).collect()
+        }
+
+    want = single()
+    assert len(want) == 3
+    assert batch() == want
+    assert single(index="ivf", target_recall=1.0) == want
+    assert batch(index=served_ivf, target_recall=1.0) == want
+    neg = {
+        "negative_embedding": coll.embedding_func("topic 1"),
+        "negative_mode": "subtract",
+    }
+    assert single(index="ivf", target_recall=1.0, **neg) == single(**neg)
