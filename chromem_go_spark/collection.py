@@ -143,9 +143,12 @@ class Collection:
 
         Parquet-overwrite stands in for a Delta MERGE commit; compression
         maps the reference's gzip option (persistence.go:44-56) to a
-        Parquet codec.
+        Parquet codec.  An in-memory collection pins the merged snapshot
+        instead: left as a plan, every later query, ``count()`` and
+        index build would re-run the whole upsert history (each add's
+        union + ``row_number`` window).
         """
-        self._df = df
+        self._df = df if self.persist_dir else materialize(df)
         if self.persist_dir:
             codec = "gzip" if self.compress else "snappy"
             path = self._data_path()

@@ -85,9 +85,9 @@ def shingle_table(
     (id, shingle) pairs are globally distinct iff each doc's shingle
     set is, so the old global distinct paid a full shuffle of the
     exploded string stream for a row-local fact (same fix as
-    :func:`hashed_shingle_table`; plan: 1 Exchange -> 0).  The array
+    :func:`_hashed_shingle_arrays`; plan: 1 Exchange -> 0).  The array
     expression stays INLINED in ``explode`` (see
-    :func:`hashed_shingle_table` on InferFiltersFromGenerate).
+    :func:`_hashed_shingle_arrays` on InferFiltersFromGenerate).
 
     Assumes ``id_col`` values are unique per row (as every dedup
     operator here does): with duplicate-id input rows the old global
@@ -365,38 +365,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def hashed_shingle_table(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 5
-) -> DataFrame:
-    """(id, h) with h = xxhash64(shingle): the shared input of signature
-    building and exact verification. The hash is applied BEFORE the
-    per-doc distinct, so the dedup shuffle carries (id, 8-byte long)
-    rows instead of (id, k-char string) — measured 3.6x faster at sf0.1;
-    at 100 TB the difference is the shuffle volume of the whole corpus's
-    shingle stream. Repartitions before the ~1000x explode so
-    parallelism is set ahead of the blow-up.
-
-    r14: the per-doc dedup is ``array_distinct`` on the in-row hash
-    array, NOT ``.distinct()`` on the exploded stream — a doc's shingle
-    set is a row-local fact, and the old global distinct paid a full
-    shuffle of the exploded (id, h) stream for it (measured at sf0.1:
-    2.53 s -> 0.72 s, identical row set; at 100 TB that shuffle is the
-    corpus's entire shingle stream).
-
-    The hash-array expression is INLINED into ``explode`` here rather
-    than routed through a named column: exploding a named
-    unmaterialized column trips InferFiltersFromGenerate, which clones
-    the whole build expression into an inferred ``size(...) > 0``
-    filter below the repartition — where the normalize regexp ends up
-    INSIDE the per-element lambda (measured: 28.3 s vs 0.70 s at
-    sf0.1).  :func:`_hashed_shingle_arrays` is only ever exploded
-    AFTER a materialize() cut, which blocks that rule."""
-    normed = _normed_text(df, text_col, id_col)
-    return normed.select(
-        id_col, F.explode(_char_shingle_hash_expr(k)).alias("h")
-    )
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to the default parallelism ONLY when the
     input carries fewer partitions (guide §2.1 scale-adaptive sizing):
@@ -443,9 +411,17 @@ def _hashed_shingle_arrays(
     df: DataFrame, text_col: str, id_col: str, k: int
 ) -> DataFrame:
     """(id, hs): each doc's DISTINCT char-k-gram xxhash64 set as one
-    array column — zero shuffles.  ALWAYS materialize() this before
-    exploding ``hs`` (see :func:`hashed_shingle_table` on
-    InferFiltersFromGenerate)."""
+    array column — zero shuffles, the shared input of signature
+    building and exact verification.  Hashing before the per-doc
+    ``array_distinct`` keeps 8-byte longs, not k-char strings, in
+    every later shuffle.
+
+    ALWAYS materialize() this before exploding ``hs``: exploding a
+    named unmaterialized column trips InferFiltersFromGenerate, which
+    clones the whole build expression into an inferred
+    ``size(...) > 0`` filter below the repartition — where the
+    normalize regexp ends up INSIDE the per-element lambda (measured:
+    28.3 s vs 0.70 s at sf0.1)."""
     return _normed_text(df, text_col, id_col).select(
         id_col, _char_shingle_hash_expr(k).alias("hs")
     )
@@ -457,10 +433,10 @@ def hashed_word_shingle_table(
     """(id, h) with h = xxhash64 of each n-token word shingle — the
     word-level dedup unit (production LLM corpus dedup typically uses
     13-gram word shingles; char k-grams catch finer-grained edits).
-    Same hash-before-explode shape as the char variant; r14: per-doc
-    dedup is row-local ``array_distinct``, not a shuffled
+    Hashed before the per-doc dedup, as :func:`_hashed_shingle_arrays`;
+    r14: per-doc dedup is row-local ``array_distinct``, not a shuffled
     ``.distinct()``, and the expression is inlined into ``explode``
-    (see :func:`hashed_shingle_table` on InferFiltersFromGenerate)."""
+    (see :func:`_hashed_shingle_arrays` on InferFiltersFromGenerate)."""
     return _word_tokens_frame(df, text_col, id_col).select(
         id_col, F.explode(_word_shingle_hash_expr(n)).alias("h")
     )
@@ -499,6 +475,12 @@ def _hashed_word_shingle_arrays(
     )
 
 
+def _quoted(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (for generated SQL
+    text over caller-chosen column names)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -511,21 +493,17 @@ def minhash_signatures(
     """MinHash signature per doc: columns ``mh_0 .. mh_{num_hashes-1}``.
 
     Base shingle hash is JVM xxhash64; the hash family is the classic
-    (a*x + b) mod p permutation over it.
+    (a*x + b) mod p permutation over it.  Each signature lane is
+    ``array_min(transform(hs, ...))`` over the doc's (id, hs
+    array<long>) hash array — row-local: no explode, no exchange.
+    ``hash_arrays`` is that per-doc table when the caller already
+    holds it materialized (:func:`_hashed_shingle_arrays`); without
+    it, the arrays are built from ``df`` and materialized here.  Docs
+    with no shingle (text shorter than ``k`` or null) get no row.
 
-    ``hash_arrays`` (r14): an (id, hs array<long>) per-doc table
-    (:func:`_hashed_shingle_arrays`, materialized) — each signature
-    lane is ``array_min(transform(hs, ...))``, entirely ROW-LOCAL: no
-    explode, no exchange.  The ``size(hs) > 0`` filter matches the
-    exploded path, which never produced a row for a shingle-less doc.
-    Values are bit-identical (same (a*x + b) mod p per element, min
-    over the same set).  Measured ~neutral on wall at sf0.1 (1.39 s vs
-    1.44 s — the groupBy's partial agg already collapsed map-side);
-    kept because it deletes the signature exchange outright and reads
-    the same checkpointed arrays the verify side uses.
-
-    Without ``hash_arrays``: ``num_hashes`` min-aggregates in one
-    groupBy (map-side combined) over the exploded (id, h) shingle table.
+    The lanes are one generated SQL projection parsed once: as a loop
+    of ``F.*`` calls every expression node costs a JVM round trip, and
+    the wide projection cost more to build on the client than to run.
     """
     import random
 
@@ -533,26 +511,13 @@ def minhash_signatures(
     # 2^31-1 keeps a*x + b < 2^62: no long overflow under ANSI mode.
     p = (1 << 31) - 1  # Mersenne prime
     coeffs = [(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in range(num_hashes)]
-    if hash_arrays is not None:
-
-        def _lane(a: int, b: int):
-            # factory, not default args: pyspark reads multi-arg
-            # lambdas as (element, index)
-            return lambda el: F.pmod(
-                F.lit(a) * F.pmod(el, F.lit(p)) + F.lit(b), F.lit(p)
-            )
-
-        lanes = [
-            F.array_min(F.transform("hs", _lane(a, b))).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(coeffs)
-        ]
-        return hash_arrays.filter(F.size("hs") > 0).select(id_col, *lanes)
-    x = F.pmod(F.col("h"), F.lit(p))
-    aggs = [
-        F.min(F.pmod(F.lit(a) * x + F.lit(b), F.lit(p))).alias(f"mh_{i}")
+    if hash_arrays is None:
+        hash_arrays = materialize(_hashed_shingle_arrays(df, text_col, id_col, k))
+    lanes = [
+        f"array_min(transform(hs, el -> pmod({a} * pmod(el, {p}) + {b}, {p}))) AS mh_{i}"
         for i, (a, b) in enumerate(coeffs)
     ]
-    return hashed_shingle_table(df, text_col, id_col, k).groupBy(id_col).agg(*aggs)
+    return hash_arrays.filter(F.size("hs") > 0).selectExpr(_quoted(id_col), *lanes)
 
 
 def _lsh_buckets(
@@ -564,7 +529,11 @@ def _lsh_buckets(
     docs are LSH candidates iff they share a (band, bucket) row, so the
     candidate join's shuffle key is the band hash and its volume is
     O(docs x bands), never O(docs^2).  Not materialized: callers own the
-    checkpoint (the bucket table usually feeds both sides of a join)."""
+    checkpoint (the bucket table usually feeds both sides of a join).
+
+    The band rows, like the lanes, are generated SQL text parsed once:
+    every caller pays this build per call, and as ``F.*`` calls it was
+    thousands of JVM round trips."""
     if not 1 <= bands <= num_hashes or num_hashes % bands:
         raise ValueError(
             f"bands must divide num_hashes into whole bands: got "
@@ -574,19 +543,15 @@ def _lsh_buckets(
     sig = minhash_signatures(
         arrs, id_col=key, num_hashes=num_hashes, seed=seed, hash_arrays=arrs
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"mh_{bi * rows + r}") for r in range(rows)]
-                ).alias("bucket"),
-            )
-            for bi in range(bands)
-        ]
+    band_structs = ", ".join(
+        f"named_struct('band', {bi}, 'bucket', xxhash64("
+        + ", ".join(f"mh_{bi * rows + r}" for r in range(rows))
+        + "))"
+        for bi in range(bands)
     )
-    return sig.select(key, F.explode(band_structs).alias("bb")).select(
-        key, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
+    q = _quoted(key)
+    return sig.selectExpr(q, f"explode(array({band_structs})) AS bb").selectExpr(
+        q, "bb.band AS band", "bb.bucket AS bucket"
     )
 
 
@@ -882,6 +847,10 @@ def simhash(
     aggregation already collapses to one row per doc before the
     exchange, so the shuffle is tiny and Tungsten's agg loop beats 64
     higher-order array traversals.  Kept the exploded form.)
+
+    The vote sums and their fold are one generated SQL expression
+    parsed once: built as ``F.*`` calls they cost ~11k JVM round trips,
+    more client time than Spark spends running the query.
     """
     if token_hash == "md5_60" and bits > 60:
         raise ValueError("md5_60 token hash provides at most 60 bits")
@@ -889,23 +858,14 @@ def simhash(
     toks = df.select(
         id_col, F.explode(T.word_tokens(text_col)).alias("tok")
     ).withColumn("h", hfn(F.col("tok")))
-    votes = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"v{b}")
-        for b in range(bits)
-    ]
-    agg = toks.groupBy(id_col).agg(*votes)
     # Bitwise-OR fold (not '+'): with bits=64 the b=63 term is
     # Long.MIN_VALUE and addition would overflow under ANSI mode.
-    fp = F.lit(0).cast("long")
-    for b in range(bits):
-        fp = fp.bitwiseOR(
-            F.when(
-                F.col(f"v{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return agg.select(id_col, fp.alias("simhash"))
+    fp = "0L" + "".join(
+        f" | CASE WHEN sum(CASE WHEN shiftright(h, {b}) & 1 = 1 THEN 1 ELSE -1 END)"
+        f" > 0 THEN shiftleft(1L, {b}) ELSE 0L END"
+        for b in range(bits)
+    )
+    return toks.groupBy(id_col).agg(F.expr(fp).alias("simhash"))
 
 
 def simhash_pairs(

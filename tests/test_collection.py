@@ -36,6 +36,36 @@ def test_upsert_overwrites(db):
     assert got.content == "bonjour"
 
 
+def test_in_memory_upserts_materialized_last_writer_wins(db):
+    """An in-memory collection pins its merged snapshot: a query after
+    two overlapping adds runs no upsert dedupe (no ``Window`` in its
+    executed plan) and sees the last writer's row for the shared id."""
+    c = db.create_collection("t", embedding_func=const_embedding)
+    c.add_documents(two_docs())
+    c.add_documents([
+        Document("2", {"language": "fr"}, [0.4, 0.3, 0.2], "salut monde"),
+        Document("3", {"language": "en"}, [1.0, 1.0, 1.0], "hi there"),
+    ])
+    res = c.query_embedding([0.1, 0.2, 0.3], 3)
+    rows = res.collect()
+    assert "Window" not in res._jdf.queryExecution().executedPlan().toString()
+    q = [1.0, 2.0, 3.0]
+
+    def cos(v):
+        dot = sum(a * b for a, b in zip(q, v))
+        return dot / (sum(a * a for a in q) * sum(b * b for b in v)) ** 0.5
+
+    assert [r["id"] for r in rows] == ["1", "3", "2"]
+    assert {r["id"]: (r["metadata"], r["content"]) for r in rows} == {
+        "1": ({"language": "en"}, "hello world"),
+        "2": ({"language": "fr"}, "salut monde"),
+        "3": ({"language": "en"}, "hi there"),
+    }
+    for r, v in zip(rows, [q, [1.0, 1.0, 1.0], [4.0, 3.0, 2.0]]):
+        assert r["similarity"] == pytest.approx(cos(v), abs=1e-6)
+    assert c.count() == 3
+
+
 def test_embedding_computed_and_normalized(db):
     c = db.create_collection("t", embedding_func=const_embedding)
     c.add_document(Document("x", content="anything"))

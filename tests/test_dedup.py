@@ -366,6 +366,45 @@ def test_simhash_pairs_matches_numpy_bruteforce(spark):
         assert got == expect, f"max_hamming={h}"
 
 
+# ----------------------------------------------------- minhash vs NumPy
+
+
+def test_minhash_signatures_match_numpy(spark):
+    """One signature path: lanes built from the text and from
+    caller-held hash arrays are equal, and both equal a NumPy replay of
+    min((a*(x mod p) + b) mod p) over each doc's shingle hashes, with
+    the coefficients drawn from random.Random(seed).  A doc shorter
+    than k or with null text gets no row."""
+    import random
+
+    from chromem_go_spark.materialize import materialize
+
+    df = spark.createDataFrame(TEXTS + [(6, None)], "doc_id long, text string")
+    arrs = materialize(D._hashed_shingle_arrays(df, "text", "doc_id", 5))
+    lanes = [f"mh_{i}" for i in range(64)]
+    sigs = [D.minhash_signatures(df), D.minhash_signatures(df, hash_arrays=arrs)]
+    assert all(s.columns == ["doc_id", *lanes] for s in sigs)
+    plain, held = (
+        {r["doc_id"]: [r[c] for c in lanes] for r in s.collect()} for s in sigs
+    )
+    assert plain == held
+
+    rnd = random.Random(42)
+    p = (1 << 31) - 1
+    a, b = np.array(
+        [(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in lanes], dtype=np.int64
+    ).T
+    expect = {}
+    for r in arrs.collect():
+        if r["hs"]:
+            x = np.mod(np.array(r["hs"], dtype=np.int64), p)
+            expect[r["doc_id"]] = np.min(
+                (a[:, None] * x[None, :] + b[:, None]) % p, axis=1
+            ).tolist()
+    assert set(expect) == {1, 2, 3, 5}
+    assert plain == expect
+
+
 def test_reliable_checkpointing_identical_output(spark, docs, tmp_path):
     """Cluster mode: with reliable checkpoints enabled (fault-tolerant
     df.checkpoint into a shared dir), every lineage-cutting operator

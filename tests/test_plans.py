@@ -339,6 +339,35 @@ def test_ngram_jaccard_asym_prefix_shape(docs):
     assert "collect_list" not in plan
 
 
+def test_signature_projections_build_in_few_jvm_round_trips(spark, docs, monkeypatch):
+    """The wide MinHash-lane / LSH-band and SimHash vote projections are
+    built as SQL text parsed once: as loops of ``F.*`` calls every
+    expression node is one py4j round trip (8,252 for the bucket table,
+    ~11k for simhash) — more client time than Spark spends running
+    them.  Counted while the frames are built; no action runs."""
+    from chromem_go_spark.materialize import materialize
+    from chromem_go_spark.operators import dedup as D
+
+    arrs = materialize(D._hashed_shingle_arrays(docs, "text", "doc_id", 5))
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    def round_trips(build) -> int:
+        calls[0] = 0
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            build()
+        return calls[0]
+
+    assert round_trips(lambda: D._lsh_buckets(arrs, "doc_id", 64, 16, 42)) <= 500
+    assert round_trips(lambda: D.simhash(docs)) <= 500
+
+
 def test_plans_md_covers_window():
     """Drift gate (r13, judge): PLANS.md must carry a section for
     EVERY canonical-window row — tools/plans_report.py derives its
