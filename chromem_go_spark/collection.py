@@ -950,51 +950,64 @@ class Collection:
         staleness contract as the HNSW/text indexes — a later session
         calls :meth:`load_ann_index` and gets the served tier back only
         while the corpus is unmutated (``persist=False`` skips the
-        write for throwaway experiments)."""
-        from .operators.ann import IVFIndex, IVFPQIndex, IVFSQIndex
+        write for throwaway experiments).
 
+        The returned index serves from its own cells, never from the
+        live table: a persistent build returns the stored index (the
+        same read :meth:`load_ann_index` makes, pruned by ``cluster_id``
+        partition at every probe); otherwise the cell tables are pinned
+        with ``materialize``, so the assignment runs once and later
+        writes to the collection cannot change or break the index."""
         if kind is None:
             kind = "ivf_pq" if pq else "ivf"
-        if kind == "ivf_pq":
-            idx = IVFPQIndex.build(
-                self.df, n_clusters=n_clusters, m=m,
-                vec_col="embedding", id_col="id", seed=seed,
-            )
-        elif kind == "ivf_sq":
-            idx = IVFSQIndex.build(
-                self.df, n_clusters=n_clusters,
-                vec_col="embedding", id_col="id", seed=seed,
-            )
-        elif kind == "ivf":
-            idx = IVFIndex.build(
-                self.df, n_clusters=n_clusters,
-                vec_col="embedding", id_col="id", seed=seed,
-            )
-        else:
+        tiers = self._ann_tiers()
+        if kind not in tiers:
             raise ValueError(
                 f"unknown ANN index kind {kind!r}; expected "
                 "'ivf', 'ivf_sq' or 'ivf_pq' (HNSW: build_hnsw_index)"
             )
-        if persist and self.persist_dir:
-            import json
+        opts = {"m": m} if kind == "ivf_pq" else {}
+        idx = tiers[kind].build(
+            self.df, n_clusters=n_clusters,
+            vec_col="embedding", id_col="id", seed=seed, **opts,
+        )
+        if not (persist and self.persist_dir):
+            return idx.pin()
+        import json
 
-            path = self._ann_index_path()
-            meta_file = os.path.join(path, "_index_meta.json")
-            # invalidate BEFORE rewriting the data: the parquet
-            # overwrite is not atomic, and a crash mid-save must leave
-            # a snapshot load_ann_index REFUSES (no meta) rather than
-            # one that pairs new data with the previous build's kind
-            if os.path.exists(meta_file):
-                os.remove(meta_file)
-            idx.save(os.path.join(path, "data"))
-            tmp = meta_file + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {"kind": kind, "signature": self._embedding_signature()},
-                    f,
-                )
-            os.replace(tmp, meta_file)  # commit point
-        return idx
+        path = self._ann_index_path()
+        meta_file = os.path.join(path, "_index_meta.json")
+        # invalidate BEFORE rewriting the data: the parquet
+        # overwrite is not atomic, and a crash mid-save must leave
+        # a snapshot load_ann_index REFUSES (no meta) rather than
+        # one that pairs new data with the previous build's kind
+        if os.path.exists(meta_file):
+            os.remove(meta_file)
+        idx.save(os.path.join(path, "data"))
+        tmp = meta_file + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(
+                {"kind": kind, "signature": self._embedding_signature()},
+                f,
+            )
+        os.replace(tmp, meta_file)  # commit point
+        return self._load_ann(kind)
+
+    @staticmethod
+    def _ann_tiers() -> dict:
+        from .operators.ann import IVFIndex, IVFPQIndex, IVFSQIndex
+
+        return {"ivf": IVFIndex, "ivf_sq": IVFSQIndex, "ivf_pq": IVFPQIndex}
+
+    def _load_ann(self, kind: str):
+        """The stored ANN index of ``kind``: a manifest-aware read of the
+        cells under the collection directory, pruned by ``cluster_id``
+        partition at every probe."""
+        data = os.path.join(self._ann_index_path(), "data")
+        tier = self._ann_tiers()[kind]
+        if kind == "ivf":
+            return tier.load(self.spark, data, vec_col="embedding", id_col="id")
+        return tier.load(self.spark, data)
 
     def load_ann_index(self):
         """Reload the persisted ANN index from a previous session, or
@@ -1007,25 +1020,14 @@ class Collection:
 
         if not self.persist_dir:
             return None
-        path = self._ann_index_path()
-        meta_file = os.path.join(path, "_index_meta.json")
+        meta_file = os.path.join(self._ann_index_path(), "_index_meta.json")
         if not os.path.exists(meta_file):
             return None
         with open(meta_file) as f:
             meta = json.load(f)
         if meta.get("signature") != self._embedding_signature():
             return None
-        from .operators.ann import IVFIndex, IVFPQIndex, IVFSQIndex
-
-        data = os.path.join(path, "data")
-        kind = meta.get("kind", "ivf")
-        if kind == "ivf_pq":
-            return IVFPQIndex.load(self.spark, data)
-        if kind == "ivf_sq":
-            return IVFSQIndex.load(self.spark, data)
-        return IVFIndex.load(
-            self.spark, data, vec_col="embedding", id_col="id"
-        )
+        return self._load_ann(meta.get("kind", "ivf"))
 
     def query_embedding_ann(
         self,

@@ -13,6 +13,8 @@ stable, order-insensitive results (and it matches the DuckDB oracle).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -100,13 +102,32 @@ def normalize_if_needed(v: Column | str) -> Column:
     return F.when(is_normalized(v), _as_double(v)).otherwise(normalize(v))
 
 
+def _sql_double(x) -> str:
+    """One double as SQL text that parses back to the same bits: the
+    shortest round-trip ``repr`` with a ``D`` suffix; NaN and ±inf
+    have no SQL literal and go through ``CAST``."""
+    x = float(x)
+    return f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+
+
+def double_array_lit(values) -> Column:
+    """An ``array<double>`` literal built as SQL text and parsed once.
+
+    ``F.lit(list)`` and ``F.array(*[F.lit(x) ...])`` cost one py4j
+    round trip per element (20k+ for a 4,096-entry vector, seconds of
+    client time before any Spark work); one ``F.expr`` costs a few."""
+    body = ", ".join(_sql_double(x) for x in values)
+    lit = F.expr(f"array({body})")
+    return lit if body else lit.cast("array<double>")
+
+
 def query_vector_lit(vec) -> Column:
     """A query vector as an array<double> literal column.
 
     Fine for moderate dimensionality; for batch kNN prefer a broadcast
     queries DataFrame (operators.knn) over per-query literals.
     """
-    return F.array(*[F.lit(float(x)) for x in vec]).cast("array<double>")
+    return double_array_lit(vec).cast("array<double>")
 
 
 def normalize_vec(vec) -> list[float]:

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from ..batchstate import drop_batch_partition, fold_batch_partitions, read_live
 from ..functions import vector as V
+from ..materialize import materialize
 from . import knn as knn_ops
 
 
@@ -379,6 +380,13 @@ class _CodedIVF:
             _assign_clusters(vectors, cents, vec_col), params, vec_col, id_col
         )
         return cls(cents, params, coded, vectors, vec_col, id_col)
+
+    def pin(self):
+        """Compute the code and vector tables once and cut their
+        lineage (see :meth:`IVFIndex.pin`)."""
+        self.coded = materialize(self.coded)
+        self.vectors = materialize(self.vectors)
+        return self
 
     @classmethod
     def _encode_cells(
@@ -785,6 +793,13 @@ class IVFIndex:
         )
         return cls(cents, _assign_clusters(df, cents, vec_col), vec_col, id_col)
 
+    def pin(self) -> "IVFIndex":
+        """Compute the cell table once and cut its lineage: the cluster
+        assignment stops re-running per search, and the index stops
+        reading its (mutable) source frame."""
+        self.assigned = materialize(self.assigned)
+        return self
+
     def save(self, path: str) -> None:
         """Persist partitioned by (__batch, cluster_id): probing ==
         partition pruning on cluster_id; the ``__batch`` level makes the
@@ -921,53 +936,32 @@ class IVFIndex:
     ) -> DataFrame:
         """Batch IVF search: every query is routed to its ``nprobe``
         nearest clusters on the driver (centroids are MB-scale), the
-        (query, cluster) probe table is broadcast-joined against the
-        cluster-partitioned corpus, and scoring+top-k runs per query.
-
-        The corpus is scanned ONCE for all queries; only rows whose
-        cluster is probed by at least one query are touched (semi-join
-        pruning), and each (doc, query) pair scored is restricted to
-        probed clusters — versus the full docs x queries cross product
-        of brute force.
+        cell table is scanned ONCE for the union of probed cells
+        (partition pruning on a stored index), and the block GEMM kernel
+        of :func:`..knn.knn_block` scores each Arrow batch against all
+        queries — masked so each query keeps only rows of its OWN
+        probed cells, exactly the candidate set of a (query, cell)
+        probe join — then the one per-query top-k shuffle runs.
 
         ``where`` is an optional metadata predicate Column over the
-        index's carried columns, applied BELOW the scoring join (the
-        batch analog of :meth:`search_filtered`: Catalyst composes it
-        with the cluster pruning at the scan).  The standard filtered-
-        ANN caveat applies per query: raise nprobe with selectivity.
-
-        Broadcast shape (r10, same normalization as
-        :meth:`search_batch_dsl`): bare (query_id, cluster_id) probe
-        pairs — O(q·nprobe) rows, no dim-sized payload — plus a
-        per-query vector table (O(q) rows, each vector exactly once);
-        both broadcast hash joins pipeline in one codegen stage, so
-        the denormalized q × nprobe × dim form never exists."""
-        spark = self.assigned.sparkSession
+        index's carried columns, applied BELOW scoring (the batch analog
+        of :meth:`search_filtered`: Catalyst composes it with the
+        cluster pruning at the scan).  The standard filtered-ANN caveat
+        applies per query: raise nprobe with selectivity."""
         qids, qvecs = _query_batch(query_ids, query_vecs)
         units = [_unit(qv) for qv in qvecs]
-        pairs_df = spark.createDataFrame(
-            [
-                (qid, c)
-                for qid, q in zip(qids, units)
-                for c in _probe_clusters(self.centroids, q, nprobe)
-            ],
-            "query_id string, cluster_id int",
+        allow = np.zeros((len(self.centroids), len(units)), dtype=bool)
+        for j, q in enumerate(units):
+            allow[_probe_clusters(self.centroids, q, nprobe), j] = True
+        probed = [int(c) for c in np.flatnonzero(allow.any(axis=1))]
+        base = self.assigned.filter(F.col("cluster_id").isin(probed))
+        if where is not None:
+            base = base.filter(where)
+        qmat = np.reshape(units, (len(units), self.centroids.shape[1]))
+        return knn_ops._gemm_topk(
+            base, qids, qmat, k,
+            self.vec_col, self.id_col, cell_col="cluster_id", allow=allow,
         )
-        qmeta_df = spark.createDataFrame(
-            [(qid, [float(x) for x in q]) for qid, q in zip(qids, units)],
-            "query_id string, query_vec array<double>",
-        )
-        base = self.assigned if where is None else self.assigned.filter(where)
-        scored = (
-            base.join(F.broadcast(pairs_df), "cluster_id")
-            .join(F.broadcast(qmeta_df), "query_id")
-            .withColumn(
-                "similarity",
-                V.dot(F.col(self.vec_col).cast("array<double>"), F.col("query_vec")),
-            )
-            .select("query_id", self.id_col, "similarity")
-        )
-        return knn_ops.topk_per_query(scored, k, "query_id", self.id_col)
 
     def _probe_tables(self, qids, qvecs, per_query, nprobe: int):
         """Driver-side construction of the two normalized broadcast
@@ -1155,8 +1149,6 @@ def tune_ivf(
     ratio.  Returns {"n_clusters", "nprobe", "recall", "scan_fraction",
     "sweep": [...], and "rerank"/"pq_recall" when pq_m is set}.
     """
-    from ..materialize import materialize
-
     held_in = _held_in_queries(emb, k, n_queries, vec_col, id_col, seed)
     qids, qvecs, recall_of = held_in
     sweep: list[dict] = []
@@ -1165,8 +1157,9 @@ def tune_ivf(
     for nlist in candidate_nlist:
         if nlist > max(n_rows // 2, 1):
             continue  # degenerate: fewer than 2 vectors per cluster
-        idx = IVFIndex.build(emb, n_clusters=int(nlist), vec_col=vec_col, id_col=id_col)
-        idx.assigned = materialize(idx.assigned)
+        idx = IVFIndex.build(
+            emb, n_clusters=int(nlist), vec_col=vec_col, id_col=id_col
+        ).pin()
         nprobe = 1
         while nprobe <= nlist:
             r = recall_of(idx.search_batch(qids, qvecs, k, nprobe=nprobe).collect())

@@ -427,21 +427,6 @@ def _hashed_shingle_arrays(
     )
 
 
-def hashed_word_shingle_table(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 5
-) -> DataFrame:
-    """(id, h) with h = xxhash64 of each n-token word shingle — the
-    word-level dedup unit (production LLM corpus dedup typically uses
-    13-gram word shingles; char k-grams catch finer-grained edits).
-    Hashed before the per-doc dedup, as :func:`_hashed_shingle_arrays`;
-    r14: per-doc dedup is row-local ``array_distinct``, not a shuffled
-    ``.distinct()``, and the expression is inlined into ``explode``
-    (see :func:`_hashed_shingle_arrays` on InferFiltersFromGenerate)."""
-    return _word_tokens_frame(df, text_col, id_col).select(
-        id_col, F.explode(_word_shingle_hash_expr(n)).alias("h")
-    )
-
-
 def _word_tokens_frame(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, __w): word-token arrays, spread ahead of the shingle
     blow-up (no-op at scale — see :func:`_spread`)."""

@@ -13,9 +13,10 @@ top-k. Re-architected for batch throughput:
   Two implementations:
     * ``knn_expr`` — pure Catalyst expressions (zip_with/aggregate dot +
       window row_number). Fully codegen'd, oracle-friendly.
-    * ``knn_block`` — ``mapInPandas`` NumPy kernel: per Arrow batch, one
+    * ``knn_block`` — ``mapInArrow`` NumPy kernel: per Arrow batch, one
       f64 matrix multiply scores all queries at once and a local
-      argpartition keeps only k rows per query **before any shuffle**.
+      partition keeps only k rows per query (and their ties) **before
+      any shuffle**.
       The post-map shuffle carries at most (partitions x queries x k)
       rows instead of (docs x queries) — this is what survives a 100x
       scale-up.
@@ -299,9 +300,9 @@ def knn_block(
     """Batch kNN, block-matrix kernel (the scale path).
 
     Each Arrow batch of docs is scored against ALL queries with one
-    GEMM; a local argpartition keeps k rows per query, so the
-    shuffle that feeds the final per-query top-k is tiny and independent
-    of corpus size. Optional negative-filter mode drops docs whose
+    GEMM; a local partition keeps k rows (plus any ties with the k-th)
+    per query, so the shuffle that feeds the final per-query top-k is
+    tiny and independent of corpus size (:func:`_gemm_topk`). Optional negative-filter mode drops docs whose
     similarity to ``negative_vec`` exceeds the threshold *before* top-k
     (reference query.go:221-231).
 
@@ -313,7 +314,6 @@ def knn_block(
     ~1e-7 ties; scores are emitted as float64 either way.
     """
     import numpy as np
-    import pandas as pd
 
     if k <= 0:
         raise ValueError("nResults must be > 0")
@@ -337,10 +337,45 @@ def knn_block(
             neg = neg / nn
         neg = neg.astype(dtype)
 
+    return _gemm_topk(
+        docs, qids, qmat, k, vec_col, id_col, query_id_col, sim_col,
+        neg=neg, negative_threshold=negative_threshold,
+    )
+
+
+def _gemm_topk(
+    docs: DataFrame,
+    query_ids: Sequence,
+    qmat,
+    k: int,
+    vec_col: str,
+    id_col: str,
+    query_id_col: str = "query_id",
+    sim_col: str = "similarity",
+    neg=None,
+    negative_threshold: float = DEFAULT_NEGATIVE_FILTER_THRESHOLD,
+    cell_col: str | None = None,
+    allow=None,
+) -> DataFrame:
+    """The block GEMM top-k kernel of :func:`knn_block` and
+    ``IVFIndex.search_batch``: per Arrow batch, ``mat @ qmat.T`` scores
+    every doc against every prepared query row; each query keeps its
+    batch-local top ``k`` plus every row tied with its k-th score, so
+    the one per-query top-k window settles ties by id exactly as a full
+    join would.  ``allow`` (``n_cells x n_queries`` bool, indexed by the
+    per-row int ``cell_col``) limits each query to its own cells — the
+    IVF probe as a mask.  ``neg`` drops docs whose similarity to it
+    exceeds ``negative_threshold`` (reference query.go:221-231)."""
+    import numpy as np
+
+    if k <= 0:
+        raise ValueError("nResults must be > 0")
     id_field = docs.schema[id_col].dataType.simpleString()
     out_schema = f"{query_id_col} string, {id_col} {id_field}, {sim_col} double"
     kk = int(k)
-    qid_strs = [str(q) for q in qids]
+    qid_arr = np.array([str(q) for q in query_ids], dtype=object)
+    dtype = qmat.dtype
+    cols = [id_col, vec_col] + ([cell_col] if cell_col else [])
 
     def score_batches(batches):
         # mapInArrow: the embedding column's Arrow buffer is reshaped
@@ -363,32 +398,37 @@ def knn_block(
             else:
                 mat = np.vstack(col.to_pylist()).astype(dtype)
             ids = rb.column(0).to_numpy(zero_copy_only=False)
+            ok = None
+            if allow is not None:
+                ok = allow[rb.column(2).to_numpy(zero_copy_only=False)]
             if neg is not None:
-                keep = mat @ neg <= negative_threshold
-                if not keep.any():
+                live = mat @ neg <= negative_threshold
+                if not live.any():
                     continue
-                mat = mat[keep]
-                ids = ids[keep]
+                mat, ids = mat[live], ids[live]
+                ok = None if ok is None else ok[live]
             sims = mat @ qmat.T  # (n_docs, n_queries)
             n = sims.shape[0]
-            take = min(kk, n)
-            if take < n:
-                part = np.argpartition(-sims, take - 1, axis=0)[:take]
-            else:
-                part = np.tile(np.arange(n)[:, None], (1, sims.shape[1]))
-            nq = len(qid_strs)
-            out_qid = np.repeat(np.arange(nq), take)
-            rows = part.T.ravel()  # query-major
+            keep = np.ones_like(sims, dtype=bool) if ok is None else ok
+            if kk < n:
+                # each query's k-th largest score; every row tied with
+                # it stays (>=), so the cut never splits a tie
+                masked = sims if ok is None else np.where(ok, sims, -np.inf)
+                kth = np.partition(masked, n - kk, axis=0)[n - kk]
+                keep = keep & (masked >= kth)
+            out_q, rows = np.nonzero(keep.T)  # query-major
+            if len(rows) == 0:
+                continue
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array([qid_strs[j] for j in out_qid], type=pa.string()),
+                    pa.array(qid_arr[out_q], type=pa.string()),
                     pa.array(ids[rows]),
-                    pa.array(sims[rows, out_qid], type=pa.float64()),
+                    pa.array(sims[rows, out_q], type=pa.float64()),
                 ],
                 names=[query_id_col, id_col, sim_col],
             )
 
-    partial = docs.select(id_col, vec_col).mapInArrow(score_batches, schema=out_schema)
+    partial = docs.select(*cols).mapInArrow(score_batches, schema=out_schema)
     return topk_per_query(partial, kk, query_id_col, id_col, sim_col)
 
 

@@ -432,8 +432,8 @@ def routed_search_batch(
 
     - **FLAT** → :func:`..knn.knn_block` (one GEMM per Arrow batch of
       the corpus scores ALL queries; ``where`` filters the scan first).
-    - **IVF** → :meth:`..ann.IVFIndex.search_batch` (the probe table
-      of every query broadcast-joins the cluster-pruned corpus once;
+    - **IVF** → :meth:`..ann.IVFIndex.search_batch` (knn_block's GEMM
+      over the probed cells, each query masked to its own cells;
       ``where`` applies below scoring inside the probed partitions).
     - **IVF-SQ8 / IVF-PQ** → the coded container's ``search_batch``
       (one uint8 / ADC pass for all queries + shared exact re-rank).

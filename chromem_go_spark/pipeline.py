@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions import text as T
+from .functions import vector as V
 from .operators import dedup as D
 
 
@@ -757,7 +758,7 @@ def quality_model_scores(
     if weights is None:
         weights, bias = default_quality_model()
     dim = len(weights)
-    wlit = F.lit([float(x) for x in weights])
+    wlit = V.double_array_lit(weights)
     hfn = D._token_hash(token_hash)
     toks = T.word_tokens(text_col)
     bucket = lambda t: F.pmod(hfn(t), F.lit(dim)).cast("int")  # noqa: E731
@@ -888,7 +889,7 @@ def dsir_scores(
     the hashed feature array against the literal log-ratio vector.
     Empty docs score 0 (no evidence)."""
     dim = len(llr)
-    wlit = F.lit([float(x) for x in llr])
+    wlit = V.double_array_lit(llr)
     scored = docs.withColumn("__toks", T.word_tokens(text_col)).withColumn(
         "__logw",
         F.aggregate(
@@ -1045,8 +1046,6 @@ def semantic_decontaminate(
     hash join; the corpus streams through with no shuffle and
     aggregates only matched rows.  (At extreme eval sizes, swap the
     broadcast for the LSH-bucketed near-dup path — same contract.)"""
-    from .functions import vector as V
-
     eid = eval_id_col or id_col
     # r14: per-row norms hoisted out of the corpus x eval broadcast
     # join — cosine_similarity in the JOIN CONDITION re-aggregated both

@@ -941,3 +941,105 @@ def test_hash_sample_degenerate_hash_falls_back(spark):
     )
     sample = A._hash_sample(df, "embedding", "vec_id", 1)
     assert sample.shape == (1, 2)
+
+
+# ------------------------------- served index: stored or pinned cells
+
+
+def _batch_rows(idx, qvecs, k=3, nprobe=2):
+    out = idx.search_batch([str(i) for i in range(len(qvecs))], qvecs, k, nprobe=nprobe)
+    return sorted((r["query_id"], r["id"], r["similarity"]) for r in out.collect())
+
+
+@pytest.mark.parametrize("persist", [True, False], ids=["stored", "pinned"])
+@pytest.mark.parametrize("kind", ["ivf", "ivf_sq", "ivf_pq"])
+def test_built_index_is_a_snapshot_of_its_collection(spark, tmp_path, kind, persist):
+    """``build_ann_index`` returns an index that serves from its own
+    cells: an upsert and an id delete on the collection change neither
+    its rows nor whether it can be read (a lazy index over the live
+    table re-read rewritten files: FILE_NOT_EXIST)."""
+    c, _pdir = _lifecycle_coll(spark, tmp_path, f"snap_{kind}_{persist}")
+    idx = c.build_ann_index(n_clusters=4, kind=kind, persist=persist)
+    qvecs = [c.embedding_func(t) for t in ("topic 1", "topic 3")]
+    before = _batch_rows(idx, qvecs)
+    assert len(before) == 6
+    upsert = spark.createDataFrame(
+        [
+            (str(i), {"src": "new"}, c.embedding_func(f"doc {i} topic 1"), f"doc {i}")
+            for i in (2, 40)
+        ],
+        "id string, metadata map<string,string>, embedding array<float>, content string",
+    )
+    c.add_df(upsert)
+    c.delete(ids=[r[1] for r in before[:2]])
+    assert c.count() == 32 + 1 - 2
+    assert _batch_rows(idx, qvecs) == before
+
+
+@pytest.mark.parametrize("persist", [True, False], ids=["stored", "pinned"])
+def test_served_search_batch_plan_is_one_kernel_over_cells(spark, tmp_path, persist):
+    """A served IVF batch is one Python kernel over the cell table — no
+    per-search cluster assignment (MapInPandas) and no probe join; a
+    stored index prunes the scan by ``cluster_id`` partition."""
+    c, _pdir = _lifecycle_coll(spark, tmp_path, f"plan_{persist}")
+    idx = c.build_ann_index(n_clusters=4, persist=persist)
+    qvecs = [c.embedding_func(t) for t in ("topic 1", "topic 2")]
+    df = idx.search_batch(["a", "b"], qvecs, 3, nprobe=1)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1
+    assert "MapInPandas" not in plan and "Join" not in plan
+    assert plan.count("Exchange hashpartitioning") == 1
+    if persist:
+        from chromem_go_spark.plans.explain import formatted_plan
+
+        after = formatted_plan(df).split("PartitionFilters", 1)[1][:200]
+        assert "cluster_id" in after
+
+
+def test_search_batch_keeps_each_query_in_its_own_cells(emb, index):
+    """At nprobe=1, two queries that probe different cells get rows
+    only from their own cell — the (query, cell) probe join's candidate
+    set, not the union of probed cells."""
+    qvecs = [index.centroids[0].tolist(), index.centroids[1].tolist()]
+    assert [index.probe_clusters(q, 1) for q in qvecs] == [[0], [1]]
+    cells = {
+        r["vec_id"]: r["cluster_id"]
+        for r in index.assigned.select("vec_id", "cluster_id").collect()
+    }
+    rows = index.search_batch(["a", "b"], qvecs, 5, nprobe=1).collect()
+    assert len(rows) == 10
+    for r in rows:
+        assert cells[r["vec_id"]] == {"a": 0, "b": 1}[r["query_id"]]
+    for qid, q in zip("ab", qvecs):
+        single = [r["vec_id"] for r in index.search(q, 5, nprobe=1).collect()]
+        got = sorted(
+            (r for r in rows if r["query_id"] == qid),
+            key=lambda r: (-r["similarity"], r["vec_id"]),
+        )
+        assert [r["vec_id"] for r in got] == single
+
+
+def test_search_batch_full_probe_equals_knn_block(emb, index):
+    """At nprobe = nlist the IVF batch scores every row with the same
+    kernel as knn_block and returns its rows."""
+    qids = [str(i) for i in range(4)]
+    qvecs = [_qvec(emb, i) for i in range(4)]
+    ivf = index.search_batch(qids, qvecs, 10, nprobe=len(index.centroids)).collect()
+    flat = K.knn_block(emb, qids, qvecs, 10, vec_col="embedding", id_col="vec_id").collect()
+    key = lambda rows: sorted((r["query_id"], r["vec_id"]) for r in rows)  # noqa: E731
+    assert key(ivf) == key(flat)
+    sims = {(r["query_id"], r["vec_id"]): r["similarity"] for r in flat}
+    for r in ivf:
+        assert abs(r["similarity"] - sims[(r["query_id"], r["vec_id"])]) <= 1e-12
+
+
+def test_ivf_search_batch_keeps_ties_with_kth_score(spark):
+    """The IVF batch shares knn_block's tie rule: duplicates that tie
+    the k-th score inside one Arrow batch are all kept, and the final
+    window settles the tie by id."""
+    rows = [(i, [0.5, 0.5, 0.5, 0.5]) for i in range(11, 3, -1)]
+    rows += [(i, [0.1 * (i + 1), 0.0, 0.0, 0.0]) for i in range(4)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
+    idx = A.IVFIndex.build(df, n_clusters=2, vec_col="embedding", id_col="vec_id").pin()
+    out = idx.search_batch(["a"], [[1.0, 0.0, 0.0, 0.0]], 2, nprobe=2).collect()
+    assert sorted(r["vec_id"] for r in out) == [4, 5]

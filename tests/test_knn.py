@@ -271,3 +271,46 @@ def test_knn_block_negative_matches_single_path(spark, sf_dir):
             ).collect()
         }
         assert got[str(qr["vec_id"])] == single
+
+
+def _tied_frame(spark):
+    """One Arrow batch: eight exact duplicates (dot 0.5 with e1 — exact
+    in any summation order) listed largest id first, then four lower
+    rows.  An arbitrary per-batch cut through the tie keeps ids 11 and
+    10 at k=2; a full join settles the tie by id: 4, 5."""
+    rows = [(i, [0.5, 0.5, 0.5, 0.5]) for i in range(11, 3, -1)]
+    rows += [(i, [0.1 * (i + 1), 0.0, 0.0, 0.0]) for i in range(4)]
+    return spark.createDataFrame(rows, "id long, embedding array<float>").coalesce(1)
+
+
+def _by_rank(rows, k):
+    """(query_id, id, similarity) rows -> the k best per query by
+    (similarity desc, id asc), the full join's tie rule."""
+    out = {}
+    for q, i, s in sorted(rows, key=lambda r: (r[0], -r[2], r[1])):
+        out.setdefault(q, [])
+        if len(out[q]) < k:
+            out[q].append(i)
+    return out
+
+
+@pytest.mark.parametrize("k", [2, 3, 6])
+def test_knn_block_keeps_ties_with_kth_score(spark, k):
+    """A batch emits every row tied with a query's k-th score, so the
+    final window breaks the tie by id exactly as a full join does."""
+    df = _tied_frame(spark)
+    qs = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
+    got = knn.knn_block(df, ["a", "b"], qs, k, vec_col="embedding").collect()
+    full = knn.knn_expr(
+        df,
+        spark.createDataFrame(
+            [("a", qs[0]), ("b", qs[1])], "query_id string, query_vec array<double>"
+        ),
+        k, vec_col="embedding",
+    ).collect()
+    key = lambda rows: _by_rank(  # noqa: E731
+        [(r["query_id"], r["id"], r["similarity"]) for r in rows], k
+    )
+    assert len(got) == 2 * k
+    assert key(got) == key(full)
+    assert key(got)["a"] == list(range(4, 4 + k))
