@@ -14,6 +14,9 @@ API so the same code runs on local dirs and object stores:
 The streaming state tables also share their replay-idempotent row I/O:
 :func:`write_batch` (dynamic ``__batch`` partition overwrite) and
 :func:`read_history` (:func:`read_live` minus the current batch).
+Append-only logs (a persistent collection's write log) commit each
+batch whole with :func:`commit_batch` (temp-write + rename) and list
+what is committed with :func:`committed_batches`.
 
 Crash consistency of the fold — stage-then-promote, never overwriting
 live data:
@@ -65,6 +68,7 @@ _MARKER = "_compact_pending.json"
 _STAGE_BATCH = -2  # reserved staging id; never a valid caller batch
 _MANIFEST = "_base_manifest.json"
 _GEN_A, _GEN_B = -3, -4  # alternating manifest-mode base generations
+_STAGING = "_staging-"  # commit_batch's uncommitted batches: invisible to scans
 
 
 def _fs(spark: SparkSession, path: str):
@@ -233,6 +237,44 @@ def write_batch(df, table_path: str, batch_id: int) -> None:
         .partitionBy("__batch")
         .parquet(table_path)
     )
+
+
+def committed_batches(spark: SparkSession, table_path: str) -> list[int]:
+    """Ascending ids of the committed ``__batch=N`` partitions (N >= 0)
+    under ``table_path``; ``[]`` when the table does not exist."""
+    _, fs, hpath = _fs(spark, table_path)
+    if not fs.exists(hpath):
+        return []
+    names = [st.getPath().getName() for st in fs.listStatus(hpath)]
+    return sorted(
+        b for b in (_batch_id(n) for n in names if n.startswith("__batch="))
+        if b >= 0
+    )
+
+
+def commit_batch(df, table_path: str, batch_id: int, compression: str) -> None:
+    """Append ``df`` as the NEW partition ``__batch=<batch_id>`` by
+    temp-write + rename: the rows go to a staging dir whose name (a
+    leading ``_`` and no ``=``) keeps it out of every parquet scan, and
+    one directory rename publishes the whole batch.  A crash before the
+    rename leaves only staging, which readers never see and the next
+    commit clears.  Callers serialize commits (a write lock); a
+    committed batch is never replaced."""
+    if int(batch_id) < 0:
+        raise ValueError(f"batch_id must be >= 0 (got {batch_id})")
+    jvm, fs, hpath = _fs(df.sparkSession, table_path)
+    Path = jvm.org.apache.hadoop.fs.Path
+    dst = Path(table_path, f"__batch={int(batch_id)}")
+    if fs.exists(dst):
+        raise IOError(f"{dst} is already committed")
+    if fs.exists(hpath):
+        for st in fs.listStatus(hpath):
+            if st.getPath().getName().startswith(_STAGING):
+                fs.delete(st.getPath(), True)
+    stage = f"{table_path}/{_STAGING}{int(batch_id)}"
+    df.write.mode("overwrite").option("compression", compression).parquet(stage)
+    if not fs.rename(Path(stage), dst):
+        raise IOError(f"could not commit {stage} as {dst}")
 
 
 def _heal_manifest(spark: SparkSession, table_path: str) -> None:

@@ -7,10 +7,22 @@ transformation. The reference's RWMutex snapshot semantics (SURVEY §1.4)
 come for free from immutable DataFrames.
 
 Scale notes (the part that matters at 100 TB):
-- Upsert-by-id (reference collection.go:280) is expressed as
-  union + last-writer-wins window. On a lakehouse deployment this is a
-  Delta/Iceberg MERGE; the plain-Parquet implementation here rewrites the
-  table, which is the correct semantics, just not the incremental commit.
+- A persistent parquet collection is an immutable BASE (``data.parquet``,
+  hash-bucketed or flat) plus an append-only LOG of ``__batch=N``
+  directories (``log.parquet``).  An upsert appends its rows and a
+  delete appends id-only tombstones, each as one batch committed by
+  temp-write + rename under the write lock: a write costs O(batch), as
+  the reference's one gob file per document does (persistence.go:267-280).
+- The snapshot is the base rows whose id is not in the log plus the
+  log's newest live row per id.  That small log-latest frame is built
+  once per write, so a query never runs a window: it filters the base
+  by the logged ids (a literal id set, or one broadcast anti-join for a
+  log past ``SMALL_LOG_ROWS``); an empty log reads as the base alone.
+- :meth:`Collection.compact` folds the log into the base (union +
+  last-writer-wins ``row_number``, dynamic partition overwrite of the
+  touched buckets only); a write runs it once the log outgrows
+  ``LOG_FOLD_FRACTION`` of the base.  On a lakehouse deployment the
+  same contract is a Delta MERGE (``table_format="delta"``).
 - Queries never collect the corpus: filter -> score -> TakeOrderedAndProject
   (single query) or block-matrix partial top-k (batch).
 - The pre-filter runs below the similarity projection, so Parquet row-group
@@ -27,7 +39,15 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
+from . import batchstate
 from . import errors as E
 from . import tablefmt
 from .document import DOCUMENT_SCHEMA, Document
@@ -39,14 +59,41 @@ from .operators.filters import validate_where_document
 
 EmbeddingFunc = Callable[[str], Sequence[float]]
 
-# Default hash-bucket count for persistent collections: makes O(batch)
-# upserts/deletes (dynamic partition overwrite of touched buckets only)
-# the DEFAULT behavior rather than opt-in — at 100 TB a full-table
-# rewrite per ingest batch is the wrong default. 64 buckets keeps tiny
-# local collections cheap while bounding the rewrite unit at scale;
-# pass n_buckets explicitly to size for the deployment, or 0 to opt out
-# (flat single-directory layout).
+# Default hash-bucket count for persistent collections.  A fold rewrites
+# only the buckets holding the ids it folds (dynamic partition
+# overwrite), and a point lookup scans one bucket, so bucketing is the
+# DEFAULT rather than opt-in.  64 buckets keeps tiny local collections
+# cheap while bounding the fold's rewrite unit at scale; pass n_buckets
+# explicitly to size for the deployment, or 0 to opt out (flat
+# single-directory base, which a fold rewrites whole).
 DEFAULT_N_BUCKETS = 64
+
+#: A write folds the log into the base once the log holds more rows
+#: (upserted versions and tombstones) than this fraction of the base's
+#: rows: every log row is read by every query's anti-join and union,
+#: and a fold costs about one rewrite of the touched buckets.
+LOG_FOLD_FRACTION = 0.25
+#: ... or once it holds more batches than this (each is a directory
+#: every snapshot load lists and reads).
+LOG_FOLD_MAX_BATCHES = 64
+#: A log of at most this many rows is handled whole: its newest-row
+#: window runs in one task with no shuffle, and the snapshot drops its
+#: ids from the base with a literal id set rather than a broadcast
+#: anti-join, which costs every query a broadcast job (measured on a
+#: 5,000 x 128 base: a literal set of 2,048 ids scans as fast as the
+#: base alone, one of 10,000 as slowly as the broadcast join).
+SMALL_LOG_ROWS = 2048
+
+_DOC_COLS = DOCUMENT_SCHEMA.fieldNames()
+# one log row: a document version, or an id-only tombstone
+_LOG_SCHEMA = StructType(
+    DOCUMENT_SCHEMA.fields
+    + [
+        StructField("__tomb", BooleanType()),
+        StructField("__seq", LongType()),  # row order within its batch
+        StructField("__batch", IntegerType()),  # the partition column
+    ]
+)
 
 
 class Collection:
@@ -61,14 +108,14 @@ class Collection:
         n_buckets: int | None = None,
         table_format: str | None = None,
     ):
-        """``n_buckets``: opt-in hash-bucketed persistent layout
-        (``bucket=N`` partition dirs on ``xxhash64(id) % n``). Upserts
-        then rewrite ONLY the buckets containing touched ids (dynamic
-        partition overwrite) instead of the whole table — the difference
-        between O(batch) and O(table) ingest at 100 TB. Point lookups
-        also prune to one bucket.
+        """``n_buckets``: hash-bucketed base for a persistent collection
+        (``bucket=N`` partition dirs on ``xxhash64(id) % n``).  Writes
+        append to the log whatever the layout; bucketing bounds what a
+        fold rewrites to the buckets holding the folded ids (dynamic
+        partition overwrite) instead of the whole base, and a point
+        lookup scans one bucket.
 
-        ``table_format``: ``"parquet"`` (default — bucketed layout +
+        ``table_format``: ``"parquet"`` (default — base + write log +
         lock-file writer serialization) or ``"delta"`` (native MERGE /
         DELETE transactions via tablefmt.py, object-store-safe, no lock
         file; requires delta-spark + jars, runtime-checked).  Delta
@@ -86,38 +133,27 @@ class Collection:
             tablefmt.require_delta(spark)
             n_buckets = None
         self.n_buckets = int(n_buckets) if n_buckets else None
-        self._df: DataFrame | None = None
+        self._df = None
+        # the snapshot's base scan (bucket column kept) and log-latest
+        # frame, for point lookups; None without a parquet base / log
+        self._base_raw: DataFrame | None = None
+        self._log_latest: DataFrame | None = None
         self._text_index: DataFrame | None = None
         self._text_index_n = 3
         self._text_index_src: DataFrame | None = None
-        if persist_dir and os.path.exists(self._data_path()):
-            self._df = self._read_table()
+        if persist_dir:
+            self._load_snapshot()
 
-    def _raw_table(self) -> DataFrame | None:
-        """The on-disk table (bucket column included), or None when the
-        data path holds no parquet footers — which legitimately happens
-        after a delete removes every row of a bucketed collection (all
-        bucket dirs dropped, directory left behind)."""
-        from pyspark.errors.exceptions.captured import AnalysisException
+    @property
+    def _df(self) -> DataFrame | None:
+        return self._snapshot
 
-        if self.table_format == "delta":
-            if not tablefmt.table_exists(self.spark, self._data_path()):
-                return None
-            return tablefmt.read_table(self.spark, self._data_path())
-        try:
-            return self.spark.read.parquet(self._data_path())
-        except AnalysisException as e:
-            if "UNABLE_TO_INFER_SCHEMA" in str(e):
-                return None
-            raise
-
-    def _read_table(self) -> DataFrame:
-        df = self._raw_table()
-        if df is None:
-            return self._empty()
-        if self.n_buckets:
-            df = df.drop("bucket")
-        return df.select(*DOCUMENT_SCHEMA.fieldNames())
+    @_df.setter
+    def _df(self, df: DataFrame | None) -> None:
+        # the one place a snapshot changes, so the memoized row count
+        # always belongs to the snapshot it was counted on
+        self._snapshot = df
+        self._n_rows = None
 
     def _bucket_expr(self):
         return F.pmod(F.xxhash64(F.col("id")), F.lit(self.n_buckets)).cast("int")
@@ -129,6 +165,14 @@ class Collection:
         suffix = "data.delta" if self.table_format == "delta" else "data.parquet"
         return os.path.join(self.persist_dir, suffix)
 
+    def _log_path(self) -> str:
+        assert self.persist_dir
+        return os.path.join(self.persist_dir, "log.parquet")
+
+    def _codec(self) -> str:
+        # the reference's gzip option (persistence.go:44-56) as a codec
+        return "gzip" if self.compress else "snappy"
+
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], DOCUMENT_SCHEMA)
 
@@ -137,55 +181,87 @@ class Collection:
         """The collection as a DataFrame (snapshot semantics)."""
         return self._df if self._df is not None else self._empty()
 
-    def _write(self, df: DataFrame) -> None:
-        """Persist + re-read so the in-memory handle is the durable table
-        (full-table rewrite: used for initial loads and deletes).
+    def _base_frame(self) -> DataFrame:
+        """The stored parquet base, read with its schema pinned (no
+        schema-inference job; a base whose every bucket was folded away
+        reads as empty).  A bucketed base keeps its ``bucket`` column."""
+        schema = DOCUMENT_SCHEMA
+        if self.n_buckets:
+            schema = StructType(
+                DOCUMENT_SCHEMA.fields + [StructField("bucket", IntegerType())]
+            )
+        return self.spark.read.schema(schema).parquet(self._data_path())
 
-        Parquet-overwrite stands in for a Delta MERGE commit; compression
-        maps the reference's gzip option (persistence.go:44-56) to a
-        Parquet codec.  An in-memory collection pins the merged snapshot
-        instead: left as a plan, every later query, ``count()`` and
-        index build would re-run the whole upsert history (each add's
-        union + ``row_number`` window).
-        """
-        self._df = df if self.persist_dir else materialize(df)
-        if self.persist_dir:
-            codec = "gzip" if self.compress else "snappy"
-            path = self._data_path()
-            out = df.select(*DOCUMENT_SCHEMA.fieldNames())
-            if self.table_format == "delta":
-                # overwrite is itself one atomic Delta commit
-                out.write.format("delta").mode("overwrite").save(path)
-                self._df = self._read_table()
-                self._write_meta()
-                return
-            if self.n_buckets:
-                # pin rows before overwriting the path they may be read from
-                out = (
-                    out.withColumn("bucket", self._bucket_expr())
-                    .transform(materialize)
-                )
-                out.write.mode("overwrite").option("compression", codec).partitionBy(
-                    "bucket"
-                ).parquet(path)
-            else:
-                tmp = path + ".tmp"
-                out.write.mode("overwrite").option("compression", codec).parquet(tmp)
-                final = self.spark.read.schema(DOCUMENT_SCHEMA).parquet(tmp)
-                final.write.mode("overwrite").option("compression", codec).parquet(path)
-                _rmtree(tmp)
-            self._df = self._read_table()
-            self._write_meta()
+    @staticmethod
+    def _newest(df: DataFrame, *order: str) -> DataFrame:
+        """Last writer wins: per id, the row first in ``order`` descending."""
+        w = Window.partitionBy("id").orderBy(*(F.desc(c) for c in order))
+        return (
+            df.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
 
-    def _refresh_from_disk(self) -> None:
-        """Re-base the in-memory handle on the durable table — REQUIRED
-        at the top of every locked read-merge-write section so a merge
-        starts from the latest committed state, not this writer's cached
-        snapshot (the lost-update half of concurrent-writer safety; the
-        lock provides the serialization half)."""
-        if self.persist_dir and os.path.exists(self._data_path()):
-            self.spark.catalog.refreshByPath(self._data_path())
-            self._df = self._read_table()
+    @staticmethod
+    def _base_then_log(base: DataFrame, latest: DataFrame) -> DataFrame:
+        """Base rows (``__src`` 0) and log-latest rows (``__src`` 1,
+        which outrank them) as one frame, each with its ``__tomb``."""
+        return base.select(
+            *_DOC_COLS, F.lit(False).alias("__tomb"), F.lit(0).alias("__src")
+        ).unionByName(latest.select(*_DOC_COLS, "__tomb", F.lit(1).alias("__src")))
+
+    def _log_files(self, batches: Sequence[int]) -> list[str]:
+        log = self._log_path()
+        return [
+            f
+            for b in batches
+            for f in _parquet_files(os.path.join(log, f"__batch={b}"))
+        ]
+
+    def _read_log(self, batches: Sequence[int]) -> DataFrame:
+        """The newest log row per id over ``batches``, pinned once."""
+        log = self._log_path()
+        rows = (
+            self.spark.read.schema(_LOG_SCHEMA)
+            .option("basePath", log)
+            .parquet(*(os.path.join(log, f"__batch={b}") for b in batches))
+        )
+        if _footer_rows(self._log_files(batches)) <= SMALL_LOG_ROWS:
+            rows = rows.coalesce(1)  # one partition: the window needs no shuffle
+        return materialize(self._newest(rows, "__batch", "__seq"))
+
+    def _load_snapshot(self) -> None:
+        """Point the snapshot at what is on disk.  With an empty log the
+        view is the base scan itself; otherwise it is the base minus the
+        logged ids (a literal id set read on the driver, or a broadcast
+        anti-join past ``SMALL_LOG_ROWS``) plus the log's newest live
+        rows, the log-latest frame computed here once."""
+        self._base_raw = self._log_latest = None
+        path = self._data_path()
+        if self.table_format == "delta":
+            self.spark.catalog.refreshByPath(path)
+            self._df = (
+                tablefmt.read_table(self.spark, path).select(*_DOC_COLS)
+                if tablefmt.table_exists(self.spark, path)
+                else None
+            )
+            return
+        if not os.path.exists(path):
+            self._df = None
+            return
+        self.spark.catalog.refreshByPath(path)
+        self._base_raw = self._base_frame()
+        view = self._base_raw.select(*_DOC_COLS)
+        batches = batchstate.committed_batches(self.spark, self._log_path())
+        if batches:
+            self._log_latest = latest = self._read_log(batches)
+            files = self._log_files(batches)
+            if _footer_rows(files) > SMALL_LOG_ROWS:
+                view = view.join(F.broadcast(latest.select("id")), "id", "left_anti")
+            elif ids := _parquet_ids(files):
+                view = view.filter(F.expr(f"id NOT IN ({_sql_strings(ids)})"))
+            view = view.unionByName(latest.filter(~F.col("__tomb")).select(*_DOC_COLS))
+        self._df = view
 
     def _write_lock(self):
         """Serialize mutators of the persistent table (see locking.py);
@@ -198,67 +274,126 @@ class Collection:
     def _upsert(self, new: DataFrame) -> None:
         """Last-writer-wins upsert by id (reference collection.go:280).
 
-        Bucketed persistent collections rewrite only the hash buckets
-        containing touched ids via dynamic partition overwrite — O(batch)
-        not O(table). Everything else merges the full snapshot.
-
-        Persistent parquet tables take the collection write lock for the
-        whole read-merge-write, so concurrent writers serialize instead
-        of losing updates; on the delta backend the same contract is one
-        native MERGE commit (optimistic concurrency, no lock file)."""
-        if self.table_format == "delta" and self.persist_dir:
-            tablefmt.merge_upsert(
-                self.spark,
-                self._data_path(),
-                new.select(*DOCUMENT_SCHEMA.fieldNames()),
-                key_col="id",
+        A persistent parquet collection appends the rows to its log
+        under the collection write lock (:meth:`_append`), so concurrent
+        writers serialize instead of losing updates; on the delta
+        backend the same contract is one native MERGE commit (optimistic
+        concurrency, no lock file).  An in-memory collection merges and
+        pins its snapshot: left as a plan, every later query would
+        re-run the whole upsert history."""
+        new = new.select(*_DOC_COLS)
+        if not self.persist_dir:
+            merged = self._newest(
+                self.df.withColumn("__src", F.lit(0)).unionByName(
+                    new.withColumn("__src", F.lit(1))
+                ),
+                "__src",
             )
-            self.spark.catalog.refreshByPath(self._data_path())
-            self._df = self._read_table()
+            self._df = materialize(merged.drop("__src"))
+            return
+        if self.table_format == "delta":
+            tablefmt.merge_upsert(self.spark, self._data_path(), new, key_col="id")
+            self._load_snapshot()
             self._write_meta()
             return
         with self._write_lock():
-            self._refresh_from_disk()
-            self._upsert_unlocked(new)
+            self._append(new, tombstones=False)
 
-    def _upsert_unlocked(self, new: DataFrame) -> None:
-        new = new.select(*DOCUMENT_SCHEMA.fieldNames())
-        if self.n_buckets and self.persist_dir and os.path.exists(self._data_path()):
-            codec = "gzip" if self.compress else "snappy"
-            path = self._data_path()
-            new_b = new.withColumn("bucket", self._bucket_expr())
-            touched = [r["bucket"] for r in new_b.select("bucket").distinct().collect()]
-            # partition-pruned read: only the touched buckets are scanned;
-            # raw can be None after a delete emptied the whole table
-            raw = self._raw_table()
-            if raw is None:
-                merged = new_b.transform(materialize)
-            else:
-                existing = raw.filter(F.col("bucket").isin(touched))
-                w = Window.partitionBy("id").orderBy(F.desc("__src"))
-                merged = (
-                    existing.withColumn("__src", F.lit(0))
-                    .unionByName(new_b.withColumn("__src", F.lit(1)))
-                    .withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .select(*DOCUMENT_SCHEMA.fieldNames(), "bucket")
-                    .transform(materialize)  # pin before self-overwrite
+    def _append(self, rows: DataFrame, tombstones: bool) -> None:
+        """One locked write.  The first write into a collection with no
+        base writes the base; every later one appends ``rows`` (id-only
+        ``tombstones`` for a delete) to the log as one batch, folds the
+        log once it has outgrown the base (:meth:`_fold_due`), and
+        re-reads the snapshot.  Within a batch the later row of an id
+        wins."""
+        ordered = rows.withColumn("__seq", F.monotonically_increasing_id())
+        if not os.path.exists(self._data_path()):
+            if not tombstones:
+                self._write_base(self._newest(ordered, "__seq").drop("__seq"))
+        else:
+            log = self._log_path()
+            batches = batchstate.committed_batches(self.spark, log)
+            batches.append(batches[-1] + 1 if batches else 0)
+            if tombstones:
+                ordered = ordered.select(
+                    "id",
+                    *(F.lit(None).cast(f.dataType).alias(f.name)
+                      for f in DOCUMENT_SCHEMA.fields[1:]),
+                    "__seq",
                 )
-            merged.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).option("compression", codec).partitionBy("bucket").parquet(path)
-            self._df = self._read_table()
-            self._write_meta()
-            return
-        base = self.df.withColumn("__src", F.lit(0))
-        w = Window.partitionBy("id").orderBy(F.desc("__src"))
-        merged = (
-            base.unionByName(new.withColumn("__src", F.lit(1)))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(*DOCUMENT_SCHEMA.fieldNames())
-        )
-        self._write(merged)
+            batchstate.commit_batch(
+                ordered.select(*_DOC_COLS, F.lit(tombstones).alias("__tomb"), "__seq"),
+                log, batches[-1], self._codec(),
+            )
+            if self._fold_due(batches):
+                self._fold(batches)
+        self._load_snapshot()
+        self._write_meta()
+
+    def _write_base(self, df: DataFrame) -> None:
+        """Write document rows into the base.  A bucketed base replaces
+        only the buckets ``df`` has rows in (dynamic partition
+        overwrite); a flat one is replaced whole."""
+        out = df.select(*_DOC_COLS)
+        if self.n_buckets:
+            out = out.withColumn("bucket", self._bucket_expr())
+        w = out.write.mode("overwrite").option("compression", self._codec())
+        if self.n_buckets:
+            w = w.option("partitionOverwriteMode", "dynamic").partitionBy("bucket")
+        w.parquet(self._data_path())
+
+    def _fold_due(self, batches: Sequence[int]) -> bool:
+        if len(batches) > LOG_FOLD_MAX_BATCHES:
+            return True
+        log_rows = _footer_rows(self._log_files(batches))
+        base_rows = _footer_rows(_parquet_files(self._data_path()))
+        return log_rows > LOG_FOLD_FRACTION * base_rows
+
+    def _fold(self, batches: Sequence[int]) -> None:
+        """Fold the log ``batches`` into the base: the union of the
+        touched base rows and the log's newest rows keeps the newest row
+        per id (``row_number``), tombstoned ids drop out, and the result
+        replaces the touched buckets (a flat base whole).  Replaying a
+        folded batch onto the base changes no row, so a fold killed
+        after its base commit reads — and re-folds — to the same rows."""
+        latest = self._read_log(batches)
+        existing = self._base_frame()
+        if self.n_buckets:
+            touched = [
+                r[0] for r in latest.select(self._bucket_expr()).distinct().collect()
+            ]
+            existing = existing.filter(F.col("bucket").isin(touched))
+        merged = self._newest(self._base_then_log(existing, latest), "__src")
+        # pinned: the write below overwrites files this plan reads
+        merged = materialize(merged.filter(~F.col("__tomb")).select(*_DOC_COLS))
+        self._write_base(merged)
+        if self.n_buckets:
+            # dynamic overwrite only replaces buckets present in the
+            # output: a bucket left with no rows is dropped explicitly
+            kept = {
+                r[0] for r in merged.select(self._bucket_expr()).distinct().collect()
+            }
+            for b in set(touched) - kept:
+                _rmtree(os.path.join(self._data_path(), f"bucket={b}"))
+        # oldest first: a fold killed part-way leaves the newest batches,
+        # and the folded base plus any newest-suffix of its log reads as
+        # the same rows
+        for b in batches:
+            batchstate.drop_batch_partition(self.spark, self._log_path(), b)
+
+    def compact(self) -> bool:
+        """Fold the write log into the base now (writes also do this on
+        their own once the log outgrows ``LOG_FOLD_FRACTION`` of the
+        base).  Returns whether a fold ran; the delta backend and
+        in-memory collections have no log."""
+        if not self.persist_dir or self.table_format == "delta":
+            return False
+        with self._write_lock():
+            batches = batchstate.committed_batches(self.spark, self._log_path())
+            if batches:
+                self._fold(batches)
+            self._load_snapshot()
+        return bool(batches)
 
     def _write_meta(self) -> None:
         if not self.persist_dir:
@@ -368,17 +503,25 @@ class Collection:
     def get_by_id(self, id: str) -> Document:
         if not id:
             raise ValueError("id is empty")
-        src = self.df
-        if self.n_buckets and self.persist_dir and os.path.exists(self._data_path()):
-            # bucketed layout: the id's bucket is known up front, so the
-            # scan prunes to ONE partition directory
-            b = F.pmod(F.xxhash64(F.lit(str(id))), F.lit(self.n_buckets)).cast("int")
-            src = (
-                self.spark.read.parquet(self._data_path())
-                .filter(F.col("bucket") == b)
-                .drop("bucket")
-            )
-        rows = src.filter(F.col("id") == F.lit(id)).collect()
+        hit = F.col("id") == F.lit(str(id))
+        if self._base_raw is None:
+            rows = self.df.filter(hit).collect()
+        else:
+            # one job over the snapshot: the id's base row (a bucketed
+            # scan prunes to the id's one bucket directory) and its
+            # newest log row, which outranks it
+            base = self._base_raw
+            if self.n_buckets:
+                b = F.pmod(F.xxhash64(F.lit(str(id))), F.lit(self.n_buckets))
+                base = base.filter(F.col("bucket") == b.cast("int"))
+            if self._log_latest is None:
+                rows = base.filter(hit).collect()
+            else:
+                rows = self._base_then_log(
+                    base.filter(hit), self._log_latest.filter(hit)
+                ).collect()
+                rows = sorted(rows, key=lambda r: -r["__src"])[:1]
+                rows = [r for r in rows if not r["__tomb"]]
         if not rows:
             raise KeyError(f"document with ID '{id}' not found")
         r = rows[0]
@@ -393,7 +536,12 @@ class Collection:
         return [r["id"] for r in self.df.select("id").collect()]
 
     def count(self) -> int:
-        return self.df.count()
+        """Rows in the snapshot, counted once per snapshot (the
+        reference's ``Count`` is the length of its map,
+        collection.go:391-395)."""
+        if self._n_rows is None:
+            self._n_rows = self.df.count()
+        return self._n_rows
 
     def delete(
         self,
@@ -412,28 +560,33 @@ class Collection:
         the default keeps strict reference parity including the golden
         errors.
 
-        On a bucketed layout, ids-only deletes rewrite ONLY the buckets
-        holding those ids (dynamic partition overwrite) — predicate
-        deletes must scan everything and rewrite the table."""
+        A persistent parquet collection appends the deleted ids to its
+        log as tombstones (a predicate delete first finds them in the
+        snapshot); nothing in the base is rewritten until a fold."""
         if not where and not where_document and not ids:
             raise ValueError("must provide either where, whereDocument or ids")
         validate_where_document(where_document)
-        if self.table_format == "delta" and self.persist_dir:
-            tablefmt.delete_where(
-                self.spark, self._data_path(),
-                self._delete_predicate(
-                    where, where_document, ids, extended_filters
-                ),
-            )
-            self.spark.catalog.refreshByPath(self._data_path())
-            self._df = self._read_table()
+        if self.persist_dir and self.table_format == "parquet":
+            with self._write_lock():
+                if where or where_document:
+                    self._load_snapshot()  # the latest committed rows
+                    gone = self.df.filter(self._delete_predicate(
+                        where, where_document, ids, extended_filters
+                    )).select("id")
+                else:
+                    # SQL text parsed once: no Python rows, no Python worker
+                    gone = self.spark.range(1).select(F.explode(F.expr(
+                        f"array({_sql_strings(sorted({str(i) for i in ids}))})"
+                    )).alias("id"))
+                self._append(gone, tombstones=True)
+            return
+        victim = self._delete_predicate(where, where_document, ids, extended_filters)
+        if self.persist_dir:  # delta: one native DELETE commit
+            tablefmt.delete_where(self.spark, self._data_path(), victim)
+            self._load_snapshot()
             self._write_meta()
             return
-        with self._write_lock():
-            self._refresh_from_disk()
-            self._delete_unlocked(
-                where, where_document, ids, extended_filters
-            )
+        self._df = materialize(self.df.filter(~victim))
 
     #: a served graph serves a filter as the filter's matching id set
     #: (eligibility-gated walks, operators/hnsw.py); beyond this many
@@ -560,55 +713,6 @@ class Collection:
             in_ids = F.col("id").isin([str(i) for i in ids])
             victim = in_ids if victim is None else victim & in_ids
         return F.coalesce(victim, F.lit(False))
-
-    def _delete_unlocked(
-        self, where, where_document, ids, extended_filters=False
-    ) -> None:
-        ids_only = bool(ids) and not where and not where_document
-        if (
-            ids_only
-            and self.n_buckets
-            and self.persist_dir
-            and os.path.exists(self._data_path())
-        ):
-            path = self._data_path()
-            codec = "gzip" if self.compress else "snappy"
-            # bucket ids via Spark's own xxhash64 (no Python equivalent
-            # matches the JVM implementation bit-for-bit)
-            id_df = self.spark.createDataFrame(
-                [(str(i),) for i in ids], "id string"
-            )
-            touched = sorted(
-                r["b"]
-                for r in id_df.select(self._bucket_expr().alias("b"))
-                .distinct()
-                .collect()
-            )
-            raw = self._raw_table()
-            if raw is None:  # table already empty: nothing to delete
-                self._df = self._empty()
-                self._write_meta()
-                return
-            existing = raw.filter(F.col("bucket").isin(touched))
-            kept = existing.filter(
-                ~F.col("id").isin([str(i) for i in ids])
-            ).transform(materialize)
-            kept.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).option("compression", codec).partitionBy("bucket").parquet(path)
-            # dynamic overwrite only replaces partitions PRESENT in the
-            # output: a bucket whose every row was deleted must be
-            # dropped explicitly or its rows would survive
-            surviving = {r["bucket"] for r in kept.select("bucket").distinct().collect()}
-            for b in touched:
-                if b not in surviving:
-                    _rmtree(os.path.join(path, f"bucket={b}"))
-            self._df = self._read_table()
-            self._write_meta()
-            return
-        self._write(self.df.filter(~self._delete_predicate(
-            where, where_document, ids, extended_filters
-        )))
 
     # ---------------- query (reference collection.go:410-559) ----------------
 
@@ -1398,6 +1502,44 @@ class Collection:
             qids, qvecs, k, parsed, nprobe=decision["nprobe"],
             metadata_col="metadata", text_col="content",
         )
+
+
+def _sql_strings(values) -> str:
+    """Comma-separated SQL string literals of ``values``."""
+    return ", ".join(
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
+    )
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The parquet files a scan of the local table dir ``path`` reads:
+    entries starting with ``_`` or ``.`` are skipped unless they name a
+    partition."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if "=" in d or d[0] not in "_."]
+        out += [
+            os.path.join(root, f) for f in files
+            if f.endswith(".parquet") and f[0] not in "_."
+        ]
+    return out
+
+
+def _footer_rows(files: Sequence[str]) -> int:
+    """Rows in parquet ``files``, summed from their footers (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def _parquet_ids(files: Sequence[str]) -> list[str]:
+    """The distinct ``id`` values in parquet ``files``, read on the
+    driver (no Spark job), sorted."""
+    import pyarrow.parquet as pq
+
+    return sorted(
+        {i for f in files for i in pq.read_table(f, columns=["id"]).column(0).to_pylist()}
+    )
 
 
 def _rmtree(path: str) -> None:

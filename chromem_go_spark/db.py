@@ -126,10 +126,11 @@ class DB:
         n_buckets: int | None = None,
         table_format: str | None = None,
     ) -> Collection:
-        """``n_buckets``: hash-bucket count for the persistent layout.
+        """``n_buckets``: hash-bucket count for the persistent base.
         Defaults to ``DEFAULT_N_BUCKETS`` for persistent collections so
-        upserts/deletes rewrite only touched buckets (O(batch), not
-        O(table)); pass 0 for the flat single-directory layout.
+        a fold of the write log rewrites only the buckets holding folded
+        ids, not the whole base; pass 0 for the flat single-directory
+        layout.
 
         ``table_format``: ``"delta"`` backs upserts/deletes with native
         MERGE/DELETE transactions (object-store-safe; requires

@@ -106,7 +106,12 @@ def _hash_sample(
     bare limit() would take rows from the first partitions only, biasing
     trainers on clustered storage. xxhash64(id) % 997 < p keeps
     ~sample_size rows uniformly wherever they live. ONE count + ONE
-    collect — shared by the coarse quantizer and the codec trainer."""
+    collect — shared by the coarse quantizer and the codec trainer.
+
+    The collected rows are sorted by ``(xxhash64(id), id)`` on the
+    driver before the first ``sample_size`` are kept, so the sample —
+    and every centroid seeded from it — is a function of the rows and
+    the seed alone, never of the file or partition layout."""
     n_rows = df.count()
     if n_rows == 0:
         # training a quantizer on nothing is meaningless, and numpy's
@@ -116,20 +121,25 @@ def _hash_sample(
         raise EmptyCorpusError(
             "cannot train a quantizer over an empty corpus frame"
         )
-    cand = df
+    keyed = df.select(
+        F.xxhash64(F.col(id_col).cast("string")).alias("__h"),
+        F.col(id_col).cast("string").alias("__id"),
+        vec_col,
+    )
+    cand = keyed
     if n_rows > sample_size:
+        # p rounds down, so the expected candidate count is <= sample_size
         p = max(1, int(997 * sample_size / n_rows))
-        cand = df.filter(
-            F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(997)) < p
-        )
-    rows = cand.select(vec_col).limit(sample_size).collect()
+        cand = keyed.filter(F.pmod("__h", F.lit(997)) < p)
+    rows = cand.collect()
     if not rows:
         # degenerate id distribution: the modular hash filter selected
         # nothing on a NON-empty frame.  This is a sampling anomaly, not
-        # an empty corpus — fall back to the unfiltered (first-partitions)
-        # sample rather than mis-signal emptiness (r11, ADVICE)
-        rows = df.select(vec_col).limit(sample_size).collect()
-    return np.asarray([r[0] for r in rows], dtype=np.float64)
+        # an empty corpus — fall back to the hash-ordered head of the
+        # unfiltered frame rather than mis-signal emptiness (r11, ADVICE)
+        rows = keyed.orderBy("__h", "__id").limit(sample_size).collect()
+    rows.sort(key=lambda r: (r[0], r[1] or ""))
+    return np.asarray([r[2] for r in rows[:sample_size]], dtype=np.float64)
 
 
 def _unit_rows(mat: np.ndarray) -> np.ndarray:

@@ -3,6 +3,7 @@ save/load round-trip with partition pruning."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -29,6 +30,22 @@ def test_full_probe_is_exact(emb, index):
     exact = [r["vec_id"] for r in K.knn_single(emb, q, 10, vec_col="embedding", id_col="vec_id").collect()]
     ivf = [r["vec_id"] for r in index.search(q, 10, nprobe=8).collect()]
     assert ivf == exact
+
+
+@pytest.mark.parametrize("sample_size", [64, 50_000])
+def test_ivf_centroids_do_not_depend_on_partitioning(emb, sample_size):
+    """The training sample is sorted by ``(xxhash64(id), id)`` on the
+    driver, so one frame split into 1 or 7 partitions trains the same
+    centroids, whether the hash filter thins it (64) or every row is
+    sampled (50,000)."""
+    built = [
+        A.IVFIndex.build(
+            emb.repartition(p), n_clusters=8, vec_col="embedding",
+            id_col="vec_id", sample_size=sample_size,
+        ).centroids
+        for p in (1, 7)
+    ]
+    assert np.array_equal(*built)
 
 
 def test_partial_probe_recall(emb, index):

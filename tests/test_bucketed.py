@@ -1,6 +1,7 @@
-"""Bucketed persistent collections: upserts must rewrite ONLY the hash
-buckets containing touched ids (dynamic partition overwrite), and all
-CRUD semantics must be identical to the flat layout."""
+"""Bucketed persistent collections: an upsert or a delete rewrites no
+base file and adds exactly one log batch (O(batch) writes), a fold
+rewrites only the hash buckets holding folded ids, and all CRUD
+semantics are identical to the flat layout."""
 
 from __future__ import annotations
 
@@ -25,6 +26,13 @@ def _bucket_files(data_path):
     return out
 
 
+def _log_batches(c):
+    log = c._log_path()
+    if not os.path.isdir(log):
+        return []
+    return sorted(d for d in os.listdir(log) if d.startswith("__batch="))
+
+
 def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     """No layout args: the DEFAULT persistent layout is bucketed, so
     O(batch) upserts don't require opting in."""
@@ -38,11 +46,10 @@ def test_bucketed_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     before = _bucket_files(data)
     assert len(before) > 4  # ids spread over buckets
 
-    # upsert ONE id -> exactly one bucket's files may change
+    # upsert ONE id -> no base file rewritten, one log batch added
     c.add_document(Document("7", {"k": "updated"}, [0.0, 1.0], "doc 7 v2"))
-    after = _bucket_files(data)
-    changed = [b for b in before if before[b] != after.get(b)]
-    assert len(changed) == 1, f"buckets rewritten: {changed}"
+    assert _bucket_files(data) == before
+    assert _log_batches(c) == ["__batch=0"]
 
     # semantics: upsert took effect, nothing else lost
     assert c.count() == 64
@@ -65,7 +72,7 @@ def test_bucketed_reload_and_query(spark, tmp_path):
     assert c2.count() == 10
     res = c2.query_embedding([1.0, 0.1], 3).collect()
     assert len(res) == 3
-    # delete works on the bucketed layout (full rewrite path)
+    # delete works on the bucketed layout (tombstones in the log)
     c2.delete(ids=["0", "1"])
     assert c2.count() == 8
 
@@ -97,17 +104,17 @@ def test_bucketed_delete_by_ids_rewrites_only_touched(spark, tmp_path):
     )
     before = _bucket_files(c._data_path())
     c.delete(ids=["3"])
-    after = _bucket_files(c._data_path())
-    changed = [b for b in before if before[b] != after.get(b)]
-    assert len(changed) == 1
+    assert _bucket_files(c._data_path()) == before
+    assert _log_batches(c) == ["__batch=0"]
     assert c.count() == 63
     with pytest.raises(KeyError):
         c.get_by_id("3")
 
 
 def test_bucketed_delete_empties_whole_bucket(spark, tmp_path):
-    """Deleting EVERY id in a bucket must remove the bucket dir — dynamic
-    overwrite alone would leave the old files (and rows) behind."""
+    """Deleting EVERY id in a bucket must remove the bucket dir at the
+    fold — dynamic overwrite alone would leave the old files (and rows)
+    behind."""
     db = DB.new_persistent(spark, str(tmp_path / "db5"))
     c = db.create_collection("kb", n_buckets=4)
     c.add_documents(
@@ -120,4 +127,8 @@ def test_bucketed_delete_empties_whole_bucket(spark, tmp_path):
     assert bucket_ids
     c.delete(ids=bucket_ids)
     assert c.count() == 40 - len(bucket_ids)
+    assert set(c.list_ids()) == {str(i) for i in range(40)} - set(bucket_ids)
+    c.compact()
+    assert not os.path.exists(os.path.join(c._data_path(), f"bucket={some_bucket}"))
+    assert _log_batches(c) == []
     assert set(c.list_ids()) == {str(i) for i in range(40)} - set(bucket_ids)

@@ -371,6 +371,61 @@ def round_trips(spark, monkeypatch):
     return count
 
 
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(action)``: the Spark jobs ``action()`` runs from the
+    calling thread, counted through a job group (the thread-local
+    property broadcast jobs inherit) once the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(action) -> int:
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
+def test_collection_calls_run_few_spark_jobs(spark, tmp_path, spark_jobs):
+    """Job counts per call on a persistent bucketed collection (the
+    parent layout ran 3 for a plain query, 2 for ``get_by_id``, 8 for a
+    100-row upsert and 9 for a 10-id delete).  A warm snapshot answers a
+    query in its one scan job with an empty or a non-empty log (the
+    count is memoized and a small log's ids are a literal set, not a
+    broadcast join); a point read is one job; a write is one job to
+    append its batch and one to re-read the log."""
+    from chromem_go_spark import Collection
+
+    def docs(ids, tag):
+        return spark.createDataFrame(
+            [(f"d{i}", {"tag": tag}, [float(i % 7), 1.0, float(i % 3)], f"{tag} {i}")
+             for i in ids],
+            "id string, metadata map<string,string>, embedding array<float>, "
+            "content string",
+        )
+
+    c = Collection(spark, "jobs", persist_dir=str(tmp_path / "c"), n_buckets=8)
+    c.add_df(docs(range(1000), "base"))
+    q = [1.0, 0.5, 0.25]
+    c.query_embedding(q, 5).collect()  # warm: the snapshot's count
+    assert spark_jobs(lambda: c.query_embedding(q, 5).collect()) <= 1
+    assert spark_jobs(lambda: c.get_by_id("d7")) <= 1
+    assert spark_jobs(lambda: c.add_df(docs(range(950, 1050), "new"))) <= 2
+    c.query_embedding(q, 5).collect()
+    assert spark_jobs(lambda: c.query_embedding(q, 5).collect()) <= 1
+    assert spark_jobs(lambda: c.get_by_id("d1001")) <= 1
+    assert spark_jobs(lambda: c.delete(ids=[f"d{i}" for i in range(10)])) <= 2
+    assert c.count() == 1040
+
+
 def test_signature_projections_build_in_few_jvm_round_trips(docs, round_trips):
     """The wide MinHash-lane / LSH-band and SimHash vote projections are
     built as SQL text parsed once: as loops of ``F.*`` calls every
