@@ -16,7 +16,7 @@ The streaming state tables also share their replay-idempotent row I/O:
 :func:`read_history` (:func:`read_live` minus the current batch).
 Append-only logs (a persistent collection's write log) commit each
 batch whole with :func:`commit_batch` (temp-write + rename) and list
-what is committed with :func:`committed_batches`.
+what is committed, with row counts, with :func:`batch_files`.
 
 Crash consistency of the fold — stage-then-promote, never overwriting
 live data:
@@ -239,42 +239,50 @@ def write_batch(df, table_path: str, batch_id: int) -> None:
     )
 
 
-def committed_batches(spark: SparkSession, table_path: str) -> list[int]:
-    """Ascending ids of the committed ``__batch=N`` partitions (N >= 0)
-    under ``table_path``; ``[]`` when the table does not exist."""
-    _, fs, hpath = _fs(spark, table_path)
-    if not fs.exists(hpath):
-        return []
-    names = [st.getPath().getName() for st in fs.listStatus(hpath)]
-    return sorted(
-        b for b in (_batch_id(n) for n in names if n.startswith("__batch="))
-        if b >= 0
-    )
+def batch_files(spark: SparkSession, table_path: str) -> dict[int, list[tuple[str, int]]]:
+    """The committed ``__batch=N`` partitions (N >= 0) under
+    ``table_path`` in ascending order, each with its parquet data files
+    and their row counts (read from the footers: no Spark job); ``{}``
+    when there are none.  Staging dirs (:func:`commit_batch`) never
+    match."""
+    import pyarrow.parquet as pq
+
+    jvm, fs, _ = _fs(spark, table_path)
+    glob = jvm.org.apache.hadoop.fs.Path(table_path, "__batch=*/*.parquet")
+    out: dict[int, list[tuple[str, int]]] = {}
+    for st in fs.globStatus(glob) or []:
+        f = st.getPath()
+        b = _batch_id(f.getParent().getName())
+        if b >= 0:
+            uri = f.toString()
+            out.setdefault(b, []).append((uri, pq.read_metadata(uri).num_rows))
+    return dict(sorted(out.items()))
 
 
-def commit_batch(df, table_path: str, batch_id: int, compression: str) -> None:
-    """Append ``df`` as the NEW partition ``__batch=<batch_id>`` by
-    temp-write + rename: the rows go to a staging dir whose name (a
-    leading ``_`` and no ``=``) keeps it out of every parquet scan, and
-    one directory rename publishes the whole batch.  A crash before the
-    rename leaves only staging, which readers never see and the next
-    commit clears.  Callers serialize commits (a write lock); a
-    committed batch is never replaced."""
-    if int(batch_id) < 0:
-        raise ValueError(f"batch_id must be >= 0 (got {batch_id})")
+def commit_batch(df, table_path: str, compression: str) -> int:
+    """Append ``df`` as a NEW partition ``__batch=N`` (N one past the
+    newest) by temp-write + rename and return N: the rows go to a
+    staging dir whose name (a leading ``_`` and no ``=``) keeps it out
+    of every parquet scan, and one directory rename publishes the whole
+    batch.  A crash before the rename leaves only staging, which readers
+    never see and the next commit clears.  Callers serialize commits (a
+    write lock); a committed batch is never replaced."""
     jvm, fs, hpath = _fs(df.sparkSession, table_path)
     Path = jvm.org.apache.hadoop.fs.Path
-    dst = Path(table_path, f"__batch={int(batch_id)}")
-    if fs.exists(dst):
-        raise IOError(f"{dst} is already committed")
+    batch_id = 0
     if fs.exists(hpath):
         for st in fs.listStatus(hpath):
-            if st.getPath().getName().startswith(_STAGING):
+            name = st.getPath().getName()
+            if name.startswith(_STAGING):
                 fs.delete(st.getPath(), True)
-    stage = f"{table_path}/{_STAGING}{int(batch_id)}"
+            elif name.startswith("__batch="):
+                batch_id = max(batch_id, _batch_id(name) + 1)
+    stage = f"{table_path}/{_STAGING}{batch_id}"
     df.write.mode("overwrite").option("compression", compression).parquet(stage)
+    dst = Path(table_path, f"__batch={batch_id}")
     if not fs.rename(Path(stage), dst):
         raise IOError(f"could not commit {stage} as {dst}")
+    return batch_id
 
 
 def _heal_manifest(spark: SparkSession, table_path: str) -> None:

@@ -19,10 +19,13 @@ Scale notes (the part that matters at 100 TB):
   by the logged ids (a literal id set, or one broadcast anti-join for a
   log past ``SMALL_LOG_ROWS``); an empty log reads as the base alone.
 - :meth:`Collection.compact` folds the log into the base (union +
-  last-writer-wins ``row_number``, dynamic partition overwrite of the
-  touched buckets only); a write runs it once the log outgrows
-  ``LOG_FOLD_FRACTION`` of the base.  On a lakehouse deployment the
-  same contract is a Delta MERGE (``table_format="delta"``).
+  last-writer-wins ``row_number`` over the touched buckets only); a
+  write runs it once the log outgrows ``LOG_FOLD_FRACTION`` of the
+  base.  The folded buckets (a flat base whole) are written beside the
+  base and swapped in by renames, and the folded batches are dropped
+  only after the swap commits, so a fold killed anywhere loses no row.
+  On a lakehouse deployment the same contract is a Delta MERGE
+  (``table_format="delta"``).
 - Queries never collect the corpus: filter -> score -> TakeOrderedAndProject
   (single query) or block-matrix partial top-k (batch).
 - The pre-filter runs below the similarity projection, so Parquet row-group
@@ -60,12 +63,12 @@ from .operators.filters import validate_where_document
 EmbeddingFunc = Callable[[str], Sequence[float]]
 
 # Default hash-bucket count for persistent collections.  A fold rewrites
-# only the buckets holding the ids it folds (dynamic partition
-# overwrite), and a point lookup scans one bucket, so bucketing is the
-# DEFAULT rather than opt-in.  64 buckets keeps tiny local collections
-# cheap while bounding the fold's rewrite unit at scale; pass n_buckets
-# explicitly to size for the deployment, or 0 to opt out (flat
-# single-directory base, which a fold rewrites whole).
+# only the buckets holding the ids it folds, and a point lookup scans
+# one bucket, so bucketing is the DEFAULT rather than opt-in.  64
+# buckets keeps tiny local collections cheap while bounding the fold's
+# rewrite unit at scale; pass n_buckets explicitly to size for the
+# deployment, or 0 to opt out (flat single-directory base, which a fold
+# rewrites whole).
 DEFAULT_N_BUCKETS = 64
 
 #: A write folds the log into the base once the log holds more rows
@@ -73,16 +76,18 @@ DEFAULT_N_BUCKETS = 64
 #: rows: every log row is read by every query's anti-join and union,
 #: and a fold costs about one rewrite of the touched buckets.
 LOG_FOLD_FRACTION = 0.25
-#: ... or once it holds more batches than this (each is a directory
-#: every snapshot load lists and reads).
-LOG_FOLD_MAX_BATCHES = 64
 #: A log of at most this many rows is handled whole: its newest-row
 #: window runs in one task with no shuffle, and the snapshot drops its
 #: ids from the base with a literal id set rather than a broadcast
 #: anti-join, which costs every query a broadcast job (measured on a
 #: 5,000 x 128 base: a literal set of 2,048 ids scans as fast as the
-#: base alone, one of 10,000 as slowly as the broadcast join).
+#: base alone, one of 10,000 as slowly as the broadcast join).  Only
+#: the literal side is measured end to end; the broadcast side keeps a
+#: log that outgrows it off the driver.
 SMALL_LOG_ROWS = 2048
+# Siblings of data.parquet a base swap uses (see _publish_base): the
+# new rows, the units they replace, and those units once committed.
+_STAGED, _PREVIOUS, _RETIRED = ".staged", ".previous", ".retired"
 
 _DOC_COLS = DOCUMENT_SCHEMA.fieldNames()
 # one log row: a document version, or an id-only tombstone
@@ -111,9 +116,8 @@ class Collection:
         """``n_buckets``: hash-bucketed base for a persistent collection
         (``bucket=N`` partition dirs on ``xxhash64(id) % n``).  Writes
         append to the log whatever the layout; bucketing bounds what a
-        fold rewrites to the buckets holding the folded ids (dynamic
-        partition overwrite) instead of the whole base, and a point
-        lookup scans one bucket.
+        fold rewrites to the buckets holding the folded ids instead of
+        the whole base, and a point lookup scans one bucket.
 
         ``table_format``: ``"parquet"`` (default — base + write log +
         lock-file writer serialization) or ``"delta"`` (native MERGE /
@@ -141,7 +145,13 @@ class Collection:
         self._text_index: DataFrame | None = None
         self._text_index_n = 3
         self._text_index_src: DataFrame | None = None
+        # base rows as of the last base write (see _base_rows)
+        self._n_base: int | None = None
         if persist_dir:
+            if os.path.exists(self._data_path() + _PREVIOUS):
+                # a base swap cut short by a crash, or still running
+                with self._write_lock():
+                    self._heal_base()
             self._load_snapshot()
 
     @property
@@ -210,32 +220,36 @@ class Collection:
             *_DOC_COLS, F.lit(False).alias("__tomb"), F.lit(0).alias("__src")
         ).unionByName(latest.select(*_DOC_COLS, "__tomb", F.lit(1).alias("__src")))
 
-    def _log_files(self, batches: Sequence[int]) -> list[str]:
-        log = self._log_path()
-        return [
-            f
-            for b in batches
-            for f in _parquet_files(os.path.join(log, f"__batch={b}"))
-        ]
-
-    def _read_log(self, batches: Sequence[int]) -> DataFrame:
-        """The newest log row per id over ``batches``, pinned once."""
-        log = self._log_path()
+    def _read_log(self, log: Mapping, small: bool) -> DataFrame:
+        """The newest row per id over the ``log`` listing, pinned once."""
         rows = (
             self.spark.read.schema(_LOG_SCHEMA)
-            .option("basePath", log)
-            .parquet(*(os.path.join(log, f"__batch={b}") for b in batches))
+            .option("basePath", self._log_path())
+            .parquet(*(f for files in log.values() for f, _ in files))
         )
-        if _footer_rows(self._log_files(batches)) <= SMALL_LOG_ROWS:
+        if small:
             rows = rows.coalesce(1)  # one partition: the window needs no shuffle
         return materialize(self._newest(rows, "__batch", "__seq"))
 
-    def _load_snapshot(self) -> None:
-        """Point the snapshot at what is on disk.  With an empty log the
-        view is the base scan itself; otherwise it is the base minus the
-        logged ids (a literal id set read on the driver, or a broadcast
-        anti-join past ``SMALL_LOG_ROWS``) plus the log's newest live
-        rows, the log-latest frame computed here once."""
+    def _check_base(self, log: Mapping) -> bool:
+        """Whether the base exists; a missing base with a non-empty log
+        is damage, never an empty collection, so it raises."""
+        if os.path.exists(self._data_path()):
+            return True
+        if log:
+            raise IOError(
+                f"{self._data_path()} is missing but its write log holds "
+                f"batches {list(log)}"
+            )
+        return False
+
+    def _load_snapshot(self, log: Mapping | None = None) -> None:
+        """Point the snapshot at what is on disk (``log``: the caller's
+        listing of the write log, when it has one).  With an empty log
+        the view is the base scan itself; otherwise it is the base minus
+        the logged ids (a literal id set read on the driver, or a
+        broadcast anti-join past ``SMALL_LOG_ROWS``) plus the log's
+        newest live rows, the log-latest frame computed here once."""
         self._base_raw = self._log_latest = None
         path = self._data_path()
         if self.table_format == "delta":
@@ -246,19 +260,20 @@ class Collection:
                 else None
             )
             return
-        if not os.path.exists(path):
+        if log is None:
+            log = batchstate.batch_files(self.spark, self._log_path())
+        if not self._check_base(log):
             self._df = None
             return
         self.spark.catalog.refreshByPath(path)
         self._base_raw = self._base_frame()
         view = self._base_raw.select(*_DOC_COLS)
-        batches = batchstate.committed_batches(self.spark, self._log_path())
-        if batches:
-            self._log_latest = latest = self._read_log(batches)
-            files = self._log_files(batches)
-            if _footer_rows(files) > SMALL_LOG_ROWS:
+        if log:
+            small = _log_rows(log) <= SMALL_LOG_ROWS
+            self._log_latest = latest = self._read_log(log, small)
+            if not small:
                 view = view.join(F.broadcast(latest.select("id")), "id", "left_anti")
-            elif ids := _parquet_ids(files):
+            elif ids := _parquet_ids(f for files in log.values() for f, _ in files):
                 view = view.filter(F.expr(f"id NOT IN ({_sql_strings(ids)})"))
             view = view.unionByName(latest.filter(~F.col("__tomb")).select(*_DOC_COLS))
         self._df = view
@@ -270,6 +285,14 @@ class Collection:
         if self.persist_dir:
             return write_lock(self.persist_dir)
         return contextlib.nullcontext()
+
+    @contextlib.contextmanager
+    def _locked(self):
+        """The write lock, with a base swap a crashed writer cut short
+        rolled back first (:meth:`_heal_base`)."""
+        with self._write_lock():
+            self._heal_base()
+            yield
 
     def _upsert(self, new: DataFrame) -> None:
         """Last-writer-wins upsert by id (reference collection.go:280).
@@ -296,24 +319,24 @@ class Collection:
             self._load_snapshot()
             self._write_meta()
             return
-        with self._write_lock():
+        with self._locked():
             self._append(new, tombstones=False)
 
     def _append(self, rows: DataFrame, tombstones: bool) -> None:
         """One locked write.  The first write into a collection with no
         base writes the base; every later one appends ``rows`` (id-only
         ``tombstones`` for a delete) to the log as one batch, folds the
-        log once it has outgrown the base (:meth:`_fold_due`), and
-        re-reads the snapshot.  Within a batch the later row of an id
-        wins."""
+        log once it holds more than ``LOG_FOLD_FRACTION`` of the base's
+        rows, and re-reads the snapshot.  Within a batch the later row
+        of an id wins."""
         ordered = rows.withColumn("__seq", F.monotonically_increasing_id())
+        log_path = self._log_path()
+        log: dict = {}
         if not os.path.exists(self._data_path()):
+            self._check_base(batchstate.batch_files(self.spark, log_path))
             if not tombstones:
-                self._write_base(self._newest(ordered, "__seq").drop("__seq"))
+                self._publish_base(self._newest(ordered, "__seq").drop("__seq"))
         else:
-            log = self._log_path()
-            batches = batchstate.committed_batches(self.spark, log)
-            batches.append(batches[-1] + 1 if batches else 0)
             if tombstones:
                 ordered = ordered.select(
                     "id",
@@ -323,62 +346,97 @@ class Collection:
                 )
             batchstate.commit_batch(
                 ordered.select(*_DOC_COLS, F.lit(tombstones).alias("__tomb"), "__seq"),
-                log, batches[-1], self._codec(),
+                log_path, self._codec(),
             )
-            if self._fold_due(batches):
-                self._fold(batches)
-        self._load_snapshot()
+            log = batchstate.batch_files(self.spark, log_path)
+            if _log_rows(log) > LOG_FOLD_FRACTION * self._base_rows():
+                self._fold(log)
+                log = {}
+        self._load_snapshot(log)
         self._write_meta()
 
-    def _write_base(self, df: DataFrame) -> None:
-        """Write document rows into the base.  A bucketed base replaces
-        only the buckets ``df`` has rows in (dynamic partition
-        overwrite); a flat one is replaced whole."""
-        out = df.select(*_DOC_COLS)
+    def _base_rows(self) -> int:
+        """Rows in the base as of its last write, which keeps the count
+        in collection.json (every write holds the lock, so the file is
+        current); counted from the base's parquet footers when absent.
+        It only times folds, so a count a crash left stale is harmless."""
+        try:
+            with open(os.path.join(self.persist_dir, "collection.json")) as f:
+                self._n_base = json.load(f).get("base_rows")
+        except (OSError, ValueError):
+            self._n_base = None
+        if self._n_base is None:
+            self._n_base = _footer_rows(_parquet_files(self._data_path()))
+        return self._n_base
+
+    def _publish_base(self, rows: DataFrame, buckets: Sequence[int] = ()) -> None:
+        """Write document ``rows`` as the base, or on an existing
+        bucketed base as its ``buckets`` (a bucket left with no rows is
+        dropped).  The rows are written to a staged sibling; each unit
+        they replace (a bucket dir, or a flat base whole) is moved aside
+        into ``.previous`` and its staged successor moved in; renaming
+        ``.previous`` to ``.retired`` commits.  A crash before that
+        commit is rolled back by :meth:`_heal_base`, and a fold drops
+        its log batches only after it, so the rows are never lost."""
+        base = self._data_path()
+        staged, prev, retired = (base + s for s in (_STAGED, _PREVIOUS, _RETIRED))
+        out = rows.select(*_DOC_COLS)
         if self.n_buckets:
             out = out.withColumn("bucket", self._bucket_expr())
         w = out.write.mode("overwrite").option("compression", self._codec())
-        if self.n_buckets:
-            w = w.option("partitionOverwriteMode", "dynamic").partitionBy("bucket")
-        w.parquet(self._data_path())
+        (w.partitionBy("bucket") if self.n_buckets else w).parquet(staged)
+        if self.n_buckets and os.path.exists(base):
+            os.mkdir(prev)
+            for d in (f"bucket={b}" for b in buckets):
+                _move(os.path.join(base, d), os.path.join(prev, d))
+                _move(os.path.join(staged, d), os.path.join(base, d))
+        else:
+            _move(base, prev)
+            _move(staged, base)
+        _move(prev, retired)  # the commit point
+        _rmtree(retired)
+        _rmtree(staged)
+        self._n_base = _footer_rows(_parquet_files(base))
 
-    def _fold_due(self, batches: Sequence[int]) -> bool:
-        if len(batches) > LOG_FOLD_MAX_BATCHES:
-            return True
-        log_rows = _footer_rows(self._log_files(batches))
-        base_rows = _footer_rows(_parquet_files(self._data_path()))
-        return log_rows > LOG_FOLD_FRACTION * base_rows
+    def _heal_base(self) -> None:
+        """Under the write lock: roll back a base swap cut short before
+        its commit (each moved-aside unit goes back; the log still holds
+        every batch it folded) and clear what a swap left behind."""
+        base = self._data_path()
+        staged, prev, retired = (base + s for s in (_STAGED, _PREVIOUS, _RETIRED))
+        if os.path.exists(prev):
+            if self.n_buckets:
+                for d in os.listdir(prev):
+                    _rmtree(os.path.join(base, d))
+                    os.rename(os.path.join(prev, d), os.path.join(base, d))
+                os.rmdir(prev)
+            else:
+                _rmtree(base)
+                os.rename(prev, base)
+        _rmtree(retired)
+        _rmtree(staged)
 
-    def _fold(self, batches: Sequence[int]) -> None:
-        """Fold the log ``batches`` into the base: the union of the
+    def _fold(self, log: Mapping) -> None:
+        """Fold the ``log`` listing into the base: the union of the
         touched base rows and the log's newest rows keeps the newest row
         per id (``row_number``), tombstoned ids drop out, and the result
         replaces the touched buckets (a flat base whole).  Replaying a
         folded batch onto the base changes no row, so a fold killed
         after its base commit reads — and re-folds — to the same rows."""
-        latest = self._read_log(batches)
+        latest = self._read_log(log, _log_rows(log) <= SMALL_LOG_ROWS)
         existing = self._base_frame()
+        touched: list = []
         if self.n_buckets:
             touched = [
                 r[0] for r in latest.select(self._bucket_expr()).distinct().collect()
             ]
             existing = existing.filter(F.col("bucket").isin(touched))
         merged = self._newest(self._base_then_log(existing, latest), "__src")
-        # pinned: the write below overwrites files this plan reads
-        merged = materialize(merged.filter(~F.col("__tomb")).select(*_DOC_COLS))
-        self._write_base(merged)
-        if self.n_buckets:
-            # dynamic overwrite only replaces buckets present in the
-            # output: a bucket left with no rows is dropped explicitly
-            kept = {
-                r[0] for r in merged.select(self._bucket_expr()).distinct().collect()
-            }
-            for b in set(touched) - kept:
-                _rmtree(os.path.join(self._data_path(), f"bucket={b}"))
+        self._publish_base(merged.filter(~F.col("__tomb")), touched)
         # oldest first: a fold killed part-way leaves the newest batches,
         # and the folded base plus any newest-suffix of its log reads as
         # the same rows
-        for b in batches:
+        for b in log:
             batchstate.drop_batch_partition(self.spark, self._log_path(), b)
 
     def compact(self) -> bool:
@@ -388,27 +446,31 @@ class Collection:
         in-memory collections have no log."""
         if not self.persist_dir or self.table_format == "delta":
             return False
-        with self._write_lock():
-            batches = batchstate.committed_batches(self.spark, self._log_path())
-            if batches:
-                self._fold(batches)
-            self._load_snapshot()
-        return bool(batches)
+        with self._locked():
+            log = batchstate.batch_files(self.spark, self._log_path())
+            if self._check_base(log) and log:
+                self._fold(log)
+                self._write_meta()
+            self._load_snapshot({})
+        return bool(log)
 
     def _write_meta(self) -> None:
         if not self.persist_dir:
             return
         os.makedirs(self.persist_dir, exist_ok=True)
-        with open(os.path.join(self.persist_dir, "collection.json"), "w") as f:
+        meta_file = os.path.join(self.persist_dir, "collection.json")
+        with open(meta_file + ".tmp", "w") as f:
             json.dump(
                 {
                     "name": self.name,
                     "metadata": self.metadata,
                     "n_buckets": self.n_buckets,
                     "table_format": self.table_format,
+                    "base_rows": self._n_base,
                 },
                 f,
             )
+        os.replace(meta_file + ".tmp", meta_file)
 
     # ---------------- ingest (reference collection.go:131-293) ----------------
 
@@ -567,7 +629,7 @@ class Collection:
             raise ValueError("must provide either where, whereDocument or ids")
         validate_where_document(where_document)
         if self.persist_dir and self.table_format == "parquet":
-            with self._write_lock():
+            with self._locked():
                 if where or where_document:
                     self._load_snapshot()  # the latest committed rows
                     gone = self.df.filter(self._delete_predicate(
@@ -1532,7 +1594,12 @@ def _footer_rows(files: Sequence[str]) -> int:
     return sum(pq.read_metadata(f).num_rows for f in files)
 
 
-def _parquet_ids(files: Sequence[str]) -> list[str]:
+def _log_rows(log: Mapping) -> int:
+    """Rows in a :func:`batchstate.batch_files` listing."""
+    return sum(n for files in log.values() for _, n in files)
+
+
+def _parquet_ids(files) -> list[str]:
     """The distinct ``id`` values in parquet ``files``, read on the
     driver (no Spark job), sorted."""
     import pyarrow.parquet as pq
@@ -1546,3 +1613,9 @@ def _rmtree(path: str) -> None:
     import shutil
 
     shutil.rmtree(path, ignore_errors=True)
+
+
+def _move(src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst`` if ``src`` exists."""
+    if os.path.exists(src):
+        os.rename(src, dst)

@@ -108,10 +108,11 @@ def _hash_sample(
     ~sample_size rows uniformly wherever they live. ONE count + ONE
     collect — shared by the coarse quantizer and the codec trainer.
 
-    The collected rows are sorted by ``(xxhash64(id), id)`` on the
-    driver before the first ``sample_size`` are kept, so the sample —
-    and every centroid seeded from it — is a function of the rows and
-    the seed alone, never of the file or partition layout."""
+    The kept rows are the first ``sample_size`` in ``(xxhash64(id),
+    id)`` order (a bounded TakeOrderedAndProject, never more than
+    ``sample_size`` rows on the driver), so the sample — and every
+    centroid seeded from it — is a function of the rows and the seed
+    alone, never of the file or partition layout."""
     n_rows = df.count()
     if n_rows == 0:
         # training a quantizer on nothing is meaningless, and numpy's
@@ -128,18 +129,18 @@ def _hash_sample(
     )
     cand = keyed
     if n_rows > sample_size:
-        # p rounds down, so the expected candidate count is <= sample_size
         p = max(1, int(997 * sample_size / n_rows))
         cand = keyed.filter(F.pmod("__h", F.lit(997)) < p)
-    rows = cand.collect()
-    if not rows:
-        # degenerate id distribution: the modular hash filter selected
-        # nothing on a NON-empty frame.  This is a sampling anomaly, not
-        # an empty corpus — fall back to the hash-ordered head of the
-        # unfiltered frame rather than mis-signal emptiness (r11, ADVICE)
-        rows = keyed.orderBy("__h", "__id").limit(sample_size).collect()
-    rows.sort(key=lambda r: (r[0], r[1] or ""))
-    return np.asarray([r[2] for r in rows[:sample_size]], dtype=np.float64)
+
+    def head(frame: DataFrame) -> list:
+        return frame.orderBy("__h", "__id").limit(sample_size).collect()
+
+    # an empty head is a degenerate id distribution: the modular hash
+    # filter selected nothing on a NON-empty frame.  That is a sampling
+    # anomaly, not an empty corpus — fall back to the head of the
+    # unfiltered frame rather than mis-signal emptiness (r11, ADVICE)
+    rows = head(cand) or head(keyed)
+    return np.asarray([r[2] for r in rows], dtype=np.float64)
 
 
 def _unit_rows(mat: np.ndarray) -> np.ndarray:

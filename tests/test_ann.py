@@ -34,8 +34,8 @@ def test_full_probe_is_exact(emb, index):
 
 @pytest.mark.parametrize("sample_size", [64, 50_000])
 def test_ivf_centroids_do_not_depend_on_partitioning(emb, sample_size):
-    """The training sample is sorted by ``(xxhash64(id), id)`` on the
-    driver, so one frame split into 1 or 7 partitions trains the same
+    """The training sample is the head of the rows in ``(xxhash64(id),
+    id)`` order, so one frame split into 1 or 7 partitions trains the same
     centroids, whether the hash filter thins it (64) or every row is
     sampled (50,000)."""
     built = [
@@ -46,6 +46,29 @@ def test_ivf_centroids_do_not_depend_on_partitioning(emb, sample_size):
         for p in (1, 7)
     ]
     assert np.array_equal(*built)
+
+
+def test_hash_sample_stays_within_sample_size(spark):
+    """A sample far smaller than the corpus clamps the hash filter to
+    its floor (p = 1 of 997), which passes about n / 997 rows; the
+    driver still receives at most ``sample_size`` of them, the same
+    ones however the frame is partitioned."""
+    n, sample_size = 20_000, 2
+    assert 997 * sample_size < n  # p = max(1, int(997 * 2 / 20000)) = 1
+    df = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("embedding"),
+    )
+    passed = df.filter(
+        F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.lit(997)) < 1
+    ).count()
+    assert passed > sample_size
+    samples = [
+        A._hash_sample(df.repartition(p), "embedding", "vec_id", sample_size)
+        for p in (1, 7)
+    ]
+    assert samples[0].shape == (sample_size, 2)
+    assert np.array_equal(*samples)
 
 
 def test_partial_probe_recall(emb, index):

@@ -1,10 +1,12 @@
 """The log-structured layout of a persistent parquet collection: an
 immutable base plus an append-only log of ``__batch=N`` directories
 (upserted rows and id-only tombstones), folded into the base by
-``compact()`` or once the log outgrows the base."""
+``compact()`` or once the log outgrows the base by a swap of base
+directories."""
 
 from __future__ import annotations
 
+import json
 import os
 import random
 
@@ -36,7 +38,7 @@ def _model_rows(model: dict) -> dict:
 
 
 def _batches(c: Collection) -> list[int]:
-    return batchstate.committed_batches(c.spark, c._log_path())
+    return list(batchstate.batch_files(c.spark, c._log_path()))
 
 
 def _open(spark, path, n_buckets):
@@ -175,6 +177,77 @@ def test_fold_killed_after_base_commit_replays_to_same_rows(
     assert _rows(_open(spark, path, 4)) == want
 
 
+def _siblings(path: str) -> list[str]:
+    """What a base swap left beside ``data.parquet``."""
+    return sorted(n for n in os.listdir(path) if n.startswith("data.parquet."))
+
+
+@pytest.mark.parametrize(
+    "n_buckets, kill_at",
+    [(0, 0), (0, 1), (0, "commit"), (4, 0), (4, 1), (4, 3), (4, "commit")],
+)
+def test_fold_killed_during_base_swap_loses_no_row(
+    spark, tmp_path, monkeypatch, n_buckets, kill_at
+):
+    """A fold killed while it swaps the new base in — with the new rows
+    staged but nothing moved (0), with the old base or a bucket moved
+    aside but its successor not yet in (1), part-way through the bucket
+    swaps (3), or just before the commit rename — leaves a table that
+    reopens as the same rows: the swap rolls back and the log still
+    holds every batch.  The next fold then completes and leaves nothing
+    behind."""
+    path = str(tmp_path / "c")
+    c = _open(spark, path, n_buckets)
+    c.add_documents([Document(str(i), {}, [1.0, float(i)], f"doc {i}") for i in range(40)])
+    c.add_documents([Document(str(i), {"v": "2"}, [0.0, 1.0], f"doc {i} v2")
+                     for i in (1, 6, 11)] + [Document("new", {}, [1.0, 1.0], "log only")])
+    c.delete(ids=["2", "7", "new"])
+    want = _rows(c)
+    assert _batches(c) == [0, 1]
+
+    rename, calls = os.rename, []
+
+    def dying(src, dst):
+        if str(src).startswith(c._data_path()):  # not the lock file's
+            if kill_at == len(calls) or (
+                kill_at == "commit" and src.endswith(C._PREVIOUS)
+            ):
+                raise RuntimeError("killed")
+            calls.append(src)
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", dying)
+    with pytest.raises(RuntimeError, match="killed"):
+        c.compact()
+    monkeypatch.setattr(os, "rename", rename)
+    assert _batches(c) == [0, 1]
+
+    reopened = _open(spark, path, n_buckets)
+    assert "data.parquet" + C._PREVIOUS not in _siblings(path)
+    assert _rows(reopened) == want
+    assert reopened.compact()
+    assert _batches(reopened) == [] and _siblings(path) == []
+    assert _rows(reopened) == want
+    assert _rows(_open(spark, path, n_buckets)) == want
+
+
+@pytest.mark.parametrize("n_buckets", [0, 4])
+def test_missing_base_with_a_log_is_an_error(spark, tmp_path, n_buckets):
+    """A base gone while its log still holds batches is damage: neither
+    a reopen nor a write may read it as an empty collection (a write
+    would start a new base the old log then overwrites)."""
+    path = str(tmp_path / "c")
+    c = _open(spark, path, n_buckets)
+    c.add_documents([Document(str(i), {}, [1.0, float(i)], f"doc {i}") for i in range(8)])
+    c.add_document(Document("9", {}, [0.0, 1.0], "doc 9"))
+    C._rmtree(c._data_path())
+    with pytest.raises(IOError, match="write log holds batches"):
+        _open(spark, path, n_buckets)
+    with pytest.raises(IOError, match="write log holds batches"):
+        c.add_document(Document("10", {}, [0.0, 1.0], "doc 10"))
+    assert not os.path.exists(c._data_path())
+
+
 def test_get_by_id_reads_log_rows_and_tombstones(spark, tmp_path):
     path = str(tmp_path / "c")
     c = _open(spark, path, 8)
@@ -195,17 +268,28 @@ def test_get_by_id_reads_log_rows_and_tombstones(spark, tmp_path):
         c.get_by_id("new")
 
 
-def test_write_folds_once_log_outgrows_base(spark, tmp_path):
+def test_write_folds_once_log_outgrows_base(spark, tmp_path, monkeypatch):
     """Writes append until the log holds more than LOG_FOLD_FRACTION of
-    the base's rows; the write that crosses it folds."""
-    c = _open(spark, str(tmp_path / "c"), 4)
+    the base's rows; the write that crosses it folds.  The base's row
+    count is kept from its last write (collection.json), so an append
+    lists no base file, also after a reopen; only the fold recounts."""
+    path = str(tmp_path / "c")
+    c = _open(spark, path, 4)
     c.add_documents([Document(str(i), {}, [1.0, float(i)], f"doc {i}") for i in range(16)])
+    walked = []
+    parquet_files = C._parquet_files
+    monkeypatch.setattr(C, "_parquet_files", lambda p: walked.append(p) or parquet_files(p))
     limit = C.LOG_FOLD_FRACTION * 16
     n = 0
     while n + 1 <= limit:
         c.add_document(Document(f"x{n}", {}, [0.0, 1.0], "x"))
         n += 1
         assert len(_batches(c)) == n
+        c = _open(spark, path, 4)
+    assert walked == []
     c.add_document(Document("last", {}, [0.0, 1.0], "x"))
     assert _batches(c) == []
+    assert walked == [c._data_path()]
     assert c.count() == 16 + n + 1
+    with open(os.path.join(path, "collection.json")) as f:
+        assert json.load(f)["base_rows"] == 16 + n + 1
