@@ -15,8 +15,9 @@ The streaming state tables also share their replay-idempotent row I/O:
 :func:`write_batch` (dynamic ``__batch`` partition overwrite) and
 :func:`read_history` (:func:`read_live` minus the current batch).
 Append-only logs (a persistent collection's write log) commit each
-batch whole with :func:`commit_batch` (temp-write + rename) and list
-what is committed, with row counts, with :func:`batch_files`.
+batch whole with :func:`commit_batch` (temp-write + rename), list what
+is committed, with row counts, with :func:`batch_files` and read it
+with :func:`read_batches`.
 
 Crash consistency of the fold — stage-then-promote, never overwriting
 live data:
@@ -257,6 +258,19 @@ def batch_files(spark: SparkSession, table_path: str) -> dict[int, list[tuple[st
             uri = f.toString()
             out.setdefault(b, []).append((uri, pq.read_metadata(uri).num_rows))
     return dict(sorted(out.items()))
+
+
+def read_batches(spark: SparkSession, table_path: str, batches, schema):
+    """The rows of the committed ``batches`` under ``table_path`` with
+    ``schema`` pinned (``__batch`` included).  The reader is given one
+    directory per batch, not each file: past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32)
+    paths Spark lists them with a job of its own."""
+    return (
+        spark.read.schema(schema)
+        .option("basePath", table_path)
+        .parquet(*(f"{table_path}/__batch={int(b)}" for b in batches))
+    )
 
 
 def commit_batch(df, table_path: str, compression: str) -> int:

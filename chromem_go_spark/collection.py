@@ -222,11 +222,7 @@ class Collection:
 
     def _read_log(self, log: Mapping, small: bool) -> DataFrame:
         """The newest row per id over the ``log`` listing, pinned once."""
-        rows = (
-            self.spark.read.schema(_LOG_SCHEMA)
-            .option("basePath", self._log_path())
-            .parquet(*(f for files in log.values() for f, _ in files))
-        )
+        rows = batchstate.read_batches(self.spark, self._log_path(), log, _LOG_SCHEMA)
         if small:
             rows = rows.coalesce(1)  # one partition: the window needs no shuffle
         return materialize(self._newest(rows, "__batch", "__seq"))
