@@ -48,7 +48,7 @@ def test_ivf_centroids_do_not_depend_on_partitioning(emb, sample_size):
     assert np.array_equal(*built)
 
 
-def test_hash_sample_stays_within_sample_size(spark):
+def test_hash_sample_stays_within_sample_size(spark, monkeypatch):
     """A sample far smaller than the corpus clamps the hash filter to
     its floor (p = 1 of 997), which passes about n / 997 rows; the
     driver still receives at most ``sample_size`` of them, the same
@@ -63,10 +63,16 @@ def test_hash_sample_stays_within_sample_size(spark):
         F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.lit(997)) < 1
     ).count()
     assert passed > sample_size
+    collected = []
+    collect = type(df).collect
+    monkeypatch.setattr(
+        type(df), "collect", lambda self: collected.append(len(r := collect(self))) or r
+    )
     samples = [
         A._hash_sample(df.repartition(p), "embedding", "vec_id", sample_size)
         for p in (1, 7)
     ]
+    assert collected and max(collected) <= sample_size
     assert samples[0].shape == (sample_size, 2)
     assert np.array_equal(*samples)
 
