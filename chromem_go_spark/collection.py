@@ -184,7 +184,24 @@ class Collection:
         return "gzip" if self.compress else "snappy"
 
     def _empty(self) -> DataFrame:
-        return self.spark.createDataFrame([], DOCUMENT_SCHEMA)
+        return self._local_documents([])
+
+    def _local_documents(self, rows: list[tuple]) -> DataFrame:
+        """``(id, metadata items, embedding, content)`` rows as a
+        ``DOCUMENT_SCHEMA`` frame built from an Arrow table: a local
+        relation, where ``createDataFrame`` over a Python list runs one
+        Python task per slice (1.35 CPU-s for 100 x 128 rows, against
+        0.32 through Arrow, on a 4-core host)."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(DOCUMENT_SCHEMA)
+        cols = list(zip(*rows)) or [()] * len(schema)
+        return self.spark.createDataFrame(
+            pa.Table.from_arrays(
+                [pa.array(col, f.type) for col, f in zip(cols, schema)], schema=schema
+            )
+        )
 
     @property
     def df(self) -> DataFrame:
@@ -482,8 +499,8 @@ class Collection:
                 if self.embedding_func is None:
                     raise ValueError("no embedding function configured")
                 emb = [float(x) for x in self.embedding_func(d.content)]
-            rows.append((d.id, dict(d.metadata or {}), emb, d.content))
-        df = self.spark.createDataFrame(rows, DOCUMENT_SCHEMA)
+            rows.append((d.id, list(dict(d.metadata or {}).items()), emb, d.content))
+        df = self._local_documents(rows)
         # Normalize-at-insert invariant (reference collection.go:266-276):
         # makes query-time cosine a plain dot product.
         return df.withColumn(

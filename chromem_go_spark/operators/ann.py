@@ -217,7 +217,7 @@ def _assign_clusters(
             )
             yield pdf
 
-    return df.mapInPandas(gen, out_schema)
+    return knn_ops.fit_python_stage(df).mapInPandas(gen, out_schema)
 
 
 def _kmeans_l2(sample: np.ndarray, k: int, seed: int = 42, n_iter: int = 15) -> np.ndarray:
@@ -405,7 +405,8 @@ class _CodedIVF:
     ) -> DataFrame:
         """Cluster-assigned vectors -> ``(id, cluster_id, codes)`` rows,
         one ``encode`` per Arrow batch (shared by build and append,
-        which must quantize identically)."""
+        which must quantize identically).  ``assigned`` is
+        :func:`_assign_clusters` output, already sized by its bytes."""
         encode = cls.encoder(**params)
 
         def gen(batches):
@@ -605,11 +606,9 @@ class _CodedIVF:
                     names=["query_id", id_col, "approx"],
                 )
 
-        cand = (
-            self.coded.filter(F.col("cluster_id").isin(probes))
-            .select(id_col, "codes")
-            .mapInArrow(scan, schema=out_schema)
-        )
+        cand = knn_ops.fit_python_stage(
+            self.coded.filter(F.col("cluster_id").isin(probes)).select(id_col, "codes")
+        ).mapInArrow(scan, schema=out_schema)
         shortlist = knn_ops.topk_per_query(cand, rr, "query_id", id_col, "approx")
         # exact re-rank: join original vectors by id (rerank rows per query)
         qdf = self.coded.sparkSession.createDataFrame(
@@ -952,7 +951,8 @@ class IVFIndex:
         of :func:`..knn.knn_block` scores each Arrow batch against all
         queries — masked so each query keeps only rows of its OWN
         probed cells, exactly the candidate set of a (query, cell)
-        probe join — then the one per-query top-k shuffle runs.
+        probe join — then the per-query top-k window runs (a shuffle,
+        unless the probed cells fit one kernel task).
 
         ``where`` is an optional metadata predicate Column over the
         index's carried columns, applied BELOW scoring (the batch analog
@@ -1461,7 +1461,7 @@ def cluster_embeddings(
             out["centroid_sim"] = np.max(sims, axis=1)
             yield out
 
-    return df.mapInPandas(gen, out_schema)
+    return knn_ops.fit_python_stage(df).mapInPandas(gen, out_schema)
 
 
 def cluster_summary(

@@ -51,6 +51,7 @@ from ..materialize import materialize
 
 from ..functions import text as T
 from ..functions import vector as V
+from .knn import fit_python_stage
 
 
 def exact_dedup(
@@ -614,43 +615,35 @@ def connected_components(
     # pair join runs twice (same fix the star variant carries;
     # measured there: +5-6 s at sf0.1).
     edges = edges.select(src_col, dst_col).transform(materialize)
+    # A self-loop per node: each node is its own neighbor, so one
+    # groupBy yields both its new label (the neighborhood min) and its
+    # old one (the label over its self-loop) — no second join to detect
+    # a change.
     und = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionByName(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
+        .unionByName(edges.select(F.col(src_col).alias("a"), F.col(src_col).alias("b")))
+        .unionByName(edges.select(F.col(dst_col).alias("a"), F.col(dst_col).alias("b")))
         .distinct()
         .transform(materialize)
     )
     labels = (
-        und.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
+        und.filter(F.col("a") == F.col("b"))
+        .select(F.col("a").alias("node"), F.col("a").alias("label"))
         .transform(materialize)
     )
     for _ in range(int(max_iter)):
-        neighbor_min = (
+        labels = (
             und.join(labels, und.b == labels.node)
-            .groupBy("a")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
-            .select(
-                "node",
-                F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
-                    "label"
-                ),
+            .groupBy(F.col("a").alias("node"))
+            .agg(
+                F.min("label").alias("label"),
+                F.min(F.when(F.col("a") == F.col("b"), F.col("label"))).alias("old"),
             )
+            .select("node", "label", (F.col("label") != F.col("old")).alias("changed"))
             .transform(materialize)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
+        if labels.filter("changed").limit(1).count() == 0:
             break
     return labels.select(F.col("node"), F.col("label").alias("component"))
 
@@ -1024,7 +1017,7 @@ def lsh_hyperplane_signatures(
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(gen, out_schema)
+    return fit_python_stage(df.select(id_col, vec_col)).mapInPandas(gen, out_schema)
 
 
 def embedding_neardup_pairs_lsh(

@@ -73,6 +73,30 @@ def knn_single(
     return scored.orderBy(F.desc(sim_col), F.col(id_col)).limit(int(k))
 
 
+# More partitions than Spark can hold: the size is Long.MAX_VALUE (no
+# stats) scaled by a projection, not a measured one.
+_MAX_PARTITIONS = 2**31 - 1
+
+
+def fit_python_stage(df: DataFrame) -> DataFrame:
+    """Size a NumPy kernel's input by its bytes: at most one partition
+    per ``spark.sql.files.openCostInBytes`` (Spark's bytes-equivalent of
+    a task's fixed cost) of the optimizer's size estimate.
+
+    A Python task costs its worker ~0.2 CPU-s before the kernel runs, and
+    a scan starts one task per file split, so unsized, a small batch
+    runs one Python task per core — AQE caps only shuffle partitions,
+    not the reference's ``min(NumCPU, nDocs)`` workers (query.go:91-97).
+    ``coalesce(n)`` is a no-op at or above the current partition count;
+    a frame without size stats is returned as is.  A one-partition
+    input reports ``SinglePartition``, so a per-query window after the
+    kernel needs no shuffle."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    cost = df.sparkSession._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    n = max(1, -(-size // max(1, int(cost))))
+    return df.coalesce(n) if n <= _MAX_PARTITIONS else df
+
+
 def topk_per_query(
     scored: DataFrame,
     k: int,
@@ -428,7 +452,9 @@ def _gemm_topk(
                 names=[query_id_col, id_col, sim_col],
             )
 
-    partial = docs.select(*cols).mapInArrow(score_batches, schema=out_schema)
+    partial = fit_python_stage(docs.select(*cols)).mapInArrow(
+        score_batches, schema=out_schema
+    )
     return topk_per_query(partial, kk, query_id_col, id_col, sim_col)
 
 

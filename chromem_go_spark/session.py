@@ -15,9 +15,10 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "chromem-go-spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
-    - AQE on: runtime partition coalescing + skew-join handling replace the
-      reference's hand-rolled ``min(NumCPU, nDocs)`` worker capping
-      (reference query.go:91-97).
+    - AQE on: runtime shuffle-partition coalescing + skew-join handling.
+      AQE does not size a scan, so the reference's ``min(NumCPU, nDocs)``
+      worker cap (reference query.go:91-97) is applied by each NumPy
+      kernel to its own input (``operators.knn.fit_python_stage``).
     - Arrow on: every pandas UDF / mapInPandas crossing is Arrow-batched.
     - shuffle partitions default to the local core count; on a real cluster
       this would be set to ~2-3x total cores (or left to AQE's coalescing).

@@ -1023,23 +1023,67 @@ def test_built_index_is_a_snapshot_of_its_collection(spark, tmp_path, kind, pers
 
 
 @pytest.mark.parametrize("persist", [True, False], ids=["stored", "pinned"])
-def test_served_search_batch_plan_is_one_kernel_over_cells(spark, tmp_path, persist):
+def test_served_search_batch_plan_is_one_kernel_over_cells(
+    spark, tmp_path, persist, open_cost
+):
     """A served IVF batch is one Python kernel over the cell table — no
     per-search cluster assignment (MapInPandas) and no probe join; a
-    stored index prunes the scan by ``cluster_id`` partition."""
+    stored index prunes the scan by ``cluster_id`` partition.  A small
+    cell table runs the kernel in one partition, so the per-query
+    window needs no shuffle; one that keeps several partitions (an
+    open cost of one byte) shuffles once for it."""
     c, _pdir = _lifecycle_coll(spark, tmp_path, f"plan_{persist}")
     idx = c.build_ann_index(n_clusters=4, persist=persist)
     qvecs = [c.embedding_func(t) for t in ("topic 1", "topic 2")]
-    df = idx.search_batch(["a", "b"], qvecs, 3, nprobe=1)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInArrow") == 1
-    assert "MapInPandas" not in plan and "Join" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
+    for exchanges in (0, 1):
+        if exchanges:
+            open_cost(1)
+        df = idx.search_batch(["a", "b"], qvecs, 3, nprobe=1)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInArrow") == 1
+        assert "MapInPandas" not in plan and "Join" not in plan
+        assert plan.count("Exchange hashpartitioning") == exchanges
     if persist:
         from chromem_go_spark.plans.explain import formatted_plan
 
         after = formatted_plan(df).split("PartitionFilters", 1)[1][:200]
         assert "cluster_id" in after
+
+
+def test_small_stored_search_batch_runs_one_python_task(spark, tmp_path, python_tasks):
+    """A stored index's cells span several files; a small batch over
+    them still runs its kernel in one Python task."""
+    c, _pdir = _lifecycle_coll(spark, tmp_path, "one_task")
+    idx = c.build_ann_index(n_clusters=4)
+    qvecs = [c.embedding_func(t) for t in ("topic 1", "topic 2", "topic 3")]
+    assert idx.assigned.rdd.getNumPartitions() > 1
+    df = idx.search_batch(["a", "b", "c"], qvecs, 3, nprobe=4)
+    rows = []
+    assert python_tasks(lambda: rows.extend(df.collect())) == 1
+    assert len(rows) == 9
+
+
+def test_search_batch_rows_do_not_depend_on_partitioning(index, open_cost, python_tasks):
+    """The IVF batch over one partition (sized to its bytes) and over
+    seven (an open cost of one byte keeps them all) gives the same
+    rows."""
+    from chromem_go_spark.materialize import materialize
+
+    qvecs = [index.centroids[i].tolist() for i in range(4)]
+    cells = materialize(index.assigned).repartition(7)
+    wide = A.IVFIndex(index.centroids, cells, index.vec_col, index.id_col)
+
+    def rows(tasks):
+        got = []
+        out = wide.search_batch(["a", "b", "c", "d"], qvecs, 10, nprobe=2)
+        assert python_tasks(lambda: got.extend(out.collect())) == tasks
+        return {(r["query_id"], r["vec_id"]): r["similarity"] for r in got}
+
+    one = rows(1)
+    open_cost(1)
+    seven = rows(7)
+    assert sorted(one) == sorted(seven) and len(one) == 40
+    assert max(abs(one[key] - seven[key]) for key in one) <= 1e-12
 
 
 def test_search_batch_keeps_each_query_in_its_own_cells(emb, index):

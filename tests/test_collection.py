@@ -76,6 +76,38 @@ def test_embedding_computed_and_normalized(db):
     assert c.get_by_id("y").embedding == pytest.approx([0.6, 0.8, 0.0], abs=1e-6)
 
 
+def test_documents_ingest_through_arrow_with_no_python_task(spark, db, python_tasks):
+    """``add_documents`` and ``add`` write the rows and schema that
+    ``createDataFrame`` over the Python rows gave (normalized at
+    insert, ``map<string,string>`` metadata, a null content), and run
+    no Python task doing it."""
+    from chromem_go_spark.document import DOCUMENT_SCHEMA
+    from chromem_go_spark.functions import vector as V
+
+    docs = [
+        Document("a", {"language": "en", "src": "x"}, [3.0, 4.0, 0.0], "one"),
+        Document("b", {}, [0.6, 0.8, 0.0], None),
+        Document("c", {"language": "de"}, [0.1, 0.2, 0.3], "three"),
+    ]
+    c = db.create_collection("arrow_docs", embedding_func=const_embedding)
+    assert python_tasks(lambda: c.add_documents(docs)) == 0
+    cols = db.create_collection("arrow_cols", embedding_func=const_embedding)
+    assert python_tasks(lambda: cols.add(
+        ids=[d.id for d in docs],
+        embeddings=[d.embedding for d in docs],
+        metadatas=[d.metadata for d in docs],
+        contents=[d.content for d in docs],
+    )) == 0
+    rows = [(d.id, d.metadata, d.embedding, d.content) for d in docs]
+    expect = spark.createDataFrame(rows, DOCUMENT_SCHEMA).withColumn(
+        "embedding", V.normalize_if_needed("embedding").cast("array<float>")
+    )
+    assert c._prepare(docs).schema == expect.schema
+    want = sorted(expect.collect())
+    assert sorted(c.df.select(*DOCUMENT_SCHEMA.fieldNames()).collect()) == want
+    assert sorted(cols.df.select(*DOCUMENT_SCHEMA.fieldNames()).collect()) == want
+
+
 def test_add_columnar_validation(db):
     c = db.create_collection("t", embedding_func=const_embedding)
     with pytest.raises(ValueError, match="ids are empty"):

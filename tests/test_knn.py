@@ -314,3 +314,71 @@ def test_knn_block_keeps_ties_with_kth_score(spark, k):
     assert len(got) == 2 * k
     assert key(got) == key(full)
     assert key(got)["a"] == list(range(4, 4 + k))
+
+
+def _size(df) -> int:
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+@pytest.fixture(scope="module")
+def emb_files(spark, emb, tmp_path_factory):
+    """The embeddings as seven parquet files: a scan of several
+    partitions with no shuffle in front of the kernel."""
+    path = str(tmp_path_factory.mktemp("emb_files") / "emb.parquet")
+    emb.repartition(7).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() > 1
+    return df
+
+
+def test_fit_python_stage_keeps_a_frame_without_size_stats(spark):
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(20)], "id long, embedding array<double>"
+    )
+    assert _size(df) == 2**63 - 1
+    parts = df.rdd.getNumPartitions()
+    assert parts > 1
+    assert knn.fit_python_stage(df).rdd.getNumPartitions() == parts
+
+
+def test_fit_python_stage_keeps_a_frame_above_its_byte_budget(emb, open_cost):
+    """A frame holding more than ``openCostInBytes`` per partition keeps
+    every partition: coalesce never adds tasks, and here removes none."""
+    wide = emb.repartition(7)
+    open_cost(_size(wide) // 8)  # ceil(size / cost) >= 8 > 7 partitions
+    assert knn.fit_python_stage(wide).rdd.getNumPartitions() == 7
+
+
+def test_small_knn_block_runs_one_python_task(emb_files, emb_np, python_tasks):
+    """A small batch over a multi-file scan runs its kernel in one
+    Python task, and the per-query window needs no shuffle after it
+    (one task per scan partition and a shuffle before sizing)."""
+    _ids, mat = emb_np
+    out = knn.knn_block(
+        emb_files, ["a", "b"], mat[:2], 5, vec_col="embedding", id_col="vec_id"
+    )
+    assert python_tasks(out.collect) == 1
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+
+
+def test_knn_block_rows_do_not_depend_on_partitioning(
+    emb, emb_np, open_cost, python_tasks
+):
+    """One partition (sized to its bytes) and seven (an open cost of one
+    byte keeps them all) give the same ids and similarities."""
+    _ids, mat = emb_np
+    qids = [str(i) for i in range(6)]
+
+    def rows(tasks):
+        out = knn.knn_block(
+            emb.repartition(7), qids, mat[:6], 10, vec_col="embedding", id_col="vec_id"
+        )
+        got = []
+        assert python_tasks(lambda: got.extend(out.collect())) == tasks
+        return {(r["query_id"], r["vec_id"]): r["similarity"] for r in got}
+
+    one = rows(1)
+    open_cost(1)
+    seven = rows(7)
+    assert sorted(one) == sorted(seven) and len(one) == 60
+    assert max(abs(one[key] - seven[key]) for key in one) <= 1e-12

@@ -371,29 +371,6 @@ def round_trips(spark, monkeypatch):
     return count
 
 
-@pytest.fixture
-def spark_jobs(spark):
-    """``spark_jobs(action)``: the Spark jobs ``action()`` runs from the
-    calling thread, counted through a job group (the thread-local
-    property broadcast jobs inherit) once the listener bus has drained."""
-    import uuid
-
-    sc = spark.sparkContext
-
-    def count(action) -> int:
-        group = f"jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-
-    return count
-
-
 def test_collection_calls_run_few_spark_jobs(spark, tmp_path, spark_jobs):
     """Job counts per call on a persistent bucketed collection (the
     parent layout ran 3 for a plain query, 2 for ``get_by_id``, 8 for a
@@ -424,6 +401,28 @@ def test_collection_calls_run_few_spark_jobs(spark, tmp_path, spark_jobs):
     assert spark_jobs(lambda: c.get_by_id("d1001")) <= 1
     assert spark_jobs(lambda: c.delete(ids=[f"d{i}" for i in range(10)])) <= 2
     assert c.count() == 1040
+
+
+def test_served_ivf_batch_runs_one_python_task(spark, tmp_path, python_tasks):
+    """A served-IVF ``query_batch`` over a small persistent collection
+    runs its Python kernel in one task (one per scan partition, i.e.
+    per core, before the kernel's input was sized by its bytes)."""
+    from chromem_go_spark import Collection
+
+    rows = [
+        (f"d{i}", {"tag": "t"}, [float(i % 7), 1.0, float(i % 3), float(i % 5)], f"doc {i}")
+        for i in range(400)
+    ]
+    c = Collection(spark, "py_tasks", persist_dir=str(tmp_path / "c"), n_buckets=8)
+    c.add_df(spark.createDataFrame(
+        rows,
+        "id string, metadata map<string,string>, embedding array<float>, content string",
+    ))
+    index = c.build_ann_index(n_clusters=4)
+    qv = [[1.0, 0.5, 0.25, float(j)] for j in range(16)]
+    batch = lambda: c.query_batch(query_embeddings=qv, n_results=5, index=index).collect()  # noqa: E731
+    batch()
+    assert python_tasks(batch) <= 1
 
 
 def test_signature_projections_build_in_few_jvm_round_trips(docs, round_trips):
