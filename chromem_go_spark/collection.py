@@ -59,6 +59,7 @@ from .materialize import materialize
 from .functions import vector as V
 from .operators import knn as knn_ops
 from .operators.filters import validate_where_document
+from .session import local_frame
 
 EmbeddingFunc = Callable[[str], Sequence[float]]
 
@@ -184,24 +185,7 @@ class Collection:
         return "gzip" if self.compress else "snappy"
 
     def _empty(self) -> DataFrame:
-        return self._local_documents([])
-
-    def _local_documents(self, rows: list[tuple]) -> DataFrame:
-        """``(id, metadata items, embedding, content)`` rows as a
-        ``DOCUMENT_SCHEMA`` frame built from an Arrow table: a local
-        relation, where ``createDataFrame`` over a Python list runs one
-        Python task per slice (1.35 CPU-s for 100 x 128 rows, against
-        0.32 through Arrow, on a 4-core host)."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        schema = to_arrow_schema(DOCUMENT_SCHEMA)
-        cols = list(zip(*rows)) or [()] * len(schema)
-        return self.spark.createDataFrame(
-            pa.Table.from_arrays(
-                [pa.array(col, f.type) for col, f in zip(cols, schema)], schema=schema
-            )
-        )
+        return local_frame(self.spark, [], DOCUMENT_SCHEMA)
 
     @property
     def df(self) -> DataFrame:
@@ -500,7 +484,7 @@ class Collection:
                     raise ValueError("no embedding function configured")
                 emb = [float(x) for x in self.embedding_func(d.content)]
             rows.append((d.id, list(dict(d.metadata or {}).items()), emb, d.content))
-        df = self._local_documents(rows)
+        df = local_frame(self.spark, rows, DOCUMENT_SCHEMA)
         # Normalize-at-insert invariant (reference collection.go:266-276):
         # makes query-time cosine a plain dot product.
         return df.withColumn(
@@ -1522,7 +1506,8 @@ class Collection:
             (qid, V.normalize_vec(qv), w, c, nc)
             for qid, qv, (w, c, nc) in zip(qids, qvecs, parsed)
         ]
-        qdf = self.spark.createDataFrame(
+        qdf = local_frame(
+            self.spark,
             rows,
             "query_id string, query_vec array<double>, "
             "q_where map<string,string>, q_contains array<string>, "

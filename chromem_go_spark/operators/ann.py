@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..batchstate import drop_batch_partition, fold_batch_partitions, read_live
+from ..session import local_frame
 from ..functions import vector as V
 from ..materialize import materialize
 from . import knn as knn_ops
@@ -611,7 +612,8 @@ class _CodedIVF:
         ).mapInArrow(scan, schema=out_schema)
         shortlist = knn_ops.topk_per_query(cand, rr, "query_id", id_col, "approx")
         # exact re-rank: join original vectors by id (rerank rows per query)
-        qdf = self.coded.sparkSession.createDataFrame(
+        qdf = local_frame(
+            self.coded.sparkSession,
             [(qid_strs[i], [float(x) for x in qmat[i]]) for i in range(nq)],
             "query_id string, query_vec array<double>",
         )

@@ -26,8 +26,10 @@ expensive stages are shuffle-lean:
 The six n-gram / MinHash pair operators are one filter-then-verify
 engine built from shared stages, each written once:
 
-- :func:`_lsh_buckets`   — per-doc hash arrays -> MinHash lanes ->
-                           ``(key, band, bucket)`` rows (the LSH filter);
+- :func:`_lsh_buckets`   — per-doc hash arrays -> MinHash lanes (one
+                           NumPy ``mapInArrow`` kernel) -> JVM xxhash64
+                           band rows ``(key, band, bucket)`` (the LSH
+                           filter);
 - :func:`_count_bound_candidates` — prefix-join match count + the exact
                            overlap upper bound (the PPJoin filter);
 - :func:`_verify_overlap` / :func:`_verify_jaccard` — exact
@@ -39,8 +41,9 @@ engine built from shared stages, each written once:
 Callers keep their own candidate join conditions and checkpoint
 choices; the stages receive already-materialized frames.
 
-All hot paths are JVM expressions (xxhash64, explode, groupBy agg);
-nothing touches Python per-row.
+The hot paths are JVM expressions (xxhash64, explode, groupBy agg)
+or vectorized NumPy kernels over whole Arrow batches (the MinHash
+lanes, the hyperplane signatures); nothing touches Python per-row.
 """
 
 from __future__ import annotations
@@ -461,6 +464,10 @@ def _hashed_word_shingle_arrays(
     )
 
 
+# int64 values the MinHash lane kernel holds in one temporary
+_LANE_BUDGET = 1 << 20
+
+
 def _quoted(name: str) -> str:
     """``name`` as a backtick-quoted SQL identifier (for generated SQL
     text over caller-chosen column names)."""
@@ -479,47 +486,110 @@ def minhash_signatures(
     """MinHash signature per doc: columns ``mh_0 .. mh_{num_hashes-1}``.
 
     Base shingle hash is JVM xxhash64; the hash family is the classic
-    (a*x + b) mod p permutation over it.  Each signature lane is
-    ``array_min(transform(hs, ...))`` over the doc's (id, hs
-    array<long>) hash array — row-local: no explode, no exchange.
-    ``hash_arrays`` is that per-doc table when the caller already
-    holds it materialized (:func:`_hashed_shingle_arrays`); without
-    it, the arrays are built from ``df`` and materialized here.  Docs
-    with no shingle (text shorter than ``k`` or null) get no row.
+    (a*x + b) mod p permutation over it: lane ``i`` is
+    ``min((a_i * (x mod p) + b_i) mod p)`` over the doc's hashes.
+    ``hash_arrays`` is the per-doc (id, hs array<long>) table when the
+    caller already holds it materialized (:func:`_hashed_shingle_arrays`);
+    without it, the arrays are built from ``df`` and materialized here.
+    Docs with no shingle (text shorter than ``k`` or null) get no row.
 
-    The lanes are one generated SQL projection parsed once: as a loop
-    of ``F.*`` calls every expression node costs a JVM round trip, and
-    the wide projection cost more to build on the client than to run.
+    The lanes are one NumPy ``mapInArrow`` kernel
+    (:func:`_minhash_lanes`), its input sized by
+    ``knn.fit_python_stage``: as SQL, each lane was an
+    ``array_min(transform(...))`` whose lambda Spark interprets per
+    shingle (``ArrayTransform`` has no codegen).
     """
-    import random
-
-    rnd = random.Random(seed)
-    # 2^31-1 keeps a*x + b < 2^62: no long overflow under ANSI mode.
-    p = (1 << 31) - 1  # Mersenne prime
-    coeffs = [(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in range(num_hashes)]
     if hash_arrays is None:
         hash_arrays = materialize(_hashed_shingle_arrays(df, text_col, id_col, k))
-    lanes = [
-        f"array_min(transform(hs, el -> pmod({a} * pmod(el, {p}) + {b}, {p}))) AS mh_{i}"
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return hash_arrays.filter(F.size("hs") > 0).selectExpr(_quoted(id_col), *lanes)
+    key_type = hash_arrays.schema[id_col].dataType.simpleString()
+    out_schema = ", ".join(
+        [f"{_quoted(id_col)} {key_type}"]
+        + [f"mh_{i} bigint" for i in range(num_hashes)]
+    )
+    return fit_python_stage(hash_arrays.selectExpr(_quoted(id_col), "hs")).mapInArrow(
+        _minhash_lanes(id_col, num_hashes, seed), schema=out_schema
+    )
+
+
+def _minhash_lanes(id_col: str, num_hashes: int, seed: int):
+    """The lane kernel of :func:`minhash_signatures`: Arrow batches of
+    (id, hs list<int64>) to (id, mh_0 .. mh_{num_hashes-1}), one row
+    per doc with a non-null, non-empty ``hs``.  It walks the flat hash
+    values in chunks of ``_LANE_BUDGET // num_hashes``, all lanes at
+    once, and ``np.minimum.reduceat`` folds each chunk into its docs'
+    minima, so no temporary exceeds ``_LANE_BUDGET`` values however
+    long a doc or a batch.  A closure, so Spark ships it by value
+    (workers need not import this package)."""
+    import random
+
+    import numpy as np
+
+    rnd = random.Random(seed)
+    # 2^31-1 keeps a*(x mod p) + b < 2^62: no int64 overflow, and
+    # NumPy's % by a positive divisor is Spark's pmod.
+    p = (1 << 31) - 1  # Mersenne prime
+    a, b = np.array(
+        [(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in range(num_hashes)],
+        dtype=np.int64,
+    ).T[:, :, None]
+    chunk = max(1, _LANE_BUDGET // num_hashes)
+    names = [id_col] + [f"mh_{i}" for i in range(num_hashes)]
+
+    def minhash_lanes(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            hs = rb.column(1)
+            # offsets index the whole values buffer, also on a slice
+            offs = hs.offsets.to_numpy()
+            lens = np.diff(offs)
+            keep = lens > 0
+            if hs.null_count:
+                keep &= hs.is_valid().to_numpy(zero_copy_only=False)
+            if not keep.any():
+                continue
+            x = hs.values.to_numpy()[offs[0]:offs[-1]]
+            if (lens[~keep] > 0).any():  # a null row over a non-empty range
+                x = x[np.repeat(keep, lens)]
+            lens = lens[keep]
+            starts = np.concatenate(([0], np.cumsum(lens)))
+            sig = np.full((num_hashes, len(lens)), p, dtype=np.int64)
+            for lo in range(0, len(x), chunk):
+                hi = min(lo + chunk, len(x))
+                # docs overlapping [lo, hi) and their piece starts in it
+                r0 = np.searchsorted(starts, lo, "right") - 1
+                r1 = np.searchsorted(starts, hi, "left")
+                at = np.maximum(starts[r0:r1], lo) - lo
+                h = a * (x[lo:hi] % p)
+                h += b
+                h %= p
+                part = sig[:, r0:r1]
+                np.minimum(part, np.minimum.reduceat(h, at, axis=1), out=part)
+            key = rb.column(0)
+            yield pa.RecordBatch.from_arrays(
+                [key if keep.all() else key.filter(pa.array(keep))]
+                + [pa.array(s) for s in sig],
+                names=names,
+            )
+
+    return minhash_lanes
 
 
 def _lsh_buckets(
     arrs: DataFrame, key: str, num_hashes: int, bands: int, seed: int
 ) -> DataFrame:
-    """(key, band, bucket) LSH rows: the row-local MinHash lanes of the
-    (key, hs) hash arrays, cut into ``bands`` bands of
-    ``num_hashes / bands`` lanes, each band hashed to one bucket.  Two
-    docs are LSH candidates iff they share a (band, bucket) row, so the
-    candidate join's shuffle key is the band hash and its volume is
-    O(docs x bands), never O(docs^2).  Not materialized: callers own the
-    checkpoint (the bucket table usually feeds both sides of a join).
+    """(key, band, bucket) LSH rows: the MinHash lanes of the (key, hs)
+    hash arrays (:func:`minhash_signatures`' NumPy kernel), cut into
+    ``bands`` bands of ``num_hashes / bands`` lanes, each band hashed
+    to one bucket by JVM xxhash64.  Two docs are LSH candidates iff
+    they share a (band, bucket) row, so the candidate join's shuffle
+    key is the band hash and its volume is O(docs x bands), never
+    O(docs^2).  Not materialized: callers own the checkpoint (the
+    bucket table usually feeds both sides of a join).
 
-    The band rows, like the lanes, are generated SQL text parsed once:
-    every caller pays this build per call, and as ``F.*`` calls it was
-    thousands of JVM round trips."""
+    The band rows are generated SQL text parsed once: every caller
+    pays this build per call, and as ``F.*`` calls it was thousands of
+    JVM round trips."""
     if not 1 <= bands <= num_hashes or num_hashes % bands:
         raise ValueError(
             f"bands must divide num_hashes into whole bands: got "
@@ -566,11 +636,10 @@ def minhash_lsh_pairs(
     # verify: the per-doc hash ARRAYS (row-local, zero shuffles — see
     # _hashed_shingle_arrays) are checkpointed and read directly by
     # both, so the verify side needs no groupBy rebuild of the shingle
-    # stream.  Lazy checkpoint (r15): blocks materialize inside the
-    # buckets checkpoint job (the lanes reference arrs once); the
-    # verify joins read the already-computed blocks — one fewer job
-    # barrier.
-    arrs = materialize(_hashed_shingle_arrays(df, text_col, id_col, k), eager=False)
+    # stream.  Eager: the lane kernel's input is sized to its bytes,
+    # and a coalesce over a lazy checkpoint would hash every doc in
+    # that one task (sf0.1: 9.6 s eager vs 10.3 s lazy, min of 3).
+    arrs = materialize(_hashed_shingle_arrays(df, text_col, id_col, k))
     # Materialized once: the bucket table is both sides of the self-join,
     # and recomputing it would re-run the whole signature build.
     buckets = _lsh_buckets(arrs, id_col, num_hashes, bands, seed).transform(
@@ -1510,10 +1579,8 @@ def cross_corpus_minhash_pairs(
     cross-history join."""
     keyed = _tag_sides(new_docs, ref_docs, text_col, id_col)
     # checkpointed per-doc hash ARRAYS feed both the lanes and the
-    # verify; lazy, as in minhash_lsh_pairs
-    arrs = materialize(
-        _hashed_shingle_arrays(keyed, text_col, "__key", k), eager=False
-    )
+    # verify; eager, as in minhash_lsh_pairs
+    arrs = materialize(_hashed_shingle_arrays(keyed, text_col, "__key", k))
     buckets = _lsh_buckets(arrs, "__key", num_hashes, bands, seed).transform(
         materialize
     )

@@ -369,13 +369,64 @@ def test_simhash_pairs_matches_numpy_bruteforce(spark):
 # ----------------------------------------------------- minhash vs NumPy
 
 
-def test_minhash_signatures_match_numpy(spark):
-    """One signature path: lanes built from the text and from
-    caller-held hash arrays are equal, and both equal a NumPy replay of
-    min((a*(x mod p) + b) mod p) over each doc's shingle hashes, with
-    the coefficients drawn from random.Random(seed).  A doc shorter
-    than k or with null text gets no row."""
+def _minhash_replay(hs, num_hashes: int = 64, seed: int = 42) -> list[int]:
+    """NumPy replay of one doc's MinHash lanes: min((a*(x mod p) + b)
+    mod p) over its shingle hashes, the coefficients drawn from
+    random.Random(seed)."""
     import random
+
+    rnd = random.Random(seed)
+    p = (1 << 31) - 1
+    a, b = np.array(
+        [(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in range(num_hashes)],
+        dtype=np.int64,
+    ).T
+    x = np.mod(np.array(hs, dtype=np.int64), p)
+    return [int(np.min((ai * x + bi) % p)) for ai, bi in zip(a, b)]
+
+
+def _mixed_hashes(n: int, salt: int) -> list[int]:
+    """``n`` int64 hashes spread over the whole range, about half of
+    them negative: a multiplicative hash of a counter."""
+    x = (np.arange(n, dtype=np.uint64) + np.uint64(salt << 32)) * np.uint64(
+        0x9E3779B97F4A7C15
+    )
+    return (x ^ (x >> np.uint64(29))).view(np.int64).tolist()
+
+
+# (key, hash count) of the edge-case table: short docs, one doc whose
+# 64 lanes cross the kernel's element budget, an empty and a null array
+_EDGE_DOCS = [
+    ("a", 1), ("b", 7), ("c", 40), ("d", 300), ("long", 70_000),
+    ("empty", 0), ("null", None),
+]
+# _lsh_buckets(edge, "__key", num_hashes=16, bands=4, seed=42): band
+# buckets 0..3 per key, recorded from the array_min(transform(...))
+# SQL lanes the kernel replaced
+_EDGE_BUCKETS = {
+    "a": (8520754706577706424, -6717205107514909229, -2323384731105379549,
+          -8033939439277438719),
+    "b": (-566239603829459185, -7148103535143584780, 2001008217805658240,
+          4240139939781359122),
+    "c": (3027920419309892127, 2850125232939719204, 6101391706907452142,
+          -8905346894072303702),
+    "d": (3811731329294951083, -6361776536587085909, 5105610281807176770,
+          -5402538293601246575),
+    "long": (2358887813512051188, 1949054281596411007, 1324148308325731594,
+             1022182381905163525),
+}
+
+
+def test_minhash_signatures_match_numpy(spark, open_cost, python_tasks):
+    """One signature path: lanes built from the text and from
+    caller-held hash arrays are equal, and both equal a NumPy replay
+    over each doc's shingle hashes.  A doc shorter than k or with null
+    text gets no row.  Edge cases of the lane kernel: string keys (the
+    cross-corpus ``__key``), negative hashes, a doc whose lanes cross
+    the kernel's element budget, empty and null arrays, several Arrow
+    batches in each of several partitions; the band buckets equal the
+    SQL lanes' recorded ones."""
+    import pyarrow as pa
 
     from chromem_go_spark.materialize import materialize
 
@@ -388,21 +439,60 @@ def test_minhash_signatures_match_numpy(spark):
         {r["doc_id"]: [r[c] for c in lanes] for r in s.collect()} for s in sigs
     )
     assert plain == held
-
-    rnd = random.Random(42)
-    p = (1 << 31) - 1
-    a, b = np.array(
-        [(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in lanes], dtype=np.int64
-    ).T
-    expect = {}
-    for r in arrs.collect():
-        if r["hs"]:
-            x = np.mod(np.array(r["hs"], dtype=np.int64), p)
-            expect[r["doc_id"]] = np.min(
-                (a[:, None] * x[None, :] + b[:, None]) % p, axis=1
-            ).tolist()
+    expect = {r["doc_id"]: _minhash_replay(r["hs"]) for r in arrs.collect() if r["hs"]}
     assert set(expect) == {1, 2, 3, 5}
     assert plain == expect
+
+    hs = {
+        key: None if n is None else _mixed_hashes(n, i + 1)
+        for i, (key, n) in enumerate(_EDGE_DOCS)
+    }
+    assert 64 * len(hs["long"]) > D._LANE_BUDGET
+    assert min(hs["d"]) < 0
+    edge = spark.createDataFrame(pa.table({
+        "__key": pa.array(list(hs), pa.string()),
+        "hs": pa.array(list(hs.values()), pa.list_(pa.int64())),
+    })).repartition(2)
+    open_cost(1)  # keep both partitions: no coalesce to one task
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(batch)
+    spark.conf.set(batch, "2")
+    try:
+        sig = D.minhash_signatures(edge, id_col="__key", hash_arrays=edge)
+        got = []
+        assert python_tasks(lambda: got.extend(sig.collect())) == 2
+        buckets = D._lsh_buckets(edge, "__key", 16, 4, 42).collect()
+    finally:
+        spark.conf.set(batch, old)
+    assert {r["__key"]: [r[c] for c in lanes] for r in got} == {
+        key: _minhash_replay(h) for key, h in hs.items() if h
+    }
+    assert {(r["__key"], r["band"], r["bucket"]) for r in buckets} == {
+        (key, band, bucket)
+        for key, row in _EDGE_BUCKETS.items()
+        for band, bucket in enumerate(row)
+    }
+
+
+def test_minhash_lane_kernel_reads_sliced_arrow_lists():
+    """The lane kernel reads a sliced list array (non-zero offset) and
+    drops a null row even when its offsets span values."""
+    import pyarrow as pa
+
+    hs = [_mixed_hashes(n, i + 1) for i, n in enumerate([3, 0, 50, 20_000, 1, 5])]
+    offsets = np.concatenate(([0], np.cumsum([len(h) for h in hs]))).astype(np.int32)
+    lists = pa.ListArray.from_arrays(
+        pa.array(offsets),
+        pa.array(np.concatenate([np.array(h, dtype=np.int64) for h in hs])),
+        mask=pa.array([False, False, True, False, False, False]),
+    )
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(list("abcdef")), lists], names=["k", "hs"]
+    ).slice(1, 5)
+    out = pa.Table.from_batches(list(D._minhash_lanes("k", 64, 42)(iter([batch]))))
+    assert {
+        r["k"]: [r[f"mh_{i}"] for i in range(64)] for r in out.to_pylist()
+    } == {k: _minhash_replay(hs[i]) for i, k in enumerate("abcdef") if k in "def"}
 
 
 def test_reliable_checkpointing_identical_output(spark, docs, tmp_path):

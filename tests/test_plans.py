@@ -286,13 +286,13 @@ def test_routed_batch_ivf_filter_below_scoring(emb):
     ) <= 1
 
 
-def test_minhash_signature_path_rowlocal(docs):
+def test_minhash_signature_path_rowlocal(docs, open_cost):
     """r14/r15 gate (judge item 7): MinHash signatures are row-local
-    ``array_min(transform(...))`` lanes over the checkpointed per-doc
-    hash arrays and the verify side reads those arrays directly — the
-    plan must carry NO collect_list (the old groupBy rebuild) and no
-    aggregate-based signature build, and its only hash exchanges are
-    the LSH band self-join + candidate distinct."""
+    lanes — one NumPy ``mapInArrow`` kernel over the checkpointed
+    per-doc hash arrays — and the verify side reads those arrays
+    directly — the plan must carry NO collect_list (the old groupBy
+    rebuild) and no aggregate-based signature build, and its only hash
+    exchanges are the LSH band self-join + candidate distinct."""
     from chromem_go_spark.operators import dedup as D
 
     plans = {
@@ -317,15 +317,24 @@ def test_minhash_signature_path_rowlocal(docs):
     # Counted on the AQE final plan after an action: sparkPlan() is the
     # plan before exchange insertion and never holds an Exchange, and
     # the executed plan's string repeats the initial plan after the
-    # final one.  The >= 1 floor keeps the gate from going vacuous.
-    self_df = D.minhash_lsh_pairs(docs, threshold=0.5)
-    self_df.collect()
-    final = (
-        self_df._jdf.queryExecution().executedPlan().toString()
-        .split("== Initial Plan ==")[0]
-    )
-    n_hash_exchanges = final.count("Exchange hashpartitioning")
-    assert 1 <= n_hash_exchanges <= 2, final
+    # final one.
+    def hash_exchanges() -> int:
+        self_df = D.minhash_lsh_pairs(docs, threshold=0.5)
+        self_df.collect()
+        final = (
+            self_df._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0]
+        )
+        return final.count("Exchange hashpartitioning")
+
+    # sized to its bytes, the lane kernel runs in one partition, which
+    # the band join and the pair distinct inherit
+    assert hash_exchanges() <= 2
+    # kept at the scan's partitions (an open cost of one byte), the band
+    # self-join and the pair distinct shuffle: the >= 1 floor keeps the
+    # gate from going vacuous
+    open_cost(1)
+    assert 1 <= hash_exchanges() <= 2
 
 
 def test_ngram_jaccard_asym_prefix_shape(docs):
@@ -423,6 +432,50 @@ def test_served_ivf_batch_runs_one_python_task(spark, tmp_path, python_tasks):
     batch = lambda: c.query_batch(query_embeddings=qv, n_results=5, index=index).collect()  # noqa: E731
     batch()
     assert python_tasks(batch) <= 1
+
+
+def test_minhash_lsh_pairs_runs_one_python_task(docs, python_tasks):
+    """A warm ``minhash_lsh_pairs`` runs its MinHash lane kernel in one
+    Python task: the kernel's input is sized to its bytes."""
+    from chromem_go_spark.operators import dedup as D
+
+    pairs = lambda: D.minhash_lsh_pairs(docs, threshold=0.5).collect()  # noqa: E731
+    pairs()
+    assert python_tasks(pairs) <= 1
+
+
+def test_coded_ivf_search_batch_runs_one_python_task(emb, python_tasks):
+    """A warm SQ8 ``search_batch`` runs only its scan kernel's one
+    Python task: the re-rank's query table is an Arrow local relation
+    (``createDataFrame`` over a Python list ran one more task per
+    slice, 4 on a 4-core session)."""
+    from chromem_go_spark.operators import ann as A
+
+    idx = A.IVFSQIndex.build(emb, n_clusters=4, vec_col="embedding", id_col="vec_id")
+    qvecs = [r["embedding"] for r in emb.limit(3).collect()]
+    batch = lambda: idx.search_batch(["a", "b", "c"], qvecs, 5, nprobe=2).collect()  # noqa: E731
+    batch()
+    assert python_tasks(batch) == 1
+
+
+def test_per_query_filtered_batch_runs_no_python_task(spark, python_tasks):
+    """A per-query-filtered ``query_batch`` builds its query table as
+    an Arrow local relation and scores in the JVM: no Python task (4
+    when the table came from ``createDataFrame`` over a Python list)."""
+    from chromem_go_spark import Collection, Document
+
+    c = Collection(spark, "pqf_tasks")
+    c.add_documents([
+        Document(str(i), {"lang": "en" if i % 2 else "de"}, [1.0, i / 8, 0.0], f"doc {i}")
+        for i in range(8)
+    ])
+    filters = [None, {"where": {"lang": "en"}},
+               {"where_document": {"$contains": "doc 3"}}, {"where": {"lang": "de"}}]
+    batch = lambda: c.query_batch(  # noqa: E731
+        query_embeddings=[[1.0, 0.0, 0.0]] * 4, n_results=3, per_query_filters=filters
+    ).collect()
+    batch()
+    assert python_tasks(batch) == 0
 
 
 def test_signature_projections_build_in_few_jvm_round_trips(docs, round_trips):
