@@ -189,7 +189,7 @@ def _batch_id(dirname: str) -> int:
     return int(dirname.split("=", 1)[1])
 
 
-def read_live(spark: SparkSession, table_path: str):
+def read_live(spark: SparkSession, table_path: str, schema=None):
     """Manifest-aware reader for ``__batch``-partitioned tables.
 
     With a committed manifest, excludes obsolete dirs awaiting GC and
@@ -198,8 +198,11 @@ def read_live(spark: SparkSession, table_path: str):
     manifest (rename-mode table, or a crash before the first manifest
     commit), excludes only the never-committed generation ids, which a
     rename-mode table never contains — so this is safe to use on BOTH
-    modes and is what the incremental state readers use."""
-    df = spark.read.parquet(table_path)
+    modes and is what the incremental state readers use.
+
+    ``schema`` (the table's columns, ``__batch`` included) skips the
+    schema-inference job that reads the parquet footers."""
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(table_path)
     if "__batch" not in df.columns:
         return df  # not batch-partitioned: nothing to filter
     man = _read_manifest(spark, table_path)
@@ -214,13 +217,16 @@ def read_live(spark: SparkSession, table_path: str):
     return df.filter(~F.col("__batch").isin(dead))
 
 
-def read_history(spark: SparkSession, table_path: str, batch_id: int):
+def read_history(
+    spark: SparkSession, table_path: str, batch_id: int, schema=None
+):
     """The live rows of every batch EXCEPT ``batch_id``, ``__batch``
     dropped — the history a micro-batch joins against.  Excluding its
     own partition means a failed earlier attempt of the SAME batch can
-    never act as history for its retry."""
+    never act as history for its retry.  ``schema``: as in
+    :func:`read_live`."""
     return (
-        read_live(spark, table_path)
+        read_live(spark, table_path, schema)
         .filter(F.col("__batch") != F.lit(int(batch_id)))
         .drop("__batch")
     )

@@ -41,9 +41,18 @@ engine built from shared stages, each written once:
 Callers keep their own candidate join conditions and checkpoint
 choices; the stages receive already-materialized frames.
 
+Pairs become clusters through :func:`connected_components` (min-label
+propagation) or :func:`connected_components_star` (large-star/
+small-star).  Both first materialize their edge frame; when Spark sized
+it to one partition, one NumPy union-find task (:func:`_union_find`)
+answers exactly and the distributed loop never runs.  ``max_iter``
+bounds only the loop, which edge sets spread over several partitions
+still take.
+
 The hot paths are JVM expressions (xxhash64, explode, groupBy agg)
 or vectorized NumPy kernels over whole Arrow batches (the MinHash
-lanes, the hyperplane signatures); nothing touches Python per-row.
+lanes, the hyperplane signatures, the union-find); nothing touches
+Python per-row.
 """
 
 from __future__ import annotations
@@ -666,14 +675,19 @@ def connected_components(
     dst_col: str = "id_b",
     max_iter: int = 25,
 ) -> DataFrame:
-    """Connected components by iterative min-label propagation.
+    """Connected components: one union-find pass when the edge set is
+    one partition, else iterative min-label propagation.
 
     Returns (node, component) where component is the minimum node id
-    reachable from ``node``. Each iteration: every node takes the min
-    label among itself and its neighbors; terminates when no label
-    changes (near-dup clusters have small diameters, so convergence is
-    fast — iterations ~ graph diameter). Per iteration: one join + one
-    groupBy, lineage cut with localCheckpoint so the plan stays flat.
+    reachable from ``node``.  The materialized edge frame's partition
+    count (how Spark itself sized it; reading it runs no job) picks the
+    path: with one partition, :func:`_union_find` resolves every
+    component in that one task.  Otherwise each iteration: every node
+    takes the min label among itself and its neighbors; terminates
+    when no label changes (near-dup clusters have small diameters, so
+    convergence is fast — iterations ~ graph diameter). Per iteration:
+    one join + one groupBy, lineage cut with localCheckpoint so the
+    plan stays flat.  ``max_iter`` bounds only that loop.
 
     This is the clustering step a dedup pipeline runs on top of the
     pair-finding operators: pairs -> clusters -> one representative.
@@ -684,6 +698,8 @@ def connected_components(
     # pair join runs twice (same fix the star variant carries;
     # measured there: +5-6 s at sf0.1).
     edges = edges.select(src_col, dst_col).transform(materialize)
+    if edges.rdd.getNumPartitions() == 1:
+        return _local_components(edges)
     # A self-loop per node: each node is its own neighbor, so one
     # groupBy yields both its new label (the neighborhood min) and its
     # old one (the label over its self-loop) — no second join to detect
@@ -743,13 +759,22 @@ def connected_components_star(
     directed big->small between phases. Convergence = edge set is a
     fixed point (checked by count + order-insensitive hash sum — two
     cheap aggregates). Returns (node, component = min id reachable).
-    ``rounds_out``: appends the number of alternation rounds (for tests).
+
+    An edge frame that materializes to one partition skips the rounds:
+    :func:`_union_find` resolves it in that one task, as in
+    :func:`connected_components`.  ``max_iter`` bounds only the rounds.
+    ``rounds_out``: appends the number of alternation rounds (for
+    tests; 0 on the one-partition path).
     """
     # Materialize the edge input ONCE: nodes and the canonical edge set
     # both derive from it, and `edges` is typically an expensive subtree
     # (a similarity join) — two separate materializations would compute
     # it twice (measured: +5-6 s on dedup_clusters_star at sf0.1).
     edges = edges.select(src_col, dst_col).transform(materialize)
+    if edges.rdd.getNumPartitions() == 1:
+        if rounds_out is not None:
+            rounds_out.append(0)
+        return _local_components(edges)
     nodes = (
         edges.select(F.col(src_col).alias("n"))
         .unionByName(edges.select(F.col(dst_col).alias("n")))
@@ -825,6 +850,70 @@ def connected_components_star(
     )
 
 
+def _local_components(edges: DataFrame) -> DataFrame:
+    """(node, component) of a one-partition ``(src, dst)`` edge frame
+    (one key type) in one :func:`_union_find` task."""
+    from pyspark.sql.types import StructField, StructType
+
+    key = edges.schema.fields[0].dataType
+    schema = StructType([StructField("node", key), StructField("component", key)])
+    return edges.mapInArrow(_union_find(), schema=schema)
+
+
+def _union_find():
+    """The one-task kernel of the connected-components functions:
+    Arrow batches of ``(src, dst)`` to one ``(node, component)`` row
+    per node of the partition's graph, ``component`` its component's
+    minimum key.  A null endpoint is dropped: the other endpoint of its
+    row is still a node, but the row adds no edge.  Keys map to dense
+    indices in key order (``np.unique``; UTF-8 byte order is code-point
+    order, so string keys sort as Spark compares them).  Each round
+    hooks the larger root of every edge still spanning two trees to the
+    smallest root it meets (``np.minimum.at``), then pointer-jumps
+    until every node points at its root; ``parent[x] <= x`` throughout,
+    so each root is its tree's minimum.  A tree that neither hooks nor
+    is hooked to in a round is, in the next, next to only smaller roots
+    and hooks, so the live trees at least halve every two rounds.  A
+    closure, so Spark ships it by value."""
+    import numpy as np
+
+    def union_find(batches):
+        import pyarrow as pa
+
+        batches = list(batches)
+        if not batches:
+            return
+        m = sum(rb.num_rows for rb in batches)
+        ends = pa.concat_arrays([rb.column(i) for i in (0, 1) for rb in batches])
+        keys = ends.drop_null()
+        _, first, inv = np.unique(
+            keys.to_numpy(zero_copy_only=False), return_index=True, return_inverse=True
+        )
+        at = np.full(len(ends), -1, dtype=np.int64)
+        at[ends.is_valid().to_numpy(zero_copy_only=False)] = inv
+        u, v = at[:m], at[m:]
+        live = (u >= 0) & (v >= 0)
+        u, v = u[live], v[live]
+        parent = np.arange(len(first))
+        while True:
+            ru, rv = parent[u], parent[v]
+            live = ru != rv
+            if not live.any():
+                break
+            u, v, ru, rv = u[live], v[live], ru[live], rv[live]
+            np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+            while True:
+                up = parent[parent]
+                if (up == parent).all():
+                    break
+                parent = up
+        yield pa.RecordBatch.from_arrays(
+            [keys.take(first), keys.take(first[parent])], names=["node", "component"]
+        )
+
+    return union_find
+
+
 def dedup_clusters(
     df: DataFrame,
     threshold: float = 0.5,
@@ -841,8 +930,10 @@ def dedup_clusters(
 
     ``algorithm``: 'label' (min-label propagation, O(diameter) rounds —
     near-dup clusters have tiny diameters) or 'star' (large-star/
-    small-star, O(log n) rounds — diameter-proof). ``unit``: 'char' or
-    'word' shingles (see :func:`ngram_jaccard_pairs`)."""
+    small-star, O(log n) rounds — diameter-proof); it matters only when
+    the pairs span several partitions (a one-partition pair frame takes
+    the union-find kernel either way). ``unit``: 'char' or 'word'
+    shingles (see :func:`ngram_jaccard_pairs`)."""
     pairs = ngram_jaccard_pairs(df, threshold, text_col, id_col, k, unit)
     cc = connected_components if algorithm == "label" else connected_components_star
     comp = cc(pairs, "id_a", "id_b")

@@ -37,7 +37,9 @@ class PipelineConfig:
     dedup_threshold: float = 0.5
     dedup_ngram: int = 5
     dedup_unit: str = "char"  # or "word" (Gopher-style word shingles)
-    cc_algorithm: str = "label"  # or "star" (diameter-proof)
+    # "label" or "star" (diameter-proof); only pairs spread over several
+    # partitions run either loop, one partition takes the union-find kernel
+    cc_algorithm: str = "label"
     quality_min: float = 0.3
     languages: tuple[str, ...] = ("en", "de", "fr", "es")
     chunk_size: int = 500

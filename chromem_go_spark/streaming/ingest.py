@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import (
     DoubleType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -369,7 +370,9 @@ def incremental_neardup_batch(
         )
     ]
     if have_state:
-        old_buckets = read_history(spark, buckets_path, batch_id).alias("o")
+        old_buckets = read_history(
+            spark, buckets_path, batch_id, _state_schema(new_buckets)
+        ).alias("o")
         cands.append(
             a.join(old_buckets, ["band", "bucket"])
             .select(
@@ -386,7 +389,7 @@ def incremental_neardup_batch(
     all_shingles = new_shingles
     if have_state:
         all_shingles = new_shingles.unionByName(
-            read_history(spark, shingles_path, batch_id)
+            read_history(spark, shingles_path, batch_id, _state_schema(new_shingles))
         )
     pairs = D._verify_jaccard(cand, all_shingles, id_col, threshold)
     write_batch(materialize(pairs), pairs_path, batch_id)
@@ -412,6 +415,13 @@ def incremental_neardup_batch(
 
 
 _COMPACTED_BATCH = -1  # reserved __batch id holding folded history
+
+
+def _state_schema(batch: DataFrame) -> StructType:
+    """The columns of a state table written from ``batch`` frames by
+    ``write_batch``: the frame's own plus ``__batch int``.  Read with
+    it, the table needs no schema-inference job."""
+    return StructType(batch.schema.fields + [StructField("__batch", IntegerType())])
 
 
 def init_semantic_state(

@@ -229,22 +229,144 @@ def test_materialize_lazy_matches_eager(spark):
     assert "LogicalRDD" in lazy._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_connected_components_crafted_graph(spark):
-    """Chain, triangle, isolated pair — min-label propagation must find
-    the exact components (chain diameter forces multiple iterations)."""
-    from chromem_go_spark.operators.dedup import connected_components
+_CC = pytest.mark.parametrize(
+    "cc", [D.connected_components, D.connected_components_star],
+    ids=["label", "star"],
+)
+# one partition takes the union-find kernel, four the distributed loop
+_PARTS = pytest.mark.parametrize("parts", [1, 4], ids=["kernel", "loop"])
 
-    edges = spark.createDataFrame(
+
+def _edge_frame(spark, rows, parts, schema="id_a long, id_b long"):
+    df = spark.createDataFrame(rows, schema)
+    return df.coalesce(1) if parts == 1 else df.repartition(parts)
+
+
+def _unionfind_oracle(es):
+    """{node: min node of its component} over the edge list ``es``."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in es:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for e in es for x in e}
+
+
+@_PARTS
+@_CC
+def test_connected_components_crafted_graph(spark, cc, parts):
+    """Chain, triangle, isolated pair — both paths must find the exact
+    components (chain diameter forces multiple label iterations)."""
+    edges = _edge_frame(
+        spark,
         # chain 1-2-3-4-5, triangle 10-11-12, pair 20-21
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (20, 21)],
-        "id_a long, id_b long",
+        parts,
     )
-    got = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    got = {r["node"]: r["component"] for r in cc(edges).collect()}
     assert got == {
         1: 1, 2: 1, 3: 1, 4: 1, 5: 1,
         10: 10, 11: 10, 12: 10,
         20: 20, 21: 20,
     }
+
+
+_BIG = 1 << 62
+
+
+@_CC
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([("b", "a"), ("c", "b"), ("é", "z"), ("Z", "é"), ("x", "y")],
+         "id_a string, id_b string"),
+        ([(-5, _BIG - 1), (_BIG - 1, _BIG - 3), (-(_BIG), 7), (7, 0), (_BIG - 2, _BIG - 4)],
+         "id_a long, id_b long"),
+        ([(3, 3), (1, 2), (2, 1), (1, 2), (4, 4), (5, 6), (6, 5), (6, 6)],
+         "id_a long, id_b long"),
+    ],
+    ids=["strings", "extreme_ids", "loops_and_duplicates"],
+)
+def test_connected_components_kernel_matches_loop(spark, cc, rows, schema):
+    """The one-partition kernel's rows equal the loop's, both ways, and
+    a union-find oracle's: string keys (code-point order), negative ids
+    and ids near 2^62, self-loops and duplicate edges."""
+    kernel = cc(_edge_frame(spark, rows, 1, schema))
+    loop = cc(_edge_frame(spark, rows, 4, schema))
+    assert kernel.exceptAll(loop).count() == 0
+    assert loop.exceptAll(kernel).count() == 0
+    assert {r["node"]: r["component"] for r in kernel.collect()} == _unionfind_oracle(rows)
+
+
+@_CC
+def test_connected_components_kernel_null_endpoint(spark, cc):
+    """A row with one null endpoint makes its other endpoint a node but
+    adds no edge; a null node is never emitted."""
+    rows = [(1, 2), (3, None), (None, 2), (None, None)]
+    got = cc(_edge_frame(spark, rows, 1)).collect()
+    assert sorted((r["node"], r["component"]) for r in got) == [(1, 1), (2, 1), (3, 3)]
+
+
+@_CC
+@pytest.mark.parametrize("order", ["ascending", "descending", "shuffled"])
+def test_connected_components_kernel_chain(spark, cc, order):
+    """A 1,024-node chain is one component on the kernel path whatever
+    the order of its ids along the chain and of its edge rows."""
+    import random
+
+    ids = list(range(1024))
+    if order == "descending":
+        ids.reverse()
+    elif order == "shuffled":
+        random.Random(5).shuffle(ids)
+    rows = list(zip(ids, ids[1:]))
+    got = {r["node"]: r["component"] for r in cc(_edge_frame(spark, rows, 1)).collect()}
+    assert got == {i: 0 for i in ids}
+
+
+@_CC
+def test_connected_components_kernel_many_arrow_batches(spark, cc):
+    """The kernel joins every Arrow batch of its partition into one
+    graph (two rows per batch here)."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        rows = [(1, 2), (30, 31), (2, 3), (31, 40), (3, 30), (50, 51), (51, 52)]
+        got = {r["node"]: r["component"] for r in cc(_edge_frame(spark, rows, 1)).collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert got == _unionfind_oracle(rows)
+    assert set(got.values()) == {1, 50}
+
+
+def test_union_find_kernel_on_arrow_batches():
+    """The kernel itself: several batches, a null endpoint, and no rows
+    for a partition without batches or without a non-null key."""
+    import pyarrow as pa
+
+    def run(*pairs):
+        batches = [
+            pa.RecordBatch.from_arrays(
+                [pa.array([a], pa.int64()), pa.array([b], pa.int64())], names=["a", "b"]
+            )
+            for a, b in pairs
+        ]
+        out = pa.Table.from_batches(list(D._union_find()(iter(batches))),
+                                    schema=pa.schema([("node", pa.int64()), ("component", pa.int64())]))
+        return sorted(zip(*(c.to_pylist() for c in out.columns)))
+
+    assert run((9, 4), (4, None), (7, 8), (8, 9)) == [(4, 4), (7, 4), (8, 4), (9, 4)]
+    assert run() == []
+    assert run((None, None)) == []
 
 
 def test_dedup_clusters_representatives(spark):
@@ -556,7 +678,9 @@ def test_connected_components_star_chain(spark):
     assert rounds[0] <= 20, f"took {rounds[0]} rounds"
 
 
-def test_connected_components_star_matches_unionfind(spark):
+@_PARTS
+@_CC
+def test_connected_components_star_matches_unionfind(spark, cc, parts):
     """Random graph vs a Python union-find oracle."""
     import random
 
@@ -564,33 +688,11 @@ def test_connected_components_star_matches_unionfind(spark):
     n = 200
     es = {(rnd.randrange(n), rnd.randrange(n)) for _ in range(150)}
     es = [(a, b) for a, b in es if a != b]
-
-    parent = list(range(n))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in es:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    touched = {x for e in es for x in e}
-    expect = {x: find(x) for x in touched}
-    # canonicalize: component label = min member
-    comp_min = {}
-    for x, r in expect.items():
-        comp_min.setdefault(r, set()).add(x)
-    expect = {x: min(comp_min[find(x)]) for x in touched}
-
-    edges = spark.createDataFrame(es, "id_a long, id_b long")
     got = {
         r["node"]: r["component"]
-        for r in D.connected_components_star(edges).collect()
+        for r in cc(_edge_frame(spark, es, parts)).collect()
     }
-    assert got == expect
+    assert got == _unionfind_oracle(es)
 
 
 def test_word_ngram_jaccard_pairs(spark):

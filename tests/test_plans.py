@@ -525,3 +525,54 @@ def test_plans_md_covers_window():
         f"canonical-window rows without a PLANS.md section: {missing} "
         "— rerun tools/plans_report.py"
     )
+
+
+def test_select_training_documents_runs_few_spark_jobs(docs, spark_jobs):
+    """A warm selection pass resolves its one-partition pair graph in
+    one union-find task instead of a label-propagation loop (32 jobs
+    when every call ran the loop, 15 with the kernel)."""
+    from chromem_go_spark import pipeline as P
+
+    select = lambda: P.select_training_documents(docs).collect()  # noqa: E731
+    select()
+    assert spark_jobs(select) <= 15
+
+
+def _cc_edges(spark, parts):
+    from chromem_go_spark.session import local_frame
+
+    rows = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (20, 21)]
+    edges = local_frame(spark, rows, "id_a long, id_b long")
+    return edges.coalesce(1) if parts == 1 else edges.repartition(parts)
+
+
+def test_connected_components_one_partition_runs_one_python_task(spark, python_tasks):
+    """A one-partition edge frame is resolved by one kernel task."""
+    from chromem_go_spark.operators import dedup as D
+
+    edges = _cc_edges(spark, 1)
+    assert python_tasks(lambda: D.connected_components(edges).collect()) == 1
+
+
+def test_connected_components_many_partitions_keep_the_loop(spark, spark_jobs, python_tasks):
+    """Edges spread over 4 partitions run the label-propagation loop
+    with its jobs unchanged (31 on this graph) and no Python task."""
+    from chromem_go_spark.operators import dedup as D
+
+    edges = _cc_edges(spark, 4)
+    assert spark_jobs(lambda: D.connected_components(edges).collect()) == 31
+    assert python_tasks(lambda: D.connected_components(edges).collect()) == 0
+
+
+def test_neardup_micro_batch_reads_state_with_no_schema_job(spark, tmp_path, docs, spark_jobs):
+    """A micro-batch after the first reads the bucket and shingle state
+    with the schema its own frames write, so neither read runs a
+    schema-inference job (13 jobs per batch when both did)."""
+    from chromem_go_spark.streaming import ingest as S
+
+    batch = docs.filter("doc_id < 40")
+    state = str(tmp_path / "state")
+    S.incremental_neardup_batch(batch.filter("doc_id % 2 = 0"), state, batch_id=0)
+    assert spark_jobs(lambda: S.incremental_neardup_batch(
+        batch.filter("doc_id % 2 = 1"), state, batch_id=1
+    )) <= 11
