@@ -27,7 +27,7 @@ from chromem_go_spark.operators import events as EV  # noqa: E402
 from chromem_go_spark.operators import knn as K  # noqa: E402
 from chromem_go_spark.operators import router as RT  # noqa: E402
 from chromem_go_spark.operators import textindex as TI  # noqa: E402
-from chromem_go_spark.operators.filters import combined_predicate  # noqa: E402
+from chromem_go_spark.operators.filters import filter_classes  # noqa: E402
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -513,8 +513,8 @@ def q_hnsw_sharded_deleted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hnsw_batch_per_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch HNSW with PER-QUERY allowed id sets (r11): each of 8
     queries walks restricted to the ids sharing its own label — the
-    graph-tier analog of knn_batch_per_filter's broadcast-join
-    condition, materialized to id sets because a walk cannot evaluate
+    graph-tier analog of knn_batch_per_filter's filter classes,
+    materialized to id sets because a walk cannot evaluate
     predicates.  Exact at ef >= live-n per query, so the oracle is the
     per-label filtered top-k (the same SQL as knn_batch_per_filter)."""
     from chromem_go_spark.operators.hnsw import HNSWIndex
@@ -764,18 +764,36 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_batch_per_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch kNN with a PER-QUERY metadata filter: each of 8 queries is
-    restricted to docs sharing its own label (the filter is part of the
-    broadcast-join condition, so mismatching pairs are never scored)."""
+    restricted to docs sharing its own label.  The labels are filter
+    classes masked inside the GEMM kernel, so a query never ranks a
+    doc of another label."""
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").cast("string").alias("query_id"),
-        V.normalize_if_needed("embedding").alias("query_vec"),
-        F.col("label").alias("query_filter"),
+    qrows = (
+        emb.filter(F.col("vec_id") < 8)
+        .select("vec_id", "embedding", "label")
+        .collect()
     )
-    out = K.knn_expr_filtered(
-        emb, queries, 5, filter_col="label", vec_col="embedding", id_col="vec_id"
+    classes, class_of = filter_classes(
+        [({"label": str(r["label"])}, [], []) for r in qrows],
+        value_sql=_flat_value_sql,
+    )
+    out = K.knn_block(
+        emb,
+        [str(r["vec_id"]) for r in qrows],
+        [list(r["embedding"]) for r in qrows],
+        5,
+        vec_col="embedding",
+        id_col="vec_id",
+        classes=classes,
+        class_of=class_of,
     )
     return out.select("query_id", "vec_id", F.round("similarity", 4).alias("sim"))
+
+
+def _flat_value_sql(key: str) -> str:
+    """A where-key over a flat column, string-compared (the reference's
+    map[string]string metadata model)."""
+    return f"CAST(`{key}` AS STRING)"
 
 
 # Per-query filter specs for knn_batch_per_filter2: (query vec_id,
@@ -797,39 +815,39 @@ _PF2_SPECS = [
 _PF2_SQL_COLS = {"label": "CAST(e.label AS VARCHAR)", "lang": "d.lang"}
 
 
-def q_knn_batch_per_filter2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch kNN with the FULL per-query filter DSL: each query carries
-    its own metadata-equality map plus $contains / $not_contains content
-    predicates (reference query.go:135-155, batched). Corpus = embeddings
-    joined with documents so metadata and content filters mix."""
+def _pf2_batch(spark: SparkSession, sf_dir: str):
+    """knn_batch_per_filter2's corpus (embeddings joined with documents,
+    so metadata and content filters mix), query ids and vectors, and
+    the _PF2_SPECS filters as classes over the corpus's flat columns."""
     emb = _t(spark, sf_dir, "embeddings")
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     corpus = emb.join(docs, emb.vec_id == docs.doc_id).select(
         "vec_id", "embedding", "label", "lang", "text"
     )
-    spec_df = spark.createDataFrame(
-        [(int(qid), w, c, nc) for qid, w, c, nc in _PF2_SPECS],
-        "qid long, q_where map<string,string>, q_contains array<string>, "
-        "q_not_contains array<string>",
+    qrows = (
+        emb.filter(F.col("vec_id") < len(_PF2_SPECS))
+        .select("vec_id", "embedding")
+        .collect()
     )
-    queries = (
-        emb.join(spec_df, emb.vec_id == spec_df.qid)
-        .select(
-            F.col("vec_id").cast("string").alias("query_id"),
-            V.normalize_if_needed("embedding").alias("query_vec"),
-            "q_where",
-            "q_contains",
-            "q_not_contains",
-        )
+    qv = {str(r["vec_id"]): [float(x) for x in r["embedding"]] for r in qrows}
+    qids = [qid for qid, _, _, _ in _PF2_SPECS]
+    classes, class_of = filter_classes(
+        [(w, c, nc) for _, w, c, nc in _PF2_SPECS],
+        value_sql=_flat_value_sql,
+        content_col="text",
     )
-    out = K.knn_expr_filtered_dsl(
-        corpus,
-        queries,
-        5,
-        filterable_cols=["label", "lang"],
-        text_col="text",
-        vec_col="embedding",
-        id_col="vec_id",
+    return corpus, qids, [qv[qid] for qid in qids], classes, class_of
+
+
+def q_knn_batch_per_filter2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Batch kNN with the FULL per-query filter DSL: each query carries
+    its own metadata-equality map plus $contains / $not_contains content
+    predicates (reference query.go:135-155, batched), masked inside the
+    GEMM kernel as filter classes."""
+    corpus, qids, qvecs, classes, class_of = _pf2_batch(spark, sf_dir)
+    out = K.knn_block(
+        corpus, qids, qvecs, 5, vec_col="embedding", id_col="vec_id",
+        classes=classes, class_of=class_of,
     )
     return out.select("query_id", "vec_id", F.round("similarity", 4).alias("sim"))
 
@@ -863,36 +881,17 @@ SELECT query_id, vec_id, sim FROM (
 
 
 def q_knn_batch_per_filter_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """knn_batch_per_filter2's queries through the IVF tier (r9): each
-    query's filter DSL rides the probe table into the cluster-pruned
-    join (IVFIndex.search_batch_dsl), so per-query-filtered batches
-    keep partition pruning at scale.  nprobe = nlist probes every
-    cell — the exact-identity setting — so the oracle is the FLAT DSL
-    kernel's SQL (same _PF2_SPECS drive both sides)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    corpus = emb.join(docs, emb.vec_id == docs.doc_id).select(
-        "vec_id", "embedding", "label", "lang", "text"
-    )
+    """knn_batch_per_filter2's queries through the IVF tier: the probe
+    and each query's filter class are one mask in the GEMM kernel over
+    the probed cells.  nprobe = nlist probes every cell — the
+    exact-identity setting — so the oracle is knn_batch_per_filter2's
+    SQL (same _PF2_SPECS drive both sides)."""
+    corpus, qids, qvecs, classes, class_of = _pf2_batch(spark, sf_dir)
     idx = ANN.IVFIndex.build(
         corpus, n_clusters=8, vec_col="embedding", id_col="vec_id"
     )
-    qrows = (
-        emb.filter(F.col("vec_id") < len(_PF2_SPECS))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    qv = {str(r["vec_id"]): [float(x) for x in r["embedding"]] for r in qrows}
-    qids = [qid for qid, _, _, _ in _PF2_SPECS]
-    out = idx.search_batch_dsl(
-        qids,
-        [qv[qid] for qid in qids],
-        5,
-        [(w, c, nc) for _, w, c, nc in _PF2_SPECS],
-        nprobe=8,
-        metadata_col=None,
-        filterable_cols=["label", "lang"],
-        text_col="text",
+    out = idx.search_batch(
+        qids, qvecs, 5, nprobe=8, classes=classes, class_of=class_of
     )
     return out.select("query_id", "vec_id", F.round("similarity", 4).alias("sim"))
 
@@ -2929,7 +2928,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     never-windowed distinct shape) rotated IN;
     knn_batch_per_filter_ivf rotated OUT (the per-query-filter family
     keeps window coverage through the new graph row, and the IVF
-    probe-join DSL path stays value-checked in extras via the shared
+    per-query-filter path stays value-checked in extras via the shared
     _pf2 oracle).
 
     r13: hnsw_split_search (the capacity protocol's conservation
@@ -3945,7 +3944,7 @@ WHERE cluster_rep = doc_id AND quality >= 0.3
 GROUP BY lang_pred
 """,
         "knn_batch_per_filter2": _pf2_oracle_sql(),
-        # r9: the IVF probe-join DSL path at nprobe-all is exactly the
+        # the IVF per-query-filter path at nprobe-all is exactly the
         # FLAT kernel — one spec list drives Spark AND the oracle
         "knn_batch_per_filter_ivf": _pf2_oracle_sql(),
         "knn_batch_expr": f"""
@@ -4958,7 +4957,7 @@ _EXTRA_KEYS = frozenset(
         "hnsw_search_deleted",  # r11: graph tombstones, ef>=live-n == survivors' brute force
         "hnsw_search_filtered",  # r11: allowed id-set walk == filtered brute force
         "hnsw_sharded_deleted",  # r11: sharded delete fan-out, same survivors' oracle
-        "knn_batch_per_filter_ivf",  # r12: rotated out (per-query-filter family kept in-window by hnsw_batch_per_filter; the probe-join DSL shares _pf2's oracle)
+        "knn_batch_per_filter_ivf",  # r12: rotated out (per-query-filter family kept in-window by hnsw_batch_per_filter; the IVF per-query-filter path shares _pf2's oracle)
         "length_histogram",  # r7: power-of-two length buckets + pad audit
         "source_report",  # r7: per-source data card
         "tokenizer_fertility",  # r7: BPE pieces per word by language

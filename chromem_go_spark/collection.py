@@ -58,7 +58,12 @@ from .locking import write_lock
 from .materialize import materialize
 from .functions import vector as V
 from .operators import knn as knn_ops
-from .operators.filters import validate_where_document
+from .operators.filters import (
+    and_fold_groups,
+    filter_classes,
+    sql_strings,
+    validate_where_document,
+)
 from .session import local_frame
 
 EmbeddingFunc = Callable[[str], Sequence[float]]
@@ -271,7 +276,7 @@ class Collection:
             if not small:
                 view = view.join(F.broadcast(latest.select("id")), "id", "left_anti")
             elif ids := _parquet_ids(f for files in log.values() for f, _ in files):
-                view = view.filter(F.expr(f"id NOT IN ({_sql_strings(ids)})"))
+                view = view.filter(F.expr(f"id NOT IN ({sql_strings(ids)})"))
             view = view.unionByName(latest.filter(~F.col("__tomb")).select(*_DOC_COLS))
         self._df = view
 
@@ -635,7 +640,7 @@ class Collection:
                 else:
                     # SQL text parsed once: no Python rows, no Python worker
                     gone = self.spark.range(1).select(F.explode(F.expr(
-                        f"array({_sql_strings(sorted({str(i) for i in ids}))})"
+                        f"array({sql_strings(sorted({str(i) for i in ids}))})"
                     )).alias("id"))
                 self._append(gone, tombstones=True)
             return
@@ -1400,20 +1405,20 @@ class Collection:
         ``per_query_filters``: optional list (one entry per query, None
         entries allowed) of ``{"where": {...}, "where_document":
         {"$contains": ..., "$not_contains": ...}}`` in the reference's
-        flat shape — EACH query gets its own filter, folded into the
-        broadcast-join condition (knn_ops.knn_expr_filtered_dsl), so
-        non-matching pairs are never scored.  Without per-query filters
-        the block-matrix GEMM kernel runs instead (fastest path).
+        flat shape — EACH query gets its own filter.  The batch's
+        distinct filters become classes (``filters.filter_classes``):
+        one boolean per class and row, projected beside the vectors,
+        and the same GEMM kernel as an unfiltered batch masks each
+        query's scores with its class bit, so non-matching pairs never
+        enter a query's top-k.
 
         ``index`` / ``target_recall`` / ``tuned`` route the whole batch
         through ONE tier decision, with the same ladder and served-index
-        rule as :meth:`query_embedding`.  Per-query filters route with
-        ``filtered=True`` (FLAT or IVF): FLAT keeps the DSL kernel, IVF
-        threads each query's predicates into the cluster-pruned probe
-        join (``IVFIndex.search_batch_dsl``), and forcing a quantized
-        tier raises.  A served non-IVF index with per-query filters
-        takes the FLAT DSL kernel; callers that already hold per-query
-        allowed id sets can walk a graph directly with
+        rule as :meth:`query_embedding`.  Per-query filters route as
+        filtered (FLAT or IVF, both the masked GEMM kernel), and forcing
+        a quantized tier raises.  A served non-IVF index with per-query
+        filters takes the exact FLAT path; callers that already hold
+        per-query allowed id sets can walk a graph directly with
         ``HNSWIndex.search_batch(allowed_per_query=...)``."""
         if query_embeddings is None:
             if not query_texts:
@@ -1428,33 +1433,23 @@ class Collection:
         validate_where_document(where_document)
         qids = [str(i) for i in range(len(query_embeddings))]
         qvecs = [[float(x) for x in q] for q in query_embeddings]
-        parsed = None
+        classes = class_of = None
         if per_query_filters is not None:
             parsed = self._parse_per_query_filters(
                 per_query_filters, len(query_embeddings)
             )
+            classes, class_of = filter_classes(parsed)
         pred, groups, index, allowed = self._front_end(
             where, where_document, extended_filters, index,
-            per_query=parsed is not None,
+            per_query=classes is not None,
         )
-        if parsed is not None:
+        if classes is not None:
             # ONE prune covers the global groups AND the per-query
             # $contains lists (capped cross-product: both constraint
             # sets are required, so their AND-fold is sound and tighter)
-            from .operators.filters import and_fold_groups
-
             per_q = [list(c) for (_w, c, _nc) in parsed]
             groups = and_fold_groups(
                 groups, per_q if (per_q and all(per_q)) else []
-            )
-            if index is not None:
-                return self._query_batch_routed_dsl(
-                    qids, qvecs, n_results, parsed, pred, groups, index,
-                    target_recall, tuned,
-                )
-            return self._query_batch_flat_dsl(
-                qids, qvecs, n_results, parsed,
-                self._scan_frame(pred, groups),
             )
         if index is not None:
             from .operators import router as R
@@ -1465,17 +1460,18 @@ class Collection:
                 id_col="id", index=index, target_recall=target_recall,
                 where=None if allowed is not None else pred, tuned=tuned,
                 n_docs=n_docs, allowed=allowed,
+                classes=classes, class_of=class_of,
             )
         return knn_ops.knn_block(
-            self._scan_frame(pred, groups), qids, qvecs, int(n_results)
+            self._scan_frame(pred, groups), qids, qvecs, int(n_results),
+            classes=classes, class_of=class_of,
         )
 
     @staticmethod
     def _parse_per_query_filters(per_query_filters, n_queries: int):
         """Validate + parse the per-query filter list into
-        ``(where_map, contains_list, not_contains_list)`` tuples — the
-        shape both the FLAT DSL kernel's query frame and the IVF probe
-        table (``IVFIndex.search_batch_dsl``) carry."""
+        ``(where_map, contains_list, not_contains_list)`` tuples, the
+        input of ``filters.filter_classes``."""
         if len(per_query_filters) != n_queries:
             raise ValueError(
                 "per_query_filters must have one entry per query"
@@ -1495,80 +1491,6 @@ class Collection:
                 )
             )
         return parsed
-
-    def _query_batch_flat_dsl(
-        self, qids, qvecs, n_results, parsed, filtered: DataFrame
-    ) -> DataFrame:
-        """The FLAT broadcast-join kernel for a per-query-filtered
-        batch: every query row carries its parsed DSL, the condition is
-        part of the join, non-matching pairs are never scored."""
-        rows = [
-            (qid, V.normalize_vec(qv), w, c, nc)
-            for qid, qv, (w, c, nc) in zip(qids, qvecs, parsed)
-        ]
-        qdf = local_frame(
-            self.spark,
-            rows,
-            "query_id string, query_vec array<double>, "
-            "q_where map<string,string>, q_contains array<string>, "
-            "q_not_contains array<string>",
-        )
-        return knn_ops.knn_expr_filtered_dsl(
-            filtered,
-            qdf,
-            int(n_results),
-            metadata_col="metadata",
-            text_col="content",
-            id_col="id",
-        )
-
-    def _query_batch_routed_dsl(
-        self, qids, qvecs, n_results, parsed, pred, groups, index,
-        target_recall, tuned,
-    ) -> DataFrame:
-        """A per-query-filtered batch through the router: a served IVF
-        threads each query's predicates into its probe join
-        (:meth:`..operators.ann.IVFIndex.search_batch_dsl`); a tier name
-        is decided by ``router.decide`` with ``filtered=True``, sized on
-        the filtered frame — FLAT dispatches the broadcast-join DSL
-        kernel, IVF builds over the filtered frame and probes it.  The
-        global predicate applies to the corpus side on every path."""
-        from .operators import router as R
-        from .operators.ann import IVFIndex
-
-        k = int(n_results)
-        if not isinstance(index, str):
-            served = R._served_decision(index, k, target_recall)
-            return index.search_batch_dsl(
-                qids, qvecs, k, parsed, nprobe=served["nprobe"],
-                where=pred, metadata_col="metadata", text_col="content",
-            )
-        filtered = self._scan_frame(pred, groups)
-        n_docs = filtered.count()
-        decision = R.decide(
-            index, n_docs, len(qvecs[0]), k=k,
-            target_recall=target_recall, filtered=True, tuned=tuned,
-        )
-        if decision["tier"] == "flat" or n_docs == 0:
-            # an empty constrained corpus answers empty on every tier
-            return self._query_batch_flat_dsl(
-                qids, qvecs, n_results, parsed, filtered
-            )
-        idx = IVFIndex.build(
-            filtered, n_clusters=decision["n_clusters"],
-            vec_col="embedding", id_col="id",
-        )
-        return idx.search_batch_dsl(
-            qids, qvecs, k, parsed, nprobe=decision["nprobe"],
-            metadata_col="metadata", text_col="content",
-        )
-
-
-def _sql_strings(values) -> str:
-    """Comma-separated SQL string literals of ``values``."""
-    return ", ".join(
-        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
-    )
 
 
 def _parquet_files(path: str) -> list[str]:

@@ -14,8 +14,9 @@ Three tiers:
 
 - :class:`IVFIndex` keeps full vectors and every input column in the
   cells and scores exactly inside the probed cells.  It is the tier
-  that serves metadata filters (``search_filtered``,
-  ``search_batch_dsl``).
+  that serves metadata filters (``search_filtered``, and
+  ``search_batch`` with a global ``where`` and per-query filter
+  classes).
 - :class:`IVFSQIndex` and :class:`IVFPQIndex` are two codecs over one
   coded inverted-list container, :class:`_CodedIVF`.  A codec trains
   its parameters, turns each vector into a fixed-width uint8 row (SQ8:
@@ -259,21 +260,18 @@ def _probe_clusters(
     return [int(c) for c in np.argsort(-sims)[: int(nprobe)]]
 
 
-def _query_batch(query_ids, query_vecs, per_query=None):
+def _query_batch(query_ids, query_vecs):
     """Every IVF tier's batch-query front end: ``(ids as strings,
     vectors as a list)``.  Materializes iterator inputs once and
-    rejects ids, vectors (and ``per_query``, when given) of different
-    lengths — ``zip`` would silently drop queries, and the coded
-    kernels would index past the id list."""
+    rejects ids and vectors of different lengths — ``zip`` would
+    silently drop queries, and the coded kernels would index past the
+    id list."""
     qids = [str(q) for q in query_ids]
     qvecs = list(query_vecs)
-    sizes = {"query_ids": len(qids), "query_vecs": len(qvecs)}
-    if per_query is not None:
-        sizes["per_query"] = len(per_query)
-    if len(set(sizes.values())) > 1:
-        parts = [f"{name} ({n})" for name, n in sizes.items()]
+    if len(qids) != len(qvecs):
         raise ValueError(
-            f"{', '.join(parts[:-1])} and {parts[-1]} must be the same length"
+            f"query_ids ({len(qids)}) and query_vecs ({len(qvecs)}) "
+            "must be the same length"
         )
     return qids, qvecs
 
@@ -945,6 +943,8 @@ class IVFIndex:
         k: int,
         nprobe: int = 4,
         where=None,
+        classes=None,
+        class_of=None,
     ) -> DataFrame:
         """Batch IVF search: every query is routed to its ``nprobe``
         nearest clusters on the driver (centroids are MB-scale), the
@@ -959,8 +959,12 @@ class IVFIndex:
         ``where`` is an optional metadata predicate Column over the
         index's carried columns, applied BELOW scoring (the batch analog
         of :meth:`search_filtered`: Catalyst composes it with the
-        cluster pruning at the scan).  The standard filtered-ANN caveat
-        applies per query: raise nprobe with selectivity."""
+        cluster pruning at the scan).  ``classes`` / ``class_of`` give
+        each query its own filter over the carried columns
+        (``filters.filter_classes``): a query scores a row only when
+        the row is in its probed cells AND matches its filter.  The
+        standard filtered-ANN caveat applies per query: raise nprobe
+        with selectivity."""
         qids, qvecs = _query_batch(query_ids, query_vecs)
         units = [_unit(qv) for qv in qvecs]
         allow = np.zeros((len(self.centroids), len(units)), dtype=bool)
@@ -974,113 +978,8 @@ class IVFIndex:
         return knn_ops._gemm_topk(
             base, qids, qmat, k,
             self.vec_col, self.id_col, cell_col="cluster_id", allow=allow,
+            classes=classes, class_of=class_of,
         )
-
-    def _probe_tables(self, qids, qvecs, per_query, nprobe: int):
-        """Driver-side construction of the two normalized broadcast
-        tables for :meth:`search_batch_dsl`: ``pair_rows`` is exactly
-        the (query_id, cluster_id) probe pairs — O(q·nprobe) 2-tuples,
-        NO dim-sized payload — and ``meta_rows`` carries each query's
-        normalized vector + parsed DSL exactly ONCE (O(q) rows).
-        Factored out so the broadcast-size contract is directly
-        testable (tests/test_ann.py)."""
-        qids, qvecs = _query_batch(qids, qvecs, per_query)
-        pair_rows: list[tuple] = []
-        meta_rows: list[tuple] = []
-        for qid, qv, (w, cont, notc) in zip(qids, qvecs, per_query):
-            q = _unit(qv)
-            meta_rows.append(
-                (
-                    qid, [float(x) for x in q],
-                    dict(w or {}), list(cont or []), list(notc or []),
-                )
-            )
-            for c in _probe_clusters(self.centroids, q, nprobe):
-                pair_rows.append((qid, int(c)))
-        return pair_rows, meta_rows
-
-    def search_batch_dsl(
-        self,
-        query_ids: Sequence,
-        query_vecs: Sequence[Sequence[float]],
-        k: int,
-        per_query,
-        nprobe: int = 4,
-        where=None,
-        metadata_col: str | None = "metadata",
-        filterable_cols=None,
-        text_col: str | None = "content",
-    ) -> DataFrame:
-        """Batch IVF search where EACH query carries its own where /
-        where_document DSL (r9 — the IVF analog of
-        :func:`..knn.knn_expr_filtered_dsl`): the probe table's rows
-        carry the query's parsed filter columns alongside its probed
-        clusters, so ONE broadcast join keeps BOTH the cluster pruning
-        and the per-query predicate below scoring — filtered batches no
-        longer give up partition pruning at scale.
-
-        ``per_query`` is one parsed tuple per query:
-        ``(where_map, contains_list, not_contains_list)`` — the
-        caller (``Collection.query_batch``) owns DSL validation.
-        ``where`` is an optional GLOBAL predicate Column over the
-        carried columns, applied to the corpus side before the join
-        (batch-wide filters compose with the per-query ones).  The
-        index's carried columns must include ``metadata_col`` /
-        ``text_col`` when the corresponding filters are used (pass
-        ``None`` for a surface the frame lacks: non-empty filters on it
-        then match nothing, same rule as the FLAT kernel).  Standard
-        filtered-ANN caveat per query: raise nprobe with selectivity.
-
-        Broadcast shape (r10): the probe table is NORMALIZED — it
-        carries only ``(query_id, cluster_id)`` pairs (O(q·nprobe)
-        rows, no dim-sized payload), and the query's vector + parsed
-        DSL ride a SECOND per-query broadcast (O(q) rows, the vector
-        exactly once per query).  Both joins are broadcast hash joins
-        in one codegen stage, so the denormalized form never
-        materializes — versus the r9 shape that repeated each query's
-        full vector once per probed cluster (q × nprobe × dim: ~3.9 GB
-        broadcast at q=10k, nprobe=32, d=1536 for ~120 MB of data)."""
-        spark = self.assigned.sparkSession
-        pair_rows, meta_rows = self._probe_tables(
-            query_ids, query_vecs, list(per_query), nprobe
-        )
-        pairs_df = F.broadcast(
-            spark.createDataFrame(pair_rows, "query_id string, cluster_id int")
-        )
-        qmeta_df = F.broadcast(
-            spark.createDataFrame(
-                meta_rows,
-                "query_id string, query_vec array<double>, "
-                "q_where map<string,string>, q_contains array<string>, "
-                "q_not_contains array<string>",
-            )
-        )
-        base = self.assigned if where is None else self.assigned.filter(where)
-        # join 1: cluster-pruned (doc, query) pairs; join 2 attaches
-        # the per-query vector + DSL and filters non-matching pairs
-        # below scoring — both broadcast, pipelined, no materialization
-        expanded = base.join(
-            pairs_df, base["cluster_id"] == pairs_df["cluster_id"]
-        )
-        cond = (
-            pairs_df["query_id"] == qmeta_df["query_id"]
-        ) & knn_ops.dsl_filter_condition(
-            base, qmeta_df,
-            metadata_col=metadata_col, filterable_cols=filterable_cols,
-            text_col=text_col,
-        )
-        scored = (
-            expanded.join(qmeta_df, cond)
-            .withColumn(
-                "similarity",
-                V.dot(
-                    F.col(self.vec_col).cast("array<double>"),
-                    qmeta_df["query_vec"],
-                ),
-            )
-            .select(pairs_df["query_id"], base[self.id_col], "similarity")
-        )
-        return knn_ops.topk_per_query(scored, k, "query_id", self.id_col)
 
 
 def _held_in_queries(

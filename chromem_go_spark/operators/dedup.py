@@ -703,12 +703,14 @@ def connected_components(
     # A self-loop per node: each node is its own neighbor, so one
     # groupBy yields both its new label (the neighborhood min) and its
     # old one (the label over its self-loop) — no second join to detect
-    # a change.
+    # a change.  A null endpoint adds no edge (the other endpoint keeps
+    # its self-loop), as in :func:`_union_find`.
     und = (
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .unionByName(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
         .unionByName(edges.select(F.col(src_col).alias("a"), F.col(src_col).alias("b")))
         .unionByName(edges.select(F.col(dst_col).alias("a"), F.col(dst_col).alias("b")))
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
         .transform(materialize)
     )
@@ -775,9 +777,12 @@ def connected_components_star(
         if rounds_out is not None:
             rounds_out.append(0)
         return _local_components(edges)
+    # a null endpoint is no node (and `e` drops its row: greatest /
+    # least skip nulls, so u != v fails), as in :func:`_union_find`
     nodes = (
         edges.select(F.col(src_col).alias("n"))
         .unionByName(edges.select(F.col(dst_col).alias("n")))
+        .filter(F.col("n").isNotNull())
         .distinct()
         .transform(materialize)
     )

@@ -12,6 +12,10 @@ Expressed declaratively so Catalyst pushes the cheap predicates below
 the expensive similarity projection (the reference hand-orders this at
 collection.go:521; Spark's PushDownPredicates does it for free) and down
 to the Parquet scan when the filter hits a top-level column.
+
+A batch whose queries each carry their own filter renders its distinct
+filters as SQL text into one ``array<boolean>`` column
+(:func:`filter_classes`), which the GEMM kernel reads as a mask.
 """
 
 from __future__ import annotations
@@ -75,6 +79,59 @@ def combined_predicate(
     return where_predicate(where, metadata_col) & where_document_predicate(
         where_document, content_col
     )
+
+
+# ------------------------------------------------- per-query classes
+
+
+def sql_strings(values) -> str:
+    """Comma-separated SQL string literals of ``values`` (backslash
+    escaped first, then the quote)."""
+    return ", ".join(
+        "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
+    )
+
+
+def filter_sql(
+    where: Mapping[str, str],
+    contains,
+    not_contains,
+    value_sql=None,
+    content_col: str = "content",
+) -> str:
+    """One parsed filter ``(where_map, contains, not_contains)`` as SQL
+    text: ``coalesce(<value> = 'v' AND contains(content, 's') AND NOT
+    contains(content, 't'), false)``, or ``true`` when it is empty.
+    A missing key reads NULL and a NULL never matches (reference
+    query.go:135-155).  ``value_sql(key)`` renders a where-key's value;
+    the default is the ``metadata`` map entry."""
+    if value_sql is None:
+        value_sql = lambda k: f"metadata[{sql_strings([k])}]"  # noqa: E731
+    text = f"`{content_col}`"
+    preds = [f"{value_sql(k)} = {sql_strings([v])}" for k, v in sorted(where.items())]
+    preds += [f"contains({text}, {sql_strings([s])})" for s in contains]
+    preds += [f"NOT contains({text}, {sql_strings([s])})" for s in not_contains]
+    return f"coalesce({' AND '.join(preds)}, false)" if preds else "true"
+
+
+def filter_classes(parsed, **render) -> tuple[Column, list[int]]:
+    """A batch's per-query filters as ``(classes, class_of)``: the
+    distinct filters (keyed by their parsed tuple, ``where`` items
+    sorted) rendered by :func:`filter_sql` into ONE ``array<boolean>``
+    Column parsed once, and ``class_of[j]``, the entry query ``j``
+    uses.  The GEMM kernel (``knn._gemm_topk``) masks each query's
+    scores with its class bit per row."""
+    index: dict[tuple, int] = {}
+    class_of = [
+        index.setdefault(
+            (tuple(sorted(w.items())), tuple(c), tuple(nc)), len(index)
+        )
+        for w, c, nc in parsed
+    ]
+    entries = ", ".join(
+        filter_sql(dict(w), c, nc, **render) for w, c, nc in index
+    )
+    return F.expr(f"array({entries})"), class_of
 
 
 # ------------------------------------------------------- extended DSL

@@ -8,18 +8,26 @@ top-k. Re-architected for batch throughput:
   to ``TakeOrderedAndProject`` — a per-partition bounded heap + driver
   merge, which is exactly the reference's ``maxDocSims`` heap
   (query.go:16-83) distributed.
-- **Batch of queries** (the 100 TB shape): broadcast the small queries
-  side, score every (doc, query) pair map-side, and take per-query top-k.
-  Two implementations:
-    * ``knn_expr`` — pure Catalyst expressions (zip_with/aggregate dot +
-      window row_number). Fully codegen'd, oracle-friendly.
-    * ``knn_block`` — ``mapInArrow`` NumPy kernel: per Arrow batch, one
-      f64 matrix multiply scores all queries at once and a local
-      partition keeps only k rows per query (and their ties) **before
-      any shuffle**.
+- **Batch of queries** (the 100 TB shape): score every (doc, query)
+  pair map-side, and take per-query top-k.  Two implementations:
+    * ``knn_expr`` — pure Catalyst expressions (broadcast cross join,
+      zip_with/aggregate dot + window row_number). Fully codegen'd,
+      oracle-friendly.
+    * ``knn_block`` — ``mapInArrow`` NumPy kernel (:func:`_gemm_topk`):
+      per Arrow batch, one f64 matrix multiply scores all queries at
+      once and a local partition keeps only k rows per query (and
+      their ties) **before any shuffle**.
       The post-map shuffle carries at most (partitions x queries x k)
       rows instead of (docs x queries) — this is what survives a 100x
       scale-up.
+
+Every vector batch runs the one kernel.  What a query may score is a
+per-row boolean mask inside it, not a join condition: the IVF probe is
+an ``allow`` mask over each row's cell, and per-query filters (the
+reference applies its filter DSL one query at a time, query.go:135-155)
+are deduplicated into classes projected beside the vectors as one
+``array<boolean>`` column (``filters.filter_classes``); query ``j``
+scores a row only where its class bit is set.
 
 Negative queries (reference collection.go:434-480):
 - subtract mode: q' = normalize(q - neg), then normal search.
@@ -29,7 +37,7 @@ Negative queries (reference collection.go:434-480):
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Sequence
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -141,172 +149,6 @@ def knn_expr(
     return topk_per_query(scored, k, query_id_col, id_col, sim_col)
 
 
-def knn_expr_filtered(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int,
-    filter_col: str,
-    vec_col: str = "embedding",
-    id_col: str = "id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    query_filter_col: str = "query_filter",
-    sim_col: str = "similarity",
-) -> DataFrame:
-    """Batch kNN where EACH query carries its own equality pre-filter:
-    query rows hold (id, vector, filter-value); a doc is scored for a
-    query only when ``docs[filter_col] == query_filter`` (NULL filter =
-    match everything). The filter is part of the broadcast-join
-    condition, so non-matching (doc, query) pairs are never scored —
-    batched filtered search, which the reference can only do one query
-    at a time (collection.go:521)."""
-    q = F.broadcast(
-        queries.select(query_id_col, query_vec_col, query_filter_col)
-    )
-    cond = q[query_filter_col].isNull() | (
-        docs[filter_col] == q[query_filter_col]
-    )
-    scored = (
-        docs.select(id_col, vec_col, filter_col)
-        .join(q, cond)
-        .withColumn(sim_col, V.dot(F.col(vec_col), F.col(query_vec_col)))
-        .select(query_id_col, id_col, sim_col)
-    )
-    return topk_per_query(scored, k, query_id_col, id_col, sim_col)
-
-
-def dsl_filter_condition(
-    docs: DataFrame,
-    q,
-    where_col: str = "q_where",
-    contains_col: str = "q_contains",
-    not_contains_col: str = "q_not_contains",
-    metadata_col: str | None = None,
-    filterable_cols: Sequence[str] | None = None,
-    text_col: str | None = None,
-) -> Column:
-    """The per-query filter DSL as ONE join condition Column between a
-    docs frame and a (broadcast) query frame ``q`` carrying
-    ``q_where`` / ``q_contains`` / ``q_not_contains`` — the shared core
-    of :func:`knn_expr_filtered_dsl` and the IVF probe-table join
-    (``ann.IVFIndex.search_batch_dsl``): non-matching (doc, query)
-    pairs are never scored on either path.  Semantics documented on
-    :func:`knn_expr_filtered_dsl`."""
-    conds = []
-    w = q[where_col]
-    if metadata_col is None and not filterable_cols:
-        # no metadata surface: a NON-EMPTY q_where must match nothing
-        # (silently ignoring a filter would return wrong rows — same
-        # principle as the unknown-key rule below)
-        conds.append(w.isNull() | (F.size(F.map_keys(w)) == 0))
-    if text_col is None:
-        # no content surface: non-empty contains filters match nothing
-        conds.append(
-            q[contains_col].isNull() | (F.size(q[contains_col]) == 0)
-        )
-        conds.append(
-            q[not_contains_col].isNull() | (F.size(q[not_contains_col]) == 0)
-        )
-    if metadata_col is not None:
-        conds.append(
-            w.isNull()
-            | F.forall(
-                F.map_entries(w),
-                lambda e: F.coalesce(
-                    F.element_at(docs[metadata_col], e["key"]) == e["value"],
-                    F.lit(False),
-                ),
-            )
-        )
-    if filterable_cols:
-        # a where-key outside the filterable set must FAIL the match
-        # (silently ignoring a filter would return wrong rows)
-        combined = F.forall(F.map_keys(w), lambda kk: kk.isin(*filterable_cols))
-        for c in filterable_cols:
-            combined = combined & (
-                ~F.map_contains_key(w, c)
-                | F.coalesce(
-                    docs[c].cast("string") == F.element_at(w, F.lit(c)), F.lit(False)
-                )
-            )
-        conds.append(w.isNull() | combined)
-    if text_col is not None:
-        t = docs[text_col]
-        c_arr = q[contains_col]
-        nc_arr = q[not_contains_col]
-        # forall([]) is True and exists([]) is False — empty arrays
-        # match everything, like the reference's absent filters
-        conds.append(c_arr.isNull() | F.forall(c_arr, lambda s: t.contains(s)))
-        conds.append(nc_arr.isNull() | ~F.exists(nc_arr, lambda s: t.contains(s)))
-    cond = F.lit(True)
-    for c in conds:
-        cond = cond & c
-    return cond
-
-
-def knn_expr_filtered_dsl(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    where_col: str = "q_where",
-    contains_col: str = "q_contains",
-    not_contains_col: str = "q_not_contains",
-    metadata_col: str | None = None,
-    filterable_cols: Sequence[str] | None = None,
-    text_col: str | None = None,
-    sim_col: str = "similarity",
-) -> DataFrame:
-    """Batch kNN where EACH query row carries the full where /
-    where_document DSL (reference query.go:135-155, applied per query):
-
-    - ``q_where``: map<string,string> of metadata equality pairs — ALL
-      must match; a missing metadata key is a non-match (reference
-      documentMatchesFilters query.go:135-141). Keys resolve against the
-      ``metadata_col`` map or against flat ``filterable_cols`` columns
-      (values compared as strings, matching the reference's
-      map[string]string metadata model).
-    - ``q_contains`` / ``q_not_contains``: arrays of substrings over
-      ``text_col`` — every ``q_contains`` entry must appear, no
-      ``q_not_contains`` entry may (reference query.go:147-155).
-
-    NULL (or empty) filter columns match everything. The entire DSL is
-    part of the broadcast-join condition, so non-matching (doc, query)
-    pairs are never scored — this generalizes :func:`knn_expr_filtered`
-    from one equality column to the reference's whole filter surface,
-    batched (the reference runs one query at a time, collection.go:521).
-    """
-    q = F.broadcast(
-        queries.select(
-            query_id_col, query_vec_col, where_col, contains_col, not_contains_col
-        )
-    )
-    cond = dsl_filter_condition(
-        docs, q,
-        where_col=where_col, contains_col=contains_col,
-        not_contains_col=not_contains_col, metadata_col=metadata_col,
-        filterable_cols=filterable_cols, text_col=text_col,
-    )
-    keep = list(
-        dict.fromkeys(
-            [id_col, vec_col]
-            + ([metadata_col] if metadata_col else [])
-            + list(filterable_cols or [])
-            + ([text_col] if text_col else [])
-        )
-    )
-    scored = (
-        docs.select(*keep)
-        .join(q, cond)
-        .withColumn(sim_col, V.dot(F.col(vec_col), F.col(query_vec_col)))
-        .select(query_id_col, id_col, sim_col)
-    )
-    return topk_per_query(scored, k, query_id_col, id_col, sim_col)
-
-
 def knn_block(
     docs: DataFrame,
     query_ids: Sequence,
@@ -320,6 +162,8 @@ def knn_block(
     negative_threshold: float = DEFAULT_NEGATIVE_FILTER_THRESHOLD,
     normalize_queries: bool = True,
     precision: str = "float64",
+    classes: Column | None = None,
+    class_of: Sequence[int] | None = None,
 ) -> DataFrame:
     """Batch kNN, block-matrix kernel (the scale path).
 
@@ -336,6 +180,10 @@ def knn_block(
     reference itself uses (Go float32 slices), so it is the
     apples-to-apples throughput configuration.  Rankings can differ in
     ~1e-7 ties; scores are emitted as float64 either way.
+
+    ``classes`` / ``class_of`` give each query its own filter
+    (``filters.filter_classes``): query ``j`` scores only the rows
+    whose ``classes[class_of[j]]`` is true.
     """
     import numpy as np
 
@@ -364,6 +212,7 @@ def knn_block(
     return _gemm_topk(
         docs, qids, qmat, k, vec_col, id_col, query_id_col, sim_col,
         neg=neg, negative_threshold=negative_threshold,
+        classes=classes, class_of=class_of,
     )
 
 
@@ -380,6 +229,8 @@ def _gemm_topk(
     negative_threshold: float = DEFAULT_NEGATIVE_FILTER_THRESHOLD,
     cell_col: str | None = None,
     allow=None,
+    classes: Column | None = None,
+    class_of: Sequence[int] | None = None,
 ) -> DataFrame:
     """The block GEMM top-k kernel of :func:`knn_block` and
     ``IVFIndex.search_batch``: per Arrow batch, ``mat @ qmat.T`` scores
@@ -388,8 +239,12 @@ def _gemm_topk(
     the one per-query top-k window settles ties by id exactly as a full
     join would.  ``allow`` (``n_cells x n_queries`` bool, indexed by the
     per-row int ``cell_col``) limits each query to its own cells — the
-    IVF probe as a mask.  ``neg`` drops docs whose similarity to it
-    exceeds ``negative_threshold`` (reference query.go:221-231)."""
+    IVF probe as a mask.  ``classes`` (one ``array<boolean>`` Column
+    over ``docs``, a row's match per filter class) and ``class_of``
+    (query ``j``'s entry in it) limit each query to the rows its own
+    filter matches; with ``allow``, a row must pass both.  ``neg``
+    drops docs whose similarity to it exceeds ``negative_threshold``
+    (reference query.go:221-231)."""
     import numpy as np
 
     if k <= 0:
@@ -400,6 +255,10 @@ def _gemm_topk(
     qid_arr = np.array([str(q) for q in query_ids], dtype=object)
     dtype = qmat.dtype
     cols = [id_col, vec_col] + ([cell_col] if cell_col else [])
+    class_at = len(cols)
+    if classes is not None:
+        cols.append(classes.alias("__classes"))
+    class_of = None if classes is None else np.asarray(class_of, dtype=np.int64)
 
     def score_batches(batches):
         # mapInArrow: the embedding column's Arrow buffer is reshaped
@@ -425,6 +284,10 @@ def _gemm_topk(
             ok = None
             if allow is not None:
                 ok = allow[rb.column(2).to_numpy(zero_copy_only=False)]
+            if class_of is not None:
+                bits = rb.column(class_at).flatten().to_numpy(zero_copy_only=False)
+                bits = bits.reshape(n, -1)[:, class_of]
+                ok = bits if ok is None else ok & bits
             if neg is not None:
                 live = mat @ neg <= negative_threshold
                 if not live.any():

@@ -309,7 +309,7 @@ def _build_tier_or_flat(decision, df, vec_col, id_col, seed):
 
 
 def _route(
-    df, index, where, allowed, decision, n_docs, dim, k, target_recall,
+    df, index, filtered, allowed, decision, n_docs, dim, k, target_recall,
     tuned, vec_col, id_col, seed, thresholds,
 ):
     """The front half :func:`routed_search` and
@@ -317,7 +317,9 @@ def _route(
     the tier, then take a served index's decision — or decide ``index``
     ``None``/``"auto"``/a tier name with :func:`decide` (unless the
     caller passed ``decision``) and build that tier on the fly.
-    Returns ``(index, decision)``; ``index`` is None for flat."""
+    ``filtered`` marks a ``where`` or per-query filter classes: both
+    need a full-vector tier.  Returns ``(index, decision)``; ``index``
+    is None for flat."""
     served = index is not None and not isinstance(index, str)
     tier = tier_of(index) if served else None
     if allowed is not None and tier != "hnsw":
@@ -326,7 +328,7 @@ def _route(
             "filter form; pass a Column `where` for every other tier"
         )
     if served:
-        if where is not None and tier != "ivf":
+        if filtered and tier != "ivf":
             raise ValueError(_filtered_tier_error(tier))
         return index, _served_decision(index, k, target_recall)
     if decision is None:
@@ -334,10 +336,10 @@ def _route(
             n_docs = df.count()
         decision = decide(
             index, n_docs, dim, k=k, target_recall=target_recall,
-            filtered=where is not None, tuned=tuned, **thresholds,
+            filtered=filtered, tuned=tuned, **thresholds,
         )
     else:
-        _check_filtered_tier(decision, where is not None)
+        _check_filtered_tier(decision, filtered)
     return _build_tier_or_flat(decision, df, vec_col, id_col, seed)
 
 
@@ -379,7 +381,7 @@ def routed_search(
 
     qv = [float(x) for x in query_vec]
     index, decision = _route(
-        df, index, where, allowed, decision, n_docs, len(qv), k,
+        df, index, where is not None, allowed, decision, n_docs, len(qv), k,
         target_recall, tuned, vec_col, id_col, seed, thresholds,
     )
     tier = decision["tier"]
@@ -419,6 +421,8 @@ def routed_search_batch(
     n_docs: int | None = None,
     precision: str = "float64",
     allowed: set | None = None,
+    classes: Column | None = None,
+    class_of: Sequence[int] | None = None,
     **thresholds,
 ) -> DataFrame:
     """Route a whole BATCH of query vectors through ONE tier decision
@@ -437,8 +441,13 @@ def routed_search_batch(
       ``where`` applies below scoring inside the probed partitions).
     - **IVF-SQ8 / IVF-PQ** → the coded container's ``search_batch``
       (one uint8 / ADC pass for all queries + shared exact re-rank).
-      ``where`` raises — quantized candidates carry codes only.
+      ``where`` or ``classes`` raises — quantized candidates carry
+      codes only.
     - **HNSW** (served only) → driver-side walks per query, one frame.
+
+    ``classes`` / ``class_of`` are per-query filters as classes
+    (``filters.filter_classes``), masked inside the FLAT and IVF
+    GEMM kernel like the probe.
 
     Returns (query_id string, <id_col>, similarity), per-query top-k,
     the shape every tier's batch API already shares.  ``precision``
@@ -461,7 +470,8 @@ def routed_search_batch(
             f"({len(qvecs)}) must be the same length"
         )
     index, decision = _route(
-        df, index, where, allowed, decision, n_docs, len(qvecs[0]), k,
+        df, index, where is not None or classes is not None, allowed,
+        decision, n_docs, len(qvecs[0]), k,
         target_recall, tuned, vec_col, id_col, seed, thresholds,
     )
     tier = decision["tier"]
@@ -474,11 +484,13 @@ def routed_search_batch(
         return K.knn_block(
             base, qids, qvecs, k,
             vec_col=vec_col, id_col=id_col, precision=precision,
+            classes=classes, class_of=class_of,
         )
     if tier == "ivf":
         return index.search_batch(
             qids, qvecs, k,
             nprobe=decision["nprobe"], where=where,
+            classes=classes, class_of=class_of,
         )
     return index.search_batch(
         qids, qvecs, k,

@@ -885,37 +885,6 @@ def test_routed_probe_stream_parity(spark, emb, tmp_path, tier):
     assert got == exp and len(got) == 30
 
 
-# -------------------------- normalized probe table for filtered batches (r10)
-
-
-def test_search_batch_dsl_probe_table_is_normalized(emb, index):
-    """The filtered-batch broadcast must be O(q·nprobe) bare
-    (query_id, cluster_id) pairs with the dim-sized vector carried
-    exactly ONCE per query in the separate meta table — the r9 shape
-    repeated the full vector per probed cluster (q × nprobe × dim)."""
-    qids = [str(i) for i in range(6)]
-    qvecs = [_qvec(emb, i) for i in range(6)]
-    per_q = [({}, [], [])] * 6
-    pair_rows, meta_rows = index._probe_tables(qids, qvecs, per_q, nprobe=4)
-    assert len(pair_rows) == 6 * 4
-    # pairs carry NO dim-sized payload: exactly two scalar fields
-    for row in pair_rows:
-        assert len(row) == 2
-        assert isinstance(row[0], str) and isinstance(row[1], int)
-    # the vector appears exactly once per query, in the meta table
-    assert len(meta_rows) == 6
-    assert sorted(m[0] for m in meta_rows) == sorted(qids)
-    dim = len(qvecs[0])
-    for m in meta_rows:
-        assert len(m[1]) == dim
-
-
-def test_search_batch_dsl_length_mismatch_raises(emb, index):
-    qv = _qvec(emb, 0)
-    with pytest.raises(ValueError, match="same length"):
-        index.search_batch_dsl(["a", "b"], [qv], 3, [({}, [], [])])
-
-
 @pytest.mark.parametrize("tier", ["ivf", "ivf_sq", "ivf_pq"])
 def test_search_batch_length_mismatch_raises(emb, index, pq_index, tier):
     """Every IVF tier's batch search rejects query ids and vectors of
@@ -929,29 +898,6 @@ def test_search_batch_length_mismatch_raises(emb, index, pq_index, tier):
     for qids in (["a"], ["a", "b", "c"]):
         with pytest.raises(ValueError, match="same length"):
             idx.search_batch(qids, qvecs, 3)
-
-
-def test_search_batch_dsl_normalized_still_exact(emb, index):
-    """nprobe=all + no filters == brute force, through the two-join
-    normalized shape (the exactness certificate survives the r10
-    broadcast refactor)."""
-    qids = ["0", "1"]
-    qvecs = [_qvec(emb, 0), _qvec(emb, 1)]
-    out = index.search_batch_dsl(
-        qids, qvecs, 5, [({}, [], [])] * 2, nprobe=8,
-        metadata_col=None, text_col=None,
-    )
-    got = {
-        (r["query_id"], r["vec_id"], round(r["similarity"], 6))
-        for r in out.collect()
-    }
-    exp = set()
-    for qid, qv in zip(qids, qvecs):
-        for r in K.knn_single(
-            emb, qv, 5, vec_col="embedding", id_col="vec_id"
-        ).collect():
-            exp.add((qid, r["vec_id"], round(r["similarity"], 6)))
-    assert got == exp
 
 
 def test_hash_sample_empty_frame_raises_typed(spark, emb):

@@ -435,6 +435,155 @@ def test_query_batch_per_query_filters(spark, db):
         )
 
 
+# ---------------------------------- per-query filters: randomized parity
+
+_PQ_WORDS = ["alpha", "beta", "gamma", "it's", "back\\slash", "x AND b = y", "delta"]
+_PQ_TAGS = ["o'k", "a\\b", "x AND b = y", "plain"]
+
+
+def _pq_corpus(n=1000, dim=8, seed=11):
+    """Seeded documents: ``cat`` (10 values, absent on every 7th doc),
+    ``grp`` (2 values), ``uid`` (one doc each) and ``tag`` (values with
+    quotes and backslashes) in the metadata map; 3-word contents."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    vecs = rng.normal(size=(n, dim))
+    docs = []
+    for i in range(n):
+        meta = {"grp": f"g{i % 2}", "uid": f"u{i}", "tag": _PQ_TAGS[i % 4]}
+        if i % 7:
+            meta["cat"] = f"c{i % 10}"
+        words = [_PQ_WORDS[j] for j in rng.integers(0, len(_PQ_WORDS), 3)]
+        docs.append(Document(f"d{i:04d}", meta, list(vecs[i]), " ".join(words)))
+    return docs
+
+
+def _pq_filters(rng, n_queries):
+    """Random per-query filters over :func:`_pq_corpus`: selectivity
+    from one doc (0.1%) to half the corpus, ``None``, ``{}`` and empty
+    lists (match all), a missing key (matches nothing), ``$contains``
+    as a string and as a list, quote and backslash literals."""
+    shapes = [
+        lambda: None,
+        lambda: {},
+        lambda: {"where": {}, "where_document": {"$contains": [], "$not_contains": []}},
+        lambda: {"where": {"uid": f"u{rng.randrange(1000)}"}},
+        lambda: {"where": {"cat": f"c{rng.randrange(10)}"}},
+        lambda: {"where": {"grp": f"g{rng.randrange(2)}"}},
+        lambda: {"where": {"nope": "x"}},
+        lambda: {"where": {"tag": rng.choice(_PQ_TAGS), "grp": "g0"}},
+        lambda: {"where_document": {"$contains": rng.choice(_PQ_WORDS)}},
+        lambda: {"where_document": {"$contains": rng.sample(_PQ_WORDS, 2)}},
+        lambda: {"where_document": {"$not_contains": rng.choice(_PQ_WORDS)}},
+        lambda: {"where": {"cat": f"c{rng.randrange(10)}"},
+                 "where_document": {"$contains": rng.choice(_PQ_WORDS),
+                                    "$not_contains": rng.sample(_PQ_WORDS, 2)}},
+    ]
+    return [rng.choice(shapes)() for _ in range(n_queries)]
+
+
+def _pq_matches(doc, f, where=None):
+    """The reference's filter semantics, in Python (query.go:135-155)."""
+    f = dict(f or {})
+    w = list((f.get("where") or {}).items()) + list((where or {}).items())
+    wd = f.get("where_document") or {}
+    c, nc = wd.get("$contains") or [], wd.get("$not_contains") or []
+    c = [c] if isinstance(c, str) else c
+    nc = [nc] if isinstance(nc, str) else nc
+    return (
+        all(doc.metadata.get(k) == v for k, v in w)
+        and all(s in doc.content for s in c)
+        and not any(s in doc.content for s in nc)
+    )
+
+
+def _pq_brute_force(docs, stored, qvecs, filters, k, where=None):
+    """{(query_id, id): similarity} of the exact per-query-filtered
+    top-k over the stored (normalized, float32) embeddings."""
+    import numpy as np
+
+    out = {}
+    for j, (qv, f) in enumerate(zip(qvecs, filters)):
+        q = np.asarray(qv, dtype=np.float64)
+        q = q / np.linalg.norm(q)
+        sims = [(-float(stored[d.id] @ q), d.id) for d in docs if _pq_matches(d, f, where)]
+        for neg, i in sorted(sims)[:k]:
+            out[(str(j), i)] = -neg
+    return out
+
+
+def test_query_batch_per_query_filters_randomized_parity(spark, db):
+    """Per-query-filtered batches (filter classes masked in the GEMM
+    kernel) return exactly the NumPy brute force's rows: FLAT and a
+    served IVF at nprobe-all, each with and without a global ``where``."""
+    import random
+
+    import numpy as np
+
+    docs = _pq_corpus()
+    c = db.create_collection("pq_parity", embedding_func=const_embedding)
+    c.add_documents(docs)
+    stored = {
+        r["id"]: np.asarray(r["embedding"], dtype=np.float64)
+        for r in c.df.select("id", "embedding").collect()
+    }
+    served = c.build_ann_index(n_clusters=8, persist=False)
+    rng = random.Random(3)
+    nprng = np.random.default_rng(5)
+    for n_queries in (7, 48):
+        filters = _pq_filters(rng, n_queries)
+        qvecs = [list(v) for v in nprng.normal(size=(n_queries, 8))]
+        for where in (None, {"grp": "g1"}):
+            expect = _pq_brute_force(docs, stored, qvecs, filters, 5, where)
+            for index in (None, served):
+                got = {
+                    (r["query_id"], r["id"]): r["similarity"]
+                    for r in c.query_batch(
+                        query_embeddings=qvecs, n_results=5, where=where,
+                        per_query_filters=filters, index=index,
+                        target_recall=0.999,
+                    ).collect()
+                }
+                assert got.keys() == expect.keys(), (where, index)
+                assert all(abs(got[key] - expect[key]) <= 1e-9 for key in got)
+
+
+def test_filter_classes_match_the_single_query_compiler(spark, db):
+    """The class renderer (SQL text) selects the same rows as
+    ``Collection._compile_filters`` (Column calls) for every filter
+    shape of the randomized parity test; a ``$contains`` list is the
+    AND of one single-query filter per pattern."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from chromem_go_spark.operators.filters import filter_classes
+
+    c = db.create_collection("pq_render", embedding_func=const_embedding)
+    c.add_documents(_pq_corpus(n=200))
+    filters = _pq_filters(random.Random(9), 60)
+    parsed = Collection._parse_per_query_filters(filters, len(filters))
+    classes, class_of = filter_classes(parsed)
+
+    def reference(w, cont, notc):
+        preds = [Collection._compile_filters(w, None, False)[0]]
+        preds += [Collection._compile_filters(None, {"$contains": s}, False)[0] for s in cont]
+        preds += [Collection._compile_filters(None, {"$not_contains": s}, False)[0] for s in notc]
+        pred = F.lit(True)
+        for p in preds:
+            pred = pred if p is None else pred & p
+        return F.coalesce(pred, F.lit(False))
+
+    rows = c.df.select(
+        classes.alias("cls"), *[reference(*p).alias(f"r{j}") for j, p in enumerate(parsed)]
+    ).collect()
+    for r in rows:
+        assert [r["cls"][class_of[j]] for j in range(len(parsed))] == [
+            r[f"r{j}"] for j in range(len(parsed))
+        ]
+
+
 def test_collection_ann_index(spark, db):
     """ANN through the public Collection API: full probe equals the
     brute-force query; PQ variant agrees after exact re-rank."""

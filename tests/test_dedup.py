@@ -243,7 +243,8 @@ def _edge_frame(spark, rows, parts, schema="id_a long, id_b long"):
 
 
 def _unionfind_oracle(es):
-    """{node: min node of its component} over the edge list ``es``."""
+    """{node: min node of its component} over the edge list ``es``; a
+    null endpoint adds no edge, and the other endpoint is still a node."""
     parent = {}
 
     def find(x):
@@ -254,10 +255,12 @@ def _unionfind_oracle(es):
         return x
 
     for a, b in es:
+        if a is None or b is None:
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for e in es for x in e}
+    return {x: find(x) for e in es for x in e if x is not None}
 
 
 @_PARTS
@@ -286,19 +289,20 @@ _BIG = 1 << 62
 @pytest.mark.parametrize(
     "rows, schema",
     [
-        ([("b", "a"), ("c", "b"), ("é", "z"), ("Z", "é"), ("x", "y")],
+        ([("b", "a"), ("c", "b"), ("é", "z"), ("Z", "é"), ("x", "y"), ("w", None)],
          "id_a string, id_b string"),
         ([(-5, _BIG - 1), (_BIG - 1, _BIG - 3), (-(_BIG), 7), (7, 0), (_BIG - 2, _BIG - 4)],
          "id_a long, id_b long"),
-        ([(3, 3), (1, 2), (2, 1), (1, 2), (4, 4), (5, 6), (6, 5), (6, 6)],
+        ([(3, 3), (1, 2), (2, 1), (1, 2), (4, 4), (5, 6), (6, 5), (6, 6), (None, 9)],
          "id_a long, id_b long"),
     ],
     ids=["strings", "extreme_ids", "loops_and_duplicates"],
 )
 def test_connected_components_kernel_matches_loop(spark, cc, rows, schema):
     """The one-partition kernel's rows equal the loop's, both ways, and
-    a union-find oracle's: string keys (code-point order), negative ids
-    and ids near 2^62, self-loops and duplicate edges."""
+    a union-find oracle's: string keys (code-point order) with a null
+    endpoint, negative ids and ids near 2^62, self-loops and duplicate
+    edges."""
     kernel = cc(_edge_frame(spark, rows, 1, schema))
     loop = cc(_edge_frame(spark, rows, 4, schema))
     assert kernel.exceptAll(loop).count() == 0

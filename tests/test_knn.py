@@ -88,121 +88,6 @@ def test_negative_filter(emb, emb_np):
     assert len(got) == 10
 
 
-def test_knn_expr_filtered_dsl(spark):
-    """Full per-query DSL: metadata-equality map + contains/not_contains,
-    each query with different filters, verified against a Python replay."""
-    docs_rows = [
-        (1, [1.0, 0.0], "en", 1, "the quick brown fox"),
-        (2, [0.9, 0.1], "en", 2, "spark engines are fast"),
-        (3, [0.0, 1.0], "de", 1, "der schnelle braune fuchs"),
-        (4, [0.5, 0.5], "de", 2, "spark und parquet zusammen"),
-        (5, [0.8, 0.2], "en", 1, "lazy dogs sleep all day"),
-    ]
-    docs = spark.createDataFrame(
-        docs_rows, "id long, embedding array<double>, lang string, label int, text string"
-    )
-    q_rows = [
-        ("all", [1.0, 0.0], None, None, None),                      # no filters
-        ("en_only", [1.0, 0.0], {"lang": "en"}, None, None),
-        ("en1", [1.0, 0.0], {"lang": "en", "label": "1"}, None, None),
-        ("has_spark", [1.0, 0.0], None, ["spark"], None),
-        ("no_spark_de", [0.0, 1.0], {"lang": "de"}, None, ["spark"]),
-        ("badkey", [1.0, 0.0], {"nope": "x"}, None, None),          # unknown key -> no rows
-        ("empty", [1.0, 0.0], {}, [], []),                          # empty = match all
-    ]
-    queries = spark.createDataFrame(
-        q_rows,
-        "query_id string, query_vec array<double>, q_where map<string,string>, "
-        "q_contains array<string>, q_not_contains array<string>",
-    )
-    out = knn.knn_expr_filtered_dsl(
-        docs, queries, 3, filterable_cols=["lang", "label"], text_col="text"
-    )
-    got = {}
-    for r in out.collect():
-        got.setdefault(r["query_id"], set()).add(r["id"])
-
-    def replay(where, contains, not_contains):
-        keep = set()
-        for id_, _, lang, label, text in docs_rows:
-            meta = {"lang": lang, "label": str(label)}
-            if where and any(k not in ("lang", "label") or meta[k] != v for k, v in where.items()):
-                continue
-            if contains and any(s not in text for s in contains):
-                continue
-            if not_contains and any(s in text for s in not_contains):
-                continue
-            keep.add(id_)
-        return keep
-
-    for qid, _, where, contains, not_contains in q_rows:
-        expect = replay(where, contains, not_contains)
-        # k=3 cap: compare membership against the top-3 of the replay set
-        assert got.get(qid, set()) <= expect, qid
-        assert len(got.get(qid, set())) == min(3, len(expect)), qid
-    assert "badkey" not in got  # unknown where-key matches nothing
-
-
-def test_knn_expr_filtered_dsl_metadata_map(spark):
-    """The same DSL against a map<string,string> metadata column (the
-    Collection document model) instead of flat columns."""
-    docs = spark.createDataFrame(
-        [
-            (1, [1.0, 0.0], {"lang": "en"}, "alpha beta"),
-            (2, [0.9, 0.1], {"lang": "de"}, "gamma delta"),
-            (3, [0.0, 1.0], {}, "epsilon"),
-        ],
-        "id long, embedding array<double>, metadata map<string,string>, text string",
-    )
-    queries = spark.createDataFrame(
-        [
-            ("de", [1.0, 0.0], {"lang": "de"}, None, None),
-            ("miss", [1.0, 0.0], {"lang": "fr"}, None, None),
-        ],
-        "query_id string, query_vec array<double>, q_where map<string,string>, "
-        "q_contains array<string>, q_not_contains array<string>",
-    )
-    out = knn.knn_expr_filtered_dsl(
-        docs, queries, 5, metadata_col="metadata", text_col="text"
-    )
-    got = {}
-    for r in out.collect():
-        got.setdefault(r["query_id"], set()).add(r["id"])
-    assert got == {"de": {2}}  # doc 3 has no lang key -> non-match
-
-
-def test_dsl_where_without_surface_matches_nothing(spark):
-    """A non-empty q_where with NO metadata surface configured must
-    match nothing (silently ignoring a filter would return wrong rows);
-    empty/null filters still match everything."""
-    docs = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.5, 0.5])], "id long, embedding array<double>"
-    )
-    queries = spark.createDataFrame(
-        [
-            ("filtered", [1.0, 0.0], {"lang": "en"}, None, None),
-            ("open", [1.0, 0.0], None, None, None),
-            ("empty", [1.0, 0.0], {}, None, None),
-        ],
-        "query_id string, query_vec array<double>, q_where map<string,string>, "
-        "q_contains array<string>, q_not_contains array<string>",
-    )
-    out = knn.knn_expr_filtered_dsl(docs, queries, 5)
-    got = {}
-    for r in out.collect():
-        got.setdefault(r["query_id"], set()).add(r["id"])
-    assert "filtered" not in got
-    assert got["open"] == {1, 2}
-    assert got["empty"] == {1, 2}
-    # same rule for contains filters without a text surface
-    q2 = spark.createDataFrame(
-        [("c", [1.0, 0.0], None, ["spark"], None)],
-        "query_id string, query_vec array<double>, q_where map<string,string>, "
-        "q_contains array<string>, q_not_contains array<string>",
-    )
-    assert knn.knn_expr_filtered_dsl(docs, q2, 5).count() == 0
-
-
 def test_knn_block_float32_matches_float64_ids(spark):
     """On well-separated data the float32 kernel returns the same
     ids/ordering as the oracle-exact float64 mode; scores agree to

@@ -78,28 +78,6 @@ def test_where_filters_stay_jvm_side(docs):
     assert not flags["has_python_eval"]
 
 
-def test_filter_dsl_join_broadcasts_never_cartesian(emb, docs, spark):
-    """The per-query filter DSL produces a non-equi join condition; the
-    tiny queries side must broadcast (nested-loop is fine) — a
-    CartesianProduct would shuffle the corpus."""
-    queries = spark.createDataFrame(
-        [("q0", [0.1] * 256, {"lang": "en"}, None, None)],
-        "query_id string, query_vec array<double>, q_where map<string,string>, "
-        "q_contains array<string>, q_not_contains array<string>",
-    )
-    corpus = emb.join(docs, emb.vec_id == docs.doc_id).select(
-        "vec_id", "embedding", "lang", "text"
-    )
-    df = K.knn_expr_filtered_dsl(
-        corpus, queries, 3,
-        filterable_cols=["lang"], text_col="text",
-        vec_col="embedding", id_col="vec_id",
-    )
-    plan = X.formatted_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
 def test_lineitem_pricing_pushdown_and_partial_agg(spark, sf_dir):
     """The big-table rollup must push the date predicate to the parquet
     scan and aggregate map-side before its one shuffle."""
@@ -458,24 +436,44 @@ def test_coded_ivf_search_batch_runs_one_python_task(emb, python_tasks):
     assert python_tasks(batch) == 1
 
 
-def test_per_query_filtered_batch_runs_no_python_task(spark, python_tasks):
-    """A per-query-filtered ``query_batch`` builds its query table as
-    an Arrow local relation and scores in the JVM: no Python task (4
-    when the table came from ``createDataFrame`` over a Python list)."""
+def _per_query_batch(spark, served: bool):
+    """A warm per-query-filtered ``query_batch`` over a small in-memory
+    collection (FLAT, or through a served IVF index) as an action."""
     from chromem_go_spark import Collection, Document
 
-    c = Collection(spark, "pqf_tasks")
+    c = Collection(spark, "pqf_gate")
     c.add_documents([
-        Document(str(i), {"lang": "en" if i % 2 else "de"}, [1.0, i / 8, 0.0], f"doc {i}")
-        for i in range(8)
+        Document(str(i), {"lang": "en" if i % 2 else "de"}, [1.0, i / 8, (i % 5) / 4], f"doc {i}")
+        for i in range(64)
     ])
+    index = c.build_ann_index(n_clusters=4, persist=False) if served else None
     filters = [None, {"where": {"lang": "en"}},
                {"where_document": {"$contains": "doc 3"}}, {"where": {"lang": "de"}}]
     batch = lambda: c.query_batch(  # noqa: E731
-        query_embeddings=[[1.0, 0.0, 0.0]] * 4, n_results=3, per_query_filters=filters
+        query_embeddings=[[1.0, 0.0, 0.0]] * 4, n_results=3,
+        per_query_filters=filters, index=index, target_recall=0.999,
     ).collect()
-    batch()
-    assert python_tasks(batch) == 0
+    assert len(batch()) == 12
+    return batch
+
+
+_SERVED = pytest.mark.parametrize("served", [False, True], ids=["flat", "served_ivf"])
+
+
+@_SERVED
+def test_per_query_filtered_batch_runs_one_job(spark, spark_jobs, served):
+    """Per-query filters are a class mask inside the GEMM kernel, so a
+    filtered batch runs the one job of an unfiltered one (the broadcast
+    joins it replaced ran 3 jobs FLAT and 4 through a served IVF)."""
+    assert spark_jobs(_per_query_batch(spark, served)) == 1
+
+
+@_SERVED
+def test_per_query_filtered_batch_runs_one_python_task(spark, python_tasks, served):
+    """A small per-query-filtered batch runs the GEMM kernel in one
+    Python task, as the unfiltered batch does (the broadcast joins it
+    replaced ran 0 FLAT and 8 through a served IVF)."""
+    assert python_tasks(_per_query_batch(spark, served)) <= 1
 
 
 def test_signature_projections_build_in_few_jvm_round_trips(docs, round_trips):

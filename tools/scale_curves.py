@@ -410,71 +410,6 @@ def measure_eligibility(spark, d: str) -> dict:
     return out
 
 
-def measure_probe_econ(spark, d: str) -> dict:
-    """r11: the IVF batch probe-table economics, measured — the
-    Arrow-serialized bytes that actually cross the broadcast for the
-    r10 NORMALIZED shape (bare (query_id, cluster_id) pairs + a
-    once-per-query vector/DSL table) vs the pre-r10 DENORMALIZED shape
-    (each query's full vector repeated once per probed cluster,
-    q x nprobe x dim).  q=1024, nprobe=8 over the corpus index —
-    largest corpus only (one row pins the claim)."""
-    import pyarrow as pa
-
-    from chromem_go_spark.operators import ann as A
-
-    emb = spark.read.parquet(f"{d}/embeddings.parquet")
-    n = emb.count()
-    if n <= HNSW_SINGLE_MAX:
-        return {}
-    idx = A.IVFIndex.build(
-        emb, n_clusters=32, vec_col="embedding", id_col="vec_id"
-    )
-    qrows = emb.filter(F.col("vec_id") < 1024).collect()
-    qids = [str(r["vec_id"]) for r in qrows]
-    qvecs = [list(r["embedding"]) for r in qrows]
-    per_q = [({}, [], [])] * len(qids)
-    pair_rows, meta_rows = idx._probe_tables(qids, qvecs, per_q, nprobe=8)
-
-    def arrow_bytes(table: pa.Table) -> int:
-        sink = pa.BufferOutputStream()
-        with pa.ipc.new_stream(sink, table.schema) as w:
-            w.write_table(table)
-        return len(sink.getvalue())
-
-    pairs_t = pa.table(
-        {
-            "query_id": [p[0] for p in pair_rows],
-            "cluster_id": pa.array(
-                [p[1] for p in pair_rows], type=pa.int32()
-            ),
-        }
-    )
-    meta_t = pa.table(
-        {
-            "query_id": [m[0] for m in meta_rows],
-            "query_vec": [m[1] for m in meta_rows],
-        }
-    )
-    meta_by_id = {m[0]: m[1] for m in meta_rows}
-    denorm_t = pa.table(
-        {
-            "query_id": [p[0] for p in pair_rows],
-            "cluster_id": pa.array(
-                [p[1] for p in pair_rows], type=pa.int32()
-            ),
-            "query_vec": [meta_by_id[p[0]] for p in pair_rows],
-        }
-    )
-    return {
-        "probe_q": len(qids),
-        "probe_nprobe": 8,
-        "probe_dim": len(qvecs[0]),
-        "probe_pairs_bytes": arrow_bytes(pairs_t),
-        "probe_meta_bytes": arrow_bytes(meta_t),
-        "probe_denorm_bytes": arrow_bytes(denorm_t),
-    }
-
-
 def measure_centroid_walls(spark, d: str) -> dict:
     """r12: warm 1024-query serve walls vs shards_probed P on the
     CLUSTERED corpus's 16-shard CENTROID root at served defaults
@@ -777,7 +712,6 @@ def main() -> None:
         "--ivf": measure_ivf,
         "--textindex": measure_textindex,
         "--hnsw": measure_hnsw,
-        "--probeecon": measure_probe_econ,
         "--eligibility": measure_eligibility,
         "--qship": measure_qship,
         "--splitcost": measure_split,
@@ -812,7 +746,6 @@ def main() -> None:
             **measure_ivf(spark, d),
             **measure_textindex(spark, d),
             **measure_hnsw(spark, d),
-            **measure_probe_econ(spark, d),
             **measure_eligibility(spark, d),
             **measure_qship(spark, d),
             **measure_split(spark, d),
@@ -1244,39 +1177,6 @@ def render(here: str, results: list[dict]) -> None:
             "(per-shard rebuild over live points — the same",
             "per-executor build the root started from).  Recall at",
             "these operating points: RECALL.md's eligibility section.",
-            "",
-        ]
-    econ = [r for r in results if "probe_pairs_bytes" in r]
-    if econ:
-        r = econ[-1]
-        total = r["probe_pairs_bytes"] + r["probe_meta_bytes"]
-        ratio = r["probe_denorm_bytes"] / max(total, 1)
-        lines += [
-            "## IVF batch probe-table economics (r11)",
-            "",
-            "The r10 normalization claim, pinned with a measured row:",
-            "Arrow-serialized bytes crossing the broadcast for a",
-            f"q={r['probe_q']}, nprobe={r['probe_nprobe']},",
-            f"dim={r['probe_dim']} batch (`IVFIndex._probe_tables`),",
-            "normalized (bare (query_id, cluster_id) pairs + a",
-            "once-per-query vector table) vs the pre-r10 denormalized",
-            "shape (each vector repeated once per probed cluster):",
-            "",
-            "| shape | bytes |",
-            "|---|---|",
-            f"| pairs table (q·nprobe, no payload) | "
-            f"{r['probe_pairs_bytes']:,} |",
-            f"| per-query meta table (q rows, vector once) | "
-            f"{r['probe_meta_bytes']:,} |",
-            f"| **normalized total (r10+)** | **{total:,}** |",
-            f"| denormalized (q·nprobe·dim, pre-r10) | "
-            f"{r['probe_denorm_bytes']:,} |",
-            "",
-            f"Normalization factor at this shape: {ratio:.1f}x; it",
-            "grows linearly with nprobe (the denormalized form pays",
-            "dim doubles per extra probe, the normalized form 2",
-            "scalars), which is what makes high-nprobe high-q batches",
-            "broadcastable at all.",
             "",
         ]
     spar = [r for r in results if r.get("split_scale")]
